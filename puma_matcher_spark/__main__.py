@@ -18,6 +18,7 @@ On a real cluster the same module runs under spark-submit; only
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import sys
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.01"
@@ -97,7 +98,8 @@ def main(argv: list[str] | None = None) -> int:
             from puma_matcher_spark.apps import run_full_matcher
 
             res = run_full_matcher(spark, args.sf_dir)
-            print(f"candidates: {res.candidates.count()}")
+            for f in dataclasses.fields(res):
+                print(f"{f.name}: {getattr(res, f.name).count()}")
         else:
             from puma_matcher_spark.apps import run_curation_app
 

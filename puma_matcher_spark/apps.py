@@ -9,12 +9,31 @@ corpus:
    stages Matcher → Scorer (filters applied pair-level after the
    aggregate, where they're cheapest);
 2. **match saver** — union across configs (``as_data_source``),
-   MultipleTypeMatchFilter, canonical persist + per-document statistics;
+   MultipleTypeMatchFilter, canonicalization + per-document statistics;
 3. **optimizer** — weight training against derived labels +
    total/contextual scores.
 
 Everything returns DataFrames; callers choose sinks
 (persister.persist_parquet / sources.publish for blue/green).
+
+Two frames fan out and are persisted through the bounded
+``functions.caching.persist_rotating`` ring, so each is computed once
+per pass:
+
+* each family's filtered candidates, read by the normalisation
+  percentile job and again by the cross-config union;
+* the canonical candidate table, read by the training-label join and
+  the envelope count inside weight training, and by ``candidates``,
+  ``statistics`` and ``total_scores``.
+
+Without them every consumer re-ran the matcher → scorer → filters →
+normaliser → persister chain: an sf0.001 pass that collects all four
+outputs ran 268 Spark jobs, against 64 with both persists (231 against
+23 from the calling thread; the rest are the creator pipeline's
+per-family jobs).  The ring (or
+``functions.caching.drain()``) releases the caches; every returned
+frame keeps its full lineage, so an evicted cache means a recompute,
+never a wrong or missing row.
 """
 
 from __future__ import annotations
@@ -24,6 +43,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from puma_matcher_spark.functions.caching import persist_rotating
 from puma_matcher_spark.operators import filters as flt
 from puma_matcher_spark.operators import matcher as m
 from puma_matcher_spark.operators import scorer as sc
@@ -92,7 +112,8 @@ def _family_stages(t: Tables) -> list[Stage]:
             normalise_scores,
         )
 
-        cand = inputs["filtered"]
+        # the percentile job and the cross-config union both read it
+        cand = persist_rotating(inputs["filtered"])
         factor = normalisation_factor(cand, percentile=0.99, exact=False)
         return normalise_scores(cand, factor)
 
@@ -126,7 +147,8 @@ def run_full_matcher(
     # pipeline 2 — match saver over the cross-config union
     all_cand = creator.as_data_source("editor_output")
     filtered = flt.multiple_type_match_filter(all_cand, ["laboratory"])
-    canonical = dedup_candidates(canonicalize_pairs(filtered))
+    # statistics, weight training, total scores and the caller all read it
+    canonical = persist_rotating(dedup_candidates(canonicalize_pairs(filtered)))
     statistics = st.match_statistics(canonical)
 
     # optimizer — weights against derived accepted labels

@@ -9,10 +9,11 @@ every stage output.
 
 Rebuild: sequential per-config execution (optionally threaded — Spark's
 scheduler is thread-safe, so a ThreadPoolExecutor gives the same overlap
-without sleep-polling), explicit schema validation via validator,
-`persist()` only where an output is consumed more than once.  Stage
-results are plain DataFrames; no global mutable registry is needed beyond
-the run's own dict.
+without sleep-polling), explicit schema validation via validator.
+`Pipeline` itself never persists: a stage function persists the frames it
+fans out (see apps.run_full_matcher).  Stage results are plain
+DataFrames; no global mutable registry is needed beyond the run's own
+dict.
 """
 
 from __future__ import annotations

@@ -1,6 +1,7 @@
 """End-to-end FullMatcherApp-shape integration over the fixture corpus."""
 
 import tempfile
+from collections import Counter
 
 import pytest
 
@@ -81,6 +82,89 @@ def test_full_matcher_end_to_end(spark, sf_small):
 
     # totals exist for every surviving pair
     assert result.total_scores.count() == types_per_pair.count()
+
+
+#: ceiling on the Spark jobs one matcher pass submits from its calling
+#: thread (build plus collecting all four outputs).  A pass that computes
+#: the shared candidate chain once runs ~23; one that re-derives it per
+#: output runs ~230.
+MATCHER_PASS_MAX_JOBS = 60
+
+OUTPUTS = ("candidates", "statistics", "weights", "total_scores")
+
+
+def _row_multiset(rows) -> Counter:
+    """Rows as a multiset, floats rounded: a recompute may sum a shuffle's
+    partial aggregates in another order."""
+    return Counter(
+        tuple(round(v, 9) if isinstance(v, float) else v for v in r) for r in rows
+    )
+
+
+@pytest.fixture(scope="module")
+def matcher_pass(spark, sf_small):
+    """One cold ``run_full_matcher`` pass under its own job group, with
+    all four outputs collected: ``(result, rows per output, job count)``.
+    The creator pipeline's per-family threads do not inherit the group,
+    so the count covers the pass's own thread: the saver, the weight
+    training and the four collects."""
+    from puma_matcher_spark.functions import caching
+
+    caching.drain()
+    sc = spark.sparkContext
+    group = "test-apps-matcher-pass"
+    sc.setJobGroup(group, "run_full_matcher pass")
+    try:
+        result = run_full_matcher(spark, sf_small)
+        rows = {name: getattr(result, name).collect() for name in OUTPUTS}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_full_matcher_pass_outputs_and_job_count(matcher_pass):
+    _, rows, n_jobs = matcher_pass
+    cand = rows["candidates"]
+    assert len(cand) > 1000
+    assert all(r["document_version1_id"] < r["document_version2_id"] for r in cand)
+    keys = [(r["pair_id"], r["score_type"]) for r in cand]
+    assert len(keys) == len(set(keys))
+    types_per_pair: dict = {}
+    for r in cand:
+        types_per_pair.setdefault(r["pair_id"], set()).add(r["score_type"])
+    assert {"person"} not in types_per_pair.values()
+    assert rows["statistics"]
+    w = {r["score_type"]: r["weight"] for r in rows["weights"]}
+    assert set(w) == {"person", "laboratory"}
+    assert abs(sum(w.values()) - 1.0) < 1e-9
+    assert len(rows["total_scores"]) == len(types_per_pair)
+    assert n_jobs <= MATCHER_PASS_MAX_JOBS, (
+        f"matcher pass ran {n_jobs} Spark jobs: the shared candidate chain "
+        "is being recomputed per output"
+    )
+
+
+def test_cli_app_matcher_prints_every_output(sf_small, capsys):
+    from puma_matcher_spark.__main__ import main
+
+    assert main(["app", "matcher", "--sf-dir", sf_small]) == 0
+    out = capsys.readouterr().out
+    for name in OUTPUTS:
+        assert f"{name}: " in out
+
+
+def test_full_matcher_outputs_survive_cache_eviction(spark, matcher_pass):
+    """The persisted intermediates keep their lineage: once every cache
+    is dropped, the returned frames recompute the same rows."""
+    from puma_matcher_spark.functions import caching
+
+    result, rows, _ = matcher_pass
+    caching.drain()
+    spark.catalog.clearCache()
+    for name in ("candidates", "total_scores"):
+        assert _row_multiset(getattr(result, name).collect()) == _row_multiset(
+            rows[name]
+        )
 
 
 @pytest.mark.slow
