@@ -247,14 +247,14 @@ def run_curation_app(
     :func:`load_manifest_documents`), carrying the connector through a
     real pipeline instead of only its unit tests.
 
-    The audit counts are computed lazily (1-row frames) and collected in
-    one pass at the end, so the whole app is a handful of jobs, not one
-    per stage.  When ``out_root`` is given the cleaned corpus lands
-    partitioned by source (readers prune by partition), written before
-    the counts are resolved so the write reuses the same plan — and for
-    the manifest source the cached connector input is then RELEASED and
-    ``clean`` re-pointed at the published parquet (blue/green hand-off).
-    With manifest input and no ``out_root`` the input cache is kept for
+    The stage audit counts are observed inside the curation pipeline's
+    own stage jobs.  With ``out_root`` the cleaned corpus lands
+    partitioned by source (readers prune by partition) and
+    ``tokens_cut`` sums the published column; without it, the aggregate
+    re-derives the span cutting.  For the manifest source a publish
+    also RELEASES the cached connector input and re-points ``clean`` at
+    the published parquet (blue/green hand-off).  With
+    manifest input and no ``out_root`` the input cache is kept for
     the returned lazy frame; callers done with it own the unpersist.
     """
     from puma_matcher_spark.llmdata.dedup import cut_spans, duplicate_spans
@@ -277,7 +277,7 @@ def run_curation_app(
         docs = load_tables(spark, sf_dir).llm_documents()
     else:
         raise ValueError(f"unknown curation source: {source!r}")
-    res = curate_documents(docs, eager_counts=False)
+    res = curate_documents(docs)
     spans = duplicate_spans(res.clean, shingle_n=5)
     cut = cut_spans(res.clean, spans)
     final = (
@@ -285,23 +285,29 @@ def run_curation_app(
         .join(cut, "doc_id")
         .select("doc_id", "lang", "source", "clean_text", "n_tokens_removed")
     )
+    published = None
     if out_root is not None:
         persist_partitioned(final, out_root, ["source"])
-    counts = {k: df.first()["n"] for k, df in res.stage_counts.items()}
+        # column order restated: partition columns come back last on a
+        # partitioned read
+        published = spark.read.parquet(out_root).select(
+            "doc_id", "lang", "source", "clean_text", "n_tokens_removed"
+        )
+    # summing the published column is a scan; summing `cut` re-derives
+    # the span cutting
+    cut_rows = cut if published is None else published
+    counts = dict(res.stage_counts)
     counts["tokens_cut"] = int(
-        cut.agg(F.sum("n_tokens_removed").alias("n")).first()["n"] or 0
+        cut_rows.agg(F.sum("n_tokens_removed")).first()[0] or 0
     )
-    if source == "manifest_text" and out_root is not None:
+    if source == "manifest_text" and published is not None:
         # all heavy reuse of the cached connector input is done (counts
         # are resolved, the corpus is published): release the executor
         # storage and hand the caller the published parquet instead —
         # the blue/green pattern, and cheaper for them than re-reading
-        # the Python source (column order restated: partition columns
-        # come back last on a partitioned read)
+        # the Python source
         docs.unpersist()
-        final = spark.read.parquet(out_root).select(
-            "doc_id", "lang", "source", "clean_text", "n_tokens_removed"
-        )
+        final = published
     return CurationAppResult(clean=final, stage_counts=counts)
 
 

@@ -199,7 +199,6 @@ def lsh_candidate_pairs(
     band_keys: DataFrame,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
     persist_buckets: bool = True,
-    buckets_out: list | None = None,
 ) -> DataFrame:
     """Docs sharing any band bucket → distinct candidate pairs (dv1 < dv2).
 
@@ -230,17 +229,7 @@ def lsh_candidate_pairs(
     # against a fresh localCheckpoint of keep ids, so no two runs share a
     # cache entry and the ring accumulates dead sf-sized caches —
     # measured +1.9 s and monotone-growing samples on curation_report).
-    # ``buckets_out`` (r12, r11 verdict #7): a RUN-SCOPED persist for
-    # callers whose lineage is unique per run (the curation pipeline) —
-    # the frame is plain-persisted (never ring-enrolled, so it cannot
-    # thrash persist_rotating with dead entries) and appended to the
-    # caller's list; the CALLER owns the unpersist once the self-join's
-    # consumers have materialized.  Both self-join sides then read one
-    # cache instead of re-deriving the tokenize→minhash→band chain.
-    if buckets_out is not None:
-        band_keys = band_keys.persist()
-        buckets_out.append(band_keys)
-    elif persist_buckets:
+    if persist_buckets:
         band_keys = persist_rotating(band_keys)
     a = band_keys.select("band", "band_key", F.col("doc_id").alias("doc1_id"))
     b = band_keys.select("band", "band_key", F.col("doc_id").alias("doc2_id"))
@@ -259,11 +248,9 @@ def minhash_dedup_pairs(
     shingle_n: int = DEFAULT_SHINGLE,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
     persist_buckets: bool = True,
-    buckets_out: list | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup candidate pipeline.  See
-    :func:`lsh_candidate_pairs` for the ``persist_buckets`` /
-    ``buckets_out`` contracts."""
+    :func:`lsh_candidate_pairs` for the ``persist_buckets`` contract."""
     return lsh_candidate_pairs(
         lsh_band_keys(
             minhash_signatures(shingles(docs, shingle_n), num_hashes),
@@ -272,7 +259,6 @@ def minhash_dedup_pairs(
         ),
         max_bucket_size,
         persist_buckets=persist_buckets,
-        buckets_out=buckets_out,
     )
 
 

@@ -22,15 +22,14 @@ from pyspark.sql import functions as F
 
 from puma_matcher_spark.llmdata import dedup as dd
 from puma_matcher_spark.llmdata import textstats as ts
+from puma_matcher_spark.plans.inspect import observed_metrics
 
 
 @dataclass
 class CurationResult:
     clean: DataFrame
-    # audit trail: docs after each stage — ints when eager (default), or
-    # 1-row count DataFrames when lazy (fold with .scalar() into the
-    # output plan — the count expressions read the checkpointed stage ID
-    # frames, so audit costs id-frame scans, not stage re-runs)
+    # audit trail: docs after each stage, observed inside the stage
+    # checkpoint jobs (no action of their own)
     stage_counts: dict
     # the checkpointed doc_id-only stage frames themselves
     # (keep_exact / drops / good) — consumers like curation_report build
@@ -43,37 +42,32 @@ def curate_documents(
     min_tokens: int = 5,
     min_distinct_ratio: float = 0.05,
     jaccard_threshold: float = 0.8,
-    eager_counts: bool = True,
 ) -> CurationResult:
     """Raw corpus → exact dedup → near-dup removal → quality gate, with
     per-stage audit counts.
 
     The stage-result ID frames are localCheckpoint'ed (round 8 — the
     same barrier :func:`curation_report` carries): every downstream
-    consumer of a stage (the next stage, the clean output, each audit
-    count) otherwise re-derives that stage's whole DAG — with lazy
-    counts the LSH + verify chain ran once per scalar subquery
-    (measured: the llm_curation query 6.5 s → 2.9 s at sf0.1 with the
-    barriers).  The checkpointed frames are doc_id-only.
+    consumer of a stage (the next stage, the clean output, the report)
+    otherwise re-derives that stage's whole DAG (measured: the
+    llm_curation query 6.5 s → 2.9 s at sf0.1 with the barriers).  The
+    checkpointed frames are doc_id-only.  The four audit counts are
+    ``DataFrame.observe`` metrics of the exact-dedup and quality
+    checkpoint jobs, so they cost no Spark job of their own.
     """
 
-    def stage_count(df: DataFrame):
-        if eager_counts:
-            return df.count()
-        return df.agg(F.count(F.lit(1)).cast("long").alias("n"))
-
-    counts = {"input": stage_count(docs)}
+    def counted(stage: str, df: DataFrame) -> DataFrame:
+        return df.observe(stage, F.count(F.lit(1)).alias("n"))
 
     # 1. exact dedup — keep the min doc_id per content fingerprint
-    keep_exact = (
-        dd.exact_duplicates(docs)
-        .select(F.col("keep_id").alias("doc_id"))
-        .localCheckpoint()
+    exact_stage = counted(
+        "after_exact_dedup",
+        dd.exact_duplicates(counted("input", docs)).select(
+            F.col("keep_id").alias("doc_id")
+        ),
     )
+    keep_exact = exact_stage.localCheckpoint()
     docs1 = docs.join(keep_exact, "doc_id", "left_semi")
-    # |docs1| == |keep_exact| (keep ids ⊆ docs ids): count the tiny
-    # checkpointed id frame, not a re-join
-    counts["after_exact_dedup"] = stage_count(keep_exact)
 
     # 2. near-dup removal — MinHash-LSH candidates verified by exact
     #    Jaccard computed per candidate pair (never over the full
@@ -83,16 +77,10 @@ def curate_documents(
     #    keep_exact localCheckpoint, so a persisted bucket frame is never
     #    reusable across runs — it only piles dead cache entries into the
     #    rotating ring (measured +1.9 s on curation_report, r11).
-    #    A RUN-SCOPED persist (``buckets_out``, r12 — persist, self-join,
-    #    unpersist after ``drops`` materializes) was MEASURED AND
-    #    REVERTED: 5 interleaved worktree A/B pairs at sf0.1 put
-    #    curation_report at 4.3-7.0 s without it vs 6.7-8.3 s with it —
-    #    at this scale the two join sides derive the chain in parallel
-    #    across idle cores, while the persist serializes a cache-build
-    #    pass ahead of the join and pays the cache write on top.  The
-    #    facility stays available on lsh_candidate_pairs for
-    #    capacity-planned corpus runs where re-deriving the 128-minhash
-    #    chain per side dominates any cache write.
+    #    A run-scoped bucket persist lost its r12 A/B (curation_report
+    #    at sf0.1: 4.3-7.0 s without, 6.7-8.3 s with): the two join
+    #    sides derive the chain in parallel across idle cores, while the
+    #    persist serializes a cache-build pass ahead of the join.
     cand = dd.minhash_dedup_pairs(docs1, persist_buckets=False)
     verified = dd.jaccard_for_pairs(docs1, cand).where(
         F.col("jaccard") >= jaccard_threshold
@@ -103,25 +91,26 @@ def curate_documents(
         .localCheckpoint()
     )
     docs2 = docs1.join(drops, "doc_id", "left_anti")
-    counts["after_near_dedup"] = stage_count(docs2)
 
-    # 3. quality filter — token count + lexical diversity
-    stats = ts.with_token_stats(docs2)
-    good = (
+    # 3. quality filter — token count + lexical diversity; the near-dedup
+    #    survivors are counted as they stream into this stage's job
+    stats = ts.with_token_stats(counted("after_near_dedup", docs2))
+    quality_stage = counted(
+        "after_quality",
         stats.where(
             (F.col("token_count") >= min_tokens)
             & (F.col("distinct_ratio") >= min_distinct_ratio)
-        )
-        .select("doc_id")
-        .localCheckpoint()
+        ).select("doc_id"),
     )
+    good = quality_stage.localCheckpoint()
     docs3 = docs2.join(good, "doc_id", "left_semi")
-    # |docs3| == |good| (good ids ⊆ docs2 ids)
-    counts["after_quality"] = stage_count(good)
 
+    # both checkpoints are eager: their jobs have filled the metrics
+    metrics = {**observed_metrics(exact_stage), **observed_metrics(quality_stage)}
+    stages = ("input", "after_exact_dedup", "after_near_dedup", "after_quality")
     return CurationResult(
         clean=docs3,
-        stage_counts=counts,
+        stage_counts={stage: metrics[stage]["n"] for stage in stages},
         stage_ids={"keep_exact": keep_exact, "drops": drops, "good": good},
     )
 
@@ -156,7 +145,6 @@ def curation_report(
         min_tokens=min_tokens,
         min_distinct_ratio=min_distinct_ratio,
         jaccard_threshold=jaccard_threshold,
-        eager_counts=False,  # count frames unused here; stay lazy
     )
     ids = res.stage_ids
 

@@ -13,10 +13,15 @@ Reference:
   (large-star/small-star style simplification): PySpark has no GraphX and
   the loop is deterministic and dependency-free (SURVEY.md §7.4).
 
-Scale: each iteration is one shuffle on the frontier; iterations =
-O(log(max component diameter)).  Duplicate clusters are tiny (2-4 docs),
-so convergence is 2-3 rounds; checkpoint/localCheckpoint every few rounds
-truncates the lineage on long chains.
+Scale: iterations = O(log(max component diameter)) thanks to the
+pointer jump, so the number of rounds follows the diameter, not the
+component size.  The sf0.01 blocked-pair graph (4,023 pairs over 1,488
+nodes) has 106 components of up to 47 nodes with diameters up to 18,
+and converges in 10 rounds plus the label init.  A round is ONE plan
+(labels broadcast once, one shuffle for the per-node min) and ONE
+materializing aggregate that is also the convergence test; under AQE
+that is ~6 Spark jobs per round.  Every round is localCheckpoint-ed, so
+the lineage never grows with the round count.
 """
 
 from __future__ import annotations
@@ -278,108 +283,95 @@ def connected_components(
         .distinct()
         .persist()
     )
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-    ).localCheckpoint()
     try:
-        return _cc_loop(sym, labels, max_iterations)
+        return _cc_loop(sym, max_iterations)
     finally:
         # unpersist on every exit path — a task failure mid-loop must
         # not pin the candidate-pair graph in executor memory
         sym.unpersist()
 
 
-def _cc_loop(sym: DataFrame, labels: DataFrame, max_iterations: int) -> DataFrame:
-    from puma_matcher_spark.operators.graph import loop_shuffle_partitions
+def _cc_loop(sym: DataFrame, max_iterations: int) -> DataFrame:
+    from puma_matcher_spark.operators.graph import (
+        BROADCAST_NODES_MAX,
+        loop_shuffle_partitions,
+    )
+    from puma_matcher_spark.plans.inspect import observed_metrics
 
-    # size the loop's shuffle partitions from the measured edge count
-    # (r12 — same anti-scaling fix as the pagerank/LPA/k-core loops; the
-    # count reads the cache the labels init already materialized)
-    with loop_shuffle_partitions(sym.sparkSession, sym.count()):
-        return _cc_loop_scoped(sym, labels, max_iterations)
-
-
-def _cc_loop_scoped(
-    sym: DataFrame, labels: DataFrame, max_iterations: int
-) -> DataFrame:
-    from puma_matcher_spark.operators.graph import BROADCAST_NODES_MAX
-
+    # the label init absorbs the first hop (each node starts at the min
+    # of itself and its neighbours) and its eager checkpoint job observes
+    # the node and edge counts the broadcast gate and the shuffle sizing
+    # read
+    init = (
+        sym.groupBy("src")
+        .agg(
+            F.least(F.col("src"), F.min("dst")).alias("component"),
+            F.count(F.lit(1)).alias("_deg"),
+        )
+        .observe(
+            "cc_init",
+            F.count(F.lit(1)).alias("nodes"),
+            F.sum("_deg").alias("edges"),
+        )
+        .select(F.col("src").alias("id"), "component")
+    )
+    labels = init.localCheckpoint()
+    n = observed_metrics(init)["cc_init"]
     # labels is O(nodes) and checkpoint-backed (no stats for plan-time
     # auto-broadcast) — broadcast it explicitly when small so the
     # persisted edge list never re-shuffles per round; web-scale graphs
     # fall back to the co-partitioned shuffle join (same gate as the
     # PageRank / label-propagation loops)
-    bc = (
-        F.broadcast
-        if labels.count() <= BROADCAST_NODES_MAX
-        else (lambda df: df)
-    )
+    bc = F.broadcast if n["nodes"] <= BROADCAST_NODES_MAX else (lambda df: df)
     changed = 0
     prev = None
-    for i in range(max_iterations):
-        # candidate label for each node: min of its neighbours' labels
-        nbr = (
-            sym.join(bc(labels.withColumnRenamed("id", "dst")), "dst")
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_component"))
-            .withColumnRenamed("src", "id")
-        )
-        # pointer-jump lookup built from the PREVIOUS round's labels
-        # (checkpoint-backed): component ← label of the label.  Folded
-        # into the SAME select as the hop, the round is
-        # L' = min(L, hop(L), L∘L) — one checkpoint per round like the
-        # plain loop, but covered distance ~doubles per round, so the
-        # iteration cap is a log bound instead of a hop count.
-        parents = labels.select(
-            F.col("id").alias("component"), F.col("component").alias("_parent")
-        )
-        # checkpoint BEFORE the convergence probe: the probe and the next
-        # round then both read the materialized frame instead of
-        # re-executing a plan that nests one join deeper per iteration
-        new_labels = (
-            labels.join(bc(nbr), "id", "left")
-            .join(bc(parents), "component", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("nbr_component", "component"),
-                    F.coalesce("_parent", "component"),
-                ).alias("component"),
+    # size the loop's shuffle partitions from the measured edge count
+    # (r12 — same anti-scaling fix as the pagerank/LPA/k-core loops)
+    with loop_shuffle_partitions(sym.sparkSession, n["edges"] or 0):
+        for _ in range(max_iterations):
+            # one plan per round, L' = min(L, hop(L), L∘L): the min over
+            # each node's own label, its neighbours' labels and the label
+            # of its label (the pointer jump ~doubles the covered distance
+            # per round, so the cap is a log bound, not a hop count).
+            # Both joins probe the SAME broadcast frame keyed on id, so
+            # the labels ship once per round (ReuseExchange).
+            lab = bc(labels)
+            own = labels.select("id", "component", F.col("component").alias("_old"))
+            hop = sym.join(lab, sym["dst"] == lab["id"]).select(
+                sym["src"].alias("id"), lab["component"]
             )
-        ).localCheckpoint(eager=False)
-        # STATS-RESET barrier (round-9 finding, diagnosed via jstack):
-        # a checkpointed frame carries its ORIGIN plan's size estimate,
-        # and each round's joins MULTIPLY the inputs' sizeInBytes — the
-        # BigInteger digit count compounds ~3x per round, and from
-        # ~round 17 the driver spends its time in
-        # BigInteger.multiplyToomCook3 (measured 0.6 s → 240 s/round by
-        # round 23; plans, lineage and caching all provably flat).
-        # Persisting and materializing each round makes downstream stats
-        # read the REAL cached size, so estimates stay small forever.
-        # The checkpoint is LAZY so the count fills checkpoint blocks AND
-        # the cache in ONE job (eager + persist + count ran each round's
-        # plan twice, r10 review finding).
-        new_labels.persist()
-        new_labels.count()  # FULL materialization — the limit(1) probe
-        #                     below may short-circuit before every cache
-        #                     partition (and thus the real-size stats)
-        #                     exists
-        changed = (
-            new_labels.alias("n")
-            .join(bc(labels.alias("o")), "id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        if prev is not None:
-            prev.unpersist(False)
-        prev = new_labels
-        labels = new_labels
-        if changed == 0:
-            break
+            jump = (
+                labels.alias("l")
+                .join(lab.alias("p"), F.col("l.component") == F.col("p.id"))
+                .select(F.col("l.id"), F.col("p.component"))
+            )
+            new_labels = (
+                own.unionByName(hop, allowMissingColumns=True)
+                .unionByName(jump, allowMissingColumns=True)
+                .groupBy("id")
+                .agg(
+                    F.min("component").alias("component"),
+                    (F.min("component") < F.min("_old")).alias("_changed"),
+                )
+            ).localCheckpoint(eager=False)
+            # STATS-RESET barrier (round-9 finding, diagnosed via jstack):
+            # a checkpointed frame carries its ORIGIN plan's size
+            # estimate, each round's joins MULTIPLY the inputs'
+            # sizeInBytes, and from ~round 17 the driver spent its time in
+            # BigInteger.multiplyToomCook3 (0.6 s → 240 s/round by round
+            # 23).  Persisting and fully materializing each round makes
+            # downstream stats read the REAL cached size.  The checkpoint
+            # is LAZY so one action fills checkpoint blocks AND cache
+            # (r10).  That action is the convergence test itself: an
+            # aggregate reads every row, so it materializes the frame.
+            new_labels.persist()
+            changed = new_labels.agg(F.count_if("_changed")).first()[0]
+            if prev is not None:
+                prev.unpersist(False)
+            prev = new_labels
+            labels = new_labels
+            if changed == 0:
+                break
     if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge within {max_iterations} "
@@ -392,7 +384,7 @@ def _cc_loop_scoped(
     # localCheckpoint-backed, so callers re-read the materialized RDD
     # blocks, not the loop's lineage
     labels.unpersist(False)
-    return labels
+    return labels.select("id", "component")
 
 
 def component_argmax(

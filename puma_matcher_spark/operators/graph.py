@@ -141,6 +141,8 @@ def _round_barrier(df: DataFrame, full: bool = True) -> DataFrame:
     0.6 s → 240 s/round by round 23).  Checkpoint, then persist and
     FULLY materialize the round's frame so every downstream plan reads
     the REAL cached size, and drop the previous round's cache entry.
+    ``_cc_loop`` runs the same barrier inline, with its convergence test
+    as the materializing action.
 
     The returned frame is persisted; callers unpersist the final round's
     frame before returning it (the data stays localCheckpoint-backed, so

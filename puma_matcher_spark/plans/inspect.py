@@ -21,6 +21,24 @@ def formatted_plan(df: DataFrame) -> str:
     return jdf.queryExecution().explainString(mode)
 
 
+def observed_metrics(df: DataFrame) -> dict[str, dict]:
+    """``{name: {metric: value}}`` for every ``df.observe(name, ...)`` in
+    ``df``'s plan, read from the query execution that an action on ``df``
+    itself ran — an eager ``localCheckpoint`` does; ``count()`` plans a
+    new query and does not, and before the action every metric reads
+    empty.  Named observations read this way never touch
+    ``pyspark.sql.Observation``: once a session has registered one of
+    those, its ObservationManager (not serializable) rides along with
+    every MLlib model that keeps a training summary, and transforming
+    such a model fails with "Task not serializable" (Spark 4.1)."""
+    to_java = df.sparkSession._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    metrics = to_java(df._jdf.queryExecution().observedMetrics())
+    return {
+        name: {f: row.get(i) for i, f in enumerate(row.schema().fieldNames())}
+        for name, row in metrics.items()
+    }
+
+
 def count_occurrences(df: DataFrame, token: str) -> int:
     return formatted_plan(df).count(token)
 

@@ -4369,19 +4369,20 @@ FROM d3""",
 def q_llm_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus curation: exact dedup → LSH near-dup removal →
     quality filter (llmdata/pipeline.py); returns the clean corpus ids
-    with per-stage audit counts.  Counts fold in as scalar subqueries
-    (eager_counts=False) over the pipeline's checkpointed stage ID
-    frames — each audit subquery reads a tiny id scan instead of
-    re-running its stage's LSH + verify chain (round 8: 6.5 s → 2.9 s
-    at sf0.1), mirroring how the oracle computes them."""
+    with per-stage audit counts.  The pipeline observes the counts
+    inside its stage checkpoint jobs, so they fold in as literals — no
+    audit subquery re-reads a stage."""
     from puma_matcher_spark.llmdata.pipeline import curate_documents
 
     docs = load_tables(spark, sf_dir).llm_documents()
-    result = curate_documents(docs, eager_counts=False)
-    out = result.clean.select("doc_id")
-    for stage, cdf in result.stage_counts.items():
-        out = out.withColumn(f"n_{stage}", cdf.scalar())
-    return out
+    result = curate_documents(docs)
+    return result.clean.select(
+        "doc_id",
+        *[
+            F.lit(n).cast("long").alias(f"n_{stage}")
+            for stage, n in result.stage_counts.items()
+        ],
+    )
 
 
 @register(

@@ -187,6 +187,125 @@ def test_curation_app_end_to_end(spark, sf_small, tmp_path):
     assert set(back.columns) == {"doc_id", "lang", "source", "clean_text", "n_tokens_removed"}
 
 
+#: Spark jobs of one sf0.001 curation app run.  The pipeline's stage
+#: counts are observed inside jobs it runs anyway and a publish sums
+#: ``tokens_cut`` from the written files (32-35 jobs); resolving the
+#: counts with actions of their own cost 43-44 jobs without a publish
+#: and 53 with one.
+CURATION_APP_MAX_JOBS = 38
+#: the llm_curation query folds the observed counts in as literals (26-27
+#: jobs); scalar count subqueries over the stage frames cost 35
+LLM_CURATION_MAX_JOBS = 31
+#: curation_report never read the counts: its 27-28 jobs are the
+#: pipeline's stage jobs plus the report aggregate, and observing adds
+#: none
+CURATION_REPORT_MAX_JOBS = 29
+#: the sf0.001 documents through exact dedup, near dedup, the quality
+#: gate, and the tokens the span cutting removes
+CURATION_COUNTS = {
+    "input": 500,
+    "after_exact_dedup": 500,
+    "after_near_dedup": 476,
+    "after_quality": 476,
+    "tokens_cut": 70,
+}
+
+
+def _jobs_of(spark, fn):
+    """``(fn(), Spark jobs it ran)``, counted under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-apps-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_curation_counts_ride_existing_jobs(spark, sf_small, tmp_path):
+    """The curation app returns the same counts and rows with and without
+    a publish, the per-source report and the llm_curation query agree
+    with those counts, and none of them spends a Spark job on counting."""
+    from puma_matcher_spark.apps import run_curation_app
+    from puma_matcher_spark.llmdata.pipeline import curation_report
+    from puma_matcher_spark.queries import REGISTRY
+    from puma_matcher_spark.sources.testdata import load_tables
+
+    out_root = str(tmp_path / "published")
+    runs = {
+        "no publish": _jobs_of(
+            spark, lambda: run_curation_app(spark, sf_small)
+        ),
+        "publish": _jobs_of(
+            spark, lambda: run_curation_app(spark, sf_small, out_root=out_root)
+        ),
+    }
+    rows = {}
+    for label, (res, n_jobs) in runs.items():
+        assert res.stage_counts == CURATION_COUNTS, label
+        assert n_jobs <= CURATION_APP_MAX_JOBS, (label, n_jobs)
+        rows[label] = sorted(tuple(r) for r in res.clean.collect())
+    assert rows["publish"] == rows["no publish"]
+    assert len(rows["publish"]) == CURATION_COUNTS["after_quality"]
+    assert sum(r[-1] for r in rows["publish"]) == CURATION_COUNTS["tokens_cut"]
+    published = spark.read.parquet(out_root).select(
+        "doc_id", "lang", "source", "clean_text", "n_tokens_removed"
+    )
+    assert sorted(tuple(r) for r in published.collect()) == rows["publish"]
+
+    docs = load_tables(spark, sf_small).llm_documents()
+    report, n_jobs = _jobs_of(spark, lambda: curation_report(docs).collect())
+    assert n_jobs <= CURATION_REPORT_MAX_JOBS, n_jobs
+    by_outcome = Counter()
+    for r in report:
+        by_outcome[r["outcome"]] += r["n_docs"]
+    c = CURATION_COUNTS
+    # an outcome no document lands in has no report row
+    assert by_outcome == +Counter(
+        {
+            "exact_dup": c["input"] - c["after_exact_dedup"],
+            "near_dup": c["after_exact_dedup"] - c["after_near_dedup"],
+            "low_quality": c["after_near_dedup"] - c["after_quality"],
+            "accepted": c["after_quality"],
+        }
+    )
+
+    llm, n_jobs = _jobs_of(
+        spark, lambda: REGISTRY["llm_curation"].spark_fn(spark, sf_small).collect()
+    )
+    assert n_jobs <= LLM_CURATION_MAX_JOBS, n_jobs
+    assert sorted(r["doc_id"] for r in llm) == [r[0] for r in rows["publish"]]
+    stages = ("input", "after_exact_dedup", "after_near_dedup", "after_quality")
+    assert {tuple(r[f"n_{s}"] for s in stages) for r in llm} == {
+        tuple(c[s] for s in stages)
+    }
+
+
+def test_mllib_models_transform_after_observed_counts(spark):
+    """The observed counts must not leave the session unable to ship an
+    MLlib model: a registered ``pyspark.sql.Observation`` makes every
+    model with a training summary fail to serialize (Spark 4.1)."""
+    from puma_matcher_spark.llmdata.pipeline import curate_documents
+    from puma_matcher_spark.operators.dedup import connected_components
+    from puma_matcher_spark.operators.instrument_ml import train_rf_classifier
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta"), (2, "tiny")],
+        ["doc_id", "text"],
+    )
+    assert curate_documents(docs).stage_counts["after_quality"] == 1
+    edges = spark.createDataFrame([(2, 1)], "id1 LONG, id2 LONG")
+    assert connected_components(edges).count() == 2
+    rows = [(float(i % 2), float(i % 2) * 10 + (i % 3) * 0.1) for i in range(60)]
+    _, acc = train_rf_classifier(
+        spark.createDataFrame(rows, ["label", "f1"]), ["f1"], num_trees=3
+    )
+    assert acc > 0.95
+
+
 def test_cli_list_and_oracle(capsys):
     from puma_matcher_spark.__main__ import main
 

@@ -43,6 +43,43 @@ def test_connected_components_long_chain_converges(spark):
     assert len(got) == n + 1
 
 
+#: Spark jobs one connected-components round may run under AQE: the
+#: labels broadcast, the cache scan, the round's shuffle and the three
+#: stages of the materializing count.  A round that probes convergence
+#: or sizes the graph with actions of its own runs ~11.
+CC_JOBS_PER_ROUND_MAX = 7
+#: jobs of the label init (its shuffle and the eager checkpoint)
+CC_INIT_JOBS_MAX = 4
+#: rounds on the 13-node chain 0-1-...-12: after the init (labels i-1)
+#: the label of the label covers 2, 4, 8 and 12 hops, and a fifth round
+#: sees no change
+CHAIN_ROUNDS = 5
+
+
+def test_connected_components_jobs_per_round(spark):
+    """Each round is one plan with one materializing action: the
+    convergence test and the graph sizes are observed inside jobs the
+    loop runs anyway, never probed with extra actions."""
+    from puma_matcher_spark.operators.dedup import connected_components
+
+    df = spark.createDataFrame([(i + 1, i) for i in range(12)], "id1 LONG, id2 LONG")
+    sc = spark.sparkContext
+    group = "test-dedup-cc-jobs-per-round"
+    sc.setJobGroup(group, "connected_components on a 13-node chain")
+    try:
+        comp = connected_components(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert {(r["id"], r["component"]) for r in comp.collect()} == {
+        (i, 0) for i in range(13)
+    }
+    assert n_jobs <= CC_INIT_JOBS_MAX + CC_JOBS_PER_ROUND_MAX * CHAIN_ROUNDS, (
+        f"connected_components ran {n_jobs} Spark jobs over {CHAIN_ROUNDS} "
+        "rounds: a round is running actions beyond its materializing count"
+    )
+
+
 def test_dedup_lookup_includes_singletons(spark):
     persons = spark.createDataFrame([(1,), (2,), (3,), (9,)], ["id"])
     edges = spark.createDataFrame([(2, 1)], ["id1", "id2"])

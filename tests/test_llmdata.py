@@ -249,33 +249,6 @@ def test_curation_scoped_bucket_cache_is_released(spark):
         assert cm.isEmpty(), "curation run leaked a CacheManager entry"
 
 
-def test_lsh_candidate_pairs_buckets_out_contract(spark):
-    """buckets_out: the bucket frame is plain-persisted, handed to the
-    caller, and NEVER ring-enrolled (a dead per-run entry must not
-    evict a live ring cache)."""
-    from puma_matcher_spark.functions import caching
-    from puma_matcher_spark.llmdata import dedup as dd
-
-    bk = spark.createDataFrame(
-        [(1, 0, "k1"), (2, 0, "k1"), (3, 1, "k2")],
-        ["doc_id", "band", "band_key"],
-    )
-    out: list = []
-    pairs = dd.lsh_candidate_pairs(bk, buckets_out=out)
-    try:
-        assert len(out) == 1
-        lvl = out[0].storageLevel
-        assert lvl.useMemory or lvl.useDisk
-        with caching._LOCK:
-            assert all(df is not out[0] for df in caching._RING)
-        assert {(r["doc1_id"], r["doc2_id"]) for r in pairs.collect()} == {
-            (1, 2)
-        }
-    finally:
-        for df in out:
-            df.unpersist(False)
-
-
 def test_sequence_packing_layout(spark):
     """Packing must be a gapless concatenate-then-chunk layout per
     source: offsets advance by token counts, windows chain contiguously,
