@@ -246,18 +246,18 @@ def _median(xs: list[float]) -> float:
 
 def _cold_sample(spark, fn, sf_dir: str) -> float:
     """Designated CACHE-COLD sample (r11 verdict #2): drop every layer
-    of in-session caching a query can ride — the memoized raw/derived
-    frames (scored candidates, purchase edges) and the persist_rotating
-    ring — then time ONE run that must rebuild them all.  Sidecar-only
-    transparency: the headline estimator (min-of-first-3 after a warm
-    run) is byte-identical to rounds 1-11, so cross-round comparability
-    holds; the cold number sits next to min/median so a persist-wave
-    row's steady-state vs cache-build cost is readable per round."""
-    from puma_matcher_spark.functions.caching import drain
+    of in-session caching a query can ride — ``reset_table_cache()``
+    clears the memoized tables and drains ``functions.caching`` (the
+    keyed memo of scored candidates and purchase edges, and the
+    persist_rotating ring) — then time ONE run that must rebuild them all.
+    Sidecar-only transparency: the headline estimator (min-of-first-3
+    after a warm run) is byte-identical to rounds 1-11, so cross-round
+    comparability holds; the cold number sits next to min/median so a
+    persist-wave row's steady-state vs cache-build cost is readable per
+    round."""
     from puma_matcher_spark.sources.testdata import reset_table_cache
 
     reset_table_cache()
-    drain()
     start = time.monotonic()
     fn(spark, sf_dir).count()
     return round(time.monotonic() - start, 3)

@@ -22,6 +22,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from puma_matcher_spark.functions import caching
 from puma_matcher_spark.functions.ids import pair_id
 from puma_matcher_spark.functions.rounding import (
     money_units,
@@ -38,11 +39,7 @@ from puma_matcher_spark.operators import matcher as m
 from puma_matcher_spark.operators import scorer as sc
 from puma_matcher_spark.operators import scorelist as sl
 from puma_matcher_spark.operators import stats as st
-from puma_matcher_spark.sources.testdata import (
-    Tables,
-    load_tables,
-    register_cache_reset,
-)
+from puma_matcher_spark.sources.testdata import Tables, load_tables
 
 # --------------------------------------------------------------------------
 # Shared SQL view fragments (DuckDB oracle side). The Spark twins live in
@@ -153,30 +150,6 @@ def _all_cand_ctes() -> str:
 # --------------------------------------------------------------------------
 
 
-# Scored-candidate frames are memoized per (session, sf_dir, family) and
-# persisted — the reference caches every stage output (Pipeline.scala:203)
-# and memoizes sources (SqlDataSource.scala:48); without this the TF chain
-# re-scans lineitem ~7× per consuming query.  The lock is held across the
-# build: concurrent first callers would otherwise each run the chain and
-# leak duplicate persisted frames (only one setdefault winner would be
-# reachable); the brief serial section costs less than duplicated work.
-_CAND_CACHE: dict[tuple, DataFrame] = {}
-_CAND_LOCK = threading.Lock()
-
-
-def _reset_derived_caches() -> None:
-    """Unpersist and drop the memoized derived frames (registered with
-    sources.testdata.reset_table_cache so one call clears every layer)."""
-    with _CAND_LOCK:
-        for cache in (_CAND_CACHE, _EDGE_CACHE):
-            for df in cache.values():
-                df.unpersist()
-            cache.clear()
-
-
-register_cache_reset(_reset_derived_caches)
-
-
 def _doc_count_scalar(tf: DataFrame):
     """Distinct-document count as a scalar-subquery Column (Spark 4
     ``DataFrame.scalar()``), computed from the tf frame so it reuses the
@@ -190,18 +163,18 @@ def _doc_count_scalar(tf: DataFrame):
     )
 
 
+# Scored-candidate frames are memoized per (session, sf_dir, family) in
+# functions.caching, which owns and releases them (and the tf intermediate,
+# through its ring): without the memo the TF chain re-scans lineitem ~7x
+# per consuming query.
 def _entity_candidates(t: Tables, which: str = "person") -> DataFrame:
     """Spark twin of _tf_chain's {p}cand."""
-    from pyspark import StorageLevel
 
-    key = (t.spark.sparkContext.applicationId, t.sf_dir, which)
-    with _CAND_LOCK:
-        if key in _CAND_CACHE:
-            return _CAND_CACHE[key]
+    def build() -> DataFrame:
         ents = (
             t.entities() if which == "person" else t.entities_secondary_orders()
         )
-        tf = m.entity_tf(ents).persist(StorageLevel.MEMORY_AND_DISK)
+        tf = caching.persist_rotating(m.entity_tf(ents))
         # N as a scalar subquery over the persisted tf frame — the old
         # eager .count() re-scanned the entity table at plan-build time
         # (reference EntitiesMatcherV2.scala:44-52 pays the same double
@@ -210,11 +183,12 @@ def _entity_candidates(t: Tables, which: str = "person") -> DataFrame:
         capped = m.cap_entity_frequency(tf, 2000, doc_count)
         pairs = m.entity_pairs(capped)
         pairs_idf = sc.with_idf(pairs, tf, doc_count)
-        out = sc.score_entity_pairs(
+        return sc.score_entity_pairs(
             pairs_idf, tf, which, 1 if which == "person" else 10
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _CAND_CACHE[key] = out
-        return out
+        )
+
+    key = ("candidates", t.spark.sparkContext.applicationId, t.sf_dir, which)
+    return caching.memoized(key, build)
 
 
 def _all_candidates(t: Tables) -> DataFrame:
@@ -6669,12 +6643,8 @@ def q_zorder3_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: queries (pagerank_mass, pagerank_top, purchase_communities,
 #: purchase_kcore); its derivation — orders ⋈ lineitem → distinct →
 #: symmetrize — dominates each query's wall-clock, so it is memoized
-#: per (session, sf_dir) and persisted exactly like the scored-candidate
-#: frames above (_CAND_CACHE) and the reference's stage-output cache
-#: (Pipeline.scala:203).
-_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
+#: per (session, sf_dir) in functions.caching, like the scored-candidate
+#: frames above.
 def _purchase_edges(t: Tables) -> DataFrame:
     """Symmetrized customer↔supplier edge list from the order fact chain
     (the undirected purchase network) — distinct so edge multiplicity
@@ -6682,10 +6652,8 @@ def _purchase_edges(t: Tables) -> DataFrame:
     sides disjoint.  Symmetrizing means no node is a sink, so the
     PageRank loop skips its per-iteration dangling-mass job (one join +
     one aggregate per round, nothing else)."""
-    key = (t.spark.sparkContext.applicationId, t.sf_dir)
-    with _CAND_LOCK:
-        if key in _EDGE_CACHE:
-            return _EDGE_CACHE[key]
+
+    def build() -> DataFrame:
         o, li = t.raw("orders"), t.raw("lineitem")
         # a NULL endpoint is not an edge: concat('c', NULL) yields a NULL
         # node id that silently DROPS out of the iteration's equi-joins,
@@ -6699,11 +6667,12 @@ def _purchase_edges(t: Tables) -> DataFrame:
             )
             .distinct()
         )
-        edges = cs.unionByName(
+        return cs.unionByName(
             cs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).persist()
-        _EDGE_CACHE[key] = edges
-        return edges
+        )
+
+    key = ("purchase_edges", t.spark.sparkContext.applicationId, t.sf_dir)
+    return caching.memoized(key, build)
 
 
 @register(

@@ -31,6 +31,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from puma_matcher_spark.functions import caching
+
 RAW_TABLES = (
     "region",
     "nation",
@@ -171,28 +173,19 @@ class Tables:
 
 _TABLES_CACHE: dict[tuple[str, str], Tables] = {}
 
-#: derived-frame caches built on top of raw tables (scored candidates,
-#: edge lists, …) register a reset callable here so one reset_table_cache
-#: call drops EVERY frozen file listing, not just the raw layer
-_DERIVED_CACHE_RESETS: list = []
-
-
-def register_cache_reset(fn) -> None:
-    _DERIVED_CACHE_RESETS.append(fn)
-
 
 def reset_table_cache() -> None:
     """Drop every memoized Tables instance (and with it each frozen
-    parquet file listing), plus all registered derived-frame caches
-    (scored candidates, purchase edges).  Call after REWRITING a table
+    parquet file listing), then release every cached frame the library
+    holds (``functions.caching.drain``: scored candidates, purchase
+    edges, ring intermediates).  Call after REWRITING a table
     directory in-process — the memoized DataFrames pin the file listing
     observed at first read, so a regenerated sf dir would otherwise
     yield stale rows or FileNotFoundException for vanished part files.
     The external driver and the test suite never rewrite /root/testdata,
     so they never need this."""
     _TABLES_CACHE.clear()
-    for fn in _DERIVED_CACHE_RESETS:
-        fn()
+    caching.drain()
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> Tables:

@@ -183,16 +183,41 @@ def test_concurrent_query_invocation_thread_safe(spark, sf_small):
     assert all(c > 0 for c in counts)
     # the memo must hold exactly one frame per (app, sf, family) and
     # concurrent callers must receive the identical cached object
-    from puma_matcher_spark.queries import _CAND_CACHE, _entity_candidates
+    from puma_matcher_spark.functions import caching
+    from puma_matcher_spark.queries import _entity_candidates
     from puma_matcher_spark.sources.testdata import load_tables
 
     t = load_tables(spark, sf_small)
     app = spark.sparkContext.applicationId
-    keys = [k for k in _CAND_CACHE if k[0] == app and k[1] == sf_small]
+    keys = [k for k in caching._MEMO if k[:3] == ("candidates", app, sf_small)]
     assert len(keys) == 2  # person + laboratory, no duplicates
+    assert all(caching._MEMO[k].is_cached for k in keys)
     with ThreadPoolExecutor(max_workers=4) as ex:
         frames = [f.result() for f in [ex.submit(_entity_candidates, t) for _ in range(4)]]
     assert all(f is frames[0] for f in frames)
+
+
+def test_reset_table_cache_releases_every_session_cache(spark, sf_small):
+    """``reset_table_cache()`` must leave the CacheManager empty: the
+    memoized candidate and edge frames AND the intermediates persisted
+    while building them are released, and a query rebuilt afterwards
+    returns the same rows."""
+    from puma_matcher_spark.queries import REGISTRY
+    from puma_matcher_spark.sources.testdata import reset_table_cache
+
+    reset_table_cache()
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty()
+    rows = {
+        name: REGISTRY[name].spark_fn(spark, sf_small).collect()
+        for name in ("entity_scores", "match_stats", "pagerank_top")
+    }
+    assert all(rows.values())
+    reset_table_cache()
+    assert cm.isEmpty(), "a session cache outlived reset_table_cache()"
+    rebuilt = REGISTRY["entity_scores"].spark_fn(spark, sf_small).collect()
+    assert sorted(rebuilt) == sorted(rows["entity_scores"])
 
 
 def test_fork_child_does_not_mutate_parent(spark):
