@@ -828,10 +828,13 @@ def semantic_dedup_groups(
     them all (same contract as the MinHash near-dup clusters).
 
     Scale shape: the pair stage is pluggable (``pairs=``, see
-    :func:`cosine_threshold_pairs`); the grouping is the min-label
-    connected-components loop (one co-partitioned join + one aggregate
-    per round, localCheckpoint-ed) and the roll-up is one hash aggregate
-    on group_id — nothing quadratic outside candidate generation.
+    :func:`cosine_threshold_pairs`); the grouping is
+    :func:`~puma_matcher_spark.operators.dedup.connected_components`
+    (a pair graph under ``graph.BROADCAST_NODES_MAX`` symmetrized edges
+    is collected once and solved on the driver; a larger one runs the
+    min-label loop, one co-partitioned join + one aggregate per round,
+    localCheckpoint-ed) and the roll-up is one hash aggregate on
+    group_id — nothing quadratic outside candidate generation.
     """
     from puma_matcher_spark.operators.dedup import connected_components
 

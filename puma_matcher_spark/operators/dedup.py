@@ -9,19 +9,28 @@ Reference:
   equality on the blocking key turns the cartesian into an equi-join;
   ``id1 > id2`` halves it.
 * GraphX ``connectedComponents`` (PersonDeduplicationStage.scala:150-159,
-  M8) → rebuilt as a pure-DataFrame iterative min-id propagation loop
-  (large-star/small-star style simplification): PySpark has no GraphX and
-  the loop is deterministic and dependency-free (SURVEY.md §7.4).
+  M8) → rebuilt as a size-adaptive min-id solve: PySpark has no GraphX
+  (SURVEY.md §7.4), so graphs under the gate are solved on the driver
+  with union-find and larger ones by a pure-DataFrame iterative min-id
+  propagation loop (large-star/small-star style simplification).
 
-Scale: iterations = O(log(max component diameter)) thanks to the
-pointer jump, so the number of rounds follows the diameter, not the
-component size.  The sf0.01 blocked-pair graph (4,023 pairs over 1,488
-nodes) has 106 components of up to 47 nodes with diameters up to 18,
-and converges in 10 rounds plus the label init.  A round is ONE plan
-(labels broadcast once, one shuffle for the per-node min) and ONE
-materializing aggregate that is also the convergence test; under AQE
-that is ~6 Spark jobs per round.  Every round is localCheckpoint-ed, so
-the lineage never grows with the round count.
+Scale: the gate is ``graph.BROADCAST_NODES_MAX`` symmetrized edge rows,
+read from one collect that both sizes the graph and, under the gate,
+fetches it (Dremel-style: the strategy follows sizes observed at run
+time).  Under it the driver solve costs that collect plus O(log nodes)
+vectorized numpy rounds.  The sf0.01 blocked-pair graph (4,023 pairs over
+1,488 nodes, 106 components of up to 47 nodes, diameters up to 18) is
+far under it: solving it on the driver instead of in the loop cut
+the perfbench dedup pass's median cold time from 33.6 to 25.6 s and its
+Spark jobs per warm pass from 117–118 to 52 (4 cores).
+Above the gate the loop runs: iterations = O(log(max component
+diameter)) thanks to the pointer jump, so the number of rounds follows
+the diameter, not the component size (the sf0.01 graph converges in 10
+rounds plus the label init).  A round is ONE plan (labels broadcast
+once, one shuffle for the per-node min) and ONE materializing aggregate
+that is also the convergence test; under AQE that is ~6 Spark jobs per
+round.  Every round is localCheckpoint-ed, so the lineage never grows
+with the round count.
 """
 
 from __future__ import annotations
@@ -29,10 +38,13 @@ from __future__ import annotations
 import os
 import unicodedata
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 
@@ -245,25 +257,42 @@ def person_pair_predicate(pairs: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame, max_iterations: int = 40
 ) -> DataFrame:
-    """Connected components by iterative min-label propagation with
-    path-halving.
+    """Connected components: (id1, id2) undirected edges in, (id,
+    component) out, where component = min id reachable.  Replaces GraphX
+    connectedComponents (M8).  Size-adaptive, chosen from the graph it
+    is given (no option):
 
-    Input: (id1, id2) undirected edges.  Output: (id, component) where
-    component = min id reachable.  Replaces GraphX connectedComponents
-    (M8).  Each round takes the min over neighbours' labels (one hop)
-    and then a pointer-jump (label ← label of the label): on chain-like
-    graphs the covered distance roughly doubles per round (a 150-hop
-    chain converges in ~9 rounds where the plain hop-only loop needed
-    one round PER HOP — and silently returned wrong components past the
-    cap: 333/15,000 wrong labels on the sf0.1 blocked-pairs graph,
-    round-9 finding); on interval-overlap graphs the jump is worth ~2x,
-    so the cap is sized for the hop bound, not the log bound.  Stops
-    when no label changes; RAISES if the cap is hit before convergence
-    instead of returning a truncated answer.  Per round the new label
-    frame is persisted and fully materialized — not for reuse but to
-    RESET Catalyst's size estimate to the real cached size (see the
-    stats-reset barrier note in ``_cc_loop``).
+    * **At most** ``graph.BROADCAST_NODES_MAX`` **symmetrized edge
+      rows**: one collect fetches the edge list to the driver as Arrow,
+      :func:`_cc_driver` solves it with vectorized union-find and the
+      labels come back through ``createDataFrame``.  The same ceiling
+      already bounds the loop's broadcast label frame, so a graph under
+      it fits on the driver.  Measured on 4 cores: a warm perfbench
+      dedup pass (sf0.01) runs the dedup operators in 20 Spark jobs and
+      1.8–1.9 s instead of the loop's 85 jobs and 6.8–7.1 s; near the
+      gate (480k symmetrized rows, 200k nodes, one component) the
+      driver solve took 2.3–3.7 s against the loop's 9.9–13.6 s.
+    * **Above it**: :func:`_cc_loop`, iterative min-label propagation
+      with path-halving.  Each round takes the min over neighbours'
+      labels (one hop) and then a pointer-jump (label ← label of the
+      label): on chain-like graphs the covered distance roughly doubles
+      per round (a 150-hop chain converges in ~9 rounds where the plain
+      hop-only loop needed one round PER HOP — and silently returned
+      wrong components past the cap: 333/15,000 wrong labels on the
+      sf0.1 blocked-pairs graph, round-9 finding); on interval-overlap
+      graphs the jump is worth ~2x, so the cap is sized for the hop
+      bound, not the log bound.  Stops when no label changes; RAISES if
+      the cap is hit before convergence instead of returning a
+      truncated answer.  Per round the new label frame is persisted and
+      fully materialized — not for reuse but to RESET Catalyst's size
+      estimate to the real cached size (see the stats-reset barrier note
+      in ``_cc_loop``).
+
+    Both paths return the same rows and schema; ``max_iterations`` only
+    bounds the loop, but it is validated before the branch.
     """
+    from puma_matcher_spark.operators import graph
+
     if max_iterations < 1:
         # with zero rounds the loop never runs, `changed` stays at its
         # initial value and the convergence raise is skipped — the call
@@ -273,22 +302,66 @@ def connected_components(
         raise ValueError(
             f"max_iterations must be >= 1, got {max_iterations}"
         )
-    # persist the symmetrized edge list: it feeds EVERY iteration's join
-    # plus the label init — without the persist the entire upstream plan
-    # (for near-dup graphs, the whole MinHash-LSH candidate pipeline)
-    # re-executes once per round (measured 2.4× on near_dup_clusters)
     sym = (
         edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
         .unionByName(edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst")))
         .distinct()
-        .persist()
     )
+    # one job sizes the graph and, under the gate, fetches all of it.  It
+    # reads sym unpersisted: a cached frame's first read adds a job that
+    # builds the cache, which only the loop needs
+    gate = graph.BROADCAST_NODES_MAX
+    head = sym.limit(gate + 1).toArrow()
+    if head.num_rows <= gate:
+        return _cc_driver(sym, head)
+    # persist the symmetrized edge list: it feeds EVERY iteration's join
+    # plus the label init — without the persist the entire upstream plan
+    # (for near-dup graphs, the whole MinHash-LSH candidate pipeline)
+    # re-executes once per round (measured 2.4× on near_dup_clusters).
+    # Above the gate the upstream therefore runs twice: once for the
+    # sizing job, once into this cache
+    sym.persist()
     try:
         return _cc_loop(sym, max_iterations)
     finally:
         # unpersist on every exit path — a task failure mid-loop must
         # not pin the candidate-pair graph in executor memory
         sym.unpersist()
+
+
+def _cc_driver(sym: DataFrame, table: pa.Table) -> DataFrame:
+    """Min-id components of the symmetrized (src, dst) edge ``table``
+    (all of ``sym``), solved on the driver.
+
+    Ids are ranked by sorting (ints or strings alike), so the min id of
+    a component is its min rank.  Union-find by hooking: every round
+    points each edge's larger root at the smaller one (``minimum.at``),
+    then pointer-jumps every node to its root.  A parent never exceeds
+    its node, so the forest stays acyclic, and every tree with a
+    neighbouring tree is hooked or hooked onto each round, which at
+    least halves the trees per component: O(log nodes) vectorized
+    rounds.
+    """
+    # the list is symmetric, so every node appears as a src
+    ids = pc.unique(table["src"])
+    ids = ids.take(pc.sort_indices(ids))
+    src = pc.index_in(table["src"], value_set=ids).to_numpy()
+    dst = pc.index_in(table["dst"], value_set=ids).to_numpy()
+    root = np.arange(len(ids))
+    while True:
+        a, b = root[src], root[dst]
+        if np.array_equal(a, b):
+            break
+        np.minimum.at(root, np.maximum(a, b), np.minimum(a, b))
+        while not np.array_equal(root[root], root):
+            root = root[root]
+    out = pa.table({"id": ids, "component": ids.take(root)})
+    key = sym.schema["src"].dataType
+    # the loop's schema: a group key id, an aggregate (nullable) component
+    schema = StructType(
+        [StructField("id", key, sym.schema["src"].nullable), StructField("component", key, True)]
+    )
+    return sym.sparkSession.createDataFrame(out, schema)
 
 
 def _cc_loop(sym: DataFrame, max_iterations: int) -> DataFrame:
@@ -551,8 +624,6 @@ def fs_em_parameters(
     (field, m, u, w_agree, w_disagree) with weights in log2 — the
     EM-fitted replacement for :func:`fs_linkage_weights`' fixed priors.
     """
-    import numpy as np
-
     side1 = persons.select(
         F.col(id_col).alias("id1"), *[F.col(f).alias(f"{f}_1") for f in fields]
     )

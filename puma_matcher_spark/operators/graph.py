@@ -43,7 +43,10 @@ from puma_matcher_spark.functions.rounding import pround
 #: fires and every round would otherwise pay a map-side shuffle write
 #: of the FULL edge list.  Above the ceiling (web-scale graphs) the
 #: loop falls back to the co-partitioned shuffle join, which is the
-#: correct 100 TB shape.
+#: correct 100 TB shape.  ``dedup.connected_components`` reads the same
+#: ceiling, on symmetrized edge rows, to choose its path: at or under
+#: it the whole edge list is collected and solved on the driver, above
+#: it the distributed loop runs.
 BROADCAST_NODES_MAX = 500_000
 
 #: Loop shuffle-partition sizing (r12, r11 verdict #1).  The driver's

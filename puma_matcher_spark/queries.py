@@ -1393,12 +1393,15 @@ SELECT id, CAST(MIN(r) AS BIGINT) AS component
 FROM reach GROUP BY id""",
 )
 def q_dedup_components_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M8 — iterative min-label connected components over the blocked
-    candidate-pair graph (GraphX connectedComponents rebuild;
-    PersonDeduplicationStage.scala:150-159).  The DuckDB twin computes
-    the same fixpoint as a recursive-CTE transitive closure — tractable
-    at gate scale, and an independent check that min-label propagation
-    converges to min-reachable-id."""
+    """M8 — min-id connected components over the blocked candidate-pair
+    graph (GraphX connectedComponents rebuild;
+    PersonDeduplicationStage.scala:150-159).  Under
+    ``graph.BROADCAST_NODES_MAX`` symmetrized edges (every fixture
+    scale) the graph is collected in one job and solved on the driver
+    with union-find; above it the iterative min-label loop runs.  The
+    DuckDB twin computes the same fixpoint as a recursive-CTE transitive
+    closure — tractable at gate scale, and an independent check that
+    either path converges to min-reachable-id."""
     from puma_matcher_spark.operators.dedup import connected_components
 
     edges = q_dedup_blocked_pairs(spark, sf_dir)

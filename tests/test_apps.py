@@ -284,13 +284,17 @@ def test_curation_counts_ride_existing_jobs(spark, sf_small, tmp_path):
     }
 
 
-def test_mllib_models_transform_after_observed_counts(spark):
+def test_mllib_models_transform_after_observed_counts(spark, monkeypatch):
     """The observed counts must not leave the session unable to ship an
     MLlib model: a registered ``pyspark.sql.Observation`` makes every
     model with a training summary fail to serialize (Spark 4.1)."""
     from puma_matcher_spark.llmdata.pipeline import curate_documents
+    from puma_matcher_spark.operators import graph
     from puma_matcher_spark.operators.dedup import connected_components
     from puma_matcher_spark.operators.instrument_ml import train_rf_classifier
+
+    # the loop observes its graph sizes; the driver path observes nothing
+    monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta"), (2, "tiny")],

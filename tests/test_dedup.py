@@ -1,5 +1,7 @@
 """Dedup: cleaning UDFs, blocked pairs, connected components."""
 
+import random
+
 from puma_matcher_spark.operators import dedup as dd
 
 import pytest
@@ -56,27 +58,103 @@ CC_INIT_JOBS_MAX = 4
 CHAIN_ROUNDS = 5
 
 
-def test_connected_components_jobs_per_round(spark):
+def test_connected_components_jobs_per_round(spark, monkeypatch):
     """Each round is one plan with one materializing action: the
     convergence test and the graph sizes are observed inside jobs the
     loop runs anyway, never probed with extra actions."""
+    from puma_matcher_spark.operators import graph
     from puma_matcher_spark.operators.dedup import connected_components
 
+    monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)  # force the loop
     df = spark.createDataFrame([(i + 1, i) for i in range(12)], "id1 LONG, id2 LONG")
-    sc = spark.sparkContext
-    group = "test-dedup-cc-jobs-per-round"
-    sc.setJobGroup(group, "connected_components on a 13-node chain")
-    try:
-        comp = connected_components(df)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    comp, n_jobs = _group_jobs(
+        spark, "test-dedup-cc-jobs-per-round", lambda: connected_components(df)
+    )
     assert {(r["id"], r["component"]) for r in comp.collect()} == {
         (i, 0) for i in range(13)
     }
     assert n_jobs <= CC_INIT_JOBS_MAX + CC_JOBS_PER_ROUND_MAX * CHAIN_ROUNDS, (
         f"connected_components ran {n_jobs} Spark jobs over {CHAIN_ROUNDS} "
         "rounds: a round is running actions beyond its materializing count"
+    )
+
+
+#: Spark jobs of connected components under the gate on an in-memory
+#: edge list: the edge list's distinct shuffle and the one collect (the
+#: loop ran 33 on the same 13-node chain)
+CC_DRIVER_JOBS_MAX = 2
+#: Spark jobs of dedup_components_cc on the sf_small fixture under the
+#: gate: the blocked-pair build plus the one collect (the loop ran 17)
+DEDUP_CC_JOBS_MAX = 8
+
+
+def _group_jobs(spark, group, fn):
+    """Run ``fn`` under its own job group; return (result, jobs run)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_driver_path_jobs(spark):
+    """Under the gate the graph is fetched in one collect and solved on
+    the driver: no per-round jobs."""
+    df = spark.createDataFrame([(i + 1, i) for i in range(12)], "id1 LONG, id2 LONG")
+    comp, n_jobs = _group_jobs(
+        spark, "test-dedup-cc-driver-jobs", lambda: dd.connected_components(df)
+    )
+    assert {(r["id"], r["component"]) for r in comp.collect()} == {
+        (i, 0) for i in range(13)
+    }
+    assert n_jobs <= CC_DRIVER_JOBS_MAX, (
+        f"connected_components under the gate ran {n_jobs} Spark jobs"
+    )
+
+
+def _random_edges(seed, n_ids, n_edges):
+    rng = random.Random(seed)
+    return [(rng.randrange(n_ids), rng.randrange(n_ids)) for _ in range(n_edges)]
+
+
+@pytest.mark.parametrize(
+    "rows, ddl",
+    [
+        ([(i + 1, i) for i in range(12)], "id1 LONG, id2 LONG"),
+        ([(2, 1), (3, 2), (11, 10), (5, 5)], "id1 LONG, id2 LONG"),
+        ([("b", "a"), ("c", "b"), ("z", "y")], "id1 STRING, id2 STRING"),
+        ([], "id1 INT, id2 INT"),
+        (_random_edges(seed=5, n_ids=150, n_edges=120), "id1 LONG, id2 LONG"),
+    ],
+    ids=["chain", "two-components-and-self-loop", "string-ids", "empty", "random"],
+)
+def test_connected_components_driver_path_matches_loop(spark, monkeypatch, rows, ddl):
+    """The driver solve and the forced loop give the same rows and the
+    same schema, whose id type is the input's."""
+    from puma_matcher_spark.operators import graph
+
+    edges = spark.createDataFrame(rows, ddl)
+    driver = dd.connected_components(edges)
+    monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)  # force the loop
+    loop = dd.connected_components(edges)
+    assert driver.schema == loop.schema
+    assert driver.schema["id"].dataType == edges.schema["id1"].dataType
+    assert sorted(driver.collect()) == sorted(loop.collect())
+    assert driver.count() == len({v for r in rows for v in r})
+
+
+def test_dedup_components_cc_jobs(spark, sf_small):
+    """The M8 query under the gate: the blocked pairs plus one collect."""
+    from puma_matcher_spark.queries import REGISTRY
+
+    build = REGISTRY["dedup_components_cc"].spark_fn
+    _, n_jobs = _group_jobs(
+        spark, "test-dedup-components-cc-jobs", lambda: build(spark, sf_small)
+    )
+    assert n_jobs <= DEDUP_CC_JOBS_MAX, (
+        f"dedup_components_cc ran {n_jobs} Spark jobs on sf_small"
     )
 
 
@@ -265,12 +343,14 @@ def test_component_argmax_unscored_component_falls_back_to_min_id(spark):
 
 
 @pytest.mark.slow
-def test_connected_components_long_chain_converges_in_log_rounds(spark):
+def test_connected_components_long_chain_converges_in_log_rounds(spark, monkeypatch):
     """Round 9: path-halving makes the iteration cap a LOG bound — a
     150-hop chain (old hop-only loop: silently wrong past 20 rounds)
     must resolve every node to component 0 within the default cap."""
+    from puma_matcher_spark.operators import graph
     from puma_matcher_spark.operators.dedup import connected_components
 
+    monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)  # force the loop
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(150)], "id1 LONG, id2 LONG"
     )
@@ -281,13 +361,15 @@ def test_connected_components_long_chain_converges_in_log_rounds(spark):
     assert len(comp) == 151
 
 
-def test_connected_components_raises_instead_of_truncating(spark):
+def test_connected_components_raises_instead_of_truncating(spark, monkeypatch):
     """An under-provisioned iteration cap must FAIL LOUDLY, never return
     truncated (wrongly split) components."""
     import pytest
 
+    from puma_matcher_spark.operators import graph
     from puma_matcher_spark.operators.dedup import connected_components
 
+    monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)  # force the loop
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], "id1 LONG, id2 LONG"
     )
@@ -295,15 +377,20 @@ def test_connected_components_raises_instead_of_truncating(spark):
         connected_components(edges, max_iterations=3).collect()
 
 
-def test_connected_components_rejects_zero_iterations(spark):
+def test_connected_components_rejects_zero_iterations(spark, monkeypatch):
     """max_iterations=0 would skip the loop entirely and return identity
     labels (every node its own component) without tripping the
-    convergence raise — reject it up front (r9 ADVICE #5)."""
+    convergence raise — reject it up front (r9 ADVICE #5), on the driver
+    path as well as on the loop."""
     import pytest
 
+    from puma_matcher_spark.operators import graph
     from puma_matcher_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame([(0, 1)], "id1 LONG, id2 LONG")
+    with pytest.raises(ValueError, match="max_iterations"):
+        connected_components(edges, max_iterations=0)
+    monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)  # force the loop
     with pytest.raises(ValueError, match="max_iterations"):
         connected_components(edges, max_iterations=0)
 

@@ -449,12 +449,13 @@ def test_iterative_loops_flat_per_round_at_depth_30(spark):
     assert head_tail_ratio(kc_times) < 5, kc_times
 
 
-def test_iterative_loops_leave_no_cache_entries(spark):
+def test_iterative_loops_leave_no_cache_entries(spark, monkeypatch):
     """r10: every iterative loop persists per-round frames for the
     stats-reset barrier and helper frames for reuse — ALL of them must
     be unpersisted on exit (the final frame stays checkpoint-backed),
     oreach call leaks O(nodes) CacheManager entries for the session's
     lifetime.  Pin it through the JVM cache manager."""
+    from puma_matcher_spark.operators import graph
     from puma_matcher_spark.operators.dedup import connected_components
     from puma_matcher_spark.operators.graph import (
         k_core,
@@ -475,9 +476,11 @@ def test_iterative_loops_leave_no_cache_entries(spark):
     pagerank(df, n_iter=3).count()
     label_propagation(sym, n_iter=2).count()
     k_core(sym, k=2, n_rounds=2).count()
-    connected_components(
-        df.select(F.col("src").alias("id1"), F.col("dst").alias("id2"))
-    ).count()
+    edges = df.select(F.col("src").alias("id1"), F.col("dst").alias("id2"))
+    connected_components(edges).count()  # driver path, under the gate
+    with monkeypatch.context() as m:
+        m.setattr(graph, "BROADCAST_NODES_MAX", 0)  # force the loop
+        connected_components(edges).count()
     assert cm.isEmpty(), "an iterative loop leaked a CacheManager entry"
 
 

@@ -18,6 +18,40 @@ def test_all_queries_match_oracle(spark, sf_small):
     )
 
 
+#: every query whose result goes through connected components
+CC_QUERIES = [
+    "dedup_components_cc",
+    "dedup_person_chain",
+    "near_dup_clusters",
+    "near_dup_best_rep",
+    "cluster_representatives",
+    "embedding_dup_clusters",
+    "semantic_dedup",
+]
+
+
+def test_connected_components_queries_match_oracle(spark, sf_small, monkeypatch):
+    """Fast-lane parity for the connected-components consumers: all of
+    them on the default (driver) path, and two with the loop forced."""
+    from puma_matcher_spark.operators import graph
+    from puma_matcher_spark.sources.testdata import reset_table_cache
+
+    try:
+        results = run_all(spark, sf_small, names=CC_QUERIES)
+        assert sorted(r.name for r in results) == sorted(CC_QUERIES)
+        monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)  # force the loop
+        results += run_all(
+            spark, sf_small, names=["dedup_components_cc", "near_dup_clusters"]
+        )
+    finally:
+        # the queries leave cached frames behind, and a cached sub-plan
+        # changes the physical plans the plan-shape tests count
+        reset_table_cache()
+        spark.catalog.clearCache()
+    failed = [str(r) for r in results if not r.ok]
+    assert not failed, "\n".join(failed)
+
+
 @pytest.mark.slow
 def test_rows_only_queries_execute(spark, sf_small):
     """Queries without oracles still must run and return a stable row
