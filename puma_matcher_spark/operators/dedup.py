@@ -29,8 +29,10 @@ the diameter, not the component size (the sf0.01 graph converges in 10
 rounds plus the label init).  A round is ONE plan (labels broadcast
 once, one shuffle for the per-node min) and ONE materializing aggregate
 that is also the convergence test; under AQE that is ~6 Spark jobs per
-round.  Every round is localCheckpoint-ed, so the lineage never grows
-with the round count.
+round.  Every round passes the iterative loops' one stats-reset barrier,
+``graph._CadencedBarrier``, materialized each round: the lineage never
+grows with the round count, and the barrier releases the round frames
+it caches on every exit path, the non-convergence raise included.
 """
 
 from __future__ import annotations
@@ -283,10 +285,10 @@ def connected_components(
       graphs the jump is worth ~2x, so the cap is sized for the hop
       bound, not the log bound.  Stops when no label changes; RAISES if
       the cap is hit before convergence instead of returning a
-      truncated answer.  Per round the new label frame is persisted and
-      fully materialized — not for reuse but to RESET Catalyst's size
-      estimate to the real cached size (see the stats-reset barrier note
-      in ``_cc_loop``).
+      truncated answer.  Per round the new label frame passes
+      ``graph._CadencedBarrier`` with the convergence test as its
+      materializing action — persisted not for reuse but to RESET
+      Catalyst's size estimate to the real cached size.
 
     Both paths return the same rows and schema; ``max_iterations`` only
     bounds the loop, but it is validated before the branch.
@@ -367,6 +369,7 @@ def _cc_driver(sym: DataFrame, table: pa.Table) -> DataFrame:
 def _cc_loop(sym: DataFrame, max_iterations: int) -> DataFrame:
     from puma_matcher_spark.operators.graph import (
         BROADCAST_NODES_MAX,
+        _CadencedBarrier,
         loop_shuffle_partitions,
     )
     from puma_matcher_spark.plans.inspect import observed_metrics
@@ -396,12 +399,21 @@ def _cc_loop(sym: DataFrame, max_iterations: int) -> DataFrame:
     # fall back to the co-partitioned shuffle join (same gate as the
     # PageRank / label-propagation loops)
     bc = F.broadcast if n["nodes"] <= BROADCAST_NODES_MAX else (lambda df: df)
+
+    def n_changed(labels: DataFrame) -> int:
+        # the convergence test doubles as the barrier's materializing
+        # action: an aggregate reads every row
+        return labels.agg(F.count_if("_changed")).first()[0]
+
     changed = 0
-    prev = None
     # size the loop's shuffle partitions from the measured edge count
-    # (r12 — same anti-scaling fix as the pagerank/LPA/k-core loops)
-    with loop_shuffle_partitions(sym.sparkSession, n["edges"] or 0):
-        for _ in range(max_iterations):
+    # (r12 — same anti-scaling fix as the pagerank/LPA/k-core loops);
+    # every round passes the shared stats-reset barrier, materialized
+    with (
+        loop_shuffle_partitions(sym.sparkSession, n["edges"] or 0),
+        _CadencedBarrier(max_iterations, cadence=1) as barrier,
+    ):
+        for i in range(max_iterations):
             # one plan per round, L' = min(L, hop(L), L∘L): the min over
             # each node's own label, its neighbours' labels and the label
             # of its label (the pointer jump ~doubles the covered distance
@@ -418,31 +430,17 @@ def _cc_loop(sym: DataFrame, max_iterations: int) -> DataFrame:
                 .join(lab.alias("p"), F.col("l.component") == F.col("p.id"))
                 .select(F.col("l.id"), F.col("p.component"))
             )
-            new_labels = (
+            labels, changed = barrier.round(
+                i,
                 own.unionByName(hop, allowMissingColumns=True)
                 .unionByName(jump, allowMissingColumns=True)
                 .groupBy("id")
                 .agg(
                     F.min("component").alias("component"),
                     (F.min("component") < F.min("_old")).alias("_changed"),
-                )
-            ).localCheckpoint(eager=False)
-            # STATS-RESET barrier (round-9 finding, diagnosed via jstack):
-            # a checkpointed frame carries its ORIGIN plan's size
-            # estimate, each round's joins MULTIPLY the inputs'
-            # sizeInBytes, and from ~round 17 the driver spent its time in
-            # BigInteger.multiplyToomCook3 (0.6 s → 240 s/round by round
-            # 23).  Persisting and fully materializing each round makes
-            # downstream stats read the REAL cached size.  The checkpoint
-            # is LAZY so one action fills checkpoint blocks AND cache
-            # (r10).  That action is the convergence test itself: an
-            # aggregate reads every row, so it materializes the frame.
-            new_labels.persist()
-            changed = new_labels.agg(F.count_if("_changed")).first()[0]
-            if prev is not None:
-                prev.unpersist(False)
-            prev = new_labels
-            labels = new_labels
+                ),
+                n_changed,
+            )
             if changed == 0:
                 break
     if changed != 0:
@@ -452,11 +450,6 @@ def _cc_loop(sym: DataFrame, max_iterations: int) -> DataFrame:
             "max_iterations (silently returning truncated components would "
             "merge/split clusters wrongly)"
         )
-    # drop the final round's CacheManager entry (it otherwise leaks one
-    # O(nodes) cache entry per call, r9 ADVICE #5) — the frame stays
-    # localCheckpoint-backed, so callers re-read the materialized RDD
-    # blocks, not the loop's lineage
-    labels.unpersist(False)
     return labels.select("id", "component")
 
 

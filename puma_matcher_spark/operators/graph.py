@@ -1,4 +1,5 @@
-"""Graph analytics beyond connected components: PageRank.
+"""Graph analytics beyond connected components: PageRank, label
+propagation and k-core.
 
 The reference's only graph operator is GraphX ``connectedComponents``
 (PersonDeduplicationStage.scala:150-159), rebuilt in operators/dedup.py.
@@ -17,14 +18,16 @@ uniformly through a 1-row scalar aggregate, so total mass stays 1.0 —
 the invariant the ``pagerank_mass`` property query checks.
 
 At scale: ranks/edges keep a stable hash partitioning on the join key
-across iterations (one co-partitioned shuffle each); `localCheckpoint`
-every few rounds truncates the growing lineage exactly like the
-connected-components loop.
+across iterations (one co-partitioned shuffle each).  Every iterative
+loop — these three and the connected-components loop in
+operators/dedup.py — passes each round through the ONE stats-reset
+barrier, :class:`_CadencedBarrier`, which truncates the lineage, resets
+Catalyst's size estimate, times the rounds and releases every cached
+round frame on every exit path.
 """
 
 from __future__ import annotations
 
-import os
 import time
 from contextlib import contextmanager
 
@@ -63,15 +66,18 @@ BROADCAST_NODES_MAX = 500_000
 #: * bytes = edge rows x ~64 B (two short string ids, serialized);
 #: * the 16 MB local target keeps small graphs parallel across real
 #:   cores without 32-way tiny-task storms (measured sweeps at sf0.1,
-#:   1.17M edges: 4-8 partitions beat both 1 and 32 — scripts/
-#:   graph_partition_exp.py; pagerank_top 11.7→6.4 s, LPA 6.0→3.4 s —
-#:   and the interleaved 5/6-vs-9 follow-up put ~5 partitions ahead of
-#:   9 on BOTH loops, so the target sits at 16 MB ≈ 230k edge rows);
+#:   1.17M edges: 4-8 partitions beat both 1 and 32 — OPTIMIZATION_r12.md
+#:   §1; pagerank_top 11.7→6.4 s, LPA 6.0→3.4 s — and the interleaved
+#:   5/6-vs-9 follow-up put ~5 partitions ahead of 9 on BOTH loops, so
+#:   the target sits at 16 MB ≈ 230k edge rows);
 #: * the 128 MB floor takes over at cluster scale so tasks stay in the
 #:   guide's 100 MB-1 GB band no matter the core count.
 #:
-#: ``PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS`` overrides: >0 forces a count,
-#: -1 disables the scoping (session conf rules), unset/0 = auto.
+#: Re-measured at sf0.1 on a 4-core host running local[32] (2
+#: interleaved pairs, warm medians, sizing on vs off): pagerank_top
+#: 10.3 vs 16.2 s, purchase_communities 6.6 vs 8.6 s, purchase_kcore
+#: 11.0 vs 13.1 s.  At local[4] the derived count equals the session
+#: default (pagerank_top 9.98 vs 9.94 s over 3 pairs: noise).
 _EDGE_ROW_BYTES = 64
 _LOOP_LOCAL_TARGET = 16 << 20
 _LOOP_SCALE_TARGET = 128 << 20
@@ -80,11 +86,6 @@ _LOOP_SCALE_TARGET = 128 << 20
 def loop_shuffle_partition_count(spark, n_rows: int) -> int:
     """Shuffle-partition count for an iterative graph loop over
     ``n_rows`` edge rows (see the sizing note above)."""
-    override = int(
-        os.environ.get("PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS", "0") or "0"
-    )
-    if override > 0:
-        return override
     est_bytes = max(1, n_rows) * _EDGE_ROW_BYTES
     cores = spark.sparkContext.defaultParallelism
     local = min(cores, -(-est_bytes // _LOOP_LOCAL_TARGET))
@@ -95,14 +96,10 @@ def loop_shuffle_partition_count(spark, n_rows: int) -> int:
 @contextmanager
 def loop_shuffle_partitions(spark, n_rows: int):
     """Scope ``spark.sql.shuffle.partitions`` to a size derived from the
-    loop's edge count; restores the session value on exit.  No-op when
-    ``PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS=-1``.  Session-wide while held
-    (Spark has no per-plan shuffle-partition knob), which is safe here:
-    the loops are driver-controlled and the engine runs queries
-    sequentially per session."""
-    if os.environ.get("PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS") == "-1":
-        yield
-        return
+    loop's edge count; restores the session value on exit.  Session-wide
+    while held (Spark has no per-plan shuffle-partition knob), which is
+    safe here: the loops are driver-controlled and the engine runs
+    queries sequentially per session."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions",
@@ -134,51 +131,44 @@ def _is_persisted(df: DataFrame) -> bool:
 BARRIER_CADENCE = 4
 
 
-def _round_barrier(df: DataFrame, full: bool = True) -> DataFrame:
-    """STATS-RESET barrier for iterative DataFrame loops (the round-9
-    connected-components diagnosis, operators/dedup.py ``_cc_loop`` and
-    PLANS.md: a localCheckpoint-ed frame carries its ORIGIN plan's
-    sizeInBytes estimate, each round's joins MULTIPLY the inputs'
-    estimates, and the BigInteger digit count compounds ~3× per round —
-    from ~round 16 the driver burns its time in BigInteger arithmetic,
-    0.6 s → 240 s/round by round 23).  Checkpoint, then persist and
-    FULLY materialize the round's frame so every downstream plan reads
-    the REAL cached size, and drop the previous round's cache entry.
-    ``_cc_loop`` runs the same barrier inline, with its convergence test
-    as the materializing action.
-
-    The returned frame is persisted; callers unpersist the final round's
-    frame before returning it (the data stays localCheckpoint-backed, so
-    later actions re-read materialized RDD blocks, not the lineage).
-
-    The checkpoint is LAZY (eager=False) so the count below materializes
-    checkpoint blocks AND the cache in ONE job — an eager localCheckpoint
-    followed by persist+count would execute the round twice per
-    iteration (r10 review finding).
-
-    ``full=False`` (a LIGHT round, r11): checkpoint + persist only — no
-    materializing count job.  The frame still reads as a lineage-capped
-    InMemoryRelation downstream, so the next materializing action
-    computes each skipped round exactly once (cache-on-compute) with
-    stats compounding bounded by :data:`BARRIER_CADENCE` levels.
-    Predecessor frames must NOT be unpersisted on a light round —
-    dropping an unmaterialized predecessor's cache entry lets the next
-    action recompute it once per downstream reference.
-    :class:`_CadencedBarrier` owns that bookkeeping for the loops."""
-    df = df.localCheckpoint(eager=False)
-    df.persist()
-    if full:
-        df.count()
-    return df
-
-
 class _CadencedBarrier:
-    """Per-loop owner of the barrier cadence: decides which rounds
-    materialize (every ``cadence``-th and ALWAYS the last, so the final
-    frame never references cached helpers after they unpersist) and
-    defers the previous frames' unpersist to the next full barrier,
-    where they are guaranteed materialized-and-stale.  One shared
-    implementation so the three loops cannot drift (r11 review).
+    """The STATS-RESET barrier every iterative DataFrame loop opens as a
+    context manager (pagerank, label propagation, k-core here, and the
+    connected-components loop in operators/dedup.py).
+
+    Why (the round-9 connected-components diagnosis, PLANS.md): a
+    localCheckpoint-ed frame carries its ORIGIN plan's sizeInBytes
+    estimate, each round's joins MULTIPLY the inputs' estimates, and the
+    BigInteger digit count compounds ~3× per round — from ~round 16 the
+    driver burns its time in BigInteger arithmetic (0.6 s → 240 s/round
+    by round 23).  Materializing a persisted round frame makes every
+    downstream plan read the REAL cached size.
+
+    It owns the whole per-round sequence, :meth:`round`:
+
+    * lazy ``localCheckpoint`` then ``persist``.  The checkpoint is LAZY
+      (eager=False) so one action fills checkpoint blocks AND the cache
+      — an eager checkpoint followed by persist + action would execute
+      the round twice (r10 review finding);
+    * materialize every ``cadence``-th round and ALWAYS the last (so the
+      final frame never references the caller's cached helpers after
+      they unpersist) with the caller's ``action`` — a count by default;
+      connected components passes its convergence aggregate, k-core its
+      degree-below-k probe.  The action must read every row;
+    * a LIGHT round (not materialized) is checkpoint + persist only: it
+      reads downstream as a lineage-capped InMemoryRelation, so the next
+      materializing action computes each skipped round exactly once
+      (cache-on-compute), with stats compounding bounded by the cadence;
+    * unpersist the stale frames at the next full round, where they are
+      guaranteed materialized — dropping an unmaterialized predecessor's
+      cache entry would let the next action recompute it once per
+      downstream reference;
+    * on exit, on every path (a convergence raise, a failed job),
+      unpersist every frame it still holds.  The final frame stays
+      localCheckpoint-backed, so later actions on it re-read the
+      materialized RDD blocks, not the loop's lineage;
+    * append each round's wall time (since the previous round's end) to
+      ``round_times`` when given.
 
     ``compose=True`` (r11): light rounds return the round's plan
     UNTOUCHED — no checkpoint, no persist.  A lazy ``localCheckpoint``
@@ -194,7 +184,7 @@ class _CadencedBarrier:
     re-execute once per reference and compound exponentially across the
     window.  Stats compounding stays bounded by the cadence exactly as
     with lazily-checkpointed light rounds (their frames carry origin-
-    plan estimates too; only the full barrier's count reads real sizes).
+    plan estimates too; only the full barrier's action reads real sizes).
     """
 
     def __init__(
@@ -202,56 +192,44 @@ class _CadencedBarrier:
         n_rounds: int,
         cadence: int = BARRIER_CADENCE,
         compose: bool = False,
+        round_times: list[float] | None = None,
     ):
         self.n_rounds = n_rounds
         self.cadence = cadence
         self.compose = compose
-        self._pending: list[DataFrame] = []
+        self.round_times = round_times
+        self._held: list[DataFrame] = []
 
-    def round(self, i: int, df: DataFrame) -> DataFrame:
+    def __enter__(self) -> _CadencedBarrier:
+        self._mark = time.monotonic()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in self._held:
+            df.unpersist(False)
+        self._held = []
+
+    def round(self, i: int, df: DataFrame, action=DataFrame.count):
+        """Pass round ``i``'s frame through the barrier; returns the
+        frame to build the next round on and the action's result (None
+        on a light round)."""
         full = (i + 1) % self.cadence == 0 or i == self.n_rounds - 1
-        if self.compose and not full:
-            return df
-        df = _round_barrier(df, full=full)
-        self._pending.append(df)
-        if full:
-            for p in self._pending[:-1]:
-                p.unpersist(False)
-            self._pending = [df]
-        return df
-
-
-def normalized_barrier_times(
-    times: list[float], cadence: int = BARRIER_CADENCE
-) -> list[float]:
-    """Per-round cost series under the barrier cadence: the time of each
-    MATERIALIZING round divided by the number of rounds its job executed
-    (light rounds measure only plan construction, ~0).  Flatness of this
-    series is the cadence-era equivalent of the old per-round flatness —
-    a full barrier that re-computed its window per downstream reference
-    (the re-nesting failure the flatness checks pin) inflates late
-    entries relative to early ones.  Used by the depth-30 flatness test
-    and scripts/graph_scale_stress.py.
-
-    A trailing PARTIAL window (n_rounds not a multiple of the cadence)
-    is dropped whenever at least one full window exists: each window
-    pays a fixed per-job cost (scheduling + subquery choreography) on
-    top of the per-round work, so a short tail's per-round share reads
-    systematically hot — measured 1.7x on a 2-round tail vs the 4-round
-    windows of the same loop (r11, scripts/graph_scale_stress.py) —
-    which is overhead amortization, not re-nesting."""
-    fulls: list[float] = []
-    lens: list[int] = []
-    window = 0
-    for i, t in enumerate(times):
-        window += 1
-        if (i + 1) % cadence == 0 or i == len(times) - 1:
-            fulls.append(t / window)
-            lens.append(window)
-            window = 0
-    if len(fulls) > 1 and lens[-1] < cadence:
-        fulls.pop()
-    return fulls
+        result = None
+        if full or not self.compose:
+            df = df.localCheckpoint(eager=False)
+            df.persist()
+            # held before the action runs, so a failing job is released
+            self._held.append(df)
+            if full:
+                result = action(df)
+                for stale in self._held[:-1]:
+                    stale.unpersist(False)
+                self._held = [df]
+        if self.round_times is not None:
+            now = time.monotonic()
+            self.round_times.append(now - self._mark)
+            self._mark = now
+        return df, result
 
 
 def edge_nodes(edges: DataFrame) -> DataFrame:
@@ -276,10 +254,11 @@ def pagerank(
     node frame, and the dangling-node set.  Each iteration is then ONE
     join of the cached weighted edges with the current ranks, one hash
     aggregate, and a 1-row dangling-mass aggregate folded in as a
-    scalar subquery; the ranks frame is localCheckpoint-ed every round
-    so the executed plan stays one-iteration deep instead of nesting
-    (nested plans re-run every earlier iteration's subqueries —
-    measured 4.5× slower on the purchase graph).
+    scalar subquery; the ranks frame passes the stats-reset barrier
+    (:class:`_CadencedBarrier`) every round so the executed plan stays
+    at most one cadence window deep instead of nesting (nested plans
+    re-run every earlier iteration's subqueries — measured 4.5× slower
+    on the purchase graph).
 
     Deterministic apart from float summation order; callers that need
     engine-reproducible output should round (the registered queries
@@ -372,46 +351,36 @@ def _pagerank_loop(
     # exactly ONE place (the contribution join — no dangle scalar, no
     # completion join), so light rounds can compose instead of paying a
     # per-round checkpoint execution (see _CadencedBarrier)
-    barrier = _CadencedBarrier(
-        n_iter, compose=not has_dangling and all_have_inlinks
-    )
-    for i in range(n_iter):
-        t0 = time.monotonic() if round_times is not None else 0.0
-        contribs = (
-            weighted.join(bc(ranks.withColumnRenamed("node", "src")), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
-        )
-        # mass parked on dangling nodes (no outgoing edge) this round
-        dangle = (
-            dangling.join(ranks, "node")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("d"))
-            .scalar()
-            if has_dangling
-            else F.lit(0.0)
-        )
-        base = contribs if all_have_inlinks else nodes.join(
-            contribs, "node", "left"
-        )
-        ranks = base.select(
-            "node",
-            (
-                (1.0 - damping) / n
-                + damping * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dangle / n)
-            ).alias("rank"),
-        )
-        # checkpoint every round INCLUDING the last: the final frame must
-        # not reference the cached helpers below after they unpersist.
-        # A FULL barrier (checkpoint + persist + materializing count)
-        # runs every BARRIER_CADENCE-th round and always on the last —
-        # it executes the accumulated light rounds (each computed once,
-        # cache-on-compute) and resets Catalyst's size estimate before
-        # the BigInteger stats compounding can bite (~16 levels).
-        # Light rounds only checkpoint+persist (no job).
-        ranks = barrier.round(i, ranks)
-        if round_times is not None:
-            round_times.append(time.monotonic() - t0)
-    ranks.unpersist(False)
+    with _CadencedBarrier(
+        n_iter,
+        compose=not has_dangling and all_have_inlinks,
+        round_times=round_times,
+    ) as barrier:
+        for i in range(n_iter):
+            contribs = (
+                weighted.join(bc(ranks.withColumnRenamed("node", "src")), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
+            )
+            # mass parked on dangling nodes (no outgoing edge) this round
+            dangle = (
+                dangling.join(ranks, "node")
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("d"))
+                .scalar()
+                if has_dangling
+                else F.lit(0.0)
+            )
+            base = contribs if all_have_inlinks else nodes.join(
+                contribs, "node", "left"
+            )
+            ranks = base.select(
+                "node",
+                (
+                    (1.0 - damping) / n
+                    + damping * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dangle / n)
+                ).alias("rank"),
+            )
+            ranks, _ = barrier.round(i, ranks)
     for c in (nodes, weighted) if caller_persisted else (edges, nodes, weighted):
         c.unpersist()
     return ranks
@@ -436,10 +405,9 @@ def label_propagation(
     engines run the identical computation.
 
     Scale shape per round: one shuffle join of labels onto edges, one
-    count aggregate, one rank-within-node window; labels pass the
-    stats-reset barrier per round like the PageRank loop
-    (``_round_barrier`` — deep n_iter must not hit the BigInteger
-    size-estimate blowup).
+    count aggregate, one argmax aggregate; labels pass the stats-reset
+    barrier (:class:`_CadencedBarrier`) like the PageRank loop — deep
+    n_iter must not hit the BigInteger size-estimate blowup.
     """
     caller_persisted = _is_persisted(edges)
     sym = edges if caller_persisted else edges.persist()
@@ -465,28 +433,26 @@ def _lpa_loop(
     bc = F.broadcast if labels.count() <= BROADCAST_NODES_MAX else (lambda df: df)
     # each round's labels frame feeds exactly one consumer (the
     # neighbour join), so light rounds compose (see _CadencedBarrier)
-    barrier = _CadencedBarrier(n_iter, compose=True)
     try:
-        for i in range(n_iter):
-            t0 = time.monotonic() if round_times is not None else 0.0
-            # winner per node = (max count, then min label): expressed as
-            # min(struct(-c, label)) so the argmax is a HASH aggregate on
-            # src instead of a row_number window (which would sort every
-            # partition) — same deterministic winner, one less sort per
-            # round; the unrolled SQL oracle keeps the row_number form,
-            # which selects the identical row
-            labels = barrier.round(
-                i,
-                sym.join(bc(labels.withColumnRenamed("node", "dst")), "dst")
-                .groupBy("src", "label")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .groupBy("src")
-                .agg(F.min(F.struct((-F.col("c")).alias("nc"), "label")).alias("w"))
-                .select(F.col("src").alias("node"), F.col("w.label").alias("label")),
-            )
-            if round_times is not None:
-                round_times.append(time.monotonic() - t0)
-        labels.unpersist(False)
+        with _CadencedBarrier(
+            n_iter, compose=True, round_times=round_times
+        ) as barrier:
+            for i in range(n_iter):
+                # winner per node = (max count, then min label): expressed
+                # as min(struct(-c, label)) so the argmax is a HASH
+                # aggregate on src instead of a row_number window (which
+                # would sort every partition) — same deterministic winner,
+                # one less sort per round; the unrolled SQL oracle keeps
+                # the row_number form, which selects the identical row
+                labels, _ = barrier.round(
+                    i,
+                    sym.join(bc(labels.withColumnRenamed("node", "dst")), "dst")
+                    .groupBy("src", "label")
+                    .agg(F.count(F.lit(1)).alias("c"))
+                    .groupBy("src")
+                    .agg(F.min(F.struct((-F.col("c")).alias("nc"), "label")).alias("w"))
+                    .select(F.col("src").alias("node"), F.col("w.label").alias("label")),
+                )
         return labels
     finally:
         if not caller_persisted:
@@ -533,10 +499,14 @@ def k_core(
 
     Output: surviving (node, degree) after the last round.  Per round:
     one degree aggregate + two semi-joins; the surviving edge frame
-    passes the stats-reset barrier (``_round_barrier``) so plans stay
-    one round deep AND deep peels cannot hit the BigInteger
-    size-estimate blowup.
+    passes the stats-reset barrier (:class:`_CadencedBarrier`) so plans
+    stay one round deep AND deep peels cannot hit the BigInteger
+    size-estimate blowup.  Raises when the peel has not converged.
     """
+    if n_rounds < 1:
+        # with zero rounds there is no last round to probe, and the
+        # unpeeled input would come back as "the k-core"
+        raise ValueError(f"n_rounds must be >= 1, got {n_rounds}")
     cur = edges.localCheckpoint()
     # size the peel loop's shuffle partitions from the starting edge
     # count (r12 — see loop_shuffle_partitions; survivors only shrink)
@@ -557,57 +527,59 @@ def _k_core_loop(
         if edge_nodes(cur).count() <= BROADCAST_NODES_MAX
         else (lambda df: df)
     )
-    barrier = _CadencedBarrier(n_rounds)
-    for i in range(n_rounds):
-        t0 = time.monotonic() if round_times is not None else 0.0
-        deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
-        # LAZY checkpoint (r11): an eager one here would run a per-round
-        # job (scan cur → deg) and defeat the barrier cadence below.
-        # localCheckpoint still marks the RDD persisted, so the two
-        # semi-join references compute keep once at the next
-        # materializing action, and its lineage stays capped.
-        keep = deg.where(F.col("c") >= k).select("src").localCheckpoint(
-            eager=False
+
+    def degrees(edges: DataFrame) -> DataFrame:
+        return edges.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.lit(1)).cast("long").alias("degree")
         )
-        # both semi-joins reference the SAME keep frame (the dst side by
-        # expression, not a renamed copy) so the two broadcast exchanges
-        # canonicalize identically and ReuseExchange ships keep once per
-        # round instead of twice
-        kb = bc(keep)
-        survivors = cur.join(kb, "src", "left_semi")
-        # the alias only disambiguates the self-reference for the
-        # analyzer; canonicalization strips it, so both broadcast
-        # exchanges still dedupe
-        cur = barrier.round(
-            i,
-            survivors.join(
-                kb.alias("kcore_keep"),
-                F.col("dst") == F.col("kcore_keep.src"),
-                "left_semi",
-            ),
-        )
-        if round_times is not None:
-            round_times.append(time.monotonic() - t0)
-    out = cur.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    )
-    # convergence probe (round-9, same contract as connected_components):
+
+    def below_k(edges: DataFrame) -> int:
+        # convergence probe (round-9, same contract as
+        # connected_components), run as the last round's materializing
+        # action: its degree aggregate reads every row
+        return degrees(edges).where(F.col("degree") < k).limit(1).count()
+
+    with _CadencedBarrier(n_rounds, round_times=round_times) as barrier:
+        for i in range(n_rounds):
+            deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
+            # LAZY checkpoint (r11): an eager one here would run a
+            # per-round job (scan cur → deg) and defeat the barrier
+            # cadence below.  localCheckpoint still marks the RDD
+            # persisted, so the two semi-join references compute keep
+            # once at the next materializing action, and its lineage
+            # stays capped.
+            keep = deg.where(F.col("c") >= k).select("src").localCheckpoint(
+                eager=False
+            )
+            # both semi-joins reference the SAME keep frame (the dst side
+            # by expression, not a renamed copy) so the two broadcast
+            # exchanges canonicalize identically and ReuseExchange ships
+            # keep once per round instead of twice
+            kb = bc(keep)
+            survivors = cur.join(kb, "src", "left_semi")
+            # the alias only disambiguates the self-reference for the
+            # analyzer; canonicalization strips it, so both broadcast
+            # exchanges still dedupe
+            cur, below = barrier.round(
+                i,
+                survivors.join(
+                    kb.alias("kcore_keep"),
+                    F.col("dst") == F.col("kcore_keep.src"),
+                    "left_semi",
+                ),
+                below_k if i == n_rounds - 1 else DataFrame.count,
+            )
     # a survivor below k means the peel cascade was still removing when
     # the rounds ran out — the result would NOT be the k-core, and both
     # engines agreeing on a truncated peel is exactly the failure parity
     # cannot catch.  Fail loudly instead.
-    try:
-        if out.where(F.col("degree") < k).limit(1).count():
-            raise RuntimeError(
-                f"k_core: peeling had not converged after {n_rounds} rounds "
-                "(a survivor still has degree < k) — raise n_rounds; the "
-                "fixed-round result is not the k-core"
-            )
-    finally:
-        # the probe read the cache; later actions on `out` re-read the
-        # final round's checkpoint blocks (no CacheManager entry leak)
-        cur.unpersist(False)
-    return out
+    if below:
+        raise RuntimeError(
+            f"k_core: peeling had not converged after {n_rounds} rounds "
+            "(a survivor still has degree < k) — raise n_rounds; the "
+            "fixed-round result is not the k-core"
+        )
+    return degrees(cur)
 
 
 def pagerank_sql(

@@ -370,11 +370,15 @@ def test_connected_components_raises_instead_of_truncating(spark, monkeypatch):
     from puma_matcher_spark.operators.dedup import connected_components
 
     monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)  # force the loop
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], "id1 LONG, id2 LONG"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iterations=3).collect()
+    # the raise path releases the last round's cached label frame too
+    assert cm.isEmpty(), "the convergence raise leaked a CacheManager entry"
 
 
 def test_connected_components_rejects_zero_iterations(spark, monkeypatch):

@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 
 from puma_matcher_spark.llmdata.sampling import weighted_sample_topk
 from puma_matcher_spark.operators.dedup import edit_distance_pairs
-from puma_matcher_spark.operators.graph import pagerank, pagerank_mass_check
+from puma_matcher_spark.operators.graph import (
+    BARRIER_CADENCE,
+    pagerank,
+    pagerank_mass_check,
+)
 from puma_matcher_spark.sources.maintenance import zorder_by, zvalue
 from puma_matcher_spark.streaming.events import trend_stats
 
@@ -298,8 +302,10 @@ def test_composed_light_rounds_match_per_round_barrier(spark):
 
     orig_init = g._CadencedBarrier.__init__
 
-    def no_compose(self, n_rounds, cadence=g.BARRIER_CADENCE, compose=False):
-        orig_init(self, n_rounds, cadence, False)
+    def no_compose(
+        self, n_rounds, cadence=g.BARRIER_CADENCE, compose=False, round_times=None
+    ):
+        orig_init(self, n_rounds, cadence, False, round_times)
 
     try:
         composed_pr = {
@@ -374,6 +380,8 @@ def test_k_core_raises_when_peel_cascade_outruns_rounds(spark):
 
     from puma_matcher_spark.operators.graph import k_core
 
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(10)], "src LONG, dst LONG"
     )
@@ -382,6 +390,11 @@ def test_k_core_raises_when_peel_cascade_outruns_rounds(spark):
     )
     with pytest.raises(RuntimeError, match="not converged"):
         k_core(sym, k=2, n_rounds=4).collect()
+    # the raise path releases the round frames the barrier cached
+    assert cm.isEmpty(), "the k-core raise leaked a CacheManager entry"
+    # zero rounds leave nothing to probe: rejected up front
+    with pytest.raises(ValueError, match="n_rounds"):
+        k_core(sym, k=2, n_rounds=0)
     # enough rounds: converges to the (empty) exact 2-core
     assert k_core(sym, k=2, n_rounds=5).count() == 0
     tri = spark.createDataFrame(
@@ -393,12 +406,44 @@ def test_k_core_raises_when_peel_cascade_outruns_rounds(spark):
     assert k_core(tri_sym, k=2, n_rounds=2).count() == 3
 
 
+def normalized_barrier_times(
+    times: list[float], cadence: int = BARRIER_CADENCE
+) -> list[float]:
+    """Per-round cost series under the barrier cadence: the time of each
+    MATERIALIZING round divided by the number of rounds its job executed
+    (light rounds measure only plan construction, ~0).  Flatness of this
+    series is the cadence-era equivalent of the old per-round flatness —
+    a full barrier that re-computed its window per downstream reference
+    (the re-nesting failure the flatness checks pin) inflates late
+    entries relative to early ones.
+
+    A trailing PARTIAL window (n_rounds not a multiple of the cadence)
+    is dropped whenever at least one full window exists: each window
+    pays a fixed per-job cost (scheduling + subquery choreography) on
+    top of the per-round work, so a short tail's per-round share reads
+    systematically hot — measured 1.7x on a 2-round tail vs the 4-round
+    windows of the same loop (r11, PLANS.md) — which is overhead
+    amortization, not re-nesting."""
+    fulls: list[float] = []
+    lens: list[int] = []
+    window = 0
+    for i, t in enumerate(times):
+        window += 1
+        if (i + 1) % cadence == 0 or i == len(times) - 1:
+            fulls.append(t / window)
+            lens.append(window)
+            window = 0
+    if len(fulls) > 1 and lens[-1] < cadence:
+        fulls.pop()
+    return fulls
+
+
 @pytest.mark.slow
 def test_iterative_loops_flat_per_round_at_depth_30(spark):
     """r9 verdict #3: the Catalyst size-estimate blowup (BigInteger
     stats arithmetic compounding ~3x per round, exponential driver CPU
     from ~round 16) was fixed in the CC loop; pagerank / LPA / k-core
-    now share the same stats-reset barrier (_round_barrier).  Drive all
+    now share the same stats-reset barrier (_CadencedBarrier).  Drive all
     three 30 rounds deep and assert wall-clock stays flat — under the
     old bare-localCheckpoint loops round 30 took ORDERS of magnitude
     longer than round 1, so a loose 5x tail/head bound is noise-proof
@@ -414,7 +459,6 @@ def test_iterative_loops_flat_per_round_at_depth_30(spark):
     from puma_matcher_spark.operators.graph import (
         k_core,
         label_propagation,
-        normalized_barrier_times,
         pagerank,
     )
 
@@ -488,8 +532,6 @@ def test_normalized_barrier_times_windows():
     """Pure-function pin for the cadence bookkeeping: windows are
     CADENCE long, the tail window is the remainder, and each entry is
     the materializing round's time divided by its window length."""
-    from puma_matcher_spark.operators.graph import normalized_barrier_times
-
     # 10 rounds at cadence 4 -> windows of 4, 4, 2; the PARTIAL tail
     # window is dropped (its per-round share over-weights the fixed
     # per-window job overhead -- measured 1.7x hot on a 2-round tail)
@@ -505,19 +547,17 @@ def test_normalized_barrier_times_windows():
     ) == [2.0, 1.0]
 
 
-def test_loop_shuffle_partition_count_scales_with_edges(spark, monkeypatch):
+def test_loop_shuffle_partition_count_scales_with_edges(spark):
     """r12: the iterative loops derive their shuffle-partition count
     from the measured edge count — small graphs get a few real-core
     partitions (not a 32-way tiny-task storm), huge graphs get the
-    ~128 MB/partition floor regardless of core count, and the env
-    override wins when set."""
+    ~128 MB/partition floor regardless of core count."""
     from puma_matcher_spark.operators.graph import (
         _EDGE_ROW_BYTES,
         _LOOP_SCALE_TARGET,
         loop_shuffle_partition_count,
     )
 
-    monkeypatch.delenv("PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS", raising=False)
     cores = spark.sparkContext.defaultParallelism
     assert loop_shuffle_partition_count(spark, 0) == 1
     assert loop_shuffle_partition_count(spark, 1_000) == 1
@@ -535,6 +575,3 @@ def test_loop_shuffle_partition_count_scales_with_edges(spark, monkeypatch):
         for n in (10**3, 10**5, 10**6, 10**8, 10**10)
     ]
     assert counts == sorted(counts)
-    # env override: >0 forces the count
-    monkeypatch.setenv("PUMA_SPARK_LOOP_SHUFFLE_PARTITIONS", "5")
-    assert loop_shuffle_partition_count(spark, 10**10) == 5

@@ -29,16 +29,27 @@ CC_QUERIES = [
     "semantic_dedup",
 ]
 
+#: the purchase-graph queries over the PageRank, label-propagation and
+#: k-core loops
+GRAPH_LOOP_QUERIES = [
+    "pagerank_top",
+    "pagerank_mass",
+    "purchase_communities",
+    "purchase_kcore",
+]
 
-def test_connected_components_queries_match_oracle(spark, sf_small, monkeypatch):
-    """Fast-lane parity for the connected-components consumers: all of
-    them on the default (driver) path, and two with the loop forced."""
+
+def test_graph_loop_queries_match_oracle(spark, sf_small, monkeypatch):
+    """Fast-lane parity for the iterative graph loops: every
+    connected-components consumer on the default (driver) path, two with
+    the CC loop forced, and the PageRank / LPA / k-core queries."""
     from puma_matcher_spark.operators import graph
     from puma_matcher_spark.sources.testdata import reset_table_cache
 
+    names = CC_QUERIES + GRAPH_LOOP_QUERIES
     try:
-        results = run_all(spark, sf_small, names=CC_QUERIES)
-        assert sorted(r.name for r in results) == sorted(CC_QUERIES)
+        results = run_all(spark, sf_small, names=names)
+        assert sorted(r.name for r in results) == sorted(names)
         monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)  # force the loop
         results += run_all(
             spark, sf_small, names=["dedup_components_cc", "near_dup_clusters"]
