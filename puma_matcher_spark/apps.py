@@ -6,8 +6,10 @@ PersonDeduplicatorApp.scala).
 corpus:
 
 1. **match creator** pipeline — one PipelineConfig per entity family,
-   stages Matcher → Scorer (filters applied pair-level after the
-   aggregate, where they're cheapest);
+   its configs submitted concurrently; the matcher stage is
+   ``operators.scorer.scored_entity_candidates`` (Matcher → Scorer, the
+   builder the query registry uses too), and the filters apply
+   pair-level after the aggregate, where they're cheapest;
 2. **match saver** — union across configs (``as_data_source``),
    MultipleTypeMatchFilter, canonicalization + per-document statistics;
 3. **optimizer** — weight training against derived labels +
@@ -45,13 +47,11 @@ from pyspark.sql import functions as F
 
 from puma_matcher_spark.functions.caching import persist_rotating
 from puma_matcher_spark.operators import filters as flt
-from puma_matcher_spark.operators import matcher as m
 from puma_matcher_spark.operators import scorer as sc
 from puma_matcher_spark.operators import stats as st
 from puma_matcher_spark.operators import weights as wt
 from puma_matcher_spark.operators.persister import canonicalize_pairs, dedup_candidates
 from puma_matcher_spark.pipeline import Pipeline, PipelineConfig, Stage
-from puma_matcher_spark.schemas import EntityType
 from puma_matcher_spark.sources.testdata import Tables, load_tables
 
 
@@ -78,19 +78,7 @@ def _family_stages(t: Tables) -> list[Stage]:
             ents = t.entities_secondary_orders().withColumn(
                 "entity_id", F.floor(F.col("entity_id") / 2).cast("long")
             )
-        tf = m.entity_tf(ents)
-        doc_count = ents.select("document_version_id").distinct().count()
-        capped = m.cap_entity_frequency(tf, 2000, doc_count)
-        pairs = m.entity_pairs(capped)
-        scored = sc.score_entity_pairs(
-            sc.with_idf(pairs, tf, doc_count),
-            tf,
-            config.params["family"],
-            EntityType.from_string(
-                "person" if config.params["family"] == "person" else "laboratory"
-            ).type_id,
-        )
-        return scored
+        return sc.scored_entity_candidates(ents, config.params["family"])
 
     def filters(config: PipelineConfig, inputs: dict) -> DataFrame:
         docs = t.documents_dim()
@@ -140,8 +128,7 @@ def run_full_matcher(
         [
             PipelineConfig(name="person", params={"family": "person"}),
             PipelineConfig(name="laboratory", params={"family": "laboratory"}),
-        ],
-        parallel=True,
+        ]
     )
 
     # pipeline 2 — match saver over the cross-config union
@@ -409,7 +396,6 @@ def run_streaming_ingest_app(
     jaccard_threshold: float = 0.8,
     min_tokens: int = 5,
     index_compact_every: int | None = 16,
-    max_rows_per_trigger: int | None = None,
 ):
     """Continuous-ingest driver — the streaming composition of the two
     connectors built this rebuild: the native ``manifest_text`` stream
@@ -451,20 +437,11 @@ def run_streaming_ingest_app(
     from puma_matcher_spark.sources.pydatasource import register
 
     register(spark)
-    reader = spark.readStream.format("manifest_text").option(
-        "manifest", manifest
+    stream = (
+        spark.readStream.format("manifest_text")
+        .option("manifest", manifest)
+        .load()
     )
-    if max_rows_per_trigger:
-        # r12 drain-granularity knob (sidecar study only — the benched
-        # workload and every production default drain in one batch).
-        # NOTE: Python micro-batch sources do not support availableNow
-        # (Spark falls back to single-batch execution, which would STOP
-        # after the first capped batch and strand the backlog), so the
-        # capped mode runs on a tight processingTime trigger and the
-        # CALLER stops the query once the sink is complete — see
-        # scripts/streaming_trigger_study.py.
-        reader = reader.option("max_rows_per_trigger", str(max_rows_per_trigger))
-    stream = reader.load()
     # the static corpus never changes across micro-batches: index it once
     # and PERSIST each component (MEMORY_AND_DISK) — without the persist,
     # every micro-batch would re-derive the static corpus's fingerprints
@@ -583,11 +560,9 @@ def run_streaming_ingest_app(
         finally:
             docs.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_admit).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        stream.writeStream.foreachBatch(_admit)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if max_rows_per_trigger:
-        writer = writer.trigger(processingTime="0 seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -3,11 +3,12 @@
 Two structures, one release point:
 
 * **The ring** (``persist_rotating``) holds intermediates that a builder
-  fans into several plan branches (the TF-IDF weight frame, the shingle
-  frame, the matcher app's filtered candidates).  A builder function
-  has no lifecycle hook to unpersist — returning the frame hands the
-  plan to the caller — so each persisted frame is enrolled in a small
-  FIFO ring and enrolling past ``_CAPACITY`` unpersists the oldest.
+  fans into several plan branches (text matching's TF-IDF word-weight
+  frame, the shingle frame, the matcher app's filtered candidates).  A
+  builder function has no lifecycle hook to unpersist — returning the
+  frame hands the plan to the caller — so each persisted frame is
+  enrolled in a small FIFO ring and enrolling past ``_CAPACITY``
+  unpersists the oldest.
   Long-lived sessions converge to at most ``_CAPACITY`` cached
   intermediates, while the most recently built ones (whose plans are
   still live) stay cached.
@@ -16,8 +17,9 @@ Two structures, one release point:
   family and the purchase edge list.  The reference caches stage
   outputs (Pipeline.scala:203) and memoizes sources
   (SqlDataSource.scala:48); without the memo each consuming query
-  re-runs its TF chain or order ⋈ lineitem derivation.  An entry is
-  built and persisted once per key and stays until ``drain()``.
+  re-runs the matcher → scorer chain or the order ⋈ lineitem
+  derivation.  An entry is built and persisted once per key and stays
+  until ``drain()``.
 * **``drain()``** unpersists every memo entry and every ring entry.
   ``sources.testdata.reset_table_cache`` calls it, so one call releases
   every cache the library holds.  The only cache outside this module is
@@ -49,7 +51,7 @@ not own.
 The memo's build lock ``_MEMO_LOCK`` is held across the build, so
 concurrent first callers run the chain once instead of each leaking a
 duplicate persisted frame.  It is separate from ``_LOCK`` because a
-build calls ``persist_rotating``, and ``_LOCK`` is not reentrant.
+build may call ``persist_rotating``, and ``_LOCK`` is not reentrant.
 """
 
 from __future__ import annotations

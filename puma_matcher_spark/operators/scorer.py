@@ -9,6 +9,10 @@ Reference: scorer/EntitiesScorer.scala:39-67 (A3/A4):
   k = scoreFactor = 3 (config), common = #shared entities, n1/n2 = per-doc
   distinct entity counts (EntitiesScorer.scala:42,55-56).
 
+``scored_entity_candidates`` is the whole matcher → scorer chain for one
+entity frame (EntitiesMatcherV2.scala:44-94 then EntitiesScorer); the
+matcher app and the query registry both build their candidates with it.
+
 Spark shape: two chained hash aggregates on the pair key — partial
 aggregation happens map-side, so the shuffle carries one row per
 (pair, entity) then one per pair.  The doc-count scalar is computed once
@@ -19,27 +23,29 @@ broadcast hints — AQE chooses broadcast vs shuffle from runtime sizes.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from puma_matcher_spark.functions.ids import candidate_id, pair_id
-from puma_matcher_spark.operators.matcher import doc_entity_counts, entity_doc_frequency
+from puma_matcher_spark.operators.matcher import (
+    DEFAULT_MAX_OCCURRENCE,
+    cap_entity_frequency,
+    doc_entity_counts,
+    entity_doc_frequency,
+    entity_pairs,
+    entity_tf,
+)
+from puma_matcher_spark.schemas import EntityType
 
 DEFAULT_SCORE_FACTOR = 3.0
 
 
-def with_idf(pairs: DataFrame, tf: DataFrame, doc_count: int | Column) -> DataFrame:
-    """Attach idf = log10(N/df) per entity to pair co-occurrence rows.
-
-    ``doc_count`` may be an int or a Column — pass a scalar-subquery
-    column (``df.scalar()``) to fold N into the plan instead of paying an
-    eager plan-build-time corpus scan."""
-    n = (
-        doc_count.cast("double")
-        if isinstance(doc_count, Column)
-        else F.lit(float(doc_count))
+def with_idf(pairs: DataFrame, tf: DataFrame, doc_count: int) -> DataFrame:
+    """Attach idf = log10(N/df) per entity to pair co-occurrence rows;
+    ``doc_count`` is N, the corpus document count as a driver scalar."""
+    idf = entity_doc_frequency(tf).withColumn(
+        "idf", F.log10(F.lit(float(doc_count)) / F.col("df"))
     )
-    idf = entity_doc_frequency(tf).withColumn("idf", F.log10(n / F.col("df")))
     # idf is one row per distinct entity — the entity dictionary grows with
     # the corpus, so no explicit broadcast hint: AQE broadcasts when the
     # runtime size allows and shuffle-joins on entity_id when it doesn't.
@@ -101,4 +107,25 @@ def score_entity_pairs(
         pair_id(
             F.col("document_version1_id"), F.col("document_version2_id")
         ).alias("pair_id"),
+    )
+
+
+def scored_entity_candidates(entities: DataFrame, score_type: str) -> DataFrame:
+    """MATCH_CANDIDATE rows for one entity family: tf → frequency caps →
+    pair self-join → idf → team-factor roll-up.
+
+    ``entities`` holds ENTITIES_ID rows (document_version_id, entity_id);
+    ``score_type`` names the family and picks the candidate-id type id.
+    N is one driver ``count()`` of the distinct documents, as in
+    EntitiesMatcherV2.scala:44-52.  Nothing is persisted here: a caller
+    that reads the result more than once persists it itself.
+    """
+    tf = entity_tf(entities)
+    doc_count = entities.select("document_version_id").distinct().count()
+    capped = cap_entity_frequency(tf, DEFAULT_MAX_OCCURRENCE, doc_count)
+    return score_entity_pairs(
+        with_idf(entity_pairs(capped), tf, doc_count),
+        tf,
+        score_type,
+        EntityType.from_string(score_type).type_id,
     )

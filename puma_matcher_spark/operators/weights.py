@@ -99,6 +99,22 @@ def weight_grid(
     return spark.createDataFrame(rows, ["weight_id", "score_type", "weight"])
 
 
+def _refined_grid(
+    spark: SparkSession, center: dict, score_types: list[str], step: float
+) -> DataFrame:
+    """Weight vectors ``center ± {0, step}`` per score type, clipped at 0
+    and renormalised to sum 1 (all-zero vectors dropped)."""
+    rows, wid = [], 0
+    for combo in itertools.product([-step, 0.0, step], repeat=len(score_types)):
+        vec = [max(0.0, center[t] + d) for t, d in zip(score_types, combo)]
+        s = sum(vec)
+        if s == 0:
+            continue
+        rows.extend((wid, t, v / s) for t, v in zip(score_types, vec))
+        wid += 1
+    return spark.createDataFrame(rows, ["weight_id", "score_type", "weight"])
+
+
 def contextual_scores(candidates: DataFrame) -> DataFrame:
     """W2 — score normalised by the per-(publication, type) max × 100.
     Publication side = document_version2_id (engine orientation)."""
@@ -278,35 +294,17 @@ def best_weights(
     # the envelope count doubles as the persist materialization barrier
     assert_training_envelope(ctx)
     grid = weight_grid(spark, score_types, step)
-    scores = evaluate_weights(ctx, grid, training_pairs)
-    first = scores.orderBy(F.col("error").asc(), F.col("weight_id").asc()).first()
-    best_id = first["weight_id"]
-    if error_trace is not None:
-        error_trace.append(first["error"])
-    best = grid.where(F.col("weight_id") == best_id)
-    for _ in range(refine_rounds):
-        step = step / 2
-        center = {r["score_type"]: r["weight"] for r in best.collect()}
-        rows, wid = [], 0
-        deltas = [-step, 0.0, step]
-        for combo in itertools.product(deltas, repeat=len(score_types)):
-            vec = [
-                max(0.0, center[t] + d) for t, d in zip(score_types, combo)
-            ]
-            s = sum(vec)
-            if s == 0:
-                continue
-            vec = [v / s for v in vec]
-            for t, v in zip(score_types, vec):
-                rows.append((wid, t, v))
-            wid += 1
-        grid = spark.createDataFrame(rows, ["weight_id", "score_type", "weight"])
-        scores = evaluate_weights(ctx, grid, training_pairs)
-        first = scores.orderBy(
-            F.col("error").asc(), F.col("weight_id").asc()
-        ).first()
-        best_id = first["weight_id"]
+    for round_ in range(refine_rounds + 1):
+        if round_:  # refinement: halve the step around the last winner
+            step = step / 2
+            center = {r["score_type"]: r["weight"] for r in best.collect()}
+            grid = _refined_grid(spark, center, score_types, step)
+        first = (
+            evaluate_weights(ctx, grid, training_pairs)
+            .orderBy(F.col("error").asc(), F.col("weight_id").asc())
+            .first()
+        )
         if error_trace is not None:
             error_trace.append(first["error"])
-        best = grid.where(F.col("weight_id") == best_id)
+        best = grid.where(F.col("weight_id") == first["weight_id"])
     return best.select("score_type", "weight")

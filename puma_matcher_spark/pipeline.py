@@ -7,9 +7,10 @@ polling loop, storing `(config, outputName, DataFrameType, DataFrame)`
 tuples under a lock, validating output schemas between stages and caching
 every stage output.
 
-Rebuild: sequential per-config execution (optionally threaded — Spark's
-scheduler is thread-safe, so a ThreadPoolExecutor gives the same overlap
-without sleep-polling), explicit schema validation via validator.
+Rebuild: each config's stages run in order, and the configs run
+concurrently from a thread pool (Spark's scheduler is thread-safe, so a
+ThreadPoolExecutor gives the same overlap without sleep-polling);
+explicit schema validation via validator.
 `Pipeline` itself never persists: a stage function persists the frames it
 fans out (see apps.run_full_matcher).  Stage results are plain
 DataFrames; no global mutable registry is needed beyond the run's own
@@ -65,7 +66,7 @@ class Pipeline:
         if dupes:  # Pipeline.scala:38-52 uniqueness check
             raise ValueError(f"duplicate stage outputs: {sorted(dupes)}")
         self.results: dict[tuple[str, str], DataFrame] = {}
-        # parallel config runs insert concurrently (the reference guards its
+        # config threads insert concurrently (the reference guards its
         # shared frame storage the same way, Pipeline.scala:58,206)
         self._results_lock = threading.Lock()
 
@@ -96,13 +97,11 @@ class Pipeline:
                 self.results[(config.name, stage.output)] = out
         return frames
 
-    def run(
-        self, configs: list[PipelineConfig], parallel: bool = False
-    ) -> dict[str, dict[str, DataFrame]]:
-        """Run all configs; with ``parallel=True`` each config's DAG is
+    def run(self, configs: list[PipelineConfig]) -> dict[str, dict[str, DataFrame]]:
+        """Run all configs; with more than one, each config's DAG is
         submitted from its own thread (Spark jobs interleave), matching the
         reference's per-config Futures without the sleep-poll loop."""
-        if parallel and len(configs) > 1:
+        if len(configs) > 1:
             with ThreadPoolExecutor(max_workers=len(configs)) as ex:
                 futs = {c.name: ex.submit(self.run_config, c) for c in configs}
                 return {name: f.result() for name, f in futs.items()}

@@ -152,9 +152,9 @@ def _all_cand_ctes() -> str:
 
 def _doc_count_scalar(tf: DataFrame):
     """Distinct-document count as a scalar-subquery Column (Spark 4
-    ``DataFrame.scalar()``), computed from the tf frame so it reuses the
-    persisted/aggregated input instead of re-scanning the raw entity
-    table eagerly at plan-build time."""
+    ``DataFrame.scalar()``), computed from the tf frame inside the query's
+    own job instead of by an eager plan-build-time scan of the raw
+    entity table."""
     return (
         tf.select("document_version_id")
         .distinct()
@@ -164,9 +164,8 @@ def _doc_count_scalar(tf: DataFrame):
 
 
 # Scored-candidate frames are memoized per (session, sf_dir, family) in
-# functions.caching, which owns and releases them (and the tf intermediate,
-# through its ring): without the memo the TF chain re-scans lineitem ~7x
-# per consuming query.
+# functions.caching, which owns and releases them: without the memo every
+# consuming query re-runs the matcher → scorer chain over lineitem.
 def _entity_candidates(t: Tables, which: str = "person") -> DataFrame:
     """Spark twin of _tf_chain's {p}cand."""
 
@@ -174,18 +173,7 @@ def _entity_candidates(t: Tables, which: str = "person") -> DataFrame:
         ents = (
             t.entities() if which == "person" else t.entities_secondary_orders()
         )
-        tf = caching.persist_rotating(m.entity_tf(ents))
-        # N as a scalar subquery over the persisted tf frame — the old
-        # eager .count() re-scanned the entity table at plan-build time
-        # (reference EntitiesMatcherV2.scala:44-52 pays the same double
-        # scan); .scalar() folds it into the one real job.
-        doc_count = _doc_count_scalar(tf)
-        capped = m.cap_entity_frequency(tf, 2000, doc_count)
-        pairs = m.entity_pairs(capped)
-        pairs_idf = sc.with_idf(pairs, tf, doc_count)
-        return sc.score_entity_pairs(
-            pairs_idf, tf, which, 1 if which == "person" else 10
-        )
+        return sc.scored_entity_candidates(ents, which)
 
     key = ("candidates", t.spark.sparkContext.applicationId, t.sf_dir, which)
     return caching.memoized(key, build)
@@ -255,7 +243,7 @@ def q_entity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = m.entity_tf(ents)
     # in-plan scalar subquery — no eager plan-build corpus scan
     doc_count = _doc_count_scalar(tf)
-    capped = m.cap_entity_frequency(tf, 2000, doc_count)
+    capped = m.cap_entity_frequency(tf, m.DEFAULT_MAX_OCCURRENCE, doc_count)
     return m.entity_pairs(capped).groupBy(
         "document_version1_id", "document_version2_id"
     ).agg(

@@ -188,14 +188,6 @@ class ManifestTextStreamReader(SimpleDataSourceStreamReader):
         if not self.manifest:
             raise ValueError("manifest_text requires a `manifest` option")
         self.strict = str(options.get("strict", "true")).lower() == "true"
-        # r12 drain-granularity knob (r11 verdict #6): cap the manifest
-        # rows one micro-batch ingests — the manifest_text analogue of
-        # the file source's maxFilesPerTrigger.  0/unset = drain
-        # everything available in one batch (the historical behaviour;
-        # the benched workload never sets this).  Under availableNow the
-        # stream keeps triggering until caught up, so a cap splits the
-        # drain into ceil(backlog/cap) batches instead of one.
-        self.max_rows_per_trigger = int(options.get("max_rows_per_trigger", "0"))
 
     def initialOffset(self) -> dict:
         return {"rows": 0}
@@ -215,9 +207,7 @@ class ManifestTextStreamReader(SimpleDataSourceStreamReader):
         return out, stop
 
     def read(self, start: dict):
-        s = int(start["rows"])
-        cap = self.max_rows_per_trigger
-        rows, stop = self._rows_slice(s, s + cap if cap > 0 else None)
+        rows, stop = self._rows_slice(int(start["rows"]), None)
         return iter(rows), {"rows": stop}
 
     def readBetweenOffsets(self, start: dict, end: dict):

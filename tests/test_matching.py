@@ -65,6 +65,17 @@ def test_scorer_formula_hand_computed(spark):
     assert r["id"] == (1 * 1_000_000 + 2) * 100 + 1
     assert r["item_count"] == 2
 
+    # the whole builder: 42 docs, so entity 10 (df 2 < 42/20) survives the
+    # relative cap and entity 99 (df 3) does not; n1 = n2 = 2 count both
+    # entities, so score = 2*log10(42/2) * (1 + 3*(0.5/2 + 0.5/2))
+    rows = [(1, 10), (2, 10), (1, 99), (2, 99), (3, 99)]
+    rows += [(d, 1000 + d) for d in range(3, 43)]
+    built = sc.scored_entity_candidates(_entities(spark, rows), "laboratory")
+    (r,) = built.collect()
+    assert abs(r["score"] - 2 * math.log10(21.0) * 2.5) < 1e-12
+    assert r["id"] == (1 * 1_000_000 + 2) * 100 + 10
+    assert (r["score_type"], r["item_count"]) == ("laboratory", 2)
+
 
 def _docs(spark):
     return spark.createDataFrame(

@@ -39,14 +39,29 @@ GRAPH_LOOP_QUERIES = [
 ]
 
 
-def test_graph_loop_queries_match_oracle(spark, sf_small, monkeypatch):
-    """Fast-lane parity for the iterative graph loops: every
-    connected-components consumer on the default (driver) path, two with
-    the CC loop forced, and the PageRank / LPA / k-core queries."""
+#: the matcher → scorer chain (operators.scorer.scored_entity_candidates)
+#: and the registry queries downstream of it
+MATCHER_QUERIES = [
+    "entity_pairs",
+    "entity_scores",
+    "match_candidates",
+    "multi_type_filter",
+    "match_stats",
+    "total_score",
+    "normalised_scores",
+    "weight_eval",
+]
+
+
+def test_matcher_and_graph_queries_match_oracle(spark, sf_small, monkeypatch):
+    """Fast-lane parity for the matcher chain and the iterative graph
+    loops: the candidate builder's consumers, every connected-components
+    consumer on the default (driver) path, two with the CC loop forced,
+    and the PageRank / LPA / k-core queries."""
     from puma_matcher_spark.operators import graph
     from puma_matcher_spark.sources.testdata import reset_table_cache
 
-    names = CC_QUERIES + GRAPH_LOOP_QUERIES
+    names = MATCHER_QUERIES + CC_QUERIES + GRAPH_LOOP_QUERIES
     try:
         results = run_all(spark, sf_small, names=names)
         assert sorted(r.name for r in results) == sorted(names)

@@ -218,33 +218,3 @@ def test_stream_tails_manifest_appends(spark, corpus, tmp_path):
     )
     q2.awaitTermination(120)
     assert out_rows == [(4, "delta text")]
-
-
-def test_stream_reader_max_rows_per_trigger_caps_each_read(corpus):
-    """r12 (r11 verdict #6): `max_rows_per_trigger` caps the manifest
-    rows one read() consumes (offsets advance by the capped slice, so
-    successive triggers walk the backlog); unset keeps the historical
-    drain-everything behaviour.  Reader-level pin — Spark's Python
-    micro-batch wrapper falls back to SINGLE-batch execution under
-    availableNow, so the capped mode is driven by a processingTime
-    trigger (scripts/streaming_trigger_study.py), not availableNow."""
-    from puma_matcher_spark.sources.pydatasource import (
-        ManifestTextStreamReader,
-    )
-
-    manifest, files = corpus
-    capped = ManifestTextStreamReader(
-        {"manifest": str(manifest), "max_rows_per_trigger": "2"}
-    )
-    rows1, off1 = capped.read({"rows": 0})
-    rows1 = list(rows1)
-    assert [r[0] for r in rows1] == [1, 2] and off1 == {"rows": 2}
-    rows2, off2 = capped.read(off1)
-    rows2 = list(rows2)
-    assert [r[0] for r in rows2] == [3] and off2 == {"rows": 3}
-    rows3, off3 = capped.read(off2)
-    assert list(rows3) == [] and off3 == {"rows": 3}
-
-    uncapped = ManifestTextStreamReader({"manifest": str(manifest)})
-    rows, off = uncapped.read({"rows": 0})
-    assert [r[0] for r in list(rows)] == [1, 2, 3] and off == {"rows": 3}

@@ -311,12 +311,11 @@ def test_no_forced_broadcast_in_scoring_filter_and_tpch_plans(spark, sf_small):
     broadcast hint.  Only fixed-cardinality dims (nation=25, region=5) keep
     hints — local_supplier_volume is allowed exactly those two.
 
-    The scoring spine is composed directly from the operator functions
-    (not via the registry) because the registry memoizes + persists the
-    candidate frame: an InMemoryRelation compiled earlier in the pytest
-    session under the default threshold would leak stale BroadcastExchange
-    nodes into this test's explain output."""
-    from puma_matcher_spark.operators import matcher as m
+    The scoring spine is built by ``scorer.scored_entity_candidates``
+    directly (not via the registry) because the registry memoizes +
+    persists the candidate frame: an InMemoryRelation compiled earlier in
+    the pytest session under the default threshold would leak stale
+    BroadcastExchange nodes into this test's explain output."""
     from puma_matcher_spark.operators import scorer as sc
     from puma_matcher_spark.queries import REGISTRY
     from puma_matcher_spark.sources.testdata import load_tables
@@ -337,12 +336,9 @@ def test_no_forced_broadcast_in_scoring_filter_and_tpch_plans(spark, sf_small):
         # would leak its BroadcastExchange nodes into this explain.
         spark.catalog.clearCache()
 
-        ents = load_tables(spark, sf_small).entities()
-        tf = m.entity_tf(ents)
-        doc_count = ents.select("document_version_id").distinct().count()
-        capped = m.cap_entity_frequency(tf, 2000, doc_count)
-        pairs_idf = sc.with_idf(m.entity_pairs(capped), tf, doc_count)
-        scored = sc.score_entity_pairs(pairs_idf, tf, "person", 1)
+        scored = sc.scored_entity_candidates(
+            load_tables(spark, sf_small).entities(), "person"
+        )
 
         offenders = {
             "entity_scoring_spine": pi.count_occurrences(
