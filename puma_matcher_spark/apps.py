@@ -54,6 +54,10 @@ from puma_matcher_spark.operators.persister import canonicalize_pairs, dedup_can
 from puma_matcher_spark.pipeline import Pipeline, PipelineConfig, Stage
 from puma_matcher_spark.sources.testdata import Tables, load_tables
 
+#: the streaming ingest app folds its per-batch dedup-index partitions
+#: into one merged partition every this many micro-batches
+INDEX_COMPACT_EVERY = 16
+
 
 @dataclass
 class MatcherResult:
@@ -395,7 +399,6 @@ def run_streaming_ingest_app(
     checkpoint_dir: str,
     jaccard_threshold: float = 0.8,
     min_tokens: int = 5,
-    index_compact_every: int | None = 16,
 ):
     """Continuous-ingest driver — the streaming composition of the two
     connectors built this rebuild: the native ``manifest_text`` stream
@@ -539,16 +542,15 @@ def run_streaming_ingest_app(
                     f"{index_root}/{c}/batch_id={batch_id}"
                 )
             # bound the index's directory/file count over a long manifest
-            # tail: every k batches fold all COMMITTED per-batch
-            # partitions (batch_id < current — the in-flight batch stays
-            # separate so a crash replay can still exclude its own rows)
-            # into one merged batch_id=<current-1> partition via the
-            # atomic staging swap.  Without this, _with_prior's union
-            # lists/opens one directory per historical batch even though
-            # the ROW volume is hash-width-flat (r8 verdict finding #1).
-            if index_compact_every and (
-                (batch_id + 1) % index_compact_every == 0
-            ):
+            # tail: every INDEX_COMPACT_EVERY batches fold all COMMITTED
+            # per-batch partitions (batch_id < current — the in-flight
+            # batch stays separate so a crash replay can still exclude
+            # its own rows) into one merged batch_id=<current-1>
+            # partition via the atomic staging swap.  Without this,
+            # _with_prior's union lists/opens one directory per
+            # historical batch even though the ROW volume is
+            # hash-width-flat (r8 verdict finding #1).
+            if (batch_id + 1) % INDEX_COMPACT_EVERY == 0:
                 from puma_matcher_spark.sources.maintenance import (
                     compact_batch_index,
                 )

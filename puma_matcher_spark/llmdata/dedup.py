@@ -59,23 +59,21 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _shingle_expr(
-    docs: DataFrame,
-    n: int,
-    text_col: str,
-    spread: bool | None,
+    docs: DataFrame, n: int, text_col: str
 ) -> tuple[DataFrame, Column]:
     """(base, expr): the (doc_id, _tk) frame and the distinct-shingle-array
     Column over it — the single definition shared by :func:`shingles` and
     :func:`shingle_arrays`, so the shingle set feeding join candidates and
-    the one feeding verify embeddings can never drift apart."""
+    the one feeding verify embeddings can never drift apart.
+
+    The heavy expression work is pipelined with the scan, so its
+    parallelism equals the input split count: ``spread_input`` leaves a
+    many-split corpus alone and round-robins the (cheap, pre-explode)
+    document rows of a small single-row-group fixture up to the
+    session's shuffle parallelism."""
     from puma_matcher_spark.operators.skew import spread_input
 
-    if spread is None:
-        docs = spread_input(docs)
-    elif spread:
-        docs = docs.repartition(
-            int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-        )
+    docs = spread_input(docs)
     toks = F.filter(
         F.split(F.lower(F.col(text_col)), " "), lambda x: x != F.lit("")
     )
@@ -97,12 +95,11 @@ def shingle_arrays(
     docs: DataFrame,
     n: int = DEFAULT_SHINGLE,
     text_col: str = "text",
-    spread: bool | None = None,
 ) -> DataFrame:
     """(doc_id, shingle_arr) — the distinct word-n-gram array per document,
     fully map-side, BEFORE any explode (the embedding/count-vector entry
     point; :func:`shingles` is the exploded twin)."""
-    base, e = _shingle_expr(docs, n, text_col, spread)
+    base, e = _shingle_expr(docs, n, text_col)
     return base.select("doc_id", e.alias("shingle_arr"))
 
 
@@ -110,7 +107,6 @@ def shingles(
     docs: DataFrame,
     n: int = DEFAULT_SHINGLE,
     text_col: str = "text",
-    spread: bool | None = None,
 ) -> DataFrame:
     """Distinct word n-gram shingles per document — fully map-side.
 
@@ -128,15 +124,9 @@ def shingles(
     the WHOLE shingle expression into that filter — measured 5-6x on
     minhash_pairs/ngram_jaccard/incremental_near_dups when a round-6
     refactor briefly exploded an aliased column (PLANS.md §round-6).
-
-    ``spread``: the heavy expression work is pipelined with the scan, so
-    its parallelism equals the input split count.  A 100 TB corpus has
-    thousands of splits (leave False/auto); small fixtures arrive as ONE
-    parquet row group and would run serially — auto (None) repartitions
-    the (cheap, pre-explode) document rows up to the session's shuffle
-    parallelism when the scan has materially fewer splits.
+    Scan parallelism: see :func:`_shingle_expr`.
     """
-    base, e = _shingle_expr(docs, n, text_col, spread)
+    base, e = _shingle_expr(docs, n, text_col)
     return base.select("doc_id", F.explode(e).alias("shingle"))
 
 
@@ -523,91 +513,56 @@ def jaccard_for_pairs(
     return jaccard_for_pairs_from_shingles(shingles(docs, shingle_n), pairs)
 
 
-def simhash64(
-    docs: DataFrame, text_col: str = "text", method: str = "explode"
-) -> DataFrame:
-    """64-bit SimHash over tokens (weighted bit-vote, portable arithmetic).
-
-    Per token: 60-bit md5 hash; for each bit position, vote +tf / -tf; the
-    sign vector is the fingerprint.  Two physical strategies behind one
-    signature, bit-identical outputs (same md5/hash60 arithmetic):
-
-    * ``method="explode"`` (default) — explode(token) × explode(bit) →
-      conditional sum → bit reassembly.  Pure Catalyst/codegen, but the
-      bit explode multiplies rows 60× and pays one (doc, bit) shuffle.
-    * ``method="mapside"`` — :func:`simhash64_mapside`: one Arrow-batched
-      pandas UDF computes the fingerprint per document with zero shuffle
-      and zero row blowup.  The 100 TB choice when the 60× explode
-      dominates (see scripts/stress_simhash.py for the measured
-      crossover); Python md5 == JVM md5, so the DuckDB oracle covers
-      both paths identically.
-    """
-    if method == "mapside":
-        return simhash64_mapside(docs, text_col)
-    assert method == "explode", f"unknown simhash method: {method}"
-    toks = docs.select(
-        "doc_id", F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
-    )
-    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    hashed = tf.withColumn("h", portable_hash60(F.col("tok")))
-    bits = hashed.select(
-        "doc_id",
-        "tf",
-        "h",
-        F.explode(F.sequence(F.lit(0), F.lit(59))).alias("bit"),
-    )
-    vote = F.when(
-        F.expr("shiftright(h, bit) & 1") == 1, F.col("tf")
-    ).otherwise(-F.col("tf"))
-    bit_votes = bits.groupBy("doc_id", "bit").agg(F.sum(vote).alias("vote"))
-    bit_val = F.when(
-        F.col("vote") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), bit)")
-    ).otherwise(F.lit(0).cast("long"))
-    return bit_votes.groupBy("doc_id").agg(
-        F.sum(bit_val).cast("long").alias("simhash")
-    )
-
-
-def simhash64_mapside(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Explode-free SimHash: the whole fingerprint is computed inside one
-    Arrow-batched pandas UDF — no token explode, no 60× bit blowup, no
-    shuffle at all (a pure map stage Catalyst can pipeline with the scan).
-
-    Arithmetic is identical to the explode formulation: hash60(token) =
-    first 15 hex chars of md5 as an integer (Python md5 ≡ JVM md5 ≡
-    DuckDB md5), votes are ±tf per bit, fingerprint sets bits with a
-    positive vote.  Bit-for-bit equality with ``simhash64`` is asserted
-    in tests and holds by construction.
-    """
+def simhash64_one(text: str) -> int:
+    """The per-document kernel of :func:`simhash64` (60 voting bits in a
+    non-negative long) — module-level so the pure arithmetic is directly
+    unit/property-testable without Spark (tests/test_properties.py
+    fuzzes it against an independent big-int implementation, as it does
+    :func:`simhash128_one`)."""
     import hashlib
     from collections import Counter
 
     import numpy as np
+
+    toks = [t for t in (text or "").lower().split(" ") if t]
+    if not toks:
+        return 0
+    shifts = np.arange(60, dtype=np.uint64)
+    tf = Counter(toks)
+    hs = np.array(
+        [int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16) for t in tf],
+        dtype=np.uint64,
+    )
+    cnt = np.fromiter(tf.values(), dtype=np.int64, count=len(tf))
+    bits = ((hs[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
+    votes = ((2 * bits - 1) * cnt[:, None]).sum(axis=0)
+    return int(((votes > 0).astype(np.uint64) << shifts).sum())
+
+
+def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """64-bit SimHash over tokens (weighted bit-vote, portable arithmetic).
+
+    Per token: hash60 = the first 15 hex chars of md5 as an integer; for
+    each of its 60 bit positions the token votes +tf / -tf, and the
+    fingerprint sets the bits with a positive vote.  The whole
+    fingerprint is computed inside one Arrow-batched pandas UDF
+    (:func:`simhash64_one`): no token explode, no 60× bit blowup, no
+    shuffle — a pure map stage Catalyst pipelines with the scan.  ~6×
+    faster than the former explode(token) × explode(bit) formulation at
+    sf0.1 (0.09 vs 0.59 s), bit-identical to it.  Python md5 ≡ JVM md5
+    ≡ DuckDB md5, so the oracle reproduces every fingerprint; the
+    banded-candidate growth of this 60-bit fingerprint at 10x is in
+    PLANS.md "Round-6: dedup-plane candidate growth at 10x".  Token-less
+    documents get fingerprint 0; callers that must match the oracle's
+    tf-based fingerprint table filter them out first
+    (``textstats.has_tokens``).
+    """
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
-    shifts = np.arange(60, dtype=np.uint64)
-
-    def _one(text: str) -> int:
-        toks = [t for t in (text or "").lower().split(" ") if t]
-        if not toks:
-            return 0
-        tf = Counter(toks)
-        hs = np.array(
-            [
-                int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
-                for t in tf
-            ],
-            dtype=np.uint64,
-        )
-        cnt = np.fromiter(tf.values(), dtype=np.int64, count=len(tf))
-        bits = ((hs[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
-        votes = ((2 * bits - 1) * cnt[:, None]).sum(axis=0)
-        return int(((votes > 0).astype(np.uint64) << shifts).sum())
-
     @pandas_udf(LongType())
     def _simhash(texts: pd.Series) -> pd.Series:
-        return texts.map(_one).astype("int64")
+        return texts.map(simhash64_one).astype("int64")
 
     return docs.select("doc_id", _simhash(F.col(text_col)).alias("simhash"))
 
@@ -1105,9 +1060,10 @@ def simhash128_candidates(
     (see :func:`simhash_hamming_pairs`): ``sh`` is a
     ``(doc_id, simhash_hi, simhash_lo)`` frame; output is the distinct
     ``(doc1_id, doc2_id)`` set from the combination-key equi-join over
-    :func:`simhash128_keys`.  Exposed separately so scale stress runs
-    (scripts/dedup_scale_stress.py) can measure candidate volume without
-    the verify join."""
+    :func:`simhash128_keys`.  Exposed separately so candidate volume can
+    be measured without the verify join (PLANS.md "Round-6: dedup-plane
+    candidate growth at 10x" measured it on the 60-bit layout this
+    replaced)."""
     keys = simhash128_keys(sh, max_hamming, n_blocks)
     if max_band_bucket is not None:
         from pyspark.sql.window import Window
@@ -1136,7 +1092,6 @@ def simhash_hamming_pairs(
     max_hamming: int = 3,
     text_col: str = "text",
     max_band_bucket: int | None = 2000,
-    fingerprint_bits: int = 128,
     n_blocks: int | None = None,
 ) -> DataFrame:
     """SimHash near-duplicate self-join with pigeonhole block blocking —
@@ -1145,10 +1100,9 @@ def simhash_hamming_pairs(
     COMPLETE (a theorem, not a recall knob) and the exact popcount(xor)
     verify keeps only true near-dups.
 
-    ``fingerprint_bits=128`` (default, the 100 TB path): split the
-    128-bit fingerprint (:func:`simhash128_mapside`) into ``n_blocks``
-    blocks (default ``max_hamming + 2``) and equi-join on EVERY
-    combination of ``n_blocks - max_hamming`` blocks — Manku's
+    The 128-bit fingerprint (:func:`simhash128_mapside`) is split into
+    ``n_blocks`` blocks (default ``max_hamming + 2``) and equi-joined on
+    EVERY combination of ``n_blocks - max_hamming`` blocks — Manku's
     multi-table construction.  ≤ ``max_hamming`` flips touch ≤
     ``max_hamming`` blocks, so some combination of the clean blocks
     matches exactly: completeness holds, while each join key is
@@ -1156,11 +1110,8 @@ def simhash_hamming_pairs(
     at the defaults) — the random-collision term n²·keys/2^width that
     made 15-bit single bands quadratic at ≥10⁶ docs (measured exponent
     1.88, PLANS.md §round-6) is pushed past 10¹⁴ docs.  C(5,2)=10 key
-    rows/doc vs 4 before: a 2.5× map-side explode buys the n² term.
-
-    ``fingerprint_bits=60`` keeps the legacy single-band layout
-    (``max_hamming + 1`` bands of ``60 // (max_hamming+1)`` bits over
-    :func:`simhash64`) for fixtures and comparison runs.
+    rows/doc vs 4 for the former 60-bit single-band layout: a 2.5×
+    map-side explode buys the n² term.
 
     Scale shape: fingerprints are map-side (zero-shuffle kernel);
     candidates come from ONE equi-join on the combination key — never an
@@ -1181,11 +1132,6 @@ def simhash_hamming_pairs(
     from puma_matcher_spark.llmdata.textstats import has_tokens
 
     docs = docs.where(has_tokens(F.col(text_col)))
-    if fingerprint_bits == 60:
-        return _simhash_hamming_pairs_60(
-            docs, max_hamming, text_col, max_band_bucket
-        )
-    assert fingerprint_bits == 128, "fingerprint_bits must be 60 or 128"
     # persisted (r11; reverses the earlier "no persist" note): the kernel
     # is zero-SHUFFLE but not zero-COST — each of the three consumers
     # (keys + both verify sides) re-ran the full tokenize→md5→bit-vote
@@ -1211,70 +1157,5 @@ def simhash_hamming_pairs(
         cand.join(s1, "doc1_id")
         .join(s2, "doc2_id")
         .select("doc1_id", "doc2_id", hamming.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-    )
-
-
-def _simhash_hamming_pairs_60(
-    docs: DataFrame,
-    max_hamming: int,
-    text_col: str,
-    max_band_bucket: int | None,
-) -> DataFrame:
-    """Legacy 60-bit single-band layout (see :func:`simhash_hamming_pairs`):
-    ``max_hamming + 1`` bands of ``60 // (max_hamming+1)`` bits.  Carries
-    the measured n²·bands/2^width random-collision term (exponent 1.88 at
-    5k→50k docs, PLANS.md §round-6) — fixture/comparison use only."""
-    n_bands = max_hamming + 1
-    width = 60 // n_bands  # 60-bit fingerprint (simhash64 votes bits 0..59)
-    sh = simhash64_mapside(docs, text_col=text_col)
-    bands = sh.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("band"),
-                            (
-                                F.shiftright(F.col("simhash"), i * width)
-                                .bitwiseAND(F.lit((1 << width) - 1))
-                            ).alias("val"),
-                        )
-                        for i in range(n_bands)
-                    ]
-                )
-            ).alias("b"),
-    ).select("doc_id", F.col("b.band").alias("band"), F.col("b.val").alias("val"))
-    if max_band_bucket is not None:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("band", "val")
-        bands = bands.withColumn("_n", F.count(F.lit(1)).over(w)).where(
-            F.col("_n") <= max_band_bucket
-        )
-    a = bands.select(
-        F.col("band"), F.col("val"), F.col("doc_id").alias("doc1_id")
-    )
-    b = bands.select(
-        F.col("band"), F.col("val"), F.col("doc_id").alias("doc2_id")
-    )
-    cand = (
-        a.join(b, ["band", "val"])
-        .where(F.col("doc1_id") < F.col("doc2_id"))
-        .select("doc1_id", "doc2_id")
-        .distinct()
-    )
-    s1 = sh.select(F.col("doc_id").alias("doc1_id"), F.col("simhash").alias("_s1"))
-    s2 = sh.select(F.col("doc_id").alias("doc2_id"), F.col("simhash").alias("_s2"))
-    return (
-        cand.join(s1, "doc1_id")
-        .join(s2, "doc2_id")
-        .select(
-            "doc1_id",
-            "doc2_id",
-            F.bit_count(F.col("_s1").bitwiseXOR(F.col("_s2")))
-            .cast("long")
-            .alias("hamming"),
-        )
         .where(F.col("hamming") <= max_hamming)
     )

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from puma_matcher_spark.functions.caching import persist_rotating
 from puma_matcher_spark.functions.rounding import pround
 from puma_matcher_spark.llmdata.textstats import tokens
 
@@ -41,28 +42,20 @@ def doc_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-_doc_tokens = doc_tokens  # backwards-compatible internal name
-
-
-def doc_tf_df(
-    docs: DataFrame, text_col: str = "text", persist_tf: bool = False
-) -> DataFrame:
+def doc_tf_df(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-doc term frequencies joined with document frequencies:
     (doc_id, tok, tf, df) — the postings table TF-IDF scorers build on.
 
-    ``persist_tf=True`` caches the tf frame, which both join sides
-    otherwise re-derive from the document scan (df aggregates OVER tf,
-    so the tokenize→explode→tf-aggregate chain appears once per side —
-    2 scans / 2 generates in the plan): one tokenize pass instead of
-    two.  Exported callers opt in; the library default stays False so
-    ad-hoc callers choose the cache footprint explicitly."""
-    tf = doc_tokens(docs, text_col).groupBy("doc_id", "tok").agg(
-        F.count(F.lit(1)).cast("long").alias("tf")
+    The tf frame is cached (``persist_rotating``): both join sides
+    otherwise re-derive it from the document scan (df aggregates OVER
+    tf, so the tokenize→explode→tf-aggregate chain appears once per
+    side — 2 scans / 2 generates in the plan): one tokenize pass
+    instead of two."""
+    tf = persist_rotating(
+        doc_tokens(docs, text_col)
+        .groupBy("doc_id", "tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
-    if persist_tf:
-        from puma_matcher_spark.functions.caching import persist_rotating
-
-        tf = persist_rotating(tf)
     df = tf.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("df"))
     return tf.join(df, "tok")
 
@@ -73,7 +66,6 @@ def bm25_scores(
     k1: float = 1.2,
     b: float = 0.75,
     text_col: str = "text",
-    persist_postings: bool = False,
 ) -> DataFrame:
     """Okapi BM25 score per document for a bag of query terms.
 
@@ -82,19 +74,12 @@ def bm25_scores(
     counts.  Output: (doc_id, matched_terms, score) for docs matching at
     least one term.
 
-    ``persist_postings=True`` caches the exploded token frame, which
-    four plan branches otherwise each re-derive from the document scan
+    The exploded token frame is cached (``persist_rotating``): four
+    plan branches otherwise each re-derive it from the document scan
     (dl, the avgdl scalar, tf, and df-via-tf — the r11 plan audit
     counted 4 explode(tokens(...)) generates over 5 scans per run):
-    one tokenize pass instead of four.  The exported ``bm25_search``
-    passes True since r11 (oracle parity + twin-equality proven); the
-    library default stays False so ad-hoc callers opt in to the cache
-    footprint explicitly."""
-    toks = _doc_tokens(docs, text_col)
-    if persist_postings:
-        from puma_matcher_spark.functions.caching import persist_rotating
-
-        toks = persist_rotating(toks)
+    one tokenize pass instead of four."""
+    toks = persist_rotating(doc_tokens(docs, text_col))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("dl"))
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n")).scalar()
     avgdl = dl.agg(F.avg("dl").alias("a")).scalar()

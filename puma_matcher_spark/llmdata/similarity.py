@@ -860,7 +860,6 @@ def shingle_hash_embeddings(
     n_buckets: int = 128,
     n: int = 3,
     text_col: str = "text",
-    spread: bool | None = None,
 ) -> DataFrame:
     """Hashed bag-of-shingles document "embedding": each distinct word
     n-gram is md5-hashed (portable 60-bit arithmetic, DuckDB-reproducible)
@@ -893,7 +892,7 @@ def shingle_hash_embeddings(
     """
     from puma_matcher_spark.llmdata.dedup import portable_hash60, shingle_arrays
 
-    base = shingle_arrays(docs, n=n, text_col=text_col, spread=spread)
+    base = shingle_arrays(docs, n=n, text_col=text_col)
     buckets = F.transform(
         F.col("shingle_arr"),
         lambda s: (portable_hash60(s) % F.lit(n_buckets)).cast("int"),
@@ -1005,7 +1004,8 @@ def semantic_contamination(
 
     Document frequency is ``count(DISTINCT doc_id)`` per shingle, so a
     document present in BOTH frames (benchmark sampled from the corpus,
-    as in scripts/dedup_scale_stress.py) counts ONCE toward ``df_cap``
+    as in the PLANS.md "Round-6: dedup-plane candidate growth at 10x"
+    mixture) counts ONCE toward ``df_cap``
     — ``doc_id`` is therefore assumed to be a global document identity
     across the two frames (unrelated id spaces that collide would
     under-count).

@@ -94,8 +94,21 @@ def compare_query(
 
 
 def run_all(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
+    """Compare every registered query that has an oracle twin (or only
+    ``names``) against DuckDB; one CompareResult per query.  A requested
+    name that is not registered or has no twin raises ValueError before
+    any query runs."""
     from puma_matcher_spark.queries import REGISTRY
 
+    if names:
+        unchecked = [
+            n for n in names if n not in REGISTRY or REGISTRY[n].oracle is None
+        ]
+        if unchecked:
+            raise ValueError(
+                f"no oracle twin to compare (unregistered or oracle-less): "
+                f"{unchecked}"
+            )
     con = duck_connection(sf_dir)
     results = []
     for name, spec in REGISTRY.items():

@@ -2636,7 +2636,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ONE token-less predicate (equiv. to size(tokens)>0; see
     # textstats.has_tokens for the proof and the cost rationale)
     docs = docs.where(ts.has_tokens(F.col("text")))
-    return dd.simhash64(docs, method="mapside")  # ~6x faster than the explode path at sf0.1 (0.09 vs 0.59 s); identical md5 arithmetic, same oracle
+    return dd.simhash64(docs)
 
 
 _SIMHASH128_CTE = f"""WITH toksl AS (SELECT doc_id, {_LLM_TOKS} AS tk FROM documents),
@@ -3340,7 +3340,7 @@ def q_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize→md5→bit-vote simhash pass over the corpus
     from puma_matcher_spark.functions.caching import persist_rotating
 
-    sh = persist_rotating(dd.simhash64(docs, method="mapside"))  # ~6x faster than the explode path at sf0.1 (0.09 vs 0.59 s); identical md5 arithmetic, same oracle
+    sh = persist_rotating(dd.simhash64(docs))
     s1 = sh.select(F.col("doc_id").alias("doc1_id"), F.col("simhash").alias("_s1"))
     s2 = sh.select(F.col("doc_id").alias("doc2_id"), F.col("simhash").alias("_s2"))
     return (
@@ -3411,7 +3411,7 @@ def q_picture_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from puma_matcher_spark.operators.picture import minhash_lsh_pairs_portable
 
     docs = load_tables(spark, sf_dir).llm_documents()
-    sh = dd.simhash64(docs, method="mapside")  # ~6x faster than the explode path at sf0.1 (0.09 vs 0.59 s); identical md5 arithmetic, same oracle
+    sh = dd.simhash64(docs)
     return minhash_lsh_pairs_portable(
         sh, id_col="doc_id", fp_col="simhash", threshold=0.3
     )
@@ -5233,9 +5233,7 @@ def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_tables(spark, sf_dir).llm_documents()
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n")).scalar()
-    # persist_tf (r11): df aggregates over tf, so both sides of the
-    # tf⋈df join otherwise re-derive the tokenize→tf chain from the scan
-    scored = doc_tf_df(docs, persist_tf=True).withColumn(
+    scored = doc_tf_df(docs).withColumn(
         "score", F.col("tf") * F.log10(n_docs / F.col("df"))
     )
     w = Window.partitionBy("doc_id").orderBy(
@@ -5414,16 +5412,13 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 retrieval (llmdata/retrieval.py): length-normalised
     lexical ranking for a query bag — corpus size and average doc length
     fold in as scalar subqueries, postings restricted to the query terms
-    before any join.
-
-    r11: ``persist_postings=True`` — the staged single-tokenize path is
-    now the exported plan (1 explode(tokens(...)) generate instead of 4
-    over 5 document scans; twin-equality test pins identical rows,
-    oracle parity re-proven at sf0.001/sf0.01)."""
+    before any join; the token postings are tokenized once and cached
+    (1 explode(tokens(...)) generate instead of 4 over 5 document
+    scans)."""
     from puma_matcher_spark.llmdata.retrieval import bm25_scores
 
     docs = load_tables(spark, sf_dir).llm_documents()
-    return bm25_scores(docs, ["dup", "window", "scan"], persist_postings=True)
+    return bm25_scores(docs, ["dup", "window", "scan"])
 
 
 @register(

@@ -513,15 +513,20 @@ def test_streaming_ingest_replay_is_idempotent_with_index(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_streaming_ingest_index_compaction_bounds_dirs(spark, tmp_path):
-    """Round 9: with index_compact_every=2 the per-batch _index
+def test_streaming_ingest_index_compaction_bounds_dirs(
+    spark, tmp_path, monkeypatch
+):
+    """Round 9: with INDEX_COMPACT_EVERY=2 the per-batch _index
     partitions fold into one merged partition every other batch, the
     directory count stays bounded, and cross-batch dedup still rejects
     a duplicate of a doc whose index rows were FOLDED (the merged
     batch_id relabel keeps them visible to later batches)."""
     import os
 
+    from puma_matcher_spark import apps
     from puma_matcher_spark.apps import run_streaming_ingest_app
+
+    monkeypatch.setattr(apps, "INDEX_COMPACT_EVERY", 2)
 
     src = tmp_path / "incoming"
     src.mkdir()
@@ -544,9 +549,7 @@ def test_streaming_ingest_index_compaction_bounds_dirs(spark, tmp_path):
         p.write_text(text, encoding="utf-8")
         with open(manifest, "a", encoding="utf-8") as fh:
             fh.write(f"{did},{p}\n")
-        q = run_streaming_ingest_app(
-            spark, str(manifest), corpus, out, ckpt, index_compact_every=2
-        )
+        q = run_streaming_ingest_app(spark, str(manifest), corpus, out, ckpt)
         assert q.awaitTermination(180)
 
     for i, t in enumerate(texts):

@@ -342,22 +342,6 @@ def test_char_entropy_known_values(spark):
     assert rows[1]["n_chars"] == 4
 
 
-def test_simhash_mapside_matches_explode(spark):
-    """The explode-free pandas-UDF SimHash must be bit-identical to the
-    Catalyst explode formulation on real fixture text (same md5
-    arithmetic, different physical plan)."""
-    from puma_matcher_spark.llmdata import dedup as dd
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = {(r["doc_id"], r["simhash"]) for r in dd.simhash64(docs).collect()}
-    b = {
-        (r["doc_id"], r["simhash"])
-        for r in dd.simhash64(docs, method="mapside").collect()
-    }
-    assert a == b
-    assert len(a) == docs.count()
-
-
 def test_jaccard_for_pairs_matches_full_join_on_candidates(spark):
     """The pair-scoped exact verifier must agree with the full shingle
     self-join formulation restricted to the same candidate set — i.e.
@@ -909,33 +893,6 @@ def test_semantic_dedup_group_invariants(spark):
         assert all(m["group_size"] == len(members) for m in members)
 
 
-def test_simhash_band_blocking_is_complete(spark):
-    """The pigeonhole guarantee, checked against brute force: band
-    blocking must find EVERY pair within the Hamming radius (legacy
-    60-bit single-band layout)."""
-    import random
-
-    rng = random.Random(5)
-    vocab = [f"w{i}" for i in range(15)]
-    docs = _docs(
-        spark,
-        [(i, " ".join(rng.choice(vocab) for _ in range(25))) for i in range(60)],
-    )
-    blocked = {
-        (r["doc1_id"], r["doc2_id"]): r["hamming"]
-        for r in dd.simhash_hamming_pairs(
-            docs, max_hamming=3, fingerprint_bits=60
-        ).collect()
-    }
-    sh = {r["doc_id"]: r["simhash"] for r in dd.simhash64(docs).collect()}
-    brute = {
-        (a, b): bin(sh[a] ^ sh[b]).count("1")
-        for a in sh for b in sh
-        if a < b and bin(sh[a] ^ sh[b]).count("1") <= 3
-    }
-    assert blocked == brute
-
-
 def _hamming128(a: tuple[int, int], b: tuple[int, int]) -> int:
     m = (1 << 64) - 1
     return bin((a[0] ^ b[0]) & m).count("1") + bin((a[1] ^ b[1]) & m).count("1")
@@ -1072,14 +1029,6 @@ def test_simhash_pairs_exclude_tokenless_docs(spark):
     }
     assert (1, 2) not in got and (1, 3) not in got and (2, 3) not in got
     assert got == {(4, 5)}
-    # legacy band layout enforces the same contract
-    got60 = {
-        (r["doc1_id"], r["doc2_id"])
-        for r in dd.simhash_hamming_pairs(
-            docs, max_hamming=3, fingerprint_bits=60
-        ).collect()
-    }
-    assert all(a not in (1, 2, 3) and b not in (1, 2, 3) for a, b in got60)
 
 
 def test_tokenless_predicate_whitespace_zoo(spark, tmp_path):

@@ -77,6 +77,51 @@ def test_scorer_formula_hand_computed(spark):
     assert (r["score_type"], r["item_count"]) == ("laboratory", 2)
 
 
+def test_scored_candidates_match_oracle_when_caps_bind(spark):
+    """The fixtures never reach the frequency caps, so registry parity
+    cannot tell a builder that skips them.  Here hub entity 99 sits in
+    10 of N=60 documents (N/20 = 3): the builder must drop it exactly as
+    the oracle's ``_tf_chain`` does, or its 45 hub pairs appear and the
+    pairs that also share another entity, (4, 5) and (6, 7), score
+    higher."""
+    import duckdb
+    import pandas as pd
+
+    from puma_matcher_spark.queries import _tf_chain
+
+    rows = [(d, 99) for d in range(1, 11)]  # the hub: df 10 >= 60/20
+    rows += [(1, 10), (2, 10), (2, 11), (2, 11), (3, 11), (1, 12), (3, 12)]
+    rows += [(4, 13), (5, 13), (5, 13), (6, 14), (7, 14)]
+    rows += [(d, 1000 + d) for d in range(11, 61)]  # N = 60 documents
+    built = sc.scored_entity_candidates(_entities(spark, rows), "person")
+    got = {
+        (r["document_version1_id"], r["document_version2_id"]): (
+            r["score"],
+            r["item_count"],
+        )
+        for r in built.collect()
+    }
+
+    con = duckdb.connect()
+    con.register(
+        "entities",
+        pd.DataFrame(rows, columns=["document_version_id", "entity_id"]),
+    )
+    want = {
+        (r[0], r[1]): (r[2], r[3])
+        for r in con.execute(
+            f"WITH {_tf_chain('p_', 'entities')} "
+            "SELECT document_version1_id, document_version2_id, score, "
+            "item_count FROM p_cand"
+        ).fetchall()
+    }
+    assert set(want) == {(1, 2), (1, 3), (2, 3), (4, 5), (6, 7)}
+    assert set(got) == set(want)
+    for pair, (score, items) in want.items():
+        assert got[pair][1] == items, pair
+        assert math.isclose(got[pair][0], score, rel_tol=1e-12), pair
+
+
 def _docs(spark):
     return spark.createDataFrame(
         [

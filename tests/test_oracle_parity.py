@@ -52,16 +52,30 @@ MATCHER_QUERIES = [
     "weight_eval",
 ]
 
+#: the near-dup (SimHash, MinHash-LSH) and lexical-retrieval kernels
+NEAR_DUP_QUERIES = [
+    "simhash",
+    "simhash128",
+    "simhash_near_dups",
+    "hamming_pairs",
+    "picture_lsh_pairs",
+    "minhash_pairs",
+    "incremental_near_dups",
+    "doc_keywords",
+    "bm25_search",
+]
+
 
 def test_matcher_and_graph_queries_match_oracle(spark, sf_small, monkeypatch):
-    """Fast-lane parity for the matcher chain and the iterative graph
-    loops: the candidate builder's consumers, every connected-components
-    consumer on the default (driver) path, two with the CC loop forced,
-    and the PageRank / LPA / k-core queries."""
+    """Fast-lane parity for the matcher chain, the near-dup and
+    retrieval kernels and the iterative graph loops: the candidate
+    builder's consumers, the SimHash / MinHash / BM25 queries, every
+    connected-components consumer on the default (driver) path, two
+    with the CC loop forced, and the PageRank / LPA / k-core queries."""
     from puma_matcher_spark.operators import graph
     from puma_matcher_spark.sources.testdata import reset_table_cache
 
-    names = MATCHER_QUERIES + CC_QUERIES + GRAPH_LOOP_QUERIES
+    names = MATCHER_QUERIES + NEAR_DUP_QUERIES + CC_QUERIES + GRAPH_LOOP_QUERIES
     try:
         results = run_all(spark, sf_small, names=names)
         assert sorted(r.name for r in results) == sorted(names)
@@ -76,6 +90,15 @@ def test_matcher_and_graph_queries_match_oracle(spark, sf_small, monkeypatch):
         spark.catalog.clearCache()
     failed = [str(r) for r in results if not r.ok]
     assert not failed, "\n".join(failed)
+
+
+def test_run_all_rejects_names_it_cannot_compare(spark, sf_small):
+    """A requested name that has no oracle twin (``weight_refined``) or
+    is not registered fails loudly before any query runs, instead of
+    being dropped from the results."""
+    with pytest.raises(ValueError, match="weight_refined") as err:
+        run_all(spark, sf_small, names=["simhash", "weight_refined", "nope"])
+    assert "nope" in str(err.value) and "'simhash'" not in str(err.value)
 
 
 @pytest.mark.slow

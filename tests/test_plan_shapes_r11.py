@@ -59,9 +59,7 @@ def test_bm25_search_single_tokenize_plan(spark, sf_small):
     from puma_matcher_spark.llmdata.retrieval import bm25_scores
 
     docs = load_tables(spark, sf_small).llm_documents()
-    plan = pi.formatted_plan(
-        bm25_scores(docs, ["dup", "window", "scan"], persist_postings=True)
-    )
+    plan = pi.formatted_plan(bm25_scores(docs, ["dup", "window", "scan"]))
     assert "InMemoryTableScan" in plan
     # pre-fix: 10 parquet scans / 8 generates (4 tokenize passes over 5 scans)
     assert plan.count("Scan parquet") <= 7

@@ -286,9 +286,9 @@ def test_exported_queries_have_flat_schemas(exported_dfs):
 
 def test_simhash_near_dups_plan_is_blocked_128bit(spark, sf_small):
     """Round-8 (VERDICT r7 #6): the 128-bit block-combination join is the
-    most load-bearing dedup plan — a refactor flipping the default back
-    to fingerprint_bits=60 or degrading the candidate join to a nested
-    loop must fail CI, not a future bench run.
+    most load-bearing dedup plan — a refactor going back to a 60-bit
+    single-band layout or degrading the candidate join to a nested loop
+    must fail CI, not a future bench run.
 
     Asserts: (a) the exported query's plan carries the two-long
     combination-key equi-join (val_lo/val_hi join keys present, no

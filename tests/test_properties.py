@@ -273,19 +273,22 @@ def _simhash128_bigint(text: str) -> tuple[int, int]:
     return tuple(out)
 
 
-@given(
-    st.lists(
-        st.text(
-            alphabet=st.characters(
-                blacklist_categories=("Cs",), blacklist_characters=" "
-            ),
-            min_size=0,
-            max_size=8,
+#: space-free tokens (empty ones included) joined by single spaces —
+#: repeated tokens, empty text and non-ASCII all occur
+_TOKEN_LISTS = st.lists(
+    st.text(
+        alphabet=st.characters(
+            blacklist_categories=("Cs",), blacklist_characters=" "
         ),
         min_size=0,
-        max_size=30,
-    )
+        max_size=8,
+    ),
+    min_size=0,
+    max_size=30,
 )
+
+
+@given(_TOKEN_LISTS)
 @settings(max_examples=150, deadline=None)
 def test_simhash128_kernel_matches_bigint_reference(tokens):
     from puma_matcher_spark.llmdata.dedup import simhash128_one
@@ -296,3 +299,32 @@ def test_simhash128_kernel_matches_bigint_reference(tokens):
     assert got == want
     # halves are signed 64-bit
     assert all(-(1 << 63) <= h <= (1 << 63) - 1 for h in got)
+
+
+# ---- 64-bit SimHash kernel -------------------------------------------------
+
+def _simhash64_bigint(text: str) -> int:
+    """Independent reference for ``simhash64_one`` in pure big-int
+    Python: hash60 = the first 15 hex chars of the token's md5, ±tf
+    votes per bit, a set bit for every positive vote."""
+    from collections import Counter
+
+    toks = [t for t in (text or "").lower().split(" ") if t]
+    votes = [0] * 60
+    for t, c in Counter(toks).items():
+        h = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
+        for b in range(60):
+            votes[b] += c if (h >> b) & 1 else -c
+    return sum(1 << b for b in range(60) if votes[b] > 0)
+
+
+@given(_TOKEN_LISTS)
+@settings(max_examples=150, deadline=None)
+def test_simhash64_kernel_matches_bigint_reference(tokens):
+    from puma_matcher_spark.llmdata.dedup import simhash64_one
+
+    text = " ".join(tokens)
+    got = simhash64_one(text)
+    assert got == _simhash64_bigint(text)
+    # a 60-bit fingerprint: always a non-negative long
+    assert 0 <= got < (1 << 60)

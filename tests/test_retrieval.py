@@ -87,20 +87,3 @@ def test_phrase_lookup_empty_phrase_matches_nothing(spark):
             "n_occurrences",
         ]
         assert out.count() == 0
-
-
-def test_bm25_persisted_postings_path_identical(spark, sf_small):
-    """r11 (r12 prep): the single-tokenize path (persist_postings=True)
-    must produce EXACTLY the rows of the default four-pass plan — it is
-    queued to become the exported plan in the next correctness window."""
-    from puma_matcher_spark.llmdata.retrieval import bm25_scores
-
-    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
-    base = {tuple(r) for r in bm25_scores(docs, ["dup", "window", "scan"]).collect()}
-    fast = {
-        tuple(r)
-        for r in bm25_scores(
-            docs, ["dup", "window", "scan"], persist_postings=True
-        ).collect()
-    }
-    assert base == fast and len(base) > 0

@@ -219,11 +219,15 @@ def test_mapside_operators_shuffle_budget(spark, sf_small):
     from puma_matcher_spark.llmdata import dedup as dd
     from puma_matcher_spark.llmdata.packing import sequence_packing
     from puma_matcher_spark.llmdata.textstats import char_entropy
+    from puma_matcher_spark.operators.skew import spread_input
     from puma_matcher_spark.sources.testdata import load_tables
 
     docs = load_tables(spark, sf_small).llm_documents()
-    assert pi.num_shuffles(dd.shingles(docs, spread=False)) == 0
-    assert pi.num_shuffles(dd.simhash64(docs, method="mapside")) == 0
+    # the shingle kernel's only exchange is spread_input's round-robin
+    assert pi.num_shuffles(dd.shingles(docs)) == pi.num_shuffles(
+        spread_input(docs)
+    )
+    assert pi.num_shuffles(dd.simhash64(docs)) == 0
     assert pi.num_shuffles(sequence_packing(docs)) <= 2
     assert pi.num_shuffles(char_entropy(docs)) <= 4
 

@@ -106,13 +106,16 @@ def test_blocked_plan_shape(spark, sf_small):
 
 def test_embeddings_are_map_side(spark, sf_small):
     """shingle_hash_embeddings must not shuffle: the whole hashed count
-    vector folds inside the row (one scan, zero exchanges; spread=False
-    pins off the small-fixture round-robin spread, which is the one
-    deliberate repartition the auto mode may add)."""
+    vector folds inside the row (one scan, no exchange beyond the
+    small-fixture round-robin spread that ``spread_input`` adds, which
+    is the one deliberate repartition of the shingle kernel)."""
+    from puma_matcher_spark.operators.skew import spread_input
+
     docs = _docs(spark, sf_small)
-    emb = sim.shingle_hash_embeddings(docs, spread=False)
-    plan = pi.formatted_plan(emb)
-    assert "Exchange" not in plan, plan
+    emb = sim.shingle_hash_embeddings(docs)
+    assert pi.num_shuffles(emb) == pi.num_shuffles(spread_input(docs)), (
+        pi.formatted_plan(emb)
+    )
 
 
 def test_embedding_bucket_hash_hoisted_once(spark, sf_small):
@@ -127,7 +130,7 @@ def test_embedding_bucket_hash_hoisted_once(spark, sf_small):
     from puma_matcher_spark.llmdata.dedup import portable_hash60, shingle_arrays
 
     docs = _docs(spark, sf_small)
-    emb = sim.shingle_hash_embeddings(docs, spread=False)
+    emb = sim.shingle_hash_embeddings(docs)
     # (a) the _bk attribute survives optimization as its own projection
     plan = pi.formatted_plan(emb)
     assert "_bk" in plan, "bucket-array projection was collapsed away"
