@@ -8,8 +8,9 @@ corpus:
 1. **match creator** pipeline — one PipelineConfig per entity family,
    its configs submitted concurrently; the matcher stage is
    ``operators.scorer.scored_entity_candidates`` (Matcher → Scorer, the
-   builder the query registry uses too), and the filters apply
-   pair-level after the aggregate, where they're cheapest;
+   builder the query registry uses too), and the P2–P4 filters
+   (``operators.filters.pair_filters``) apply pair-level after the
+   aggregate, where they're cheapest;
 2. **match saver** — union across configs (``as_data_source``),
    MultipleTypeMatchFilter, canonicalization + per-document statistics;
 3. **optimizer** — weight training against derived labels +
@@ -30,9 +31,12 @@ per pass:
 
 Without them every consumer re-ran the matcher → scorer → filters →
 normaliser → persister chain: an sf0.001 pass that collects all four
-outputs ran 268 Spark jobs, against 64 with both persists (231 against
-23 from the calling thread; the rest are the creator pipeline's
-per-family jobs).  The ring (or
+outputs ran 268 Spark jobs, against 64 with both persists.  Joining the
+documents dim once per pair side (``filters.pair_filters``) and building
+the weight frames from Arrow (``functions.frames.local_frame``, no
+Python worker process) took the pass to 57-58 jobs.  Both counts
+include the creator pipeline's per-family jobs, which run under the
+caller's job group.  The ring (or
 ``functions.caching.drain()``) releases the caches; every returned
 frame keeps its full lineage, so an evicted cache means a recompute,
 never a wrong or missing row.
@@ -46,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from puma_matcher_spark.functions.caching import persist_rotating
+from puma_matcher_spark.functions.frames import local_frame
 from puma_matcher_spark.operators import filters as flt
 from puma_matcher_spark.operators import scorer as sc
 from puma_matcher_spark.operators import stats as st
@@ -85,13 +90,7 @@ def _family_stages(t: Tables) -> list[Stage]:
         return sc.scored_entity_candidates(ents, config.params["family"])
 
     def filters(config: PipelineConfig, inputs: dict) -> DataFrame:
-        docs = t.documents_dim()
-        cand = inputs["scored"]
-        cand = flt.type_filter(cand, docs)
-        cand = flt.date_filter(cand, docs)
-        return flt.document_version_id_filter(
-            cand, docs.where(~F.col("obsolete"))
-        )
+        return flt.pair_filters(inputs["scored"], t.documents_dim())
 
     def normalisation(config: PipelineConfig, inputs: dict) -> DataFrame | None:
         # optional stage (Pipeline passes input through on None) — the
@@ -157,8 +156,10 @@ def run_full_matcher(
             spark, canonical, training, ["person", "laboratory"], step=0.25
         )
     else:
-        weights = spark.createDataFrame(
-            [("person", 0.5), ("laboratory", 0.5)], ["score_type", "weight"]
+        weights = local_frame(
+            spark,
+            [("person", 0.5), ("laboratory", 0.5)],
+            "score_type STRING, weight DOUBLE",
         )
     totals = st.total_score(canonical, weights)
     return MatcherResult(

@@ -19,6 +19,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from puma_matcher_spark.functions.frames import local_frame
 from puma_matcher_spark.functions.rounding import pround
 
 
@@ -468,9 +469,10 @@ def ivf_refit_report(
     counts = assigned.groupBy("cell").agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors")
     )
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(j, [float(x) for x in centers[j]]) for j in range(n_cells)],
-        ["cell", "center"],
+        "cell BIGINT, center ARRAY<DOUBLE>",
     )
     stats = (
         cents.join(counts, "cell", "left")

@@ -49,6 +49,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
+from puma_matcher_spark.functions.frames import local_frame
+
 
 @F.pandas_udf(StringType())
 def fold_diacritics(s: pd.Series) -> pd.Series:
@@ -667,7 +669,7 @@ def fs_em_parameters(
         )
         for i, f in enumerate(fields)
     ]
-    params = spark.createDataFrame(
-        rows, "field STRING, m DOUBLE, u DOUBLE, w_agree DOUBLE, w_disagree DOUBLE"
+    params = local_frame(
+        spark, rows, "field STRING, m DOUBLE, u DOUBLE, w_agree DOUBLE, w_disagree DOUBLE"
     )
     return params, p

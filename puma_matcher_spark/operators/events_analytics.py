@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from puma_matcher_spark.functions.frames import local_frame
 from puma_matcher_spark.functions.rounding import pround
 
 
@@ -48,10 +49,7 @@ def funnel_counts(
             .localCheckpoint()
         )
         rows.append((k, step, reached.count()))
-    return spark.createDataFrame(
-        [(int(i), s, int(n)) for i, s, n in rows],
-        "step_index INT, step STRING, n_users BIGINT",
-    )
+    return local_frame(spark, rows, "step_index INT, step STRING, n_users BIGINT")
 
 
 def retention_cohorts(events: DataFrame) -> DataFrame:

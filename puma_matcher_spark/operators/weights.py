@@ -29,6 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from puma_matcher_spark.functions.frames import local_frame
+
+#: one weight-vector component per row: (vector id, score type, weight)
+GRID_SCHEMA = "weight_id BIGINT, score_type STRING, weight DOUBLE"
+
 
 #: ceiling on the candidate-pair volume any weight-training entry point
 #: accepts.  The lattice/grid evaluation multiplies EVERY candidate pair
@@ -96,7 +101,7 @@ def weight_grid(
             for t, w in zip(score_types, vec):
                 rows.append((wid, t, float(w)))
             wid += 1
-    return spark.createDataFrame(rows, ["weight_id", "score_type", "weight"])
+    return local_frame(spark, rows, GRID_SCHEMA)
 
 
 def _refined_grid(
@@ -112,7 +117,7 @@ def _refined_grid(
             continue
         rows.extend((wid, t, v / s) for t, v in zip(score_types, vec))
         wid += 1
-    return spark.createDataFrame(rows, ["weight_id", "score_type", "weight"])
+    return local_frame(spark, rows, GRID_SCHEMA)
 
 
 def contextual_scores(candidates: DataFrame) -> DataFrame:

@@ -24,7 +24,8 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from puma_matcher_spark.schemas import FrameType
 from puma_matcher_spark.validator import assert_compliant
@@ -100,10 +101,22 @@ class Pipeline:
     def run(self, configs: list[PipelineConfig]) -> dict[str, dict[str, DataFrame]]:
         """Run all configs; with more than one, each config's DAG is
         submitted from its own thread (Spark jobs interleave), matching the
-        reference's per-config Futures without the sleep-poll loop."""
+        reference's per-config Futures without the sleep-poll loop.
+
+        Each config thread inherits the caller's local properties and job
+        tags (job group, description, scheduler pool), so the caller's
+        ``cancelJobGroup`` and job-group status reach every config's jobs.
+        Every config gets its own copy: threads sharing one would also
+        share the SQL execution id Spark sets per query."""
         if len(configs) > 1:
+            spark = SparkSession.active()
             with ThreadPoolExecutor(max_workers=len(configs)) as ex:
-                futs = {c.name: ex.submit(self.run_config, c) for c in configs}
+                futs = {
+                    c.name: ex.submit(
+                        inheritable_thread_target(spark)(self.run_config), c
+                    )
+                    for c in configs
+                }
                 return {name: f.result() for name, f in futs.items()}
         return {c.name: self.run_config(c) for c in configs}
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from puma_matcher_spark.functions import caching
+from puma_matcher_spark.functions.frames import local_frame
 from puma_matcher_spark.functions.ids import pair_id
 from puma_matcher_spark.functions.rounding import (
     money_units,
@@ -39,6 +40,7 @@ from puma_matcher_spark.operators import matcher as m
 from puma_matcher_spark.operators import scorer as sc
 from puma_matcher_spark.operators import scorelist as sl
 from puma_matcher_spark.operators import stats as st
+from puma_matcher_spark.operators.weights import GRID_SCHEMA
 from puma_matcher_spark.sources.testdata import Tables, load_tables
 
 # --------------------------------------------------------------------------
@@ -288,16 +290,11 @@ WHERE (d1.document_type LIKE 'PROPOSAL%') <> (d2.document_type LIKE 'PROPOSAL%')
   AND NOT d1.obsolete AND NOT d2.obsolete""",
 )
 def q_match_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: matcher → scorer → TypeFilter (P2) → DateFilter (P3) →
+    """Flagship: matcher → scorer → TypeFilter (P2) + DateFilter (P3) +
     DocumentVersionIdFilter (P4) → MATCH_CANDIDATE rows.
     Ref: FullMatcherApp pipeline 1 (app/FullMatcherApp.scala:166-204)."""
     t = load_tables(spark, sf_dir)
-    docs = t.documents_dim()
-    cand = _entity_candidates(t, "person")
-    cand = flt.type_filter(cand, docs)
-    cand = flt.date_filter(cand, docs)
-    valid = docs.where(~F.col("obsolete"))
-    cand = flt.document_version_id_filter(cand, valid)
+    cand = flt.pair_filters(_entity_candidates(t, "person"), t.documents_dim())
     return cand.select(
         "id",
         "document_version1_id",
@@ -704,8 +701,10 @@ def q_total_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: TotalStatisticStage.scala:58-80."""
     t = load_tables(spark, sf_dir)
     cand = _all_candidates(t)
-    weights = t.spark.createDataFrame(
-        [("person", 0.6), ("laboratory", 0.4)], ["score_type", "weight"]
+    weights = local_frame(
+        t.spark,
+        [("person", 0.6), ("laboratory", 0.4)],
+        "score_type STRING, weight DOUBLE",
     )
     out = st.total_score(cand, weights)
     return out.select(
@@ -1522,6 +1521,16 @@ def q_picture_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     return picture_size_filter(pics, min_size=150)
 
 
+def _instrument_aliases(spark: SparkSession) -> DataFrame:
+    """The instrument alias dimension of the A14 queries, the ``aliases``
+    VALUES list of their DuckDB twins."""
+    return local_frame(
+        spark,
+        [(1, "spark"), (2, "hash"), (3, "merge"), (3, "join")],
+        "instrument_id BIGINT, alias STRING",
+    )
+
+
 @register(
     "instrument_features",
     f"""WITH aliases(instrument_id, alias) AS (
@@ -1550,10 +1559,7 @@ def q_instrument_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("document_version_id"),
         F.posexplode(ts.tokens(F.lower(F.col("text")))).alias("pos", "word"),
     )
-    aliases = spark.createDataFrame(
-        [(1, "spark"), (2, "hash"), (3, "merge"), (3, "join")],
-        ["instrument_id", "alias"],
-    )
+    aliases = _instrument_aliases(spark)
     mentions = toks.join(
         F.broadcast(aliases), toks["word"] == aliases["alias"]
     ).select("document_version_id", "instrument_id", "word", "pos")
@@ -2233,11 +2239,12 @@ def q_weight_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "contextual",
         pround(F.col("score") / F.max("score").over(wmax) * 100.0, 6),
     )
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(0, "person", 1.0), (0, "laboratory", 0.0),
          (1, "person", 0.5), (1, "laboratory", 0.5),
          (2, "person", 0.0), (2, "laboratory", 1.0)],
-        ["weight_id", "score_type", "weight"],
+        GRID_SCHEMA,
     )
     weighted = ctx.join(F.broadcast(grid), "score_type").groupBy(
         "weight_id", "document_version1_id", "document_version2_id"
@@ -2516,7 +2523,7 @@ def q_weight_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     for wid in range(9):
         rows.append((wid, "person", wid / 8.0))
         rows.append((wid, "laboratory", 1.0 - wid / 8.0))
-    grid = spark.createDataFrame(rows, ["weight_id", "score_type", "weight"])
+    grid = local_frame(spark, rows, GRID_SCHEMA)
     weighted = ctx.join(F.broadcast(grid), "score_type").groupBy(
         "weight_id", "document_version1_id", "document_version2_id"
     ).agg(F.sum(F.col("weight") * F.col("contextual")).alias("total"))
@@ -3275,9 +3282,7 @@ def q_media_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # class is empty) while groupBy emits none for an empty group — on an
     # all-clean or all-corrupt corpus that is a spurious row-count mismatch
     # (r8 ADVICE #2).  Anchor on a literal two-row status frame.
-    statuses = spark.createDataFrame(
-        [("ok",), ("quarantined",)], "status STRING"
-    )
+    statuses = local_frame(spark, [("ok",), ("quarantined",)], "status STRING")
     return statuses.join(F.broadcast(agg), "status", "left").select(
         "status",
         F.coalesce("n_media", F.lit(0)).cast("long").alias("n_media"),
@@ -3881,11 +3886,7 @@ def q_instrument_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("document_version_id"),
         F.explode(ts.tokens(F.lower(F.col("text")))).alias("word"),
     )
-    aliases = spark.createDataFrame(
-        [(1, "spark"), (2, "hash"), (3, "merge"), (3, "join")],
-        ["instrument_id", "alias"],
-    )
-    return document_instruments(instrument_mentions(toks, aliases))
+    return document_instruments(instrument_mentions(toks, _instrument_aliases(spark)))
 
 
 @register(

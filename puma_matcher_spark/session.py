@@ -15,6 +15,22 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: ceiling on the derived driver heap; on a 128 GiB host 16g keeps GC
+#: out of the bench numbers
+DRIVER_MEMORY_MAX_MB = 16 * 1024
+
+
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the
+    host's physical memory, capped at :data:`DRIVER_MEMORY_MAX_MB`.
+
+    In local mode the driver heap is also the executor heap, and the
+    JVM's off-heap buffers, the Python workers and the OS need the other
+    half: a fixed 16g heap on a 15 GiB host grew the JVM to 15.6 GB
+    resident and got it OOM-killed."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(DRIVER_MEMORY_MAX_MB, total // 2 // 2**20)}m"
+
 
 def get_spark(
     app_name: str = "puma-matcher-spark",
@@ -53,9 +69,10 @@ def get_spark(
         # events.parquet carries TIMESTAMP(NANOS); Spark has no nanos type —
         # read as long and convert (sources.testdata.Tables.events)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # single-JVM local mode: driver heap IS the executor heap; 16g on
-        # the 128 GiB box keeps GC out of the bench numbers
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

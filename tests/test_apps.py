@@ -84,10 +84,11 @@ def test_full_matcher_end_to_end(spark, sf_small):
     assert result.total_scores.count() == types_per_pair.count()
 
 
-#: ceiling on the Spark jobs one matcher pass submits from its calling
-#: thread (build plus collecting all four outputs).  A pass that computes
-#: the shared candidate chain once runs ~23; one that re-derives it per
-#: output runs ~230.
+#: ceiling on the Spark jobs of one whole matcher pass (the creator's
+#: per-family jobs, the saver, weight training and collecting all four
+#: outputs).  A pass runs 57-58; joining the documents dim six times per
+#: family and building the weight grids from Python rows ran 63-64, and
+#: re-deriving the shared candidate chain per output ~270.
 MATCHER_PASS_MAX_JOBS = 60
 
 OUTPUTS = ("candidates", "statistics", "weights", "total_scores")
@@ -105,9 +106,8 @@ def _row_multiset(rows) -> Counter:
 def matcher_pass(spark, sf_small):
     """One cold ``run_full_matcher`` pass under its own job group, with
     all four outputs collected: ``(result, rows per output, job count)``.
-    The creator pipeline's per-family threads do not inherit the group,
-    so the count covers the pass's own thread: the saver, the weight
-    training and the four collects."""
+    The creator pipeline's per-family threads inherit the group, so the
+    count covers the whole pass."""
     from puma_matcher_spark.functions import caching
 
     caching.drain()
@@ -139,8 +139,7 @@ def test_full_matcher_pass_outputs_and_job_count(matcher_pass):
     assert abs(sum(w.values()) - 1.0) < 1e-9
     assert len(rows["total_scores"]) == len(types_per_pair)
     assert n_jobs <= MATCHER_PASS_MAX_JOBS, (
-        f"matcher pass ran {n_jobs} Spark jobs: the shared candidate chain "
-        "is being recomputed per output"
+        f"matcher pass ran {n_jobs} Spark jobs, above {MATCHER_PASS_MAX_JOBS}"
     )
 
 

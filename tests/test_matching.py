@@ -2,6 +2,7 @@
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from puma_matcher_spark.operators import filters as flt
@@ -122,51 +123,91 @@ def test_scored_candidates_match_oracle_when_caps_bind(spark):
         assert math.isclose(got[pair][0], score, rel_tol=1e-12), pair
 
 
+#: (document_version_id, document_type, date, obsolete) for the P2-P4
+#: pair-filter cases; document 99 is missing from the dim
+_DOC_ROWS = [
+    (1, "PROPOSAL", "2020-01-01", False),
+    (2, "PUBLICATION", "2021-01-01", False),
+    (3, "PUBLICATION", "2019-01-01", False),
+    (4, "PROPOSAL", "2020-06-01", True),
+    (5, "PROPOSAL", "2021-01-01", False),
+    (6, None, "2020-01-01", False),
+    (7, "PUBLICATION", "2021-01-01", None),
+    (8, "PUBLICATION", None, False),
+    (9, "PROPOSAL", None, False),
+]
+
+#: (id, pair, kept): every dropped pair fails exactly one predicate
+_PAIR_FILTER_CASES = [
+    ("keeps-proposal-first", (1, 2), True),  # 2020 proposal, 2021 publication
+    ("keeps-proposal-second", (2, 1), True),
+    ("keeps-undated-proposal", (9, 2), True),  # counts as 1900
+    ("p2-both-publication", (2, 3), False),
+    ("p2-both-proposal", (1, 5), False),
+    ("p3-publication-earlier", (1, 3), False),  # 2020 proposal, 2019 publication
+    ("p3-undated-publication", (1, 8), False),  # counts as 1900
+    ("p4-obsolete", (4, 2), False),
+    ("null-type", (1, 6), False),
+    ("null-obsolete", (1, 7), False),
+    ("missing-doc", (1, 99), False),
+]
+
+
 def _docs(spark):
     return spark.createDataFrame(
-        [
-            (1, "PROPOSAL", "2020-01-01", False),
-            (2, "PUBLICATION", "2021-01-01", False),
-            (3, "PUBLICATION", "2019-01-01", False),
-            (4, "PROPOSAL", "2020-06-01", True),
-        ],
-        ["document_version_id", "document_type", "date", "obsolete"],
+        _DOC_ROWS,
+        "document_version_id BIGINT, document_type STRING, date STRING, obsolete BOOLEAN",
     ).withColumn("date", F.col("date").cast("timestamp"))
 
 
-def test_type_filter_xor(spark):
+@pytest.fixture(scope="module")
+def pair_filter_kept(spark):
+    """The pairs of every case that ``pair_filters`` keeps."""
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 4)], ["document_version1_id", "document_version2_id"]
+        [(a, b, 0.5) for _, (a, b), _ in _PAIR_FILTER_CASES],
+        "document_version1_id BIGINT, document_version2_id BIGINT, score DOUBLE",
     )
-    got = {
-        (r["document_version1_id"], r["document_version2_id"])
-        for r in flt.type_filter(pairs, _docs(spark)).collect()
-    }
-    assert got == {(1, 2)}  # (2,3) both PUBLICATION; (1,4) both PROPOSAL
+    out = flt.pair_filters(pairs, _docs(spark))
+    assert out.columns == pairs.columns
+    return {(r[0], r[1]) for r in out.collect()}
 
 
-def test_date_filter_proposal_before_publication(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3)], ["document_version1_id", "document_version2_id"]
+@pytest.mark.parametrize(
+    "pair, kept",
+    [(p, k) for _, p, k in _PAIR_FILTER_CASES],
+    ids=[i for i, _, _ in _PAIR_FILTER_CASES],
+)
+def test_pair_filters(pair_filter_kept, pair, kept):
+    assert (pair in pair_filter_kept) == kept
+
+
+def test_pair_filters_match_the_oracle_where(pair_filter_kept):
+    """The same cases through the DuckDB twin of ``match_candidates``:
+    its join and ``WHERE`` keep exactly what ``pair_filters`` keeps."""
+    import duckdb
+    import pandas as pd
+
+    from puma_matcher_spark.queries import REGISTRY
+
+    twin = REGISTRY["match_candidates"].oracle
+    con = duckdb.connect()
+    con.register(
+        "p_cand",
+        pd.DataFrame(
+            [p for _, p, _ in _PAIR_FILTER_CASES],
+            columns=["document_version1_id", "document_version2_id"],
+        ),
     )
-    got = {
-        (r["document_version1_id"], r["document_version2_id"])
-        for r in flt.date_filter(pairs, _docs(spark)).collect()
-    }
-    # proposal 1 (2020) vs pub 2 (2021) kept; vs pub 3 (2019) dropped
-    assert got == {(1, 2)}
-
-
-def test_document_version_id_filter_drops_obsolete(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 4)], ["document_version1_id", "document_version2_id"]
+    con.execute(
+        "CREATE TABLE documents_dim (document_version_id BIGINT, "
+        "document_type VARCHAR, date TIMESTAMP, obsolete BOOLEAN)"
     )
-    valid = _docs(spark).where(~F.col("obsolete"))
-    got = {
-        (r["document_version1_id"], r["document_version2_id"])
-        for r in flt.document_version_id_filter(pairs, valid).collect()
-    }
-    assert got == {(1, 2)}
+    con.executemany("INSERT INTO documents_dim VALUES (?, ?, ?, ?)", _DOC_ROWS)
+    got = con.execute(
+        "SELECT c.document_version1_id, c.document_version2_id "
+        + twin[twin.index("FROM p_cand c"):]
+    ).fetchall()
+    assert set(got) == pair_filter_kept
 
 
 def test_multiple_type_match_filter(spark):

@@ -171,20 +171,33 @@ def test_blocked_dedup_handles_a_dup_free_corpus(spark):
 
 
 @pytest.mark.slow
-def test_verify_join_reads_checkpointed_embeddings(spark, sf_small):
+def test_verify_join_reads_checkpointed_embeddings(spark, sf_small, monkeypatch):
     """The materialization barrier of commit 068b131 (VERDICT r6 #4):
     the verify join's BOTH sides must be scans of the localCheckpoint'ed
     embedding frame ("Scan ExistingRDD"), not inlined re-computations of
     the O(n_buckets x shingles) embedding expression below the join —
     Catalyst's projection collapse otherwise re-executes the build per
-    joined row (measured 75x at sf0.1).  Over the parquet fixtures the
-    checkpoint is the ONLY RDD source in the DAG, so exactly two
+    joined row (measured 75x at sf0.1).  The plan checked is the
+    verified-pair frame handed to ``connected_components``: the grouping
+    may solve small graphs on the driver and return a local table, whose
+    plan no longer shows the join.  Over the parquet fixtures the
+    checkpoint is the ONLY RDD source in the pair frame's DAG, so two
     ExistingRDD scans prove the barrier; removing the .localCheckpoint()
     at similarity.py drops the count to zero and fails this test."""
+    from puma_matcher_spark.operators import dedup
     from puma_matcher_spark.queries import REGISTRY
 
-    df = REGISTRY["semantic_dedup_blocked"].spark_fn(spark, sf_small)
-    plan = pi.formatted_plan(df)
+    edges = []
+    solve = dedup.connected_components
+
+    def spy(pairs, *args, **kwargs):
+        edges.append(pairs)
+        return solve(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "connected_components", spy)
+    REGISTRY["semantic_dedup_blocked"].spark_fn(spark, sf_small)
+    assert len(edges) == 1
+    plan = pi.formatted_plan(edges[0])
     assert plan.count("ExistingRDD") >= 2, plan
 
 
