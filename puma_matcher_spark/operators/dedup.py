@@ -5,6 +5,10 @@ Reference:
 
 * ``PersonCleanerStage`` (deduplication/PersonCleanerStage.scala:14-196) —
   email unwrapping, initial stripping, Unicode NFD fold, blocking key.
+  The fold runs on the JVM as the reference's does (ICU4J's NFD through
+  ``reflect``, then a ``\\p{Mn}`` regex), so it follows the JVM's Unicode
+  tables and no cleaning step starts a Python worker (the first pandas
+  UDF in a fresh JVM costs seconds of daemon and worker start-up).
 * blocked self-join (PersonDeduplicationStage.scala:129-135, J10): the
   equality on the blocking key turns the cartesian into an equi-join;
   ``id1 > id2`` halves it.
@@ -38,37 +42,42 @@ it caches on every exit path, the non-convergence raise included.
 from __future__ import annotations
 
 import os
-import unicodedata
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from puma_matcher_spark.functions.frames import local_frame
 
 
-@F.pandas_udf(StringType())
-def fold_diacritics(s: pd.Series) -> pd.Series:
-    """NFD-normalise and drop combining marks (PersonCleanerStage.scala:35-65
-    / CodeAnalyserService.java:23) — ä→a, é→e; vectorized."""
-    def fold(v):
-        if v is None:
-            return None
-        return "".join(
-            c for c in unicodedata.normalize("NFD", v)
-            if unicodedata.category(c) != "Mn"
-        )
-    return s.map(fold)
+def fold_diacritics(s: Column) -> Column:
+    """NFD-decompose and drop nonspacing marks (PersonCleanerStage.scala:35-65
+    / CodeAnalyserService.java:23) — ä→a, é→e; NULL stays NULL.
+
+    A Catalyst expression, as the reference folds on the JVM: ICU4J's
+    ``Normalizer.decompose`` (Spark's own jars) through ``reflect``, then
+    a ``\\p{Mn}`` regex.  ``decompose`` is deprecated in ICU in favour of
+    ``Normalizer2``, but ``reflect`` can only call a static method with
+    string and primitive arguments.  The fold therefore follows the JVM's Unicode
+    tables (ICU's for the decomposition, the JDK's for the mark class),
+    not the Python interpreter's; ``reflect`` is ``Nondeterministic`` to
+    Catalyst, so filters are not pushed below it."""
+    nfd = F.reflect(
+        F.lit("com.ibm.icu.text.Normalizer"), F.lit("decompose"), s, F.lit(False)
+    )
+    # reflect passes a NULL argument through as a Java null, which
+    # decompose rejects: guard it
+    return F.when(s.isNotNull(), F.regexp_replace(nfd, r"\p{Mn}", ""))
 
 
 def clean_names(persons: DataFrame, name_col: str = "name") -> DataFrame:
     """Cleaning chain: trim, collapse whitespace, lowercase, fold
-    diacritics, strip dotted initials; adds a ``blocking_key``
+    diacritics (:func:`fold_diacritics`, on the JVM, so it starts no
+    Python worker), strip dotted initials; adds a ``blocking_key``
     (first token + last token — the reference's ``first_lastname``)."""
     cleaned = F.regexp_replace(
         F.regexp_replace(F.lower(F.trim(F.col(name_col))), r"\b\w\.", " "),
@@ -117,7 +126,7 @@ def blocked_pairs(
 
     Cost note: the guard is one extra scan of ``persons`` per call (the
     pair join below scans it twice more) — callers whose ``persons`` is
-    an expensive derivation (e.g. the clean_names pandas-UDF chain)
+    a derivation (e.g. a parquet scan plus the clean_names chain)
     should persist it first."""
     if max_pairs is None:
         max_pairs = int(

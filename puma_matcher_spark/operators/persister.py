@@ -69,8 +69,25 @@ def persist_partitioned(
     time-ranged or per-source reads at 100 TB (assertable via
     plans.inspect.partition_filters).  Keep partition cardinality
     bounded (dates/sources, never high-cardinality ids): each partition
-    value creates a directory and at least one file per writing task."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    value creates a directory and at least one file per writing task.
+
+    The write goes through a ``rebalance`` hint on the partition
+    columns, so the file count follows the sizes AQE observes at run
+    time, not the upstream task count: a small partition value gets one
+    writer (one file), a large one is split by the advisory partition
+    size.  Without it every upstream task writes into every partition
+    value it holds, so the file count follows the input split (the
+    sf0.01 curation publish, 20 sources: 20 to 79 part files; 20 with
+    the hint), and a local filesystem without native Hadoop forks a
+    ``chmod`` per file and directory created.
+    ``sources.maintenance.compact`` clusters by partition columns for
+    the same reason."""
+    (
+        df.hint("rebalance", *partition_cols)
+        .write.mode(mode)
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def persist_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -1,13 +1,16 @@
-"""Dedup: cleaning UDFs, blocked pairs, connected components."""
+"""Dedup: name cleaning, blocked pairs, connected components."""
 
 import random
+import unicodedata
+
+from pyspark.sql import functions as F
 
 from puma_matcher_spark.operators import dedup as dd
+from puma_matcher_spark.plans import inspect as pi
 
 import pytest
 
 
-@pytest.mark.slow
 def test_clean_names_folds_diacritics_and_initials(spark):
     persons = spark.createDataFrame(
         [(1, "Jean-Pièrre  Müller"), (2, "J. P. Muller"), (3, None)],
@@ -17,6 +20,76 @@ def test_clean_names_folds_diacritics_and_initials(spark):
     assert got[1][0] == "jean-pierre muller"
     assert got[2][0] == "muller"
     assert got[1][1] == "jean-pierre#muller"
+
+
+def _fold_reference(v):
+    """NFD, then drop nonspacing marks: the fold in pure Python."""
+    if v is None:
+        return None
+    return "".join(
+        c for c in unicodedata.normalize("NFD", v)
+        if unicodedata.category(c) != "Mn"
+    )
+
+
+#: code point ranges where the JVM's fold (ICU's decomposition, the
+#: JDK's ``\p{Mn}``) and Python's ``unicodedata`` use the same Unicode
+#: data; the first difference above U+0020 is at U+0898, a mark added
+#: after the JDK's Unicode version
+FOLD_AGREED_RANGES = [
+    (0x0020, 0x0897),  # Latin through Samaritan and Mandaic
+    (0x1E00, 0x1FFF),  # Latin Extended Additional, Greek Extended
+    (0x3040, 0x30FF),  # Hiragana, Katakana (voiced-mark decomposition)
+    (0xAC00, 0xD7A3),  # Hangul syllables (decompose to conjoining jamo)
+]
+
+
+def test_fold_diacritics_matches_unicodedata_reference(spark):
+    values = [None, ""] + [
+        chr(c) for lo, hi in FOLD_AGREED_RANGES for c in range(lo, hi + 1)
+    ]
+    df = spark.createDataFrame(list(enumerate(values)), "i INT, s STRING")
+    got = {
+        r["i"]: r["f"]
+        for r in df.select("i", dd.fold_diacritics(F.col("s")).alias("f")).collect()
+    }
+    diff = [
+        (f"U+{ord(v):04X}" if v else v, got[i], _fold_reference(v))
+        for i, v in enumerate(values)
+        if got[i] != _fold_reference(v)
+    ]
+    assert not diff, f"{len(diff)} code points fold differently: {diff[:10]}"
+
+
+#: plan nodes of Python kernels: each starts Python worker processes
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+
+
+def test_dedup_workload_plans_run_no_python(spark, sf_small):
+    """The dedup queries and the curation app plan no Python kernel, so
+    a pass starts no Python worker."""
+    from puma_matcher_spark.apps import run_curation_app
+    from puma_matcher_spark.functions import caching
+    from puma_matcher_spark.queries import REGISTRY
+
+    frames = {
+        name: REGISTRY[name].spark_fn(spark, sf_small)
+        for name in (
+            "person_clean",
+            "dedup_person_chain",
+            "dedup_components_cc",
+            "dedup_exact",
+        )
+    }
+    frames["curation clean"] = run_curation_app(spark, sf_small).clean
+    try:
+        offenders = {
+            name: [n for n in PYTHON_NODES if n in pi.formatted_plan(df)]
+            for name, df in frames.items()
+        }
+    finally:
+        caching.drain()
+    assert not any(offenders.values()), offenders
 
 
 def test_blocked_pairs_within_key_only(spark):

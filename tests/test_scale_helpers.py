@@ -389,15 +389,22 @@ def test_absolute_frequency_cap_at_reference_threshold(spark):
 def test_partitioned_sink_prunes_partitions(spark, tmp_path):
     from puma_matcher_spark.operators.persister import persist_partitioned
 
+    # every source spread over all 4 input partitions
     df = spark.createDataFrame(
         [(i, f"src{i % 4}", float(i)) for i in range(100)],
         ["doc_id", "source", "v"],
-    )
+    ).repartition(4)
+    assert df.rdd.getNumPartitions() == 4
     path = str(tmp_path / "part")
     persist_partitioned(df, path, ["source"])
-    # four partition directories exist
+    # four partition directories exist, each written by one task
     dirs = {d for d in os.listdir(path) if d.startswith("source=")}
     assert dirs == {f"source=src{i}" for i in range(4)}
+    parts = {
+        d: [f for f in os.listdir(os.path.join(path, d)) if f.startswith("part-")]
+        for d in dirs
+    }
+    assert all(len(p) == 1 for p in parts.values()), parts
     # a filter on the partition column reaches PartitionFilters (pruning
     # whole directories), not just PushedFilters
     rd = spark.read.parquet(path).where(F.col("source") == "src1")
