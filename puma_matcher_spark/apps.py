@@ -92,12 +92,9 @@ def _family_stages(t: Tables) -> list[Stage]:
     def filters(config: PipelineConfig, inputs: dict) -> DataFrame:
         return flt.pair_filters(inputs["scored"], t.documents_dim())
 
-    def normalisation(config: PipelineConfig, inputs: dict) -> DataFrame | None:
-        # optional stage (Pipeline passes input through on None) — the
-        # reference normalises per config before the editor; the approx
-        # percentile is the scale path (W1)
-        if not config.params.get("normalise", True):
-            return None
+    def normalisation(config: PipelineConfig, inputs: dict) -> DataFrame:
+        # the reference normalises per config before the editor; the
+        # approx percentile is the scale path (W1)
         from puma_matcher_spark.operators.normaliser import (
             normalisation_factor,
             normalise_scores,
@@ -116,7 +113,7 @@ def _family_stages(t: Tables) -> list[Stage]:
         Stage(name="filters", input=["scored"], output="filtered", fn=filters,
               frame_type=FrameType.MATCH_CANDIDATE),
         Stage(name="normalisation", input=["filtered"], output="editor_output",
-              fn=normalisation, optional=True),
+              fn=normalisation),
     ]
 
 

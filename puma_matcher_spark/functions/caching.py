@@ -109,9 +109,7 @@ def memoized(key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
         return _MEMO[key]
 
 
-def persist_rotating(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
+def persist_rotating(df: DataFrame) -> DataFrame:
     """Persist ``df`` and enroll it in the bounded ring; evicts (and
     unpersists) the oldest enrolled frame beyond capacity.  A frame
     whose plan is already cached (CacheManager plan-match — e.g. the
@@ -123,14 +121,15 @@ def persist_rotating(
         for i, entry in enumerate(_RING):
             if _same_plan(df, entry):
                 _RING.append(_RING.pop(i))  # refresh FIFO position
-                df.persist(level)  # alias persist: same CacheManager entry
+                # alias persist: same CacheManager entry
+                df.persist(StorageLevel.MEMORY_AND_DISK)
                 return df
         try:
             lvl = df.storageLevel
             already = lvl.useMemory or lvl.useDisk or lvl.useOffHeap
         except Exception:
             already = False  # storage-level probe failed — enroll normally
-        df.persist(level)
+        df.persist(StorageLevel.MEMORY_AND_DISK)
         if already:
             return df  # outside owner (caller persist / memo) — not ours
         _RING.append(df)

@@ -1,6 +1,6 @@
 """Deterministic lexicon-validated English lemmatiser — the vendored
 "real lemma()" backend for M7 (DocumentWordSpecAnalyser.scala:166-220
-calls CoreNLP ``lemma()``; this container has neither CoreNLP nor spaCy).
+calls CoreNLP ``lemma()``, which is not available to a PySpark build).
 
 Re-implements the public WordNet *morphy* algorithm (Miller et al.,
 "WordNet: An on-line lexical database", the documented detachment-rule
@@ -24,6 +24,7 @@ in fixed order wins.
 
 from __future__ import annotations
 
+import functools
 import os
 
 _DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
@@ -115,16 +116,7 @@ def _load() -> Lemmatizer:
     return Lemmatizer(exceptions, lexicon)
 
 
-_LEMMATIZER: Lemmatizer | None | object = None
-
-
-def load_default() -> Lemmatizer | None:
-    """The vendored lemmatiser, or None when its data files are absent
-    (memoized per process — one parse per executor)."""
-    global _LEMMATIZER
-    if _LEMMATIZER is None:
-        try:
-            _LEMMATIZER = _load()
-        except OSError:
-            _LEMMATIZER = False
-    return _LEMMATIZER if isinstance(_LEMMATIZER, Lemmatizer) else None
+@functools.cache
+def load_default() -> Lemmatizer:
+    """The vendored lemmatiser (one parse of its data files per process)."""
+    return _load()

@@ -1,41 +1,35 @@
-"""Lightweight NLP tagging (M7) with a pluggable real-tagger backend.
+"""NLP tagging (M7): POS, NER and lemma columns from a vendored
+statistical backend, with rule stand-ins behind the same signatures.
 
 Reference: Stanford CoreNLP ``pos()``/``ner()``/``lemma()`` columns with a
 POS whitelist ``FW, MD, NN*, RP, PDT, UH, VB*`` + NER 'O'
 (AdvancedInstrumentAnalyser.scala:553-571,
-DocumentWordSpecAnalyser.scala:166-220).
+DocumentWordSpecAnalyser.scala:166-220).  The reference has one tagger;
+the rebuild has two backends, chosen per call by the ``backend``
+argument:
 
-Three backends behind the same pandas-UDF signatures, selected at runtime:
+* ``perceptron`` (default) — the vendored averaged-perceptron POS tagger
+  and NER model (functions/perceptron.py) and the lexicon-validated
+  lemmatiser (functions/lemmatizer.py), their weights and lexicon
+  shipped in data/.  Accuracy-gated on labelled fixtures
+  (tests/test_nlp.py) per SURVEY.md §7.4 — tagger divergence is
+  expected, gate with labelled metrics, not exact match.
+* ``heuristic`` — deterministic suffix rules.  The ``word_features``
+  DuckDB oracle mirrors them rule for rule (:func:`heuristic_pos_sql`,
+  :func:`heuristic_lemma_sql`), so the registered query pins it.
 
-* ``heuristic`` — deterministic suffix-rule stand-ins (always available).
-  Accuracy-gated on a hand-tagged fixture (tests/test_nlp.py)
-  per SURVEY.md §7.4 — tagger divergence is expected, gate with labelled
-  metrics, not exact match.
-* ``perceptron`` — the vendored averaged-perceptron statistical POS
-  tagger (functions/perceptron.py, weights shipped in data/) — a real
-  trained tagger that runs in THIS container, closing the M7 gap the
-  missing spaCy left.  POS only; lemma/NER fall back to the rule
-  kernels under this backend.
-* ``spacy`` — a full statistical tagger/lemmatiser/NER, used
-  automatically when the package AND an English model are importable on
-  the executors.  Tokens are fed pre-tokenised (``spacy.tokens.Doc``) so
-  positions/whitelist plumbing is byte-identical across backends.
-
-``PUMA_NLP_BACKEND`` pins the choice (``heuristic`` | ``perceptron`` |
-``spacy`` | ``auto``, default auto → spacy when loadable, else
-perceptron when its weights file is present, else heuristic); a forced
-backend that is unavailable in the env falls back down that chain
-rather than failing the pipeline.
+Any other name raises ``ValueError``; a missing model file raises on
+first use rather than falling back to the rules.
 """
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
+
+from puma_matcher_spark.functions import lemmatizer, perceptron
 
 # reference whitelist (AdvancedInstrumentAnalyser.scala:553-554,
 # DocumentWordSpecAnalyser.scala:170)
@@ -50,7 +44,7 @@ _MODALS = {"can", "could", "will", "would", "shall", "should", "may", "might", "
 
 
 def _heuristic_pos(tok: str) -> str:
-    """Deterministic suffix-rule tagger — STAND-IN for CoreNLP/spaCy."""
+    """Deterministic suffix-rule tagger — STAND-IN for CoreNLP."""
     if tok in _DETERMINERS:
         return "DT"
     if tok in _PREPOSITIONS:
@@ -68,146 +62,63 @@ def _heuristic_pos(tok: str) -> str:
     return "NN"
 
 
-# ---- backend selection -----------------------------------------------------
+# ---- backends ---------------------------------------------------------------
 
-_SPACY_UNSET = object()
-_SPACY_NLP = _SPACY_UNSET
-
-
-def _load_spacy():
-    """The loaded spaCy English pipeline, or None when the package or its
-    model is absent (memoized; evaluated lazily on each executor)."""
-    global _SPACY_NLP
-    if _SPACY_NLP is _SPACY_UNSET:
-        try:
-            import spacy
-
-            try:
-                _SPACY_NLP = spacy.load("en_core_web_sm", exclude=["parser"])
-            except Exception:
-                _SPACY_NLP = None
-        except ImportError:
-            _SPACY_NLP = None
-    return _SPACY_NLP
+#: tagging backends: the vendored statistical models (default) and the
+#: suffix rules that the word_features oracle mirrors
+BACKENDS = ("perceptron", "heuristic")
 
 
-def _load_perceptron():
-    """The vendored averaged-perceptron tagger, or None when its weights
-    file is absent (memoized in functions.perceptron)."""
-    from puma_matcher_spark.functions.perceptron import load_default
-
-    return load_default()
-
-
-def nlp_backend() -> str:
-    """Resolve the active tagging backend.  'auto' prefers the real
-    taggers: spacy when loadable, else the vendored perceptron, else the
-    rule heuristics; a forced unavailable backend degrades down the same
-    chain instead of failing."""
-    want = os.environ.get("PUMA_NLP_BACKEND", "auto")
-    if want == "heuristic":
-        return "heuristic"
-    if want not in ("spacy", "perceptron", "auto"):
-        raise ValueError(f"unknown PUMA_NLP_BACKEND: {want!r}")
-    if want in ("spacy", "auto") and _load_spacy() is not None:
-        return "spacy"
-    # forced spacy without the package degrades to the next REAL tagger
-    if _load_perceptron() is not None:
-        return "perceptron"
-    return "heuristic"
+def _heuristic(backend: str) -> bool:
+    """True for the rule backend, False for the perceptron; any other
+    name raises."""
+    if backend not in BACKENDS:
+        raise ValueError(
+            f"unknown NLP backend {backend!r}; expected one of {BACKENDS}"
+        )
+    return backend == "heuristic"
 
 
-def _spacy_doc(nlp, arr):
-    """Run the pipeline on a pre-tokenised array (positions preserved)."""
-    from spacy.tokens import Doc
-
-    doc = Doc(nlp.vocab, words=list(arr))
-    for _name, proc in nlp.pipeline:
-        doc = proc(doc)
-    return doc
-
-
-def _resolve(backend: str | None) -> str:
-    """The backend name to execute with ('spacy'/'perceptron'/
-    'heuristic').  ``backend`` pins the choice but still degrades when
-    the pinned engine is unavailable; None defers to the env."""
-    want = backend or nlp_backend()
-    if want == "spacy" and _load_spacy() is not None:
-        return "spacy"
-    if want in ("spacy", "perceptron") and _load_perceptron() is not None:
-        return "perceptron"
-    return "heuristic"
-
-
-def _pos_batch(arr, backend: str | None = None):
+def _pos_batch(arr, backend: str = "perceptron"):
     if arr is None:
         return None
-    how = _resolve(backend)
-    if how == "spacy":
-        return [t.tag_ or "NN" for t in _spacy_doc(_load_spacy(), arr)]
-    if how == "perceptron":
-        return _load_perceptron().tag(list(arr))
-    return [_heuristic_pos(t) for t in arr]
+    if _heuristic(backend):
+        return [_heuristic_pos(t) for t in arr]
+    return perceptron.load_default().tag(list(arr))
 
 
-def _load_perceptron_ner():
-    from puma_matcher_spark.functions.perceptron import load_default_ner
-
-    return load_default_ner()
-
-
-def _load_lemmatizer():
-    from puma_matcher_spark.functions.lemmatizer import load_default
-
-    return load_default()
-
-
-def _ner_batch(arr, backend: str | None = None):
+def _ner_batch(arr, backend: str = "perceptron"):
     if arr is None:
         return None
-    how = _resolve(backend)
-    if how == "spacy":
+    if _heuristic(backend):
+        # capitalisation with the reference's 'O' default class
         return [
-            t.ent_type_ or "O" for t in _spacy_doc(_load_spacy(), arr)
+            "ENTITY" if i > 0 and t[:1].isupper() else "O"
+            for i, t in enumerate(arr)
         ]
-    if how == "perceptron":
-        ner = _load_perceptron_ner()
-        if ner is not None:
-            # vendored averaged-perceptron NER (functions/perceptron.py,
-            # trained weights in data/ner_weights.json) — a real
-            # statistical model with the reference's 'O' default class
-            return ner.tag(list(arr))
-    # heuristic fallback: capitalisation with the 'O' default class
-    out = []
-    for i, t in enumerate(arr):
-        out.append("ENTITY" if i > 0 and t[:1].isupper() else "O")
-    return out
+    # vendored averaged-perceptron NER (functions/perceptron.py, trained
+    # weights in data/ner_weights.json) with the reference's 'O' class
+    return perceptron.load_default_ner().tag(list(arr))
 
 
-def _lemma_batch(arr, backend: str | None = None):
+def _lemma_batch(arr, backend: str = "perceptron"):
     if arr is None:
         return None
-    how = _resolve(backend)
-    if how == "spacy":
-        return [
-            t.lemma_ or t.text for t in _spacy_doc(_load_spacy(), arr)
-        ]
-    if how == "perceptron":
-        lem = _load_lemmatizer()
-        tagger = _load_perceptron()
-        if lem is not None and tagger is not None:
-            # POS-conditioned morphy lemmatisation (functions/
-            # lemmatizer.py): detachment rules validated against the
-            # vendored lexicon, POS from the perceptron tagger — the
-            # CoreNLP lemma() contract (tag first, then lemmatise)
-            tags = tagger.tag(list(arr))
-            return [lem.lemma(t, tag) for t, tag in zip(arr, tags)]
-    return [_heuristic_lemma(t) for t in arr]
+    if _heuristic(backend):
+        return [_heuristic_lemma(t) for t in arr]
+    # POS-conditioned morphy lemmatisation (functions/lemmatizer.py):
+    # detachment rules validated against the vendored lexicon, POS from
+    # the perceptron tagger — the CoreNLP lemma() contract (tag first,
+    # then lemmatise)
+    lem = lemmatizer.load_default()
+    tags = perceptron.load_default().tag(list(arr))
+    return [lem.lemma(t, tag) for t, tag in zip(arr, tags)]
 
 
-def make_tag_udf(kernel, backend: str | None = None):
-    """Arrow-batched array→array tagging UDF with a pinned backend (None
-    → resolve from PUMA_NLP_BACKEND at batch time on the executor)."""
+def make_tag_udf(kernel, backend: str = "perceptron"):
+    """Arrow-batched array→array tagging UDF running ``kernel`` with
+    ``backend`` (checked here, on the driver)."""
+    _heuristic(backend)
 
     @F.pandas_udf(ArrayType(StringType()))
     def _udf(tokens: pd.Series) -> pd.Series:
@@ -216,18 +127,11 @@ def make_tag_udf(kernel, backend: str | None = None):
     return _udf
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def pos_tags(tokens: pd.Series) -> pd.Series:
-    """Arrow-batched POS tagging of token arrays (backend-dispatched)."""
-    return tokens.map(_pos_batch)
+#: Arrow-batched POS tagging of token arrays (perceptron backend)
+pos_tags = make_tag_udf(_pos_batch)
 
-
-@F.pandas_udf(ArrayType(StringType()))
-def ner_tags(tokens: pd.Series) -> pd.Series:
-    """Arrow-batched NER tagging (backend-dispatched: spaCy entity types
-    when available, else the capitalisation heuristic with the
-    reference's 'O' default class)."""
-    return tokens.map(_ner_batch)
+#: Arrow-batched NER tagging of token arrays (perceptron backend)
+ner_tags = make_tag_udf(_ner_batch)
 
 
 _VOWELS = set("aeiou")
@@ -281,12 +185,6 @@ def _heuristic_lemma(tok: str) -> str:
                 return stem + "e"  # making → make, scored → score
             return stem  # reading → read
     return t
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def lemmas(tokens: pd.Series) -> pd.Series:
-    """Arrow-batched lemmatisation of token arrays (backend-dispatched)."""
-    return tokens.map(_lemma_batch)
 
 
 def heuristic_pos_sql(col: str) -> str:
@@ -355,14 +253,14 @@ def word_features(
     id_col: str = "document_version_id",
     min_lemma_len: int = 4,
     whitelist: tuple[str, ...] = POS_WHITELIST,
-    backend: str | None = None,
+    backend: str = "perceptron",
 ) -> DataFrame:
     """Per-word NLP feature rows: (doc, word, lemma, pos_tag,
     word_position), POS-whitelisted with lemma length ≥ min_lemma_len —
     the DocumentWordSpecAnalyser.scala:166-220 extraction (one output
     row per kept word, positions 1-based over the full token stream).
-    ``backend`` pins the tagger ('heuristic' gives the oracle-
-    reproducible rule path); None resolves from the environment.
+    ``backend`` picks the tagger: the perceptron by default,
+    'heuristic' for the oracle-reproducible rule path.
     """
     from puma_matcher_spark.functions.text import tokenize
 

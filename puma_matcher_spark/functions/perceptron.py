@@ -1,9 +1,9 @@
-"""Averaged-perceptron POS tagger — the vendored "real tagger" backend
-for M7 (between ``heuristic`` and ``spacy``).
+"""Averaged-perceptron POS tagger and NER model — the default M7 backend
+(functions/nlp.py; the other is the suffix-rule ``heuristic``).
 
 The reference pipeline calls Stanford CoreNLP's statistical tagger
-(AdvancedInstrumentAnalyser.scala:569-607); this container has neither
-CoreNLP nor spaCy, so the suffix-rule heuristics were the only executable
+(AdvancedInstrumentAnalyser.scala:569-607), which is not available to a
+PySpark build, so the suffix-rule heuristics were the only executable
 backend through round 3.  This module closes that gap with a pure-Python
 statistical tagger:
 
@@ -22,12 +22,13 @@ statistical tagger:
   for the oracle/driver comparisons.
 
 Spark-side plumbing is unchanged: the tagger slots in behind the same
-Arrow-batched array→array pandas-UDF signatures as the other backends
+Arrow-batched array→array pandas-UDF signatures as the heuristic backend
 (functions/nlp.py), with the weights lazy-loaded once per executor.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -346,29 +347,14 @@ def train(
     return PerceptronTagger(model, tagdict, features=features, default=default)
 
 
-_TAGGER: PerceptronTagger | None | object = None
-_NER_TAGGER: PerceptronTagger | None | object = None
+@functools.cache
+def load_default() -> PerceptronTagger:
+    """The vendored POS tagger (one JSON parse per process)."""
+    return PerceptronTagger.load()
 
 
-def load_default() -> PerceptronTagger | None:
-    """The vendored tagger, or None when the weights file is absent
-    (memoized per process — one JSON parse per executor)."""
-    global _TAGGER
-    if _TAGGER is None:
-        try:
-            _TAGGER = PerceptronTagger.load()
-        except OSError:
-            _TAGGER = False  # sentinel: tried and missing
-    return _TAGGER if isinstance(_TAGGER, PerceptronTagger) else None
-
-
-def load_default_ner() -> PerceptronTagger | None:
+@functools.cache
+def load_default_ner() -> PerceptronTagger:
     """The vendored NER model (trained by scripts/train_perceptron.py on
-    data/ner_train.txt), or None when its weights file is absent."""
-    global _NER_TAGGER
-    if _NER_TAGGER is None:
-        try:
-            _NER_TAGGER = PerceptronTagger.load(NER_WEIGHTS_PATH)
-        except OSError:
-            _NER_TAGGER = False
-    return _NER_TAGGER if isinstance(_NER_TAGGER, PerceptronTagger) else None
+    data/ner_train.txt; one JSON parse per process)."""
+    return PerceptronTagger.load(NER_WEIGHTS_PATH)

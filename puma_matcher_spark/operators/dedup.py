@@ -6,9 +6,10 @@ Reference:
 * ``PersonCleanerStage`` (deduplication/PersonCleanerStage.scala:14-196) —
   email unwrapping, initial stripping, Unicode NFD fold, blocking key.
   The fold runs on the JVM as the reference's does (ICU4J's NFD through
-  ``reflect``, then a ``\\p{Mn}`` regex), so it follows the JVM's Unicode
-  tables and no cleaning step starts a Python worker (the first pandas
-  UDF in a fresh JVM costs seconds of daemon and worker start-up).
+  ``reflect``, then a regex over ICU's nonspacing marks), so it follows
+  ICU's Unicode tables and no cleaning step starts a Python worker (the
+  first pandas UDF in a fresh JVM costs seconds of daemon and worker
+  start-up).
 * blocked self-join (PersonDeduplicationStage.scala:129-135, J10): the
   equality on the blocking key turns the cartesian into an equi-join;
   ``id1 > id2`` halves it.
@@ -41,17 +42,28 @@ it caches on every exit path, the non-convergence raise included.
 
 from __future__ import annotations
 
-import os
+import functools
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from puma_matcher_spark.functions.frames import local_frame
+
+
+@functools.cache
+def _icu_marks() -> str:
+    """ICU's nonspacing marks (``[:Mn:]``) as a Java-regex character
+    class, read once per process on the driver."""
+    marks = SparkSession.active()._jvm.com.ibm.icu.text.UnicodeSet("[:Mn:]")
+    return "[" + "".join(
+        f"\\x{{{marks.getRangeStart(i):X}}}-\\x{{{marks.getRangeEnd(i):X}}}"
+        for i in range(marks.getRangeCount())
+    ) + "]"
 
 
 def fold_diacritics(s: Column) -> Column:
@@ -60,18 +72,19 @@ def fold_diacritics(s: Column) -> Column:
 
     A Catalyst expression, as the reference folds on the JVM: ICU4J's
     ``Normalizer.decompose`` (Spark's own jars) through ``reflect``, then
-    a ``\\p{Mn}`` regex.  ``decompose`` is deprecated in ICU in favour of
-    ``Normalizer2``, but ``reflect`` can only call a static method with
-    string and primitive arguments.  The fold therefore follows the JVM's Unicode
-    tables (ICU's for the decomposition, the JDK's for the mark class),
-    not the Python interpreter's; ``reflect`` is ``Nondeterministic`` to
+    a regex whose mark class is built from ICU's own ``[:Mn:]`` set.
+    ``decompose`` is deprecated in ICU in favour of ``Normalizer2``, but
+    ``reflect`` can only call a static method with string and primitive
+    arguments.  Both steps follow ICU's Unicode version, not the JDK's
+    (whose older ``\\p{Mn}`` kept marks added since, from U+0897 on) nor
+    the Python interpreter's; ``reflect`` is ``Nondeterministic`` to
     Catalyst, so filters are not pushed below it."""
     nfd = F.reflect(
         F.lit("com.ibm.icu.text.Normalizer"), F.lit("decompose"), s, F.lit(False)
     )
     # reflect passes a NULL argument through as a Java null, which
     # decompose rejects: guard it
-    return F.when(s.isNotNull(), F.regexp_replace(nfd, r"\p{Mn}", ""))
+    return F.when(s.isNotNull(), F.regexp_replace(nfd, _icu_marks(), ""))
 
 
 def clean_names(persons: DataFrame, name_col: str = "name") -> DataFrame:
@@ -107,7 +120,7 @@ def blocked_pairs(
     persons: DataFrame,
     key_col: str = "blocking_key",
     id_col: str = "id",
-    max_pairs: int | None = None,
+    max_pairs: int = BLOCKED_PAIRS_MAX,
 ) -> DataFrame:
     """J10 — candidate duplicate pairs within a blocking key.
 
@@ -119,48 +132,41 @@ def blocked_pairs(
     quadratic.  NULL keys are excluded from the count exactly as the
     equi-join excludes them (NULL never equi-matches, so those rows emit
     zero pairs — counting them would spuriously trip the guard on a
-    corpus with many unkeyable rows).  ``max_pairs`` defaults to
-    ``PUMA_SPARK_BLOCKED_PAIRS_MAX`` when set, else
-    :data:`BLOCKED_PAIRS_MAX`; pass ``max_pairs <= 0`` to disable for
-    callers that bound volume their own way.
+    corpus with many unkeyable rows).  The guard is always on; a caller
+    whose cluster covers a larger volume passes a higher ``max_pairs``.
 
     Cost note: the guard is one extra scan of ``persons`` per call (the
     pair join below scans it twice more) — callers whose ``persons`` is
     a derivation (e.g. a parquet scan plus the clean_names chain)
     should persist it first."""
-    if max_pairs is None:
-        max_pairs = int(
-            os.environ.get("PUMA_SPARK_BLOCKED_PAIRS_MAX", BLOCKED_PAIRS_MAX)
+    stats = (
+        persons.where(F.col(key_col).isNotNull())
+        .groupBy(key_col)
+        .agg(F.count(F.lit(1)).alias("c"))
+        .agg(
+            F.sum(F.col("c") * (F.col("c") - 1) / 2)
+            .cast("long")
+            .alias("pairs"),
+            F.max(
+                F.struct(F.col("c").alias("c"), F.col(key_col).alias("k"))
+            ).alias("hot"),
         )
-    if max_pairs > 0:
-        stats = (
-            persons.where(F.col(key_col).isNotNull())
-            .groupBy(key_col)
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(
-                F.sum(F.col("c") * (F.col("c") - 1) / 2)
-                .cast("long")
-                .alias("pairs"),
-                F.max(
-                    F.struct(F.col("c").alias("c"), F.col(key_col).alias("k"))
-                ).alias("hot"),
-            )
-            .collect()[0]
+        .collect()[0]
+    )
+    n_pairs = stats["pairs"] or 0
+    if n_pairs > max_pairs:
+        hot = stats["hot"]
+        raise ValueError(
+            f"blocked_pairs would generate {n_pairs:,} candidate "
+            f"pairs on key '{key_col}', above the {max_pairs:,} "
+            "blocking-envelope ceiling (hottest block "
+            f"{hot['k']!r} holds {hot['c']:,} rows -> "
+            f"{hot['c'] * (hot['c'] - 1) // 2:,} pairs).  Blocking "
+            "is only a scale strategy while blocks stay small — use "
+            "a finer blocking key, pre-split hot blocks, or raise "
+            "max_pairs explicitly if the cluster's capacity covers the "
+            "quadratic."
         )
-        n_pairs = stats["pairs"] or 0
-        if n_pairs > max_pairs:
-            hot = stats["hot"]
-            raise ValueError(
-                f"blocked_pairs would generate {n_pairs:,} candidate "
-                f"pairs on key '{key_col}', above the {max_pairs:,} "
-                "blocking-envelope ceiling (hottest block "
-                f"{hot['k']!r} holds {hot['c']:,} rows -> "
-                f"{hot['c'] * (hot['c'] - 1) // 2:,} pairs).  Blocking "
-                "is only a scale strategy while blocks stay small — use "
-                "a finer blocking key, pre-split hot blocks, or raise "
-                "max_pairs / PUMA_SPARK_BLOCKED_PAIRS_MAX explicitly if "
-                "the cluster's capacity covers the quadratic."
-            )
     a = persons.select(F.col(key_col).alias("k"), F.col(id_col).alias("id1"))
     b = persons.select(F.col(key_col).alias("k"), F.col(id_col).alias("id2"))
     return (

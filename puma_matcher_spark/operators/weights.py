@@ -23,7 +23,6 @@ are small by construction, and the grid frame is broadcast.
 from __future__ import annotations
 
 import itertools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,7 +46,7 @@ TRAINING_PAIRS_MAX = 30_000_000
 
 
 def assert_training_envelope(
-    candidates: DataFrame, max_pairs: int | None = None
+    candidates: DataFrame, max_pairs: int = TRAINING_PAIRS_MAX
 ) -> int:
     """Enforce the trainer's training-slice input contract IN CODE: one
     cheap count (also serving as a persist materialization barrier when
@@ -55,18 +54,8 @@ def assert_training_envelope(
     message instead of letting the |grid| × |pairs| rank shuffle spill
     for hours (r9 verdict "what's wrong" #2).  Returns the count.
 
-    ``max_pairs`` defaults to the ``PUMA_SPARK_TRAINING_PAIRS_MAX``
-    environment variable when set, else :data:`TRAINING_PAIRS_MAX` —
-    the env override exists so a full-suite run at sf >= ~0.5 (where
-    the dense fixture candidates legitimately exceed the default
-    ceiling) can complete on a cluster whose shuffle capacity covers
-    it, without editing query entry points (r10 ADVICE #4)."""
-    if max_pairs is None:
-        max_pairs = int(
-            os.environ.get(
-                "PUMA_SPARK_TRAINING_PAIRS_MAX", TRAINING_PAIRS_MAX
-            )
-        )
+    A caller whose cluster's shuffle capacity covers a larger input
+    passes a higher ``max_pairs``."""
     n = candidates.count()
     if n > max_pairs:
         raise ValueError(

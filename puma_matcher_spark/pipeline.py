@@ -43,19 +43,19 @@ class PipelineConfig:
 class Stage:
     """A named transform with declared io — matching/stage/Stage.scala:21-36.
 
-    ``fn(config, inputs) -> DataFrame | None``; ``inputs`` maps each name
-    in ``input`` to the producing stage's output.  ``frame_type`` (if set)
+    ``fn(config, inputs) -> DataFrame``; ``inputs`` maps each name in
+    ``input`` to the producing stage's output.  ``frame_type`` (if set)
     is validated against the output schema, mirroring
-    Pipeline.scala:193-201.  ``optional`` stages may return None → their
-    single input passes through (Pipeline.scala:215-222).
+    Pipeline.scala:193-201.  A stage that returns None raises.  The
+    reference's optional stages, whose None passes their input through
+    (Pipeline.scala:215-222), are not ported: no stage uses them.
     """
 
     name: str
     input: list[str]
     output: str
-    fn: Callable[[PipelineConfig, dict[str, DataFrame]], DataFrame | None]
+    fn: Callable[[PipelineConfig, dict[str, DataFrame]], DataFrame]
     frame_type: FrameType | None = None
-    optional: bool = False
 
 
 class Pipeline:
@@ -82,14 +82,8 @@ class Pipeline:
             inputs = {i: frames[i] for i in stage.input}
             out = stage.fn(config, inputs)
             if out is None:
-                if not stage.optional:
-                    raise ValueError(f"non-optional stage {stage.name} returned None")
-                if len(stage.input) != 1:
-                    raise ValueError(
-                        f"optional passthrough stage {stage.name} needs exactly 1 input"
-                    )
-                out = inputs[stage.input[0]]  # Pipeline.scala:215-222
-            elif stage.frame_type is not None:
+                raise ValueError(f"stage {stage.name} in {self.name} returned None")
+            if stage.frame_type is not None:
                 assert_compliant(
                     out, stage.frame_type.schema, f"{self.name}/{stage.name}"
                 )

@@ -2503,10 +2503,8 @@ def q_weight_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope is checked on the FULL candidate set deliberately — the
     rank window ranks every candidate per (weight, publication), the %7
     slice filters only the error roll-up — so full ``cand`` is what the
-    |grid| x |pairs| shuffle actually carries.  For a full-suite run at
-    sf >= ~0.5, where the dense fixture legitimately exceeds the 30M
-    default, set ``PUMA_SPARK_TRAINING_PAIRS_MAX`` (r10 ADVICE #4)
-    instead of editing the entry point."""
+    |grid| x |pairs| shuffle actually carries.  At sf >= ~0.5 the dense
+    fixture exceeds the 30M default and this query raises."""
     from pyspark.sql.window import Window
 
     from puma_matcher_spark.functions.caching import persist_rotating
@@ -4424,7 +4422,9 @@ def q_normalised_approx_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     of n (189 ranks at n=894k; value reldiff <= 1.4e-3, exactly 0 at
     sf0.1 where score ties absorb the rank slack), so the +/-0.1%
     bounds here hold with >4x margin — 5x tighter than the r7 original
-    +/-0.5%, which a 20x-worse approximation would still have passed."""
+    +/-0.5%, which a 20x-worse approximation would still have passed.
+    Re-measured on the current candidate chain: 8 ranks (0.0094% of n)
+    at sf0.001, 0 at sf0.01 and sf0.1."""
     from puma_matcher_spark.operators.normaliser import normalisation_factor
 
     cand = _entity_candidates(load_tables(spark, sf_dir), "person")
@@ -4518,8 +4518,8 @@ def q_word_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     POS whitelist + lemma-length filter
     (DocumentWordSpecAnalyser.scala:166-220).  Pinned to the heuristic
     backend so the generated SQL rule twins give it a hard oracle (the
-    spaCy backend remains available via word_features(backend=...) and
-    stays accuracy-gated rather than oracle-checked)."""
+    default perceptron backend is accuracy-gated in tests/test_nlp.py
+    rather than oracle-checked)."""
     from puma_matcher_spark.functions.nlp import word_features
 
     docs = load_tables(spark, sf_dir).llm_documents()

@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 #: ceiling on the derived driver heap; on a 128 GiB host 16g keeps GC
 #: out of the bench numbers
 DRIVER_MEMORY_MAX_MB = 16 * 1024
@@ -32,12 +30,23 @@ def default_driver_memory() -> str:
     return f"{min(DRIVER_MEMORY_MAX_MB, total // 2 // 2**20)}m"
 
 
+def default_cpus() -> int:
+    """The local cores and shuffle partitions when ``SPARK_GRAFT_CPUS``
+    is unset: the CPUs this process may run on, so a session runs one
+    task thread and one shuffle partition per usable core."""
+    return len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "puma-matcher-spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
+
+    The deployment settings are read here and nowhere else in the
+    package: ``SPARK_GRAFT_CPUS`` (local cores and shuffle partitions,
+    default :func:`default_cpus`) and ``SPARK_GRAFT_DRIVER_MEM`` (default
+    :func:`default_driver_memory`); ``extra_conf`` overrides any conf.
 
     On a real cluster the same conf applies; only ``master`` changes.  AQE
     is load-bearing at scale: it coalesces small shuffle partitions, turns
@@ -45,12 +54,11 @@ def get_spark(
     splits skewed partitions (the reference guarded skew manually with
     frequency caps — we keep those too, see operators.matcher).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(default_cpus())
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(n_shuffle))
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

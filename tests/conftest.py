@@ -10,7 +10,9 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("puma-matcher-tests", shuffle_partitions=8)
+    s = get_spark(
+        "puma-matcher-tests", extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     yield s
 
 

@@ -68,41 +68,31 @@ def test_lemma_accuracy_on_hand_tagged_fixture():
     assert acc >= 0.9, f"lemma accuracy {acc:.2f} below gate"
 
 
-def test_backend_resolution_and_forced_spacy_fallback(monkeypatch):
-    """Backend selection must degrade gracefully down the chain
-    spacy → perceptron → heuristic: a forced backend that is not
-    available in the env resolves to the next real one instead of
-    failing the pipeline; 'heuristic' always pins the stand-in."""
-    from puma_matcher_spark.functions import nlp
+def test_backend_argument_selects_kernel():
+    """The ``backend`` argument is the only selector: the perceptron by
+    default, the suffix rules by name, and any other name raises."""
+    import pytest
 
-    spacy_available = nlp._load_spacy() is not None
-    perceptron_available = nlp._load_perceptron() is not None
-    expect = (
-        "spacy"
-        if spacy_available
-        else ("perceptron" if perceptron_available else "heuristic")
-    )
-    for want in ("spacy", "auto"):
-        monkeypatch.setenv("PUMA_NLP_BACKEND", want)
-        assert nlp.nlp_backend() == expect
-    monkeypatch.setenv("PUMA_NLP_BACKEND", "perceptron")
-    assert nlp.nlp_backend() == (
-        "perceptron" if perceptron_available else "heuristic"
-    )
-    monkeypatch.setenv("PUMA_NLP_BACKEND", "heuristic")
-    assert nlp.nlp_backend() == "heuristic"
-    # kernel dispatch honours the pinned heuristic backend
-    assert nlp._pos_batch(["the", "beams"]) == ["DT", "NNS"]
+    from puma_matcher_spark.functions import nlp, perceptron
+
+    toks = [t for t, _, _ in FIXTURE]
+    assert nlp._pos_batch(toks) == perceptron.load_default().tag(toks)
+    assert nlp._pos_batch(toks, "heuristic") == [_heuristic_pos(t) for t in toks]
+    # the two backends disagree on this fixture, so the default is decided
+    assert nlp._pos_batch(toks) != nlp._pos_batch(toks, "heuristic")
+    for kernel in (nlp._pos_batch, nlp._ner_batch, nlp._lemma_batch):
+        with pytest.raises(ValueError, match="unknown NLP backend 'rules'"):
+            kernel(toks, "rules")
+    with pytest.raises(ValueError, match="unknown NLP backend"):
+        nlp.make_tag_udf(nlp._pos_batch, "auto")
 
 
 def test_perceptron_backend_accuracy():
-    """The vendored averaged-perceptron tagger (the default real tagger
-    in this container — no spaCy needed) must beat the heuristic gate on
-    the same labelled fixture, tagged as one token stream the way the
-    pandas-UDF kernels see it."""
+    """The vendored averaged-perceptron tagger (the default backend)
+    must beat the heuristic gate on the same labelled fixture, tagged as
+    one token stream the way the pandas-UDF kernels see it."""
     from puma_matcher_spark.functions import nlp
 
-    assert nlp._load_perceptron() is not None, "vendored weights missing"
     pos = nlp._pos_batch([t for t, _, _ in FIXTURE], backend="perceptron")
     acc = sum(
         1 for (t, gold, _), tag in zip(FIXTURE, pos) if _coarse(tag) == gold
@@ -121,29 +111,6 @@ def test_perceptron_deterministic_and_retrainable():
     assert tagger.tag(toks) == tagger.tag(toks)
     retrained = pc.train(pc.read_tagged_corpus())
     assert retrained.tag(toks) == tagger.tag(toks)
-
-
-def test_spacy_backend_accuracy_if_available(monkeypatch):
-    """Same labelled-fixture gate as the heuristics, applied to the real
-    tagger when present (skipped in this container — no spaCy)."""
-    import pytest
-
-    from puma_matcher_spark.functions import nlp
-
-    if nlp._load_spacy() is None:
-        pytest.skip("spaCy (or its English model) not installed")
-    monkeypatch.setenv("PUMA_NLP_BACKEND", "spacy")
-    toks = [t for t, _, _ in FIXTURE]
-    pos = nlp._pos_batch(toks)
-    lem = nlp._lemma_batch(toks)
-    pos_acc = sum(
-        1 for (t, gold, _), tag in zip(FIXTURE, pos) if _coarse(tag) == gold
-    ) / len(FIXTURE)
-    lem_acc = sum(
-        1 for (t, _, gold), l in zip(FIXTURE, lem) if l == gold
-    ) / len(FIXTURE)
-    assert pos_acc >= 0.85, f"spaCy POS accuracy {pos_acc:.2f} below gate"
-    assert lem_acc >= 0.9, f"spaCy lemma accuracy {lem_acc:.2f} below gate"
 
 
 def test_word_features_whitelist_and_positions(spark):
@@ -246,7 +213,6 @@ def test_perceptron_ner_accuracy_on_held_out():
     from puma_matcher_spark.functions.perceptron import load_default_ner
 
     ner = load_default_ner()
-    assert ner is not None, "vendored NER weights missing"
     tok_hits = tok_total = ent_hits = ent_total = 0
     for sent, tags in NER_FIXTURE:
         got = ner.tag(sent.split())
@@ -271,7 +237,6 @@ def test_perceptron_ner_per_class_f1_on_held_out():
     from puma_matcher_spark.functions.perceptron import load_default_ner
 
     ner = load_default_ner()
-    assert ner is not None, "vendored NER weights missing"
     tp: dict = defaultdict(int)
     fp: dict = defaultdict(int)
     fn: dict = defaultdict(int)
@@ -292,14 +257,11 @@ def test_perceptron_ner_per_class_f1_on_held_out():
         assert f1 >= 0.8, f"{c}: F1 {f1:.2f} (P={p:.2f} R={r:.2f}) below gate"
 
 
-def test_ner_batch_dispatches_to_statistical_model(monkeypatch):
+def test_ner_batch_dispatches_to_statistical_model():
     """Under the perceptron backend, _ner_batch must run the statistical
     model (CoreNLP-style classes), not the capitalisation stand-in."""
     from puma_matcher_spark.functions import nlp
 
-    monkeypatch.setenv("PUMA_NLP_BACKEND", "perceptron")
-    if nlp._load_spacy() is not None:
-        return  # env has the stronger backend pinned-over below anyway
     out = nlp._ner_batch(
         "the spectra from IN11 were checked by Emma Rossi".split(),
         backend="perceptron",
@@ -385,7 +347,6 @@ def test_lexicon_lemmatiser_accuracy():
     from puma_matcher_spark.functions.lemmatizer import load_default
 
     lem = load_default()
-    assert lem is not None, "vendored lemma data files missing"
     hits = sum(
         1 for tok, pos, gold in LEMMA_FIXTURE if lem.lemma(tok, pos) == gold
     )
@@ -398,8 +359,6 @@ def test_lemma_batch_perceptron_backend_chains_pos():
     lemmatise with the predicted POS (the CoreNLP lemma() contract)."""
     from puma_matcher_spark.functions import nlp
 
-    if nlp._load_spacy() is not None:
-        return
     out = nlp._lemma_batch(
         ["the", "detectors", "measured", "the", "scattering"],
         backend="perceptron",
@@ -410,8 +369,8 @@ def test_lemma_batch_perceptron_backend_chains_pos():
 
 def test_lemmatizer_skips_malformed_exception_lines(tmp_path, monkeypatch):
     """A malformed lemma_exceptions.txt line (not exactly two fields)
-    must be skipped, not raise ValueError out of load_default's
-    documented None-degrade path (ADVICE r6)."""
+    must be skipped, not raise ValueError out of the loader (ADVICE
+    r6)."""
     from puma_matcher_spark.functions import lemmatizer as lz
 
     exc = tmp_path / "lemma_exceptions.txt"
@@ -423,8 +382,5 @@ def test_lemmatizer_skips_malformed_exception_lines(tmp_path, monkeypatch):
     lex.write_text("run\nmouse\n", encoding="utf-8")
     monkeypatch.setattr(lz, "EXCEPTIONS_PATH", str(exc))
     monkeypatch.setattr(lz, "LEXICON_PATH", str(lex))
-    monkeypatch.setattr(lz, "_LEMMATIZER", None)
-    lem = lz.load_default()
-    assert lem is not None
+    lem = lz._load()
     assert lem.exceptions == {"ran": "run", "mice": "mouse"}
-    monkeypatch.setattr(lz, "_LEMMATIZER", None)  # don't leak the stub

@@ -201,19 +201,17 @@ def test_csv_source_roundtrip(spark):
         assert got == {(1, "IN5"), (2, "D22")}
 
 
-def test_ner_tags_dispatch_by_backend(spark, monkeypatch):
-    """Round 6: the auto backend now resolves to the vendored statistical
-    NER (CoreNLP-style classes — Grenoble → LOCATION, IN5 → INSTRUMENT);
+def test_ner_tags_dispatch_by_backend(spark):
+    """Round 6: the default backend is the vendored statistical NER
+    (CoreNLP-style classes — Grenoble → LOCATION, IN5 → INSTRUMENT);
     the heuristic stand-in keeps its capitalisation ENTITY tags when
     pinned."""
-    from puma_matcher_spark.functions import nlp
     from puma_matcher_spark.functions.nlp import _ner_batch, ner_tags
 
     words = ["The", "sample", "from", "Grenoble", "used", "IN5"]
-    if nlp._load_spacy() is None:  # this container: perceptron default
-        df = spark.createDataFrame([(1, words)], ["id", "words"])
-        r = df.select(ner_tags(F.col("words")).alias("t")).first()["t"]
-        assert r == ["O", "O", "O", "LOCATION", "O", "INSTRUMENT"]
+    df = spark.createDataFrame([(1, words)], ["id", "words"])
+    r = df.select(ner_tags(F.col("words")).alias("t")).first()["t"]
+    assert r == ["O", "O", "O", "LOCATION", "O", "INSTRUMENT"]
     assert _ner_batch(words, backend="heuristic") == [
         "O", "O", "O", "ENTITY", "O", "ENTITY",
     ]

@@ -1,0 +1,45 @@
+"""Settings: the session is the one place the package reads the
+environment, and its defaults follow the host."""
+
+import ast
+import pathlib
+
+import puma_matcher_spark
+from puma_matcher_spark import session
+
+PACKAGE = pathlib.Path(puma_matcher_spark.__file__).parent
+
+
+def _environment_reads(path: pathlib.Path) -> list[int]:
+    """Lines of ``path`` that touch ``os.environ`` or ``os.getenv``."""
+    lines = []
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"), str(path))):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+            and node.attr in ("environ", "getenv")
+        ) or (
+            isinstance(node, ast.ImportFrom)
+            and node.module == "os"
+            and any(a.name in ("environ", "getenv") for a in node.names)
+        ):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_only_session_reads_the_environment():
+    offenders = {
+        str(path.relative_to(PACKAGE)): lines
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != PACKAGE / "session.py" and (lines := _environment_reads(path))
+    }
+    assert not offenders, offenders
+    assert _environment_reads(PACKAGE / "session.py")
+
+
+def test_default_cpus_follows_the_affinity_mask(monkeypatch):
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert session.default_cpus() == 3
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {7})
+    assert session.default_cpus() == 1

@@ -222,20 +222,3 @@ def test_training_envelope_guard_raises_out_of_envelope(spark):
     assert wt.assert_training_envelope(small, max_pairs=100) == 10
     with pytest.raises(ValueError, match="training-slice ceiling"):
         wt.assert_training_envelope(small, max_pairs=5)
-
-
-def test_training_envelope_env_override(spark, monkeypatch):
-    """r11 (r10 ADVICE #4): with no explicit max_pairs the ceiling comes
-    from PUMA_SPARK_TRAINING_PAIRS_MAX when set, so a full-suite run at
-    large sf can raise the envelope without editing query entry
-    points."""
-    import pytest
-
-    from puma_matcher_spark.operators import weights as wt
-
-    small = spark.range(10).selectExpr("id AS document_version1_id")
-    monkeypatch.setenv("PUMA_SPARK_TRAINING_PAIRS_MAX", "5")
-    with pytest.raises(ValueError, match="training-slice ceiling"):
-        wt.assert_training_envelope(small)
-    monkeypatch.setenv("PUMA_SPARK_TRAINING_PAIRS_MAX", "50")
-    assert wt.assert_training_envelope(small) == 10
