@@ -17,7 +17,7 @@ corpus:
    total/contextual scores.
 
 Everything returns DataFrames; callers choose sinks
-(persister.persist_parquet / sources.publish for blue/green).
+(persister.persist_partitioned / sources.publish for blue/green).
 
 Two frames fan out and are persisted through the bounded
 ``functions.caching.persist_rotating`` ring, so each is computed once
@@ -177,7 +177,6 @@ def load_manifest_documents(
     spark: SparkSession,
     manifest: str,
     doc_ids: list[int] | None = None,
-    strict: bool = True,
 ) -> DataFrame:
     """Documents via the native ``manifest_text`` DataSource
     (sources/pydatasource.py) in the curation pipeline's input shape
@@ -187,7 +186,7 @@ def load_manifest_documents(
     Spark 4's planner pushes it into the source (``pushFilters``), so
     excluded manifest entries are pruned BEFORE their files are stat-ed
     or opened (a missing file behind a filtered-out entry never errors,
-    even with strict=True — the e2e pushdown probe in
+    though the read is strict — the e2e pushdown probe in
     tests/test_apps.py relies on this).  ``lang`` comes from the SHARED
     lang-ID kernel (llmdata.textstats.lang_id_label), so the manifest
     and parquet ingest paths can never label the same text differently;
@@ -204,7 +203,7 @@ def load_manifest_documents(
     df = (
         spark.read.format("manifest_text")
         .option("manifest", manifest)
-        .option("strict", str(strict).lower())
+        .option("strict", "true")
         .load()
     )
     if doc_ids is not None:
@@ -311,7 +310,6 @@ def run_incremental_ingest_app(
     corpus: DataFrame | None = None,
     jaccard_threshold: float = 0.8,
     min_tokens: int = 5,
-    out_root: str | None = None,
     collect_counts: bool = True,
     corpus_index=None,
 ) -> IngestAppResult:
@@ -324,8 +322,7 @@ def run_incremental_ingest_app(
     2. near-dup vs corpus: batch×corpus LSH candidates
        (minhash_incremental_pairs) verified by exact Jaccard on the
        candidate pairs only, survivors dropped;
-    3. quality gate (token count) on what remains;
-    4. optional blue/green publish of the accepted batch.
+    3. quality gate (token count) on what remains.
 
     The corpus side can be either raw text (``corpus``) or a
     precomputed :class:`puma_matcher_spark.llmdata.dedup.DedupIndex`
@@ -336,7 +333,6 @@ def run_incremental_ingest_app(
     """
     from puma_matcher_spark.llmdata import dedup as dd
     from puma_matcher_spark.llmdata.textstats import with_token_stats
-    from puma_matcher_spark.sources.publish import publish
 
     if corpus_index is None:
         if corpus is None:
@@ -384,8 +380,6 @@ def run_incremental_ingest_app(
     if collect_counts:
         counts["accepted"] = accepted.count()
 
-    if out_root is not None:
-        publish(accepted, out_root)
     return IngestAppResult(accepted=accepted, stage_counts=counts)
 
 
@@ -395,8 +389,6 @@ def run_streaming_ingest_app(
     corpus: DataFrame,
     out_root: str,
     checkpoint_dir: str,
-    jaccard_threshold: float = 0.8,
-    min_tokens: int = 5,
 ):
     """Continuous-ingest driver — the streaming composition of the two
     connectors built this rebuild: the native ``manifest_text`` stream
@@ -517,8 +509,6 @@ def run_streaming_ingest_app(
             res = run_incremental_ingest_app(
                 docs,
                 corpus_index=idx,
-                jaccard_threshold=jaccard_threshold,
-                min_tokens=min_tokens,
                 collect_counts=False,  # diagnostics off the hot path
             )
             res.accepted.write.mode("overwrite").parquet(

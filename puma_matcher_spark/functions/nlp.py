@@ -252,7 +252,6 @@ def word_features(
     text_col: str = "text",
     id_col: str = "document_version_id",
     min_lemma_len: int = 4,
-    whitelist: tuple[str, ...] = POS_WHITELIST,
     backend: str = "perceptron",
 ) -> DataFrame:
     """Per-word NLP feature rows: (doc, word, lemma, pos_tag,
@@ -280,7 +279,7 @@ def word_features(
             )
         ).alias("pos", "z"),
     )
-    wl = F.array(*[F.lit(t) for t in whitelist])
+    wl = F.array(*[F.lit(t) for t in POS_WHITELIST])
     return (
         tagged.where(
             F.array_contains(wl, F.col("z.pos_tag"))

@@ -59,7 +59,12 @@ def rewrite_rounds_sql(sql: str) -> str:
     return "".join(out)
 
 
-def money_units(c: Column | str, scale: int = 10000) -> Column:
+#: Micro-units per money unit, shared by :func:`money_units` and its
+#: DuckDB twin :func:`money_units_sql`.
+MONEY_SCALE = 10000
+
+
+def money_units(c: Column | str, scale: int = MONEY_SCALE) -> Column:
     """Exact integer micro-units for cross-engine-deterministic money
     sums: both engines compute the identical per-row double, so flooring
     it to 1/scale units yields integers whose SUM is exact regardless of
@@ -70,6 +75,6 @@ def money_units(c: Column | str, scale: int = 10000) -> Column:
     return F.floor(c * F.lit(scale) + F.lit(0.5)).cast("long")
 
 
-def money_units_sql(expr: str, scale: int = 10000) -> str:
+def money_units_sql(expr: str) -> str:
     """DuckDB twin of :func:`money_units` (same arithmetic, same order)."""
-    return f"CAST(FLOOR(({expr}) * {scale} + 0.5) AS BIGINT)"
+    return f"CAST(FLOOR(({expr}) * {MONEY_SCALE} + 0.5) AS BIGINT)"

@@ -31,13 +31,10 @@ STOPWORDS = (
 ).split()
 
 DEFAULT_MIN_WORD_LENGTH = 3  # puma.matching.textmatcher.word.minLength
+_STOPWORD_RE = "^(?:" + "|".join(STOPWORDS) + ")$"
 
 
-def tokenize(
-    text: Column,
-    min_length: int = DEFAULT_MIN_WORD_LENGTH,
-    stopwords: tuple[str, ...] | None = None,
-) -> Column:
+def tokenize(text: Column) -> Column:
     """lowercase → split on non-word runs → length + stopword filters.
 
     TextDataSource.scala:42-54 as pure column expressions.  The stopword
@@ -46,19 +43,14 @@ def tokenize(
     functions, so the array-literal variant rebuilt the 100-element array
     per token (measured ~10× slowdown on the shingle path).
     """
-    sw_re = "^(?:" + "|".join(stopwords or STOPWORDS) + ")$"
     toks = F.split(F.lower(text), r"[^a-z0-9]+")
     return F.filter(
         toks,
-        lambda x: (F.length(x) >= min_length) & ~x.rlike(sw_re),
+        lambda x: (F.length(x) >= DEFAULT_MIN_WORD_LENGTH) & ~x.rlike(_STOPWORD_RE),
     )
 
 
-def tokenize_string_deletions(
-    text: Column,
-    min_length: int = DEFAULT_MIN_WORD_LENGTH,
-    stopwords: tuple[str, ...] | None = None,
-) -> Column:
+def tokenize_string_deletions(text: Column) -> Column:
     """``tokenize`` with the filters applied at the STRING level: two
     codegen regexp_replace passes delete stopword tokens and short
     tokens before the split, so the array lambda is a trivial
@@ -70,22 +62,15 @@ def tokenize_string_deletions(
     Used by the map-side shingle path where the token array must be
     materialised in-row.
     """
-    sw = "|".join(stopwords or STOPWORDS)
+    sw = "|".join(STOPWORDS)
     t = F.lower(text)
     t = F.regexp_replace(t, f"(?<![a-z0-9])(?:{sw})(?![a-z0-9])", " ")
-    t = F.regexp_replace(
-        t, "(?<![a-z0-9])[a-z0-9]{1," + str(min_length - 1) + "}(?![a-z0-9])", " "
-    )
+    short = f"[a-z0-9]{{1,{DEFAULT_MIN_WORD_LENGTH - 1}}}"
+    t = F.regexp_replace(t, f"(?<![a-z0-9]){short}(?![a-z0-9])", " ")
     return F.filter(F.split(t, "[^a-z0-9]+"), lambda x: x != F.lit(""))
 
 
-def exploded_tokens(
-    docs,
-    text_col: str = "text",
-    id_col: str = "document_version_id",
-    min_length: int = DEFAULT_MIN_WORD_LENGTH,
-    stopwords: tuple[str, ...] | None = None,
-):
+def exploded_tokens(docs, text_col: str = "text", id_col: str = "document_version_id"):
     """(document_version_id, pos, word) rows — same filter semantics as
     ``tokenize`` but applied AFTER posexplode as a row-level predicate.
 
@@ -97,7 +82,6 @@ def exploded_tokens(
     """
     from pyspark.sql.window import Window
 
-    sw_re = "^(?:" + "|".join(stopwords or STOPWORDS) + ")$"
     raw = docs.select(
         F.col(id_col).alias("document_version_id"),
         F.posexplode(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+")).alias(
@@ -105,7 +89,8 @@ def exploded_tokens(
         ),
     )
     kept = raw.where(
-        (F.length("word") >= min_length) & ~F.col("word").rlike(sw_re)
+        (F.length("word") >= DEFAULT_MIN_WORD_LENGTH)
+        & ~F.col("word").rlike(_STOPWORD_RE)
     )
     w = Window.partitionBy("document_version_id").orderBy("_raw_pos")
     return kept.select(
@@ -277,8 +262,8 @@ def _cv_sql(col: str) -> str:
     )
 
 
-def porter_sql_ctes(src: str, word_col: str = "word") -> tuple[str, str]:
-    """CTE chain stemming ``word_col`` of CTE/table ``src`` — returns
+def porter_sql_ctes(src: str) -> tuple[str, str]:
+    """CTE chain stemming the ``word`` column of CTE/table ``src`` — returns
     (sql_text, final_cte_name); the final CTE carries ``src``'s columns
     plus ``stem``.  Generated from STEP2_RULES/STEP3_RULES/STEP4_SUFFIXES
     so the SQL cannot drift from ``porter_stem``."""
@@ -310,7 +295,7 @@ def porter_sql_ctes(src: str, word_col: str = "word") -> tuple[str, str]:
     def cut(w: str, k) -> str:
         return f"left({w}, len({w})-{k})"
 
-    w, cv = word_col, None
+    w, cv = "word", None
     ctes: list[str] = []
 
     def emit(name: str, expr: str) -> str:
@@ -405,7 +390,7 @@ def porter_sql_ctes(src: str, word_col: str = "word") -> tuple[str, str]:
     # step 5b + the ≤2-char passthrough guard
     w = emit(
         "p5b",
-        f"CASE WHEN len({word_col}) <= 2 THEN {word_col}"
+        "CASE WHEN len(word) <= 2 THEN word"
         f" WHEN {m(cv, 0)} > 1 AND {dbl(w, cv, 0)} AND right({w}, 1) = 'l'"
         f" THEN {cut(w, 1)} ELSE {w} END",
     )
@@ -422,9 +407,7 @@ def stem_tokens(tokens: pd.Series) -> pd.Series:
     )
 
 
-def text_features(
-    docs, text_col: str = "text", id_col: str = "document_version_id", stem: bool = True
-):
+def text_features(docs, text_col: str = "text", id_col: str = "document_version_id"):
     """TextDataSource output: (id, words[], stemmed feature[], position[]).
 
     Reference TextDataSource.scala:32-70 emits parallel arrays; positions
@@ -435,7 +418,7 @@ def text_features(
         F.col(id_col),
         F.coalesce(toks, F.array().cast("array<string>")).alias("words"),
     )
-    feature = stem_tokens(F.col("words")) if stem else F.col("words")
+    feature = stem_tokens(F.col("words"))
     # guard the position sequence: sequence(0, -1) on a token-less doc
     # would produce the DESCENDING [0, -1] (Spark infers step -1), not
     # an empty array

@@ -39,7 +39,7 @@ def portable_hash60(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Exact dedup: group by content hash, keep the min doc_id as canonical.
 
     The hash is :func:`puma_matcher_spark.llmdata.textstats.with_fingerprint`
@@ -49,7 +49,7 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from puma_matcher_spark.llmdata.textstats import with_fingerprint
 
     return (
-        with_fingerprint(docs, text_col)
+        with_fingerprint(docs)
         .groupBy("fingerprint")
         .agg(
             F.count(F.lit(1)).cast("long").alias("doc_count"),
@@ -91,23 +91,15 @@ def _shingle_expr(
     return base, F.array_distinct(sh_arr)
 
 
-def shingle_arrays(
-    docs: DataFrame,
-    n: int = DEFAULT_SHINGLE,
-    text_col: str = "text",
-) -> DataFrame:
+def shingle_arrays(docs: DataFrame, n: int = DEFAULT_SHINGLE) -> DataFrame:
     """(doc_id, shingle_arr) — the distinct word-n-gram array per document,
     fully map-side, BEFORE any explode (the embedding/count-vector entry
     point; :func:`shingles` is the exploded twin)."""
-    base, e = _shingle_expr(docs, n, text_col)
+    base, e = _shingle_expr(docs, n, "text")
     return base.select("doc_id", e.alias("shingle_arr"))
 
 
-def shingles(
-    docs: DataFrame,
-    n: int = DEFAULT_SHINGLE,
-    text_col: str = "text",
-) -> DataFrame:
+def shingles(docs: DataFrame, n: int = DEFAULT_SHINGLE) -> DataFrame:
     """Distinct word n-gram shingles per document — fully map-side.
 
     The shingle array is built inside the row with higher-order array
@@ -126,7 +118,7 @@ def shingles(
     refactor briefly exploded an aliased column (PLANS.md §round-6).
     Scan parallelism: see :func:`_shingle_expr`.
     """
-    base, e = _shingle_expr(docs, n, text_col)
+    base, e = _shingle_expr(docs, n, "text")
     return base.select("doc_id", F.explode(e).alias("shingle"))
 
 
@@ -233,20 +225,13 @@ def lsh_candidate_pairs(
 
 def minhash_dedup_pairs(
     docs: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-    shingle_n: int = DEFAULT_SHINGLE,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
     persist_buckets: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup candidate pipeline.  See
     :func:`lsh_candidate_pairs` for the ``persist_buckets`` contract."""
     return lsh_candidate_pairs(
-        lsh_band_keys(
-            minhash_signatures(shingles(docs, shingle_n), num_hashes),
-            band_size,
-            num_hashes,
-        ),
+        lsh_band_keys(minhash_signatures(shingles(docs))),
         max_bucket_size,
         persist_buckets=persist_buckets,
     )
@@ -255,9 +240,6 @@ def minhash_dedup_pairs(
 def minhash_incremental_pairs(
     new_docs: DataFrame,
     corpus: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-    shingle_n: int = DEFAULT_SHINGLE,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Ingestion-time near-dup scan: LSH candidates between a NEW batch
@@ -272,13 +254,9 @@ def minhash_incremental_pairs(
 
     Output: (new_doc_id, corpus_doc_id) distinct candidate pairs.
     """
-    cb = lsh_band_keys(
-        minhash_signatures(shingles(corpus, shingle_n), num_hashes),
-        band_size,
-        num_hashes,
-    )
+    cb = lsh_band_keys(minhash_signatures(shingles(corpus)))
     return minhash_incremental_pairs_indexed(
-        new_docs, cb, num_hashes, band_size, shingle_n, max_bucket_size
+        new_docs, cb, max_bucket_size
     )
 
 
@@ -307,27 +285,19 @@ class DedupIndex:
     shingles: DataFrame
 
 
-def build_dedup_index(
-    docs: DataFrame,
-    shingle_n: int = DEFAULT_SHINGLE,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-    text_col: str = "text",
-) -> DedupIndex:
+def build_dedup_index(docs: DataFrame) -> DedupIndex:
     """One map-side pass family over ``docs`` producing the three
     :class:`DedupIndex` components with the exact kernels the text path
     uses (with_fingerprint / minhash_signatures / shingles), so the
     indexed ingest path is result-identical to the text path."""
     from puma_matcher_spark.llmdata.textstats import with_fingerprint
 
-    sh = shingles(docs, shingle_n, text_col)
+    sh = shingles(docs)
     return DedupIndex(
-        fingerprints=with_fingerprint(docs, text_col).select(
+        fingerprints=with_fingerprint(docs).select(
             "doc_id", "fingerprint"
         ),
-        band_keys=lsh_band_keys(
-            minhash_signatures(sh, num_hashes), band_size, num_hashes
-        ),
+        band_keys=lsh_band_keys(minhash_signatures(sh)),
         shingles=sh,
     )
 
@@ -335,9 +305,6 @@ def build_dedup_index(
 def minhash_incremental_pairs_indexed(
     new_docs: DataFrame,
     corpus_band_keys: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-    shingle_n: int = DEFAULT_SHINGLE,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """:func:`minhash_incremental_pairs` with the corpus side already an
@@ -347,11 +314,7 @@ def minhash_incremental_pairs_indexed(
     hash-width rows; the corpus text is never touched."""
     from pyspark.sql.window import Window
 
-    nb = lsh_band_keys(
-        minhash_signatures(shingles(new_docs, shingle_n), num_hashes),
-        band_size,
-        num_hashes,
-    )
+    nb = lsh_band_keys(minhash_signatures(shingles(new_docs)))
     cb = corpus_band_keys
     if max_bucket_size is not None:
         bucket_w = Window.partitionBy("band", "band_key")
@@ -376,7 +339,6 @@ def minhash_incremental_pairs_indexed(
 def incremental_ingest_indexed(
     new_docs: DataFrame,
     corpus_fingerprints: DataFrame,
-    text_col: str = "text",
 ) -> DataFrame:
     """:func:`incremental_ingest` with the corpus side already an index
     (``(doc_id, fingerprint)`` rows): left-anti the new batch's
@@ -384,7 +346,7 @@ def incremental_ingest_indexed(
     representative per fingerprint within the batch."""
     from puma_matcher_spark.llmdata.textstats import with_fingerprint
 
-    newf = with_fingerprint(new_docs, text_col)
+    newf = with_fingerprint(new_docs)
     oldf = corpus_fingerprints.select("fingerprint").distinct()
     fresh = newf.join(oldf, "fingerprint", "left_anti")
     return (
@@ -437,7 +399,6 @@ def jaccard_for_pairs_from_shingles(
 def ngram_jaccard_pairs(
     docs: DataFrame,
     shingle_n: int = DEFAULT_SHINGLE,
-    min_jaccard: float = 0.0,
     max_shingle_df: int = 2000,
 ) -> DataFrame:
     """Exact n-gram Jaccard over shingle-join candidates.
@@ -489,16 +450,12 @@ def ngram_jaccard_pairs(
                 F.col("common") / (F.col("n1") + F.col("n2") - F.col("common")), 4
             ),
         )
-        .where(F.col("jaccard") >= min_jaccard)
+        .where(F.col("jaccard") >= 0.0)
         .select("doc1_id", "doc2_id", "common", "jaccard")
     )
 
 
-def jaccard_for_pairs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    shingle_n: int = DEFAULT_SHINGLE,
-) -> DataFrame:
+def jaccard_for_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard computed ONLY for the given candidate pairs.
 
     This is the scale-correct verifier for LSH output: work is
@@ -510,7 +467,7 @@ def jaccard_for_pairs(
     Pairs sharing zero shingles are absent from the output (their Jaccard
     is 0 — callers threshold above that anyway).
     """
-    return jaccard_for_pairs_from_shingles(shingles(docs, shingle_n), pairs)
+    return jaccard_for_pairs_from_shingles(shingles(docs), pairs)
 
 
 def simhash64_one(text: str) -> int:
@@ -539,7 +496,7 @@ def simhash64_one(text: str) -> int:
     return int(((votes > 0).astype(np.uint64) << shifts).sum())
 
 
-def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """64-bit SimHash over tokens (weighted bit-vote, portable arithmetic).
 
     Per token: hash60 = the first 15 hex chars of md5 as an integer; for
@@ -564,7 +521,7 @@ def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
     def _simhash(texts: pd.Series) -> pd.Series:
         return texts.map(simhash64_one).astype("int64")
 
-    return docs.select("doc_id", _simhash(F.col(text_col)).alias("simhash"))
+    return docs.select("doc_id", _simhash(F.col("text")).alias("simhash"))
 
 
 def simhash128_one(text: str) -> tuple[int, int]:
@@ -598,7 +555,7 @@ def simhash128_one(text: str) -> tuple[int, int]:
     return fold(h_hi), fold(h_lo)
 
 
-def simhash128_mapside(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash128_mapside(docs: DataFrame) -> DataFrame:
     """128-bit SimHash as two signed longs ``(simhash_hi, simhash_lo)`` —
     the wide-fingerprint kernel that kills the random band-collision
     quadratic term measured on the 60-bit plane (PLANS.md §round-6:
@@ -635,7 +592,7 @@ def simhash128_mapside(docs: DataFrame, text_col: str = "text") -> DataFrame:
             }
         )
 
-    fp = _simhash(F.col(text_col))
+    fp = _simhash(F.col("text"))
     return docs.select(
         "doc_id",
         fp.getField("simhash_hi").alias("simhash_hi"),
@@ -676,7 +633,6 @@ def contamination_check(
     corpus: DataFrame,
     benchmark: DataFrame,
     shingle_n: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark-contamination scan: corpus documents sharing any word
     n-gram with a held-out evaluation set — the standard pre-training
@@ -686,10 +642,10 @@ def contamination_check(
     all-pairs); the benchmark side is usually tiny, so AQE broadcasts
     it at runtime.  Output: (corpus_id, benchmark_id, shared_ngrams).
     """
-    c = shingles(corpus, shingle_n, text_col).withColumnRenamed(
+    c = shingles(corpus, shingle_n).withColumnRenamed(
         "doc_id", "corpus_id"
     )
-    b = shingles(benchmark, shingle_n, text_col).withColumnRenamed(
+    b = shingles(benchmark, shingle_n).withColumnRenamed(
         "doc_id", "benchmark_id"
     )
     return (
@@ -705,7 +661,6 @@ def containment_scores(
     shingle_n: int = 8,  # matches contamination_check — a caller swapping
     # between the two siblings with default args must not silently switch
     # from 8-gram to far-looser 3-gram overlap
-    text_col: str = "text",
 ) -> DataFrame:
     """Normalised benchmark containment — the severity metric
     decontamination pipelines threshold on (e.g. the GPT-3 appendix's
@@ -719,9 +674,9 @@ def containment_scores(
     one shingle equi-join (benchmark side tiny → AQE broadcast), plus a
     benchmark-size aggregate that is |benchmark|-bounded.
     """
-    shared = contamination_check(corpus, benchmark, shingle_n, text_col)
+    shared = contamination_check(corpus, benchmark, shingle_n)
     bsz = (
-        shingles(benchmark, shingle_n, text_col)
+        shingles(benchmark, shingle_n)
         .groupBy(F.col("doc_id").alias("benchmark_id"))
         .agg(F.count(F.lit(1)).alias("_nb"))
     )
@@ -743,7 +698,6 @@ def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
     shingle_n: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Drop every corpus document sharing any word n-gram with the
     held-out benchmark — the *action* :func:`contamination_check`'s scan
@@ -752,16 +706,14 @@ def decontaminate(
     so the expensive shingle comparison happens exactly once and the
     corpus rows are never widened."""
     hits = (
-        contamination_check(corpus, benchmark, shingle_n, text_col)
+        contamination_check(corpus, benchmark, shingle_n)
         .select(F.col("corpus_id").alias("doc_id"))
         .distinct()
     )
     return corpus.join(hits, "doc_id", "left_anti")
 
 
-def incremental_ingest(
-    new_docs: DataFrame, corpus: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def incremental_ingest(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
     """Ingestion-time exact dedup for a continuously growing corpus:
     drop new-batch documents whose normalised content fingerprint
     already exists in the corpus (left-anti on the hash — the
@@ -777,13 +729,11 @@ def incremental_ingest(
     from puma_matcher_spark.llmdata.textstats import with_fingerprint
 
     return incremental_ingest_indexed(
-        new_docs, with_fingerprint(corpus, text_col), text_col
+        new_docs, with_fingerprint(corpus)
     )
 
 
-def duplicate_spans(
-    docs: DataFrame, shingle_n: int = 10, text_col: str = "text"
-) -> DataFrame:
+def duplicate_spans(docs: DataFrame, shingle_n: int = 10) -> DataFrame:
     """Exact-substring duplicate spans: token ranges covered by any
     ``shingle_n``-gram that occurs more than once in the corpus
     (within- or cross-document) — the span-level dedup signal
@@ -804,7 +754,7 @@ def duplicate_spans(
     from pyspark.sql.window import Window
 
     base = docs.select(
-        "doc_id", tokens(F.lower(F.col(text_col))).alias("_tk")
+        "doc_id", tokens(F.lower(F.col("text"))).alias("_tk")
     )
     n = shingle_n
     elems = [F.element_at(F.col("_tk"), F.col("_i") + j) for j in range(n)]
@@ -862,9 +812,7 @@ def duplicate_spans(
     )
 
 
-def cut_spans(
-    docs: DataFrame, spans: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def cut_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """Apply a duplicate-span cut list (:func:`duplicate_spans`) to the
     corpus: drop every token whose 0-based position falls inside any of
     the document's spans and re-join the survivors — the action
@@ -885,7 +833,7 @@ def cut_spans(
     )
     base = docs.join(sp, "doc_id", "left").select(
         "doc_id",
-        tokens(F.lower(F.col(text_col))).alias("_tk"),
+        tokens(F.lower(F.col("text"))).alias("_tk"),
         F.coalesce(
             "_spans", F.array().cast("array<struct<s:bigint,e:bigint>>")
         ).alias("_spans"),
@@ -903,12 +851,7 @@ def cut_spans(
     )
 
 
-def jaccard_prefix_join(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    shingle_n: int = DEFAULT_SHINGLE,
-    text_col: str = "text",
-) -> DataFrame:
+def jaccard_prefix_join(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact-threshold set-similarity self-join with PPJoin-style prefix
     filtering — the LOSSLESS scalable alternative to LSH for
     ``jaccard >= t``.
@@ -932,7 +875,7 @@ def jaccard_prefix_join(
     # the shingle frame feeds FIVE branches (sizes, df, ranked prefix,
     # both verification sides) — persist it once instead of re-running
     # the tokenize→explode chain per branch (bounded ring, no leak)
-    sh = persist_rotating(shingles(docs, shingle_n, text_col))
+    sh = persist_rotating(shingles(docs))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n"))
     dfreq = sh.groupBy("shingle").agg(
         F.count(F.lit(1)).cast("long").alias("df")
@@ -1090,7 +1033,6 @@ def simhash128_candidates(
 def simhash_hamming_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
-    text_col: str = "text",
     max_band_bucket: int | None = 2000,
     n_blocks: int | None = None,
 ) -> DataFrame:
@@ -1131,13 +1073,13 @@ def simhash_hamming_pairs(
     # token array per row just to test emptiness.
     from puma_matcher_spark.llmdata.textstats import has_tokens
 
-    docs = docs.where(has_tokens(F.col(text_col)))
+    docs = docs.where(has_tokens(F.col("text")))
     # persisted (r11; reverses the earlier "no persist" note): the kernel
     # is zero-SHUFFLE but not zero-COST — each of the three consumers
     # (keys + both verify sides) re-ran the full tokenize→md5→bit-vote
     # pass over the corpus, pure CPU repeated three times.  The cached
     # frame is three longs per doc, the smallest thing in the pipeline.
-    sh = persist_rotating(simhash128_mapside(docs, text_col=text_col))
+    sh = persist_rotating(simhash128_mapside(docs))
     cand = simhash128_candidates(sh, max_hamming, n_blocks, max_band_bucket)
     s1 = sh.select(
         F.col("doc_id").alias("doc1_id"),

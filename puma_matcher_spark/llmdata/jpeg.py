@@ -177,7 +177,8 @@ class _BitReader:
         return v
 
     def extend_bits(self, n: int) -> int:
-        """``_extend(bits(n), n)`` fused — the per-coefficient hot path."""
+        """Read ``n`` bits and sign-extend them (T.81 F.2.2.1 EXTEND) in one
+        step — the per-coefficient hot path."""
         if n == 0:
             return 0
         if self.nbits < n:
@@ -304,15 +305,6 @@ class _BitReader:
 class _RestartMarker(Exception):
     def __init__(self, marker: int):
         self.marker = marker
-
-
-def _extend(value: int, nbits: int) -> int:
-    """T.81 F.2.2.1 sign extension of an nbits magnitude value."""
-    if nbits == 0:
-        return 0
-    if value < (1 << (nbits - 1)):
-        return value - (1 << nbits) + 1
-    return value
 
 
 def _parse_dqt(seg: bytes, qtables: dict) -> None:

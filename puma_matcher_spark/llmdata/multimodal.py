@@ -947,24 +947,21 @@ VIDEO_FEATURE_SCHEMA = StructType(
 )
 
 
-def extract_video_features(
-    media: DataFrame,
-    frame_bytes: int = 768,
-    n_frames: int = 4,
-    frame_dim: int = 16,
-) -> DataFrame:
-    """mapInPandas video plumbing: uniformly sample frames from each
-    payload (real policy), decode each frame (STUB — fake_decode_rgb,
-    same single swap point as images), resize (real numpy) and blockhash
-    (real published algorithm).  Emits compact per-frame hashes — the
-    keyframe-dedup/similarity input — so binary payloads never shuffle."""
+def extract_video_features(media: DataFrame) -> DataFrame:
+    """mapInPandas video plumbing: uniformly sample 4 frames of 768 bytes
+    from each payload (real policy), decode each frame to 16x16 RGB
+    (STUB — fake_decode_rgb, same single swap point as images), resize
+    (real numpy) and blockhash (real published algorithm).  Emits compact
+    per-frame hashes — the keyframe-dedup/similarity input — so binary
+    payloads never shuffle."""
 
     def one(payload: str):
         data = (payload or "").encode()
-        offs = sample_frame_offsets(len(data), frame_bytes, n_frames)
+        frame_bytes = 768
+        offs = sample_frame_offsets(len(data), frame_bytes, 4)
         hashes = []
         for o in offs:
-            frame = fake_decode_rgb(data[o : o + frame_bytes], frame_dim, frame_dim)
+            frame = fake_decode_rgb(data[o : o + frame_bytes], 16, 16)
             hashes.append(blockhash_256(resize_rgb(frame, BLOCKHASH_BITS, BLOCKHASH_BITS)))
         return len(offs), "|".join(hashes)
 

@@ -28,7 +28,6 @@ from puma_matcher_spark.llmdata.textstats import tokens
 def sequence_packing(
     docs: DataFrame,
     ctx_len: int = 512,
-    text_col: str = "text",
     n_salts: int = 1,
 ) -> DataFrame:
     """Per-document packing assignment: (doc_id, source, n_tokens,
@@ -45,7 +44,7 @@ def sequence_packing(
     is then unique per (source, stream_salt)); the assignment stays a
     pure function of the input.
     """
-    n_tok = F.size(tokens(F.lower(F.col(text_col))))
+    n_tok = F.size(tokens(F.lower(F.col("text"))))
     base = docs.select("doc_id", "source", n_tok.cast("long").alias("n_tokens"))
     if n_salts > 1:
         base = base.withColumn(
@@ -72,7 +71,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_len: int = 64,
     overlap: int = 16,
-    text_col: str = "text",
 ) -> DataFrame:
     """Split each document's token stream into fixed-size overlapping
     chunks — the pre-tokenization step that turns long documents into
@@ -97,7 +95,7 @@ def chunk_documents(
     base = docs.select(
         "doc_id",
         F.coalesce(
-            tokens(F.lower(F.col(text_col))), F.array().cast("array<string>")
+            tokens(F.lower(F.col("text"))), F.array().cast("array<string>")
         ).alias("_tk"),
     )
     chunks = F.expr(

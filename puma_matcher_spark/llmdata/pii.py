@@ -44,7 +44,7 @@ def luhn_valid(digits):
     return total % 10 == 0
 
 
-def with_pii_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_pii_counts(docs: DataFrame) -> DataFrame:
     """Per-document PII hit counts (audit pass before scrubbing), plus
     ``n_card_valid`` — card-pattern hits that also pass the Luhn check
     (the scrubber redacts ALL card-shaped runs; the audit separates
@@ -52,12 +52,12 @@ def with_pii_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     cols = [F.col("doc_id")]
     for name, pattern, _ in PII_PATTERNS:
         cols.append(
-            F.size(F.regexp_extract_all(F.col(text_col), F.lit(pattern), F.lit(0)))
+            F.size(F.regexp_extract_all(F.col("text"), F.lit(pattern), F.lit(0)))
             .cast("long")
             .alias(f"n_{name}")
         )
     card_pattern = dict((n, p) for n, p, _ in PII_PATTERNS)["card"]
-    cands = F.regexp_extract_all(F.col(text_col), F.lit(card_pattern), F.lit(0))
+    cands = F.regexp_extract_all(F.col("text"), F.lit(card_pattern), F.lit(0))
     normalised = F.transform(
         cands, lambda x: F.regexp_replace(x, "[ -]", "")
     )
@@ -67,9 +67,9 @@ def with_pii_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select(*cols)
 
 
-def scrub_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def scrub_pii(docs: DataFrame) -> DataFrame:
     """Replace every PII hit with its typed placeholder token."""
-    scrubbed = F.col(text_col)
+    scrubbed = F.col("text")
     for _, pattern, token in PII_PATTERNS:
         scrubbed = F.regexp_replace(scrubbed, pattern, token)
     return docs.withColumn("scrubbed_text", scrubbed)

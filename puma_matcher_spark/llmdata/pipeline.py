@@ -40,11 +40,11 @@ class CurationResult:
 def curate_documents(
     docs: DataFrame,
     min_tokens: int = 5,
-    min_distinct_ratio: float = 0.05,
     jaccard_threshold: float = 0.8,
 ) -> CurationResult:
-    """Raw corpus → exact dedup → near-dup removal → quality gate, with
-    per-stage audit counts.
+    """Raw corpus → exact dedup → near-dup removal → quality gate
+    (``min_tokens`` tokens and a distinct-token ratio of at least 0.05),
+    with per-stage audit counts.
 
     The stage-result ID frames are localCheckpoint'ed (round 8 — the
     same barrier :func:`curation_report` carries): every downstream
@@ -99,7 +99,7 @@ def curate_documents(
         "after_quality",
         stats.where(
             (F.col("token_count") >= min_tokens)
-            & (F.col("distinct_ratio") >= min_distinct_ratio)
+            & (F.col("distinct_ratio") >= 0.05)
         ).select("doc_id"),
     )
     good = quality_stage.localCheckpoint()
@@ -115,12 +115,7 @@ def curate_documents(
     )
 
 
-def curation_report(
-    docs: DataFrame,
-    min_tokens: int = 5,
-    min_distinct_ratio: float = 0.05,
-    jaccard_threshold: float = 0.8,
-) -> DataFrame:
+def curation_report(docs: DataFrame) -> DataFrame:
     """Per-source curation audit report — the table a data-quality owner
     actually reads after a :func:`curate_documents` run: how many
     documents each source lost at each stage, and why.
@@ -140,12 +135,7 @@ def curation_report(
     7.9 s → 4.6 s).  The ``keep_exact`` frame carries exactly the
     stage-1 survivor ids, so the first marker join uses it directly.
     """
-    res = curate_documents(
-        docs,
-        min_tokens=min_tokens,
-        min_distinct_ratio=min_distinct_ratio,
-        jaccard_threshold=jaccard_threshold,
-    )
+    res = curate_documents(docs)
     ids = res.stage_ids
 
     outcome = (

@@ -34,15 +34,15 @@ from puma_matcher_spark.functions.rounding import pround
 from puma_matcher_spark.llmdata.textstats import tokens
 
 
-def doc_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_tokens(docs: DataFrame) -> DataFrame:
     """Lower-cased whitespace token postings: (doc_id, tok) — the shared
     first stage of every lexical operator here and in queries.py."""
     return docs.select(
-        "doc_id", F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
+        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok")
     )
 
 
-def doc_tf_df(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_tf_df(docs: DataFrame) -> DataFrame:
     """Per-doc term frequencies joined with document frequencies:
     (doc_id, tok, tf, df) — the postings table TF-IDF scorers build on.
 
@@ -52,7 +52,7 @@ def doc_tf_df(docs: DataFrame, text_col: str = "text") -> DataFrame:
     side — 2 scans / 2 generates in the plan): one tokenize pass
     instead of two."""
     tf = persist_rotating(
-        doc_tokens(docs, text_col)
+        doc_tokens(docs)
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
@@ -60,14 +60,9 @@ def doc_tf_df(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return tf.join(df, "tok")
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-) -> DataFrame:
-    """Okapi BM25 score per document for a bag of query terms.
+def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
+    """Okapi BM25 score (k1 = 1.2, b = 0.75) per document for a bag of
+    query terms.
 
     idf uses the standard Robertson form log10((N - df + 0.5)/(df + 0.5))
     clamped at 0; doc length and its corpus average are whitespace token
@@ -79,7 +74,8 @@ def bm25_scores(
     (dl, the avgdl scalar, tf, and df-via-tf — the r11 plan audit
     counted 4 explode(tokens(...)) generates over 5 scans per run):
     one tokenize pass instead of four."""
-    toks = persist_rotating(doc_tokens(docs, text_col))
+    k1, b = 1.2, 0.75
+    toks = persist_rotating(doc_tokens(docs))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("dl"))
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n")).scalar()
     avgdl = dl.agg(F.avg("dl").alias("a")).scalar()
@@ -111,9 +107,7 @@ def bm25_scores(
     )
 
 
-def phrase_lookup(
-    docs: DataFrame, phrase: str, text_col: str = "text"
-) -> DataFrame:
+def phrase_lookup(docs: DataFrame, phrase: str) -> DataFrame:
     """Exact-phrase containment: the phrase's token count fixes the
     n-gram width, contiguous grams are formed in-row over the token
     array and matches counted map-side.
@@ -164,7 +158,7 @@ def phrase_lookup(
     hits = F.filter(F.sequence(F.lit(1), F.size(tk) - n + 1), _match_at)
     cnt = F.when(F.size(tk) >= n, F.size(hits)).otherwise(F.lit(0))
     return (
-        docs.select("doc_id", tokens(F.lower(F.col(text_col))).alias("_tk"))
+        docs.select("doc_id", tokens(F.lower(F.col("text"))).alias("_tk"))
         .select("doc_id", cnt.alias("_n"))
         .groupBy("doc_id")
         .agg(F.sum("_n").cast("long").alias("n_occurrences"))

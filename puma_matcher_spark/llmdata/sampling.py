@@ -16,24 +16,20 @@ from pyspark.sql import functions as F
 from puma_matcher_spark.llmdata.dedup import portable_hash60
 
 
-def hash_bucket(key, n_buckets: int = 100):
-    """Stable bucket 0..n_buckets-1 from the row key (column or name)."""
+def hash_bucket(key):
+    """Stable bucket 0..99 from the row key (column or name)."""
     c = F.col(key) if isinstance(key, str) else key
-    return portable_hash60(c.cast("string")) % n_buckets
+    return portable_hash60(c.cast("string")) % 100
 
 
-def with_split(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    train_pct: int = 80,
-    val_pct: int = 10,
-) -> DataFrame:
-    """Assign train/val/test split labels by hash bucket."""
-    b = hash_bucket(id_col)
+def with_split(docs: DataFrame) -> DataFrame:
+    """Assign train/val/test split labels (80/10/10) by the hash bucket
+    of ``doc_id``."""
+    b = hash_bucket("doc_id")
     return docs.withColumn(
         "split",
-        F.when(b < train_pct, F.lit("train"))
-        .when(b < train_pct + val_pct, F.lit("val"))
+        F.when(b < 80, F.lit("train"))
+        .when(b < 90, F.lit("val"))
         .otherwise(F.lit("test")),
     )
 
@@ -43,15 +39,14 @@ def hash_sample(docs: DataFrame, pct: int, key: str = "doc_id") -> DataFrame:
     return docs.where(hash_bucket(key) < pct)
 
 
-def deterministic_shuffle(
-    docs: DataFrame, key: str = "doc_id", n_ranges: int = 32
-) -> DataFrame:
+def deterministic_shuffle(docs: DataFrame) -> DataFrame:
     """Global training-order randomization: every row gets a total-order
-    ``shuffle_rank`` by md5-hash of its key — a deterministic permutation
+    ``shuffle_rank`` by md5-hash of its ``doc_id`` — a deterministic permutation
     that is identical across engines, runs and cluster layouts.
 
     Scale shape: a naive ``row_number() OVER (ORDER BY hash)`` funnels
-    the corpus through ONE task.  Instead: range-repartition on the hash,
+    the corpus through ONE task.  Instead: range-repartition on the hash
+    into 32 ranges,
     sort within partitions (Spark's distributed sort), then add each
     range's cumulative row offset (a tiny driver-side frame, broadcast
     back).  Rank is independent of the sampled range boundaries, so the
@@ -59,11 +54,11 @@ def deterministic_shuffle(
     """
     from pyspark.sql.window import Window
 
-    h = portable_hash60(F.col(key).cast("string"))
+    h = portable_hash60(F.col("doc_id").cast("string"))
     parted = (
         docs.withColumn("_h", h)
-        .repartitionByRange(n_ranges, "_h", key)
-        .sortWithinPartitions("_h", key)
+        .repartitionByRange(32, "_h", "doc_id")
+        .sortWithinPartitions("_h", "doc_id")
         .withColumn("_pid", F.spark_partition_id())
         # materialize once: the size pass and the rank pass below must see
         # the SAME range boundaries (the partitioner samples its bounds)
@@ -74,7 +69,7 @@ def deterministic_shuffle(
     offsets = sizes.withColumn(
         "_offset", F.coalesce(F.sum("_n").over(off_w), F.lit(0))
     ).select("_pid", "_offset")
-    in_part = Window.partitionBy("_pid").orderBy("_h", key)
+    in_part = Window.partitionBy("_pid").orderBy("_h", "doc_id")
     return (
         parted.join(F.broadcast(offsets), "_pid")
         .withColumn(
@@ -85,12 +80,7 @@ def deterministic_shuffle(
     )
 
 
-def weighted_sample_topk(
-    docs: DataFrame,
-    weight_col,
-    k: int = 50,
-    key: str = "doc_id",
-) -> DataFrame:
+def weighted_sample_topk(docs: DataFrame, weight_col, k: int = 50) -> DataFrame:
     """Weight-proportional sample WITHOUT replacement via the
     Efraimidis–Spirakis A-ES scheme: each row draws a uniform
     u ∈ (0, 1] and is ranked by ln(u)/w (the log-domain form of
@@ -110,7 +100,7 @@ def weighted_sample_topk(
         "double"
     )
     # (hash + 1) / 2^60 ∈ (0, 1] — never 0, so ln() is defined
-    u = (portable_hash60(F.col(key).cast("string")) + 1) / F.lit(float(1 << 60))
+    u = (portable_hash60(F.col("doc_id").cast("string")) + 1) / F.lit(float(1 << 60))
     # zero/negative weights: probability 0 — NULL sort key (ANSI Spark
     # would throw DIVIDE_BY_ZERO; DuckDB x/0.0 is NULL), and desc() is
     # nulls-last on both engines, so weightless rows are only drawn
@@ -118,15 +108,13 @@ def weighted_sample_topk(
     sort_key = F.when(w > 0, F.log(u) / w)  # negative; larger = selected
     return (
         docs.withColumn("_sk", sort_key)
-        .orderBy(F.col("_sk").desc(), F.col(key))
+        .orderBy(F.col("_sk").desc(), F.col("doc_id"))
         .limit(k)
         .drop("_sk")
     )
 
 
-def temperature_mix(
-    docs: DataFrame, alpha: float = 0.5, text_col: str = "text"
-) -> DataFrame:
+def temperature_mix(docs: DataFrame, alpha: float = 0.5) -> DataFrame:
     """Temperature-based source reweighting (the multinomial mixture
     rule multilingual/multi-source pre-training uses: p_s ∝ n_s^alpha,
     alpha<1 upsamples small sources).
@@ -143,7 +131,7 @@ def temperature_mix(
     from puma_matcher_spark.llmdata.textstats import tokens
     from puma_matcher_spark.functions.rounding import pround
 
-    n_tok = F.size(tokens(F.lower(F.col(text_col)))).cast("long")
+    n_tok = F.size(tokens(F.lower(F.col("text")))).cast("long")
     per_doc = docs.select(
         "doc_id", "source", n_tok.alias("n_tokens")
     )
@@ -188,9 +176,7 @@ def temperature_mix(
     )
 
 
-def quality_stratified_sample(
-    docs: DataFrame, per_source: int = 20, text_col: str = "text"
-) -> DataFrame:
+def quality_stratified_sample(docs: DataFrame, per_source: int = 20) -> DataFrame:
     """Top-N documents per source by lexical diversity (distinct-token
     ratio, deterministic doc_id tie-break) — the "best of each stream"
     selection step of a curation mix.
@@ -207,7 +193,7 @@ def quality_stratified_sample(
     from puma_matcher_spark.functions.rounding import pround
     from puma_matcher_spark.llmdata.textstats import tokens
 
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     # token-less docs: NULL ratio (Spark 0.0/0.0 is NaN, which sorts
     # ABOVE every value in a desc sort, while DuckDB 0.0/0.0 is NULL and
     # sorts last — NULL on both sides keeps the rank identical; Spark's

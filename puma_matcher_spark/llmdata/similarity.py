@@ -22,6 +22,15 @@ from pyspark.sql.window import Window
 from puma_matcher_spark.functions.frames import local_frame
 from puma_matcher_spark.functions.rounding import pround
 
+#: Geometry of the hashed-shingle plane (:func:`shingle_hash_embeddings`,
+#: :func:`shared_shingle_pairs` and the semantic scans built on them):
+#: word n-gram width, embedding buckets, the rare-shingle document-
+#: frequency cap, and the rare shingles a candidate pair must share.
+SEMANTIC_SHINGLE_N = 3
+SEMANTIC_BUCKETS = 128
+RARE_SHINGLE_DF_CAP = 64
+MIN_SHARED_SHINGLES = 2
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -68,7 +77,7 @@ def _all_finite(v: Column) -> Column:
     )
 
 
-def valid_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def valid_vectors(df: DataFrame) -> DataFrame:
     """Restrict to rows on which cosine similarity is DEFINED: a non-NULL,
     non-empty, all-FINITE embedding with at least one non-zero component
     (zero-norm vectors have no direction).  The `exists` predicate covers
@@ -79,16 +88,16 @@ def valid_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     the embeddings-zoo parity test (tests/test_embeddings_zoo.py) pins
     the behaviour against DuckDB oracles carrying the same predicate
     (queries._EMB_VALID)."""
-    v = F.col(vec_col)
+    v = F.col("embedding")
     return df.where(F.exists(v, lambda x: x != 0) & _all_finite(v))
 
 
-def nonempty_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def nonempty_vectors(df: DataFrame) -> DataFrame:
     """Rows with a usable (non-NULL, non-empty, all-finite) embedding —
     the weaker validity bar for L2/centroid math, where an all-zero
     vector is a legitimate point (and exactly what a norm audit must
     flag) but a NaN/Inf component still poisons the aggregates."""
-    v = F.col(vec_col)
+    v = F.col("embedding")
     return df.where(v.isNotNull() & (F.size(v) > 0) & _all_finite(v))
 
 
@@ -96,8 +105,6 @@ def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact cosine top-k of each query against the corpus.
 
@@ -105,13 +112,13 @@ def brute_force_topk(
     id for determinism.  Both sides pass :func:`valid_vectors` — cosine is
     undefined on NULL/empty/zero-norm rows, so they are not candidates.
     """
-    queries = valid_vectors(queries, vec_col)
-    embeddings = valid_vectors(embeddings, vec_col)
+    queries = valid_vectors(queries)
+    embeddings = valid_vectors(embeddings)
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     sims = (
         c.crossJoin(F.broadcast(q))
@@ -138,11 +145,7 @@ def brute_force_topk(
     )
 
 
-def quantize_int8(
-    embeddings: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def quantize_int8(embeddings: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization: scale = max|x| / 127,
     q_i = floor(x_i / scale + 0.5) (half-up — portable across engines,
     unlike banker's rounding).  Zero vectors quantize to zeros.
@@ -152,12 +155,12 @@ def quantize_int8(
     travels with the row so scores dequantize exactly.
     Output: (id, qvec array<int>, scale double).
     """
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     scale = F.aggregate(
         v, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x))
     ) / F.lit(127.0)
     base = embeddings.select(
-        F.col(id_col), v.alias("_v"), scale.alias("scale")
+        F.col("vec_id"), v.alias("_v"), scale.alias("scale")
     )
     q = F.when(
         F.col("scale") == 0.0,
@@ -168,16 +171,10 @@ def quantize_int8(
             lambda x: F.floor(x / F.col("scale") + 0.5).cast("int"),
         )
     )
-    return base.select(F.col(id_col), q.alias("qvec"), "scale")
+    return base.select(F.col("vec_id"), q.alias("qvec"), "scale")
 
 
-def int8_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def int8_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Approximate top-k on int8-quantized vectors: score =
     scale_q * scale_c * <q_int, c_int> (dequantized dot product).  The
     arithmetic is fully deterministic, so the whole approximate path is
@@ -185,15 +182,15 @@ def int8_topk(
     is a separate property test.  Inputs pass :func:`valid_vectors` —
     same candidacy contract as the float ANN paths.
     """
-    queries = valid_vectors(queries, vec_col)
-    embeddings = valid_vectors(embeddings, vec_col)
-    qq = quantize_int8(queries, vec_col, id_col).select(
-        F.col(id_col).alias("query_id"),
+    queries = valid_vectors(queries)
+    embeddings = valid_vectors(embeddings)
+    qq = quantize_int8(queries).select(
+        F.col("vec_id").alias("query_id"),
         F.col("qvec").alias("q_q"),
         F.col("scale").alias("q_s"),
     )
-    cc = quantize_int8(embeddings, vec_col, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
+    cc = quantize_int8(embeddings).select(
+        F.col("vec_id").alias("neighbor_id"),
         F.col("qvec").alias("c_q"),
         F.col("scale").alias("c_s"),
     )
@@ -233,8 +230,6 @@ def prefix_rerank_topk(
     k: int = 10,
     prefix_dims: int = 8,
     shortlist: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Two-stage (Matryoshka-style) search: a coarse pass on the first
     ``prefix_dims`` dimensions shortlists ``shortlist`` candidates per
@@ -248,15 +243,15 @@ def prefix_rerank_topk(
     uses :func:`cosine_or_zero` because a valid full vector can still
     have an all-zero prefix slice.
     """
-    queries = valid_vectors(queries, vec_col)
-    embeddings = valid_vectors(embeddings, vec_col)
+    queries = valid_vectors(queries)
+    embeddings = valid_vectors(embeddings)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("q_vec"),
     )
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("c_vec"),
     )
     # coarse stage carries ONLY (ids, prefix score) into its ranking
     # shuffle — dragging the full vectors through the |Q|×|C| window
@@ -314,26 +309,22 @@ def sign_lsh_keys(
     dim: int,
     n_planes: int = 8,
     seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Random-hyperplane signature: one bit per plane (sign of dot)."""
     planes = _hyperplanes(dim, n_planes, seed)
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     key = F.lit(0).cast("long")
     for i, p in enumerate(planes):
         plane = F.array(*[F.lit(float(x)) for x in p])
         bit = F.when(dot(v, plane) > 0, F.lit(1)).otherwise(F.lit(0))
         key = key + bit.cast("long") * F.lit(1 << i)
-    return embeddings.select(F.col(id_col), key.alias("bucket"))
+    return embeddings.select(F.col("vec_id"), key.alias("bucket"))
 
 
 def ivf_build(
     embeddings: DataFrame,
     n_cells: int = 8,
     seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> tuple[list[list[float]], DataFrame]:
     """Build the IVF index ONCE: fit KMeans on the (validity-filtered)
     corpus and return ``(centers, assigned)`` where ``centers`` is the
@@ -351,16 +342,16 @@ def ivf_build(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    embeddings = valid_vectors(embeddings, vec_col)
+    embeddings = valid_vectors(embeddings)
     feats = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col).alias("_arr"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
+        F.col("vec_id"),
+        F.col("embedding").alias("_arr"),
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features"),
     )
     model = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(feats)
     assigned = model.transform(feats).select(
-        F.col(id_col),
-        F.col("_arr").alias(vec_col),
+        F.col("vec_id"),
+        F.col("_arr").alias("embedding"),
         F.col("prediction").alias("cell"),
     )
     centers = [[float(x) for x in c] for c in model.clusterCenters()]
@@ -392,21 +383,16 @@ def _nearest_cells(
     )
 
 
-def ivf_assign(
-    batch: DataFrame,
-    centers: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def ivf_assign(batch: DataFrame, centers: list[list[float]]) -> DataFrame:
     """Incremental IVF ingest: assign a NEW batch to the EXISTING cells
     (same ``(id, vec, cell)`` schema as :func:`ivf_build`'s index frame,
     union-ready).  Map-side only — the centers fold in as literals —
     so indexing a batch costs one scan regardless of corpus size.
     Inherits the validity contract: NULL/empty/zero-norm rows are not
     indexable."""
-    batch = valid_vectors(batch, vec_col)
-    cell = F.element_at(_nearest_cells(centers, vec_col, 1), 1)
-    return batch.select(F.col(id_col), F.col(vec_col), cell.alias("cell"))
+    batch = valid_vectors(batch)
+    cell = F.element_at(_nearest_cells(centers, "embedding", 1), 1)
+    return batch.select(F.col("vec_id"), F.col("embedding"), cell.alias("cell"))
 
 
 def ivf_refit_report(
@@ -414,8 +400,6 @@ def ivf_refit_report(
     centers: list[list[float]],
     occupancy_skew_threshold: float = 4.0,
     drift_threshold: float = 0.5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """The REFIT GATE for the maintained IVF index: :func:`ivf_assign`
     deliberately never refits (a refit reshuffles every stored vector),
@@ -457,8 +441,8 @@ def ivf_refit_report(
         for i, j in _it.combinations(range(n_cells), 2)
     ]
     scale = float(np.mean(pair_d)) if pair_d else 1.0
-    assigned = ivf_assign(batch, centers, vec_col, id_col)
-    e = assigned.select("cell", F.posexplode(vec_col).alias("dim", "v"))
+    assigned = ivf_assign(batch, centers)
+    e = assigned.select("cell", F.posexplode("embedding").alias("dim", "v"))
     m = e.groupBy("cell", "dim").agg(F.avg("v").alias("av"))
     mean_vec = m.groupBy("cell").agg(
         F.transform(
@@ -521,25 +505,23 @@ def ivf_topk_indexed(
     queries: DataFrame,
     k: int = 10,
     n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Search a PREBUILT IVF index (``assigned`` from :func:`ivf_build`
     / :func:`ivf_assign`): each query probes its ``n_probe`` nearest
     cells, exact cosine rerank inside.  The probe join shuffles on
     ``cell`` only; expected work per query is ``n_probe/n_cells`` of the
     corpus."""
-    queries = valid_vectors(queries, vec_col)
+    queries = valid_vectors(queries)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(_nearest_cells(centers, vec_col, n_probe)).alias("cell"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        F.explode(_nearest_cells(centers, "embedding", n_probe)).alias("cell"),
     )
     cands = q.join(
         assigned.select(
             "cell",
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_vec"),
         ),
         "cell",
     ).where(F.col("query_id") != F.col("neighbor_id"))
@@ -570,9 +552,6 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 8,
     n_probe: int = 2,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF (inverted-file) ANN: KMeans-partition the corpus into cells,
     search each query only in its ``n_probe`` nearest cells, exact cosine
@@ -588,11 +567,8 @@ def ivf_topk(
     via :func:`ivf_assign`) — equal to it by construction, which
     tests/test_ivf_index.py pins.
     """
-    centers, assigned = ivf_build(embeddings, n_cells, seed, vec_col, id_col)
-    return ivf_topk_indexed(
-        assigned, centers, queries, k=k, n_probe=n_probe,
-        vec_col=vec_col, id_col=id_col,
-    )
+    centers, assigned = ivf_build(embeddings, n_cells, 42)
+    return ivf_topk_indexed(assigned, centers, queries, k=k, n_probe=n_probe)
 
 
 def lsh_bucketed_topk(
@@ -600,10 +576,7 @@ def lsh_bucketed_topk(
     k: int = 10,
     dim: int = 64,
     n_planes: int = 8,
-    seed: int = 42,
     n_tables: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """ANN: exact rerank within sign-LSH buckets.
 
@@ -636,21 +609,21 @@ def lsh_bucketed_topk(
     """
     if n_tables < 1:
         raise ValueError(f"n_tables must be >= 1, got {n_tables}")
-    embeddings = valid_vectors(embeddings, vec_col)
+    embeddings = valid_vectors(embeddings)
     keys = None
     for ti in range(n_tables):
-        kt = sign_lsh_keys(
-            embeddings, dim, n_planes, seed + ti, vec_col, id_col
-        ).withColumn("_table", F.lit(ti))
+        kt = sign_lsh_keys(embeddings, dim, n_planes, 42 + ti).withColumn(
+            "_table", F.lit(ti)
+        )
         keys = kt if keys is None else keys.unionByName(kt)
-    keyed = embeddings.join(keys, id_col)
+    keyed = embeddings.join(keys, "vec_id")
     a = keyed.select(
-        "_table", "bucket", F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
+        "_table", "bucket", F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
     )
     b = keyed.select(
-        "_table", "bucket", F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
+        "_table", "bucket", F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
     )
     sims = (
         a.join(b, ["_table", "bucket"])
@@ -772,7 +745,6 @@ def cosine_threshold_pairs(
     embeddings: DataFrame,
     threshold: float,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Undirected (id1 < id2) vector pairs with 4-dec-rounded cosine >=
     ``threshold`` — the edge stage of semantic deduplication.
@@ -788,10 +760,10 @@ def cosine_threshold_pairs(
     # stage — same doubles as computing them per pair (sqrt of the same
     # fold), so the 4-dec-rounded cosine is unchanged, but each pair
     # folds only the dot product instead of dot + two norms
-    embeddings = valid_vectors(embeddings, vec_col)
+    embeddings = valid_vectors(embeddings)
     v = embeddings.select(
         F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_e"),
+        F.col("embedding").cast("array<double>").alias("_e"),
     ).withColumn("_n", norm(F.col("_e")))
     a = v.select(
         F.col("_id").alias("id1"), F.col("_e").alias("_e1"), F.col("_n").alias("_n1")
@@ -857,21 +829,17 @@ def semantic_dedup_groups(
     )
 
 
-def shingle_hash_embeddings(
-    docs: DataFrame,
-    n_buckets: int = 128,
-    n: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
+def shingle_hash_embeddings(docs: DataFrame) -> DataFrame:
     """Hashed bag-of-shingles document "embedding": each distinct word
-    n-gram is md5-hashed (portable 60-bit arithmetic, DuckDB-reproducible)
-    into one of ``n_buckets`` buckets; the embedding is the per-bucket
+    :data:`SEMANTIC_SHINGLE_N`-gram of ``text`` is md5-hashed (portable
+    60-bit arithmetic, DuckDB-reproducible) into one of
+    :data:`SEMANTIC_BUCKETS` buckets; the embedding is the per-bucket
     count vector.  Output: (doc_id, embedding array<double>).
 
     Entirely map-side — the shingle array, the bucket assignments, and the
     count fold all happen inside the row with higher-order array
     functions; zero shuffles, so at 100 TB this costs one scan's IO.  The
-    per-row CPU is O(n_buckets x |shingles|) integer compares (the dense
+    per-row CPU is O(buckets x |shingles|) integer compares (the dense
     histogram is built by one size(filter(..)) per bucket) on top of ONE
     md5 pass over the shingles.  Getting to "one md5 pass" is
     load-bearing (r12): higher-order functions are interpreted with no
@@ -890,17 +858,18 @@ def shingle_hash_embeddings(
     shuffle, true O(|shingles|)), not a cleverer in-row expression: the
     in-row alternatives (map-accumulate, distinct-then-count) have the
     same quadratic term through Spark's O(k) map lookups.  Docs with
-    fewer than ``n`` tokens get the all-zero vector (no shingles).
+    fewer than :data:`SEMANTIC_SHINGLE_N` tokens get the all-zero vector
+    (no shingles).
     """
     from puma_matcher_spark.llmdata.dedup import portable_hash60, shingle_arrays
 
-    base = shingle_arrays(docs, n=n, text_col=text_col)
+    base = shingle_arrays(docs, n=SEMANTIC_SHINGLE_N)
     buckets = F.transform(
         F.col("shingle_arr"),
-        lambda s: (portable_hash60(s) % F.lit(n_buckets)).cast("int"),
+        lambda s: (portable_hash60(s) % F.lit(SEMANTIC_BUCKETS)).cast("int"),
     )
     hist = F.transform(
-        F.sequence(F.lit(0), F.lit(n_buckets - 1)),
+        F.sequence(F.lit(0), F.lit(SEMANTIC_BUCKETS - 1)),
         lambda b: F.size(F.filter(F.col("_bk"), lambda x: x == b)).cast(
             "double"
         ),
@@ -915,20 +884,15 @@ def shingle_hash_embeddings(
     )
 
 
-def shared_shingle_pairs(
-    docs: DataFrame,
-    df_cap: int = 64,
-    n: int = 3,
-    text_col: str = "text",
-    min_shared: int = 2,
-) -> DataFrame:
+def shared_shingle_pairs(docs: DataFrame) -> DataFrame:
     """Candidate near-duplicate pairs: documents sharing at least
-    ``min_shared`` *rare* shingles (document frequency <= ``df_cap``).
+    :data:`MIN_SHARED_SHINGLES` *rare* shingles (document frequency <=
+    :data:`RARE_SHINGLE_DF_CAP`).
     One window pass to tag frequencies + one self equi-join on the
     shingle key, reusing the same hash partitioning — never an all-pairs
     product.
 
-    ``min_shared=2`` is the incidental-collision filter: NEAR-duplicates
+    Two shared shingles is the incidental-collision filter: NEAR-duplicates
     share their whole content's worth of rare shingles (every true pair
     in the fixtures shares >= 8), while a random pair on a vocabulary-
     saturated corpus shares 0-1 by chance — requiring 2 cut the sf0.1
@@ -937,15 +901,15 @@ def shared_shingle_pairs(
     (zero extra shuffle).
 
     Scale shape: candidate volume is sum(df^2) over rare shingles —
-    bounded by ``df_cap`` x the shingle-row count, linear in the corpus —
+    bounded by the df cap x the shingle-row count, linear in the corpus —
     and the df cap excises boilerplate shingles exactly like the
     entity-frequency guard (EntitiesMatcherV2.scala:44-52) excises hub
     entities.  The completeness CONTRACT the cap sets: a near-dup group of
-    G documents shares shingles with df ≈ G, so groups up to ~``df_cap``
+    G documents shares shingles with df ≈ G, so groups up to ~64
     members are found (the 10x stress plants 8-doc clusters and finds all
     of them); a mega-group whose every shared shingle exceeds the cap is
     deliberately out of scope — byte-identical boilerplate belongs to the
-    exact-dedup pass, and df_cap=64 costs nothing extra at the fixtures
+    exact-dedup pass, and the cap of 64 costs nothing extra at the fixtures
     (their df histogram tops out below 50, so 64 == uncapped there).
     Fixture margin: every true pair shares >= 8 rare shingles (gate in
     tests/test_semantic_blocked.py).
@@ -953,7 +917,7 @@ def shared_shingle_pairs(
     from puma_matcher_spark.functions.caching import persist_rotating
     from puma_matcher_spark.llmdata.dedup import shingles
 
-    sh = shingles(docs, n=n, text_col=text_col)
+    sh = shingles(docs, n=SEMANTIC_SHINGLE_N)
     w = Window.partitionBy("shingle")
     # persisted (r11): the equi-join's two sides otherwise re-derive the
     # tokenize→shingle explode→df window chain once EACH (the planner
@@ -961,7 +925,7 @@ def shared_shingle_pairs(
     # reused across sides) — one scan + one window pass instead of two
     rare = persist_rotating(
         sh.withColumn("_df", F.count(F.lit(1)).over(w))
-        .where(F.col("_df") <= df_cap)
+        .where(F.col("_df") <= RARE_SHINGLE_DF_CAP)
         .select("doc_id", "shingle")
     )
     a = rare.select(F.col("doc_id").alias("id1"), "shingle")
@@ -971,7 +935,7 @@ def shared_shingle_pairs(
         .where(F.col("id1") < F.col("id2"))
         .groupBy("id1", "id2")
         .agg(F.count(F.lit(1)).alias("_n_shared"))
-        .where(F.col("_n_shared") >= min_shared)
+        .where(F.col("_n_shared") >= MIN_SHARED_SHINGLES)
         .select("id1", "id2")
     )
 
@@ -980,11 +944,8 @@ def semantic_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,
     threshold: float = 0.8,
-    n_buckets: int = 128,
-    n: int = 3,
-    df_cap: int = 64,
-    min_shared: int = 2,
-    text_col: str = "text",
+    df_cap: int = RARE_SHINGLE_DF_CAP,
+    min_shared: int = MIN_SHARED_SHINGLES,
 ) -> DataFrame:
     """Embedding-level benchmark-contamination scan — the semantic
     complement of :func:`puma_matcher_spark.llmdata.dedup.contamination_check`:
@@ -1038,8 +999,8 @@ def semantic_contamination(
     # persisted (r11): each side's shingle chain feeds BOTH the global
     # df aggregate and the candidate join — without the persist the
     # tokenize→shingle explode runs twice per frame (4 passes per call)
-    cs = persist_rotating(shingles(corpus, n=n, text_col=text_col))
-    bs = persist_rotating(shingles(benchmark, n=n, text_col=text_col))
+    cs = persist_rotating(shingles(corpus, n=SEMANTIC_SHINGLE_N))
+    bs = persist_rotating(shingles(benchmark, n=SEMANTIC_SHINGLE_N))
     rare = (
         cs.select("doc_id", "shingle")
         .unionAll(bs.select("doc_id", "shingle"))
@@ -1061,7 +1022,7 @@ def semantic_contamination(
         .select("corpus_id", "benchmark_id")
     )
     cv = (
-        shingle_hash_embeddings(corpus, n_buckets=n_buckets, n=n, text_col=text_col)
+        shingle_hash_embeddings(corpus)
         .select(
             F.col("doc_id").alias("corpus_id"),
             F.col("embedding").alias("_ce"),
@@ -1070,7 +1031,7 @@ def semantic_contamination(
         .localCheckpoint()
     )
     bv = (
-        shingle_hash_embeddings(benchmark, n_buckets=n_buckets, n=n, text_col=text_col)
+        shingle_hash_embeddings(benchmark)
         .select(
             F.col("doc_id").alias("benchmark_id"),
             F.col("embedding").alias("_be"),
@@ -1096,11 +1057,6 @@ def semantic_decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
     threshold: float = 0.8,
-    n_buckets: int = 128,
-    n: int = 3,
-    df_cap: int = 64,
-    min_shared: int = 2,
-    text_col: str = "text",
 ) -> DataFrame:
     """The ACTION twin of :func:`semantic_contamination` (mirroring the
     n-gram plane's contamination_check → decontaminate pair): return the
@@ -1108,14 +1064,7 @@ def semantic_decontaminate(
     left-anti join on the flagged corpus ids, so the scan's linear scale
     shape carries over unchanged."""
     flagged = semantic_contamination(
-        corpus,
-        benchmark,
-        threshold=threshold,
-        n_buckets=n_buckets,
-        n=n,
-        df_cap=df_cap,
-        min_shared=min_shared,
-        text_col=text_col,
+        corpus, benchmark, threshold=threshold
     ).select(F.col("corpus_id").alias("doc_id")).distinct()
     return corpus.join(flagged, "doc_id", "left_anti")
 
@@ -1180,14 +1129,7 @@ def centroid_drift(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def semantic_dedup_blocked(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    n_buckets: int = 128,
-    n: int = 3,
-    df_cap: int = 64,
-    text_col: str = "text",
-) -> DataFrame:
+def semantic_dedup_blocked(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """SemDeDup over document text with a *blocked* pair stage — the 100x
     plan: shared-rare-shingle candidates (one equi-join) → exact cosine
     verify on the hashed-shingle embedding → connected components.  Same
@@ -1207,17 +1149,15 @@ def semantic_dedup_blocked(
     lacks and feeds the same CC grouping as the dedup chains
     (PersonDeduplication).
     """
-    emb = shingle_hash_embeddings(
-        docs, n_buckets=n_buckets, n=n, text_col=text_col
-    )
-    cands = shared_shingle_pairs(docs, df_cap=df_cap, n=n, text_col=text_col)
+    emb = shingle_hash_embeddings(docs)
+    cands = shared_shingle_pairs(docs)
     # materialize the embedding+norm table BEFORE the pair join: left as
-    # a lazy expression, Catalyst inlines the O(n_buckets x shingles)
+    # a lazy expression, Catalyst inlines the O(buckets x shingles)
     # embedding construction into the join-side projections and the
     # whole verify collapses into the scan's task — measured minutes vs
     # seconds at sf0.1.  At 100 TB this is the standard "persist the
     # embedding table before similarity passes" step, and the frame is
-    # (n_docs x n_buckets) doubles — the smallest thing in the pipeline.
+    # (n_docs x buckets) doubles — the smallest thing in the pipeline.
     v = emb.select(
         F.col("doc_id").alias("_id"),
         F.col("embedding").alias("_e"),

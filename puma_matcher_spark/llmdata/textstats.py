@@ -47,7 +47,7 @@ def has_tokens(text: Column) -> Column:
     return F.trim(text) != F.lit("")
 
 
-def with_token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_token_stats(docs: DataFrame) -> DataFrame:
     """Token counting + quality scoring (length / distinct-ratio / stopword
     ratio).  The distinct-token ratio is a cheap lexical-diversity proxy;
     the stopword ratio feeds language ID and boilerplate detection.
@@ -57,7 +57,7 @@ def with_token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     and DuckDB's x/0.0 is NULL, so NULL is both the crash fix and the
     cross-engine definition (pinned by the whitespace-zoo parity test).
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     sw = F.array(*[F.lit(s) for s in EN_STOPWORDS])
     n_tokens = F.size(toks)
     n_distinct = F.size(F.array_distinct(toks))
@@ -65,7 +65,7 @@ def with_token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select(
         "doc_id",
         n_tokens.cast("long").alias("token_count"),
-        F.length(text_col).cast("long").alias("char_count"),
+        F.length("text").cast("long").alias("char_count"),
         F.when(n_tokens > 0, pround(n_distinct / n_tokens, 4)).alias(
             "distinct_ratio"
         ),
@@ -93,27 +93,24 @@ def english_stopword_ratio(text_col: Column) -> Column:
     )
 
 
-def lang_id_label(text_col: Column, threshold: float = LANG_ID_THRESHOLD) -> Column:
-    """'en' / 'unk' label from :func:`english_stopword_ratio`."""
+def lang_id_label(text_col: Column) -> Column:
+    """'en' when :func:`english_stopword_ratio` reaches
+    ``LANG_ID_THRESHOLD``, else 'unk'."""
     return (
-        F.when(english_stopword_ratio(text_col) >= threshold, F.lit("en"))
+        F.when(english_stopword_ratio(text_col) >= LANG_ID_THRESHOLD, F.lit("en"))
         .otherwise(F.lit("unk"))
     )
 
 
-def with_lang_id(
-    docs: DataFrame,
-    text_col: str = "text",
-    threshold: float = LANG_ID_THRESHOLD,
-) -> DataFrame:
+def with_lang_id(docs: DataFrame) -> DataFrame:
     """Heuristic language ID: English function-word hit ratio."""
     return docs.select(
         "doc_id",
-        lang_id_label(F.col(text_col), threshold).alias("predicted_lang"),
+        lang_id_label(F.col("text")).alias("predicted_lang"),
     )
 
 
-def with_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprint: md5 of the lower-cased, whitespace-normalised
     text (the exact-dedup key).  At 100 TB this is the map-side-cheapest
     possible content key — one pass, no shuffle until the dedup groupBy.
@@ -127,10 +124,10 @@ def with_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     exact-matches a corpus doc through the NULL key in the incremental
     anti-join, while GROUP BY still folds NULLs into one audit group on
     both engines."""
-    normalised = F.concat_ws(" ", tokens(F.lower(F.col(text_col))))
+    normalised = F.concat_ws(" ", tokens(F.lower(F.col("text"))))
     return docs.select(
         "doc_id",
-        F.when(has_tokens(F.col(text_col)), F.md5(normalised)).alias(
+        F.when(has_tokens(F.col("text")), F.md5(normalised)).alias(
             "fingerprint"
         ),
     )
@@ -147,7 +144,7 @@ QUALITY_THRESHOLDS = {
 }
 
 
-def with_quality_flags(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality_flags(docs: DataFrame) -> DataFrame:
     """Heuristic document-quality filter for pre-training curation
     (Gopher-rules shape): token count, mean word length, duplicate-bigram
     fraction (repetition proxy) and symbol-to-char ratio, plus a
@@ -156,8 +153,8 @@ def with_quality_flags(docs: DataFrame, text_col: str = "text") -> DataFrame:
     t = QUALITY_THRESHOLDS
     d = docs.select(
         "doc_id",
-        F.col(text_col).alias("_text"),
-        tokens(F.lower(F.col(text_col))).alias("_tk"),
+        F.col("text").alias("_text"),
+        tokens(F.lower(F.col("text"))).alias("_tk"),
     )
     # bigrams via zip_with over shifted slices (empty when < 2 tokens)
     d = d.withColumn(
@@ -223,7 +220,7 @@ def with_quality_flags(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def source_mix(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def source_mix(docs: DataFrame) -> DataFrame:
     """Per-source corpus mix report: document and token counts plus each
     source's share of total tokens.  One hash aggregate; the global-share
     window runs over the already-aggregated per-source frame (rows =
@@ -232,7 +229,7 @@ def source_mix(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     agg = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size(tokens(F.lower(F.col(text_col))))).cast("long").alias("n_tokens"),
+        F.sum(F.size(tokens(F.lower(F.col("text"))))).cast("long").alias("n_tokens"),
     )
     w = Window.partitionBy()
     return agg.select(
@@ -260,7 +257,7 @@ def ngram_array(col: str, n: int) -> Column:
     )
 
 
-def repetition_metrics(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_metrics(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document (beyond the simple
     distinct-bigram ratio in :func:`with_quality_flags`):
 
@@ -278,7 +275,7 @@ def repetition_metrics(docs: DataFrame, text_col: str = "text") -> DataFrame:
     roll-ups, all shuffle-partitioned by doc/gram; nothing driver-side.
     """
     base = docs.select(
-        "doc_id", tokens(F.lower(F.col(text_col))).alias("_tk")
+        "doc_id", tokens(F.lower(F.col("text"))).alias("_tk")
     )
 
     bgc = (
@@ -340,9 +337,7 @@ def repetition_metrics(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def vocab_topk(
-    docs: DataFrame, k: int = 100, n: int = 2, text_col: str = "text"
-) -> DataFrame:
+def vocab_topk(docs: DataFrame, k: int = 100, n: int = 2) -> DataFrame:
     """Corpus-wide top-k word n-gram vocabulary with a deterministic
     (count desc, gram asc) order — the first step of building a tokenizer
     merge table or a boilerplate blocklist from the corpus itself.
@@ -354,7 +349,7 @@ def vocab_topk(
     """
     from pyspark.sql import Window
 
-    base = docs.select(tokens(F.lower(F.col(text_col))).alias("_tk"))
+    base = docs.select(tokens(F.lower(F.col("text"))).alias("_tk"))
     counts = (
         base.select(F.explode(ngram_array("_tk", n)).alias("gram"))
         .groupBy("gram")
@@ -377,7 +372,7 @@ def vocab_topk(
 BPE_TOKEN_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 
 
-def char_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def char_entropy(docs: DataFrame) -> DataFrame:
     """Shannon entropy of the character distribution per document — the
     cheap compressibility proxy for boilerplate/garbage detection (very
     low entropy → repeated filler; very high → binary noise in text
@@ -389,7 +384,7 @@ def char_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id",
         F.explode(
             F.filter(
-                F.split(F.col(text_col), "(?!^)"), lambda c: c != F.lit("")
+                F.split(F.col("text"), "(?!^)"), lambda c: c != F.lit("")
             )
         ).alias("c"),
     )
@@ -407,7 +402,7 @@ def char_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document mean unigram log-probability under the corpus's own
     token distribution — the cheap perplexity proxy used to rank
     documents by "typicality" (very low → noise/garbage; very high →
@@ -419,7 +414,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     shuffle-partitioned, nothing driver-side.
     Output: (doc_id, n_tokens, avg_logprob)."""
     toks = docs.select(
-        "doc_id", F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
+        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok")
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     gf = tf.groupBy("tok").agg(F.sum("tf").alias("gf"))
@@ -433,7 +428,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def bigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document mean add-one-smoothed bigram conditional
     log-probability under the corpus's own bigram model — the stronger
     perplexity proxy (:func:`unigram_logprob` scores typicality of the
@@ -453,7 +448,7 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from pyspark.sql.window import Window
 
     toks = docs.select(
-        "doc_id", F.posexplode(tokens(F.lower(F.col(text_col))))
+        "doc_id", F.posexplode(tokens(F.lower(F.col("text"))))
     ).select("doc_id", F.col("pos"), F.col("col").alias("tok"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     big = (
@@ -481,9 +476,7 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def xcorpus_bigram_logprob(
-    train_docs: DataFrame, score_docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def xcorpus_bigram_logprob(train_docs: DataFrame, score_docs: DataFrame) -> DataFrame:
     """Cross-corpus perplexity proxy — the CCNet/data-selection setup:
     fit the add-one-smoothed bigram model on a TRUSTED corpus
     (``train_docs``), score a CANDIDATE corpus (``score_docs``) under
@@ -505,7 +498,7 @@ def xcorpus_bigram_logprob(
 
     def _bigrams(docs: DataFrame) -> DataFrame:
         toks = docs.select(
-            "doc_id", F.posexplode(tokens(F.lower(F.col(text_col))))
+            "doc_id", F.posexplode(tokens(F.lower(F.col("text"))))
         ).select("doc_id", F.col("pos"), F.col("col").alias("tok"))
         w = Window.partitionBy("doc_id").orderBy("pos")
         return (
@@ -515,7 +508,7 @@ def xcorpus_bigram_logprob(
         )
 
     train_toks = train_docs.select(
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok")
     )
     uf = train_toks.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("c1"))
     bf = _bigrams(train_docs).groupBy("tok", "nxt").agg(
@@ -546,20 +539,20 @@ def xcorpus_bigram_logprob(
     )
 
 
-def with_bpe_token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_bpe_token_count(docs: DataFrame) -> DataFrame:
     """Token counting for training-data budgeting: whitespace words plus
     a BPE-ish pre-tokenizer count (the unit LLM data pipelines budget
     by).  Pure ``regexp_extract_all`` — map-side, no shuffle, linear at
     any corpus size."""
-    pieces = F.regexp_extract_all(F.col(text_col), F.lit(BPE_TOKEN_RE), 0)
+    pieces = F.regexp_extract_all(F.col("text"), F.lit(BPE_TOKEN_RE), 0)
     return docs.select(
         "doc_id",
-        F.size(tokens(F.col(text_col))).cast("long").alias("word_count"),
+        F.size(tokens(F.col("text"))).cast("long").alias("word_count"),
         F.size(pieces).cast("long").alias("bpe_token_count"),
     )
 
 
-def bpe_top_merges(docs: DataFrame, k: int = 50, text_col: str = "text") -> DataFrame:
+def bpe_top_merges(docs: DataFrame, k: int = 50) -> DataFrame:
     """Top-k BPE merge candidates: corpus-wide counts of adjacent
     character pairs, weighted by word frequency — the inner-loop
     statistic of byte-pair-encoding tokenizer training (the classic
@@ -573,7 +566,7 @@ def bpe_top_merges(docs: DataFrame, k: int = 50, text_col: str = "text") -> Data
     from pyspark.sql.window import Window
 
     toks = docs.select(
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     pairs = vocab.select(
@@ -604,9 +597,7 @@ def bpe_top_merges(docs: DataFrame, k: int = 50, text_col: str = "text") -> Data
     )
 
 
-def ngram_novelty(
-    docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def ngram_novelty(docs: DataFrame, n: int = 3) -> DataFrame:
     """Per-document n-gram novelty against everything EARLIER in the
     corpus (doc-id order): the fraction of a document's distinct word
     n-grams whose first corpus occurrence is this document.  The
@@ -629,7 +620,7 @@ def ngram_novelty(
     # aggregate and the per-doc counts each see a (doc, shingle) once
     sh = (
         docs.select(
-            F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("__tk")
+            "doc_id", tokens(F.col("text")).alias("__tk")
         )
         .select(
             "doc_id", F.array_distinct(ngram_array("__tk", n)).alias("__shs")
@@ -662,9 +653,7 @@ def ngram_novelty(
     )
 
 
-def vocab_coverage(
-    docs: DataFrame, ks: tuple = (100, 500, 2000), text_col: str = "text"
-) -> DataFrame:
+def vocab_coverage(docs: DataFrame, ks: tuple = (100, 500, 2000)) -> DataFrame:
     """Tokenizer design metric: the share of all token OCCURRENCES that a
     top-k vocabulary covers, for each candidate k — the curve that decides
     how large a wordpiece/BPE vocab needs to be before <unk> rates are
@@ -683,7 +672,7 @@ def vocab_coverage(
     from puma_matcher_spark.functions.rounding import pround
 
     counts = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("tok"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
@@ -728,7 +717,7 @@ def vocab_coverage(
     )
 
 
-def vocab_drift(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def vocab_drift(docs: DataFrame) -> DataFrame:
     """Distribution-shift monitor between the even- and odd-doc_id halves
     of the corpus: add-one-smoothed unigram distributions over the union
     vocabulary, symmetric KL divergences — the drift alarm a rolling
@@ -742,7 +731,7 @@ def vocab_drift(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     tok = docs.select(
         (F.col("doc_id") % 2 == 0).alias("even"),
-        F.explode(tokens(F.col(text_col))).alias("tok"),
+        F.explode(tokens(F.col("text"))).alias("tok"),
     )
     per = tok.groupBy("tok").agg(
         F.sum(F.when(F.col("even"), 1).otherwise(0)).cast("long").alias("c_even"),
@@ -776,12 +765,7 @@ def vocab_drift(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def pmi_bigrams(
-    docs: DataFrame,
-    min_count: int = 5,
-    k: int = 50,
-    text_col: str = "text",
-) -> DataFrame:
+def pmi_bigrams(docs: DataFrame, min_count: int = 5, k: int = 50) -> DataFrame:
     """Top-k adjacent-word collocations by pointwise mutual information
     (Church & Hanks 1990): pmi(a,b) = ln(p(ab) / (p(a)·p(b))) with
     p(ab) = c(ab)/N_bigrams and p(w) = c(w)/N_tokens — the corpus-
@@ -807,7 +791,7 @@ def pmi_bigrams(
     # counts, and fold both corpus scalars into aggregates over the caches:
     # n_uni == sum of unigram counts, n_bi == sum over docs of
     # max(len-1, 0) adjacent pairs — identical values, one tokenize pass.
-    toks = persist_rotating(docs.select(tokens(F.col(text_col)).alias("_tk")))
+    toks = persist_rotating(docs.select(tokens(F.col("text")).alias("_tk")))
     uni = toks.select(F.explode("_tk").alias("w"))
     uc = persist_rotating(
         uni.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("c"))

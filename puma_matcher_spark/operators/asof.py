@@ -30,19 +30,15 @@ def asof_join(
     right: DataFrame,
     on: str = "user_id",
     ts: str = "ts",
-    right_cols: list[str] | None = None,
-    prefix: str = "asof_",
 ) -> DataFrame:
     """Left as-of join: every ``left`` row, plus the latest ``right`` row
     with ``right.ts <= left.ts`` for the same ``on`` key (nulls when no
     prior right row exists).
 
-    ``right_cols``: payload columns carried over from the right side
-    (default: every non-key, non-ts column), each emitted as
-    ``{prefix}{col}``; ``{prefix}ts`` always carries the matched time.
+    Every non-key, non-ts column of ``right`` is carried over as
+    ``asof_{col}``; ``asof_{ts}`` always carries the matched time.
     """
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in (on, ts)]
+    right_cols = [c for c in right.columns if c not in (on, ts)]
 
     # one right row per (key, ts): keep the max payload tuple, so the
     # carried value is deterministic under ts collisions.  Right payload
@@ -70,12 +66,12 @@ def asof_join(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = unioned.withColumn(
-        f"{prefix}{ts}",
+        f"asof_{ts}",
         F.last(F.when(F.col("_side") == 0, F.col(ts)), ignorenulls=True).over(w),
     )
     for c in right_cols:
         carried = carried.withColumn(
-            f"{prefix}{c}",
+            f"asof_{c}",
             F.last(
                 F.when(F.col("_side") == 0, F.col(f"_r_{c}")), ignorenulls=True
             ).over(w),

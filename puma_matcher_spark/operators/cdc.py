@@ -16,8 +16,9 @@ canonical materialisations:
   version — two windows over ONE shuffle (same partitioning + ordering,
   Spark reuses the sort).
 
-Both use a total order of ``(ts, seq)`` so replays and ties are
-deterministic.  Validity bounds are exposed as epoch seconds (BIGINT)
+Both read the events changelog columns: key ``user_id``, attribute
+``event_type``, and a total order of ``(ts, event_id)`` so replays and
+ties are deterministic.  Validity bounds are exposed as epoch seconds (BIGINT)
 — engine-portable, no timestamp-zone ambiguity in the hash compare.
 """
 
@@ -28,22 +29,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def cdc_latest_state(
-    changes: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    seq: str = "event_id",
-    delete_when=None,
-) -> DataFrame:
-    """Newest-change-wins state: keep the last change per key, drop keys
-    whose last change is a delete.
-
-    ``delete_when`` is a Column predicate marking delete records
-    (default: ``event_type == 'error'`` for the events fixture).
+def cdc_latest_state(changes: DataFrame) -> DataFrame:
+    """Newest-change-wins state: keep the last change per ``user_id``,
+    drop keys whose last change is a delete (``event_type == 'error'``
+    in the events fixture).
     """
-    if delete_when is None:
-        delete_when = F.col("event_type") == "error"
-    w = Window.partitionBy(key).orderBy(F.col(ts).desc(), F.col(seq).desc())
+    delete_when = F.col("event_type") == "error"
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
     return (
         changes.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
@@ -54,55 +48,46 @@ def cdc_latest_state(
     )
 
 
-def scd2_history(
-    changes: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    seq: str = "event_id",
-    attr: str = "event_type",
-) -> DataFrame:
-    """SCD2 version table: one row per run of equal ``attr`` values per
-    key, ordered by (ts, seq).
+def scd2_history(changes: DataFrame) -> DataFrame:
+    """SCD2 version table: one row per run of equal ``event_type`` values
+    per ``user_id``, ordered by (ts, event_id).
 
     Consecutive duplicate values collapse into the earlier version
     (standard changelog compaction); each version's ``valid_to_epoch``
     is the next version's start, NULL on the current one.
     """
-    w = Window.partitionBy(key).orderBy(F.col(ts).asc(), F.col(seq).asc())
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc()
+    )
     opens = (
-        changes.withColumn("_prev", F.lag(attr).over(w))
-        .where(F.col("_prev").isNull() | (F.col("_prev") != F.col(attr)))
+        changes.withColumn("_prev", F.lag("event_type").over(w))
+        .where(F.col("_prev").isNull() | (F.col("_prev") != F.col("event_type")))
         .select(
-            F.col(key),
-            F.col(attr),
-            F.col(ts).alias("_ts"),
-            F.unix_timestamp(ts).cast("long").alias("valid_from_epoch"),
-            F.col(seq).alias("_seq"),
+            F.col("user_id"),
+            F.col("event_type"),
+            F.col("ts").alias("_ts"),
+            F.unix_timestamp("ts").cast("long").alias("valid_from_epoch"),
+            F.col("event_id").alias("_seq"),
         )
     )
-    # version order must be the SAME (ts, seq) order that detected the
+    # version order must be the SAME (ts, event_id) order that detected the
     # runs — ordering by the second-truncated epoch would mis-order two
     # opens landing in the same second when their seq order disagrees
     # with their sub-second time order
-    w2 = Window.partitionBy(key).orderBy(F.col("_ts").asc(), F.col("_seq").asc())
+    w2 = Window.partitionBy("user_id").orderBy(F.col("_ts").asc(), F.col("_seq").asc())
     return opens.select(
-        key,
-        attr,
+        "user_id",
+        "event_type",
         "valid_from_epoch",
         F.lead("valid_from_epoch").over(w2).alias("valid_to_epoch"),
         F.lead("valid_from_epoch").over(w2).isNull().alias("is_current"),
     )
 
 
-def point_in_time_join(
-    facts: DataFrame,
-    history: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-) -> DataFrame:
+def point_in_time_join(facts: DataFrame, history: DataFrame) -> DataFrame:
     """Temporal (point-in-time) join: each fact row picks the dimension
-    version active at its event time — ``valid_from <= t < valid_to``
-    (open version: ``valid_to IS NULL``).
+    version active at its event time ``ts`` for its ``user_id`` —
+    ``valid_from <= t < valid_to`` (open version: ``valid_to IS NULL``).
 
     Scale shape: an equi-join on the key plus a range predicate — the
     shuffle co-locates each key's facts with its (few) versions, so the
@@ -112,7 +97,7 @@ def point_in_time_join(
     """
     # rename the history key before joining: facts and history often
     # share lineage (versions built from the same changelog), and
-    # ``facts[key] == history[key]`` can resolve both sides to the SAME
+    # ``facts.user_id == history.user_id`` can resolve both sides to the SAME
     # attribute — a trivially-true predicate that silently degrades the
     # equi-join to a range-only cross join (see the
     # scd2_apply_increment NOTE for the same hazard in unions)
@@ -121,14 +106,14 @@ def point_in_time_join(
     # point-in-time join being joined to a second dimension) would make
     # the bare column references ambiguous
     h = (
-        history.withColumnRenamed(key, "_h_key")
+        history.withColumnRenamed("user_id", "_h_key")
         .withColumnRenamed("valid_from_epoch", "_h_vf")
         .withColumnRenamed("valid_to_epoch", "_h_vt")
     )
-    t_epoch = F.unix_timestamp(F.col(ts)).cast("long")
+    t_epoch = F.unix_timestamp(F.col("ts")).cast("long")
     joined = facts.join(
         h,
-        (F.col(key) == F.col("_h_key"))
+        (F.col("user_id") == F.col("_h_key"))
         & (t_epoch >= F.col("_h_vf"))
         & (F.col("_h_vt").isNull() | (t_epoch < F.col("_h_vt"))),
     ).drop("_h_key")

@@ -18,58 +18,41 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def context_words(
-    tokens: DataFrame,
-    k: int = 3,
-    doc_col: str = "document_version_id",
-    pos_col: str = "pos",
-    word_col: str = "word",
-) -> DataFrame:
+def context_words(tokens: DataFrame, k: int = 3) -> DataFrame:
     """For every token position, the ±k surrounding words (inclusive of
     the token itself), in position order."""
     w = (
-        Window.partitionBy(doc_col)
-        .orderBy(pos_col)
+        Window.partitionBy("document_version_id")
+        .orderBy("pos")
         .rowsBetween(-k, k)
     )
-    return tokens.withColumn("context", F.collect_list(word_col).over(w))
+    return tokens.withColumn("context", F.collect_list("word").over(w))
 
 
-def mention_contexts(
-    tokens: DataFrame,
-    targets: list[str],
-    k: int = 3,
-    doc_col: str = "document_version_id",
-    pos_col: str = "pos",
-    word_col: str = "word",
-) -> DataFrame:
+def mention_contexts(tokens: DataFrame, targets: list[str], k: int = 3) -> DataFrame:
     """Contexts only around target-word mentions (instrument-code style).
 
     The frame is computed over consecutive positions, so a document gap-
     free position column is assumed (posexplode output qualifies).
     """
-    ctx = context_words(tokens, k, doc_col, pos_col, word_col)
+    ctx = context_words(tokens, k)
     tgt = F.array(*[F.lit(t) for t in targets])
-    return ctx.where(F.array_contains(tgt, F.col(word_col))).select(
-        doc_col, pos_col, word_col, "context"
+    return ctx.where(F.array_contains(tgt, F.col("word"))).select(
+        "document_version_id", "pos", "word", "context"
     )
 
 
-def top_context_words(
-    mentions: DataFrame,
-    top_n: int = 20,
-    target_col: str = "word",
-) -> DataFrame:
+def top_context_words(mentions: DataFrame, top_n: int = 20) -> DataFrame:
     """W4 — most frequent context words per target
     (AdvancedInstrumentAnalyser.scala:611-612: rank over count desc,
     top-20 close words per instrument)."""
     exploded = mentions.select(
-        target_col, F.explode("context").alias("ctx_word")
-    ).where(F.col("ctx_word") != F.col(target_col))
-    counts = exploded.groupBy(target_col, "ctx_word").agg(
+        "word", F.explode("context").alias("ctx_word")
+    ).where(F.col("ctx_word") != F.col("word"))
+    counts = exploded.groupBy("word", "ctx_word").agg(
         F.count(F.lit(1)).alias("n")
     )
-    w = Window.partitionBy(target_col).orderBy(
+    w = Window.partitionBy("word").orderBy(
         F.col("n").desc(), F.col("ctx_word").asc()
     )
     return (

@@ -87,13 +87,13 @@ def fold_diacritics(s: Column) -> Column:
     return F.when(s.isNotNull(), F.regexp_replace(nfd, _icu_marks(), ""))
 
 
-def clean_names(persons: DataFrame, name_col: str = "name") -> DataFrame:
+def clean_names(persons: DataFrame) -> DataFrame:
     """Cleaning chain: trim, collapse whitespace, lowercase, fold
     diacritics (:func:`fold_diacritics`, on the JVM, so it starts no
     Python worker), strip dotted initials; adds a ``blocking_key``
     (first token + last token — the reference's ``first_lastname``)."""
     cleaned = F.regexp_replace(
-        F.regexp_replace(F.lower(F.trim(F.col(name_col))), r"\b\w\.", " "),
+        F.regexp_replace(F.lower(F.trim(F.col("name"))), r"\b\w\.", " "),
         r"\s+",
         " ",
     )
@@ -119,7 +119,6 @@ BLOCKED_PAIRS_MAX = 50_000_000
 def blocked_pairs(
     persons: DataFrame,
     key_col: str = "blocking_key",
-    id_col: str = "id",
     max_pairs: int = BLOCKED_PAIRS_MAX,
 ) -> DataFrame:
     """J10 — candidate duplicate pairs within a blocking key.
@@ -167,8 +166,8 @@ def blocked_pairs(
             "max_pairs explicitly if the cluster's capacity covers the "
             "quadratic."
         )
-    a = persons.select(F.col(key_col).alias("k"), F.col(id_col).alias("id1"))
-    b = persons.select(F.col(key_col).alias("k"), F.col(id_col).alias("id2"))
+    a = persons.select(F.col(key_col).alias("k"), F.col("id").alias("id1"))
+    b = persons.select(F.col(key_col).alias("k"), F.col("id").alias("id2"))
     return (
         a.join(b, "k")
         .where(F.col("id1") > F.col("id2"))
@@ -181,12 +180,11 @@ def edit_distance_pairs(
     id_col: str,
     name_col: str,
     max_dist: int = 4,
-    block_col=None,
     max_block: int | None = None,
 ) -> DataFrame:
     """Blocked Levenshtein near-match join: candidate pairs share a blocking
-    key (default: the last whitespace token of the name — for noun-final
-    labels the head word), then the JVM ``levenshtein`` expression scores
+    key (the last whitespace token of the name — for noun-final labels
+    the head word), then the JVM ``levenshtein`` expression scores
     each candidate and ``max_dist`` filters.
 
     The blocking key is what makes this survive scale — the join is an
@@ -199,10 +197,7 @@ def edit_distance_pairs(
     .scala:129-135); this operator is the edit-tolerant variant a linkage
     pipeline needs when keys don't normalise identically.
     """
-    if block_col is None:
-        key = F.element_at(F.split(F.col(name_col), " "), -1)
-    else:
-        key = F.col(block_col) if isinstance(block_col, str) else block_col
+    key = F.element_at(F.split(F.col(name_col), " "), -1)
     side = df.select(
         F.col(id_col), F.col(name_col), key.alias("_block")
     )
@@ -470,9 +465,7 @@ def _cc_loop(sym: DataFrame, max_iterations: int) -> DataFrame:
     return labels.select("id", "component")
 
 
-def component_argmax(
-    comp: DataFrame, scores: DataFrame, id_col: str = "id"
-) -> DataFrame:
+def component_argmax(comp: DataFrame, scores: DataFrame) -> DataFrame:
     """Pick the best-scoring member of each component: (component,
     rep_id), deterministic via (score DESC NULLS LAST, id ASC) — the
     representative-selection step for quality-aware dedup, where the
@@ -490,23 +483,23 @@ def component_argmax(
     canonical (r8 ADVICE #3).
     """
     w = Window.partitionBy("component").orderBy(
-        F.col("score").desc_nulls_last(), F.col(id_col).asc()
+        F.col("score").desc_nulls_last(), F.col("id").asc()
     )
     return (
-        comp.join(scores, id_col, "left")
+        comp.join(scores, "id", "left")
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .select("component", F.col(id_col).alias("rep_id"))
+        .select("component", F.col("id").alias("rep_id"))
     )
 
 
-def dedup_lookup(persons: DataFrame, edges: DataFrame, id_col: str = "id") -> DataFrame:
+def dedup_lookup(persons: DataFrame, edges: DataFrame) -> DataFrame:
     """(lookup_id, person_id) canonical lookup — every person maps to its
     component min-id; singletons map to themselves
     (PersonDeduplicationStage.scala:162-164)."""
     comp = connected_components(edges)
     return (
-        persons.select(F.col(id_col).alias("person_id"))
+        persons.select(F.col("id").alias("person_id"))
         .join(comp.withColumnRenamed("id", "person_id"), "person_id", "left")
         .select(
             F.coalesce("component", "person_id").alias("lookup_id"), "person_id"
@@ -560,7 +553,6 @@ def fs_linkage_weights(
     pairs: DataFrame,
     fields: list[str],
     m_prob: float = 0.9,
-    id_col: str = "id",
 ) -> DataFrame:
     """Fellegi-Sunter linkage scoring over blocked candidate pairs.
 
@@ -593,10 +585,10 @@ def fs_linkage_weights(
         for f in fields
     }
     side1 = persons.select(
-        F.col(id_col).alias("id1"), *[F.col(f).alias(f"{f}_1") for f in fields]
+        F.col("id").alias("id1"), *[F.col(f).alias(f"{f}_1") for f in fields]
     )
     side2 = persons.select(
-        F.col(id_col).alias("id2"), *[F.col(f).alias(f"{f}_2") for f in fields]
+        F.col("id").alias("id2"), *[F.col(f).alias(f"{f}_2") for f in fields]
     )
     scored = pairs.join(side1, "id1").join(side2, "id2")
     weight_cols = []
@@ -617,13 +609,12 @@ def fs_linkage_weights(
     return out.withColumn("total_weight", pround(total, 4))
 
 
-def fs_em_parameters(
-    persons: DataFrame,
-    pairs: DataFrame,
-    fields: list[str],
-    iters: int = 25,
-    id_col: str = "id",
-):
+#: EM rounds of :func:`fs_em_parameters`; ``queries._fs_em_oracle``
+#: unrolls the same number in its DuckDB twin.
+FS_EM_ITERATIONS = 25
+
+
+def fs_em_parameters(persons: DataFrame, pairs: DataFrame, fields: list[str]):
     """Unsupervised EM fit of the Fellegi-Sunter m/u parameters
     (Winkler's classical procedure), scalable the textbook way: the
     cluster reduces the pair set to AGREEMENT-PATTERN sufficient
@@ -635,10 +626,10 @@ def fs_em_parameters(
     EM-fitted replacement for :func:`fs_linkage_weights`' fixed priors.
     """
     side1 = persons.select(
-        F.col(id_col).alias("id1"), *[F.col(f).alias(f"{f}_1") for f in fields]
+        F.col("id").alias("id1"), *[F.col(f).alias(f"{f}_1") for f in fields]
     )
     side2 = persons.select(
-        F.col(id_col).alias("id2"), *[F.col(f).alias(f"{f}_2") for f in fields]
+        F.col("id").alias("id2"), *[F.col(f).alias(f"{f}_2") for f in fields]
     )
     agree_cols = [
         (
@@ -664,7 +655,7 @@ def fs_em_parameters(
     m = np.full(len(fields), 0.9)
     u = np.full(len(fields), 0.1)
     p = 0.05
-    for _ in range(iters):
+    for _ in range(FS_EM_ITERATIONS):
         pm = p * np.prod(m**gamma * (1 - m) ** (1 - gamma), axis=1)
         pu = (1 - p) * np.prod(u**gamma * (1 - u) ** (1 - gamma), axis=1)
         w = pm / (pm + pu)

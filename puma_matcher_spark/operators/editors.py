@@ -12,14 +12,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hundred_match_editor(
-    candidates: DataFrame, certain_types: list[str], score: float = 100.0
-) -> DataFrame:
-    """Force the score of certain-match types to ``score``."""
+def hundred_match_editor(candidates: DataFrame, certain_types: list[str]) -> DataFrame:
+    """Force the score of certain-match types to 100."""
     types = F.array(*[F.lit(t) for t in certain_types])
     return candidates.withColumn(
         "score",
-        F.when(F.array_contains(types, F.col("score_type")), F.lit(score)).otherwise(
+        F.when(F.array_contains(types, F.col("score_type")), F.lit(100.0)).otherwise(
             F.col("score")
         ),
     )

@@ -17,11 +17,10 @@ from puma_matcher_spark.functions.frames import local_frame
 from puma_matcher_spark.functions.rounding import pround
 
 
-def funnel_counts(
-    events: DataFrame, steps: tuple[str, ...] = ("view", "click", "purchase")
-) -> DataFrame:
-    """Strictly-ordered funnel: a user reaches step k only with an event
-    of type ``steps[k]`` at-or-after their step-(k-1) arrival time.
+def funnel_counts(events: DataFrame) -> DataFrame:
+    """Strictly-ordered view → click → purchase funnel: a user reaches
+    step k only with an event of type ``steps[k]`` at-or-after their
+    step-(k-1) arrival time.
 
     Implementation: per-step conditional min-timestamp chained through
     ``user_id`` joins — k tiny aggregates over the type-filtered slices,
@@ -32,6 +31,7 @@ def funnel_counts(
     (step_index, step, n_users).
     """
     spark = events.sparkSession
+    steps = ("view", "click", "purchase")
     reached = (
         events.where(F.col("event_type") == steps[0])
         .groupBy("user_id")
@@ -73,20 +73,16 @@ def retention_cohorts(events: DataFrame) -> DataFrame:
     )
 
 
-def population_stability(
-    events: DataFrame,
-    n_buckets: int = 20,
-    bucket_width: float = 25.0,
-) -> DataFrame:
+def population_stability(events: DataFrame) -> DataFrame:
     """Population Stability Index of the ``value`` distribution between
     the first and second halves of the event window — the standard
     production drift monitor (PSI > 0.2 ≈ action threshold), the
     events-plane sibling of the corpus-side ``vocab_drift`` KL alarm.
 
     Deterministic construction so the DuckDB twin is exact: the split
-    point is integer epoch-microsecond midpoint (min+max)//2; buckets
-    are fixed-width on value, capped into the last bucket; densities are
-    add-one smoothed over the dense 0..n_buckets-1 grid (missing buckets
+    point is integer epoch-microsecond midpoint (min+max)//2; 20 buckets
+    of width 25 on value, capped into the last bucket; densities are
+    add-one smoothed over the dense 0..19 grid (missing buckets
     participate with count 0, so log terms are always finite).
 
     Output, long form (one row per bucket): (bucket, n_ref, n_cur,
@@ -96,6 +92,7 @@ def population_stability(
     beyond the aggregate at 100 TB.
     """
     spark = events.sparkSession
+    n_buckets, bucket_width = 20, 25.0
     # ts arrives TIMESTAMP_NTZ; the session runs UTC, so the cast is
     # value-identity and matches DuckDB's naive-as-UTC epoch_us(ts)
     us = F.unix_micros(F.col("ts").cast("timestamp"))

@@ -241,9 +241,14 @@ def edge_nodes(edges: DataFrame) -> DataFrame:
     )
 
 
+#: Damping factor shared by :func:`pagerank` and its DuckDB twin
+#: :func:`pagerank_sql`.
+PAGERANK_DAMPING = 0.85
+
+
 def pagerank(
     edges: DataFrame,
-    damping: float = 0.85,
+    damping: float = PAGERANK_DAMPING,
     n_iter: int = 10,
     round_times: list[float] | None = None,
 ) -> DataFrame:
@@ -582,9 +587,7 @@ def _k_core_loop(
     return degrees(cur)
 
 
-def pagerank_sql(
-    edges_cte: str, damping: float = 0.85, n_iter: int = 10
-) -> str:
+def pagerank_sql(edges_cte: str, n_iter: int = 10) -> str:
     """Generated DuckDB twin of :func:`pagerank` for SYMMETRIZED
     (sink-free, source-free) graphs — the same round-unrolling technique
     as :func:`label_propagation_sql` / :func:`k_core_sql`, applied to
@@ -601,7 +604,8 @@ def pagerank_sql(
 
     Constants are emitted with ``repr`` so DuckDB parses the identical
     IEEE doubles Python/JVM compute (1 - 0.85 is 0.15000000000000002,
-    not 0.15)."""
+    not 0.15).  The damping is :data:`PAGERANK_DAMPING`, the kernel's
+    default."""
     parts = [
         edges_cte,
         "pr_nodes AS (SELECT DISTINCT src AS node FROM edges)",
@@ -611,7 +615,7 @@ def pagerank_sql(
   FROM edges)""",
         "pr0 AS (SELECT node, 1.0 / (SELECT n FROM pr_n) AS rank FROM pr_nodes)",
     ]
-    base, d = repr(1.0 - damping), repr(damping)
+    base, d = repr(1.0 - PAGERANK_DAMPING), repr(PAGERANK_DAMPING)
     for i in range(1, n_iter + 1):
         parts.append(
             f"""pr{i} AS (

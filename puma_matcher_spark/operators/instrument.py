@@ -17,21 +17,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def instrument_mentions(
-    tokens: DataFrame,
-    aliases: DataFrame,
-    doc_col: str = "document_version_id",
-    word_col: str = "word",
-) -> DataFrame:
+def instrument_mentions(tokens: DataFrame, aliases: DataFrame) -> DataFrame:
     """(doc, pos, instrument_id) for every alias token match.
 
     ``aliases``: (instrument_id, alias) — exploded, lower-cased,
     broadcast (instrument dims are tiny).
     """
     dim = aliases.select(
-        F.lower(F.col("alias")).alias(word_col), "instrument_id"
+        F.lower(F.col("alias")).alias("word"), "instrument_id"
     )
-    return tokens.join(F.broadcast(dim), word_col)
+    return tokens.join(F.broadcast(dim), "word")
 
 
 def instrument_frequency_guard(
@@ -79,13 +74,10 @@ def duplicated_codes(aliases: DataFrame) -> DataFrame:
     )
 
 
-def document_instruments(
-    mentions: DataFrame,
-    doc_col: str = "document_version_id",
-) -> DataFrame:
+def document_instruments(mentions: DataFrame) -> DataFrame:
     """(doc, instrument_id, mention_count) roll-up — the analyser's
     EntitiesIdDfType output feeding the instrument matcher."""
-    return mentions.groupBy(doc_col, "instrument_id").agg(
+    return mentions.groupBy("document_version_id", "instrument_id").agg(
         F.count(F.lit(1)).cast("long").alias("mention_count")
     )
 
@@ -127,53 +119,4 @@ def person_technique_probability(
             F.col("person_technique_count")
             / F.col("person_total_technique_count"),
         )
-    )
-
-
-def technique_document_stats(
-    model: DataFrame,
-    doc_techniques: DataFrame,
-    doc_persons: DataFrame,
-) -> DataFrame:
-    """P8 — per-(document, technique) probability roll-up
-    (PersonTechniqueFilter.scala:64-76): join the model back to the
-    document plane and aggregate the per-person probabilities."""
-    tbpd = doc_techniques.select(
-        "document_version_id", "technique_id"
-    ).distinct().join(
-        doc_persons.select("document_version_id", "person_id").distinct(),
-        "document_version_id",
-    )
-    return (
-        model.join(tbpd, ["technique_id", "person_id"])
-        .groupBy("document_version_id", "technique_id")
-        .agg(
-            F.sum("person_technique_probability").alias("total_probability"),
-            F.avg("person_technique_probability").alias("avg_probability"),
-            F.count("person_id").cast("long").alias("person_count"),
-        )
-    )
-
-
-def technique_probability_histogram(
-    doc_stats: DataFrame,
-    interval: float = 0.05,
-    min_count: int = 2,
-) -> DataFrame:
-    """P8/A15 — 0.05-wide histogram of per-(doc, technique) average
-    probability, persons-per-cell > min_count
-    (PersonTechniqueFilter.scala:78-87).
-
-    The bucket index is ``floor(avg * 20)`` — multiplying by the exact
-    integer 1/interval instead of dividing by the inexact double 0.05
-    keeps the bucket boundary bit-identical across engines (parity
-    rule).
-    """
-    per_bucket = F.floor(
-        F.col("avg_probability") * F.lit(round(1.0 / interval))
-    ).cast("long")
-    return (
-        doc_stats.where(F.col("person_count") > min_count)
-        .groupBy(per_bucket.alias("bucket"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )

@@ -59,7 +59,6 @@ def assemble_features(df: DataFrame, feature_cols: list[str]) -> DataFrame:
 def train_rf_classifier(
     labeled: DataFrame,
     feature_cols: list[str],
-    label_col: str = "label",
     num_trees: int = 150,
     max_depth: int = 10,
 ):
@@ -75,7 +74,7 @@ def train_rf_classifier(
     train, test = data.randomSplit([0.7, 0.3], seed=RF_SEED)
     rf = RandomForestClassifier(
         featuresCol="features",
-        labelCol=label_col,
+        labelCol="label",
         numTrees=num_trees,
         maxDepth=max_depth,
         seed=RF_SEED,
@@ -83,22 +82,19 @@ def train_rf_classifier(
     model = rf.fit(train)
     preds = model.transform(test)
     acc = MulticlassClassificationEvaluator(
-        labelCol=label_col, metricName="accuracy"
+        labelCol="label", metricName="accuracy"
     ).evaluate(preds)
     return model, acc
 
 
-def instrument_feature_table(
-    mentions: DataFrame,
-    doc_col: str = "document_version_id",
-) -> DataFrame:
+def instrument_feature_table(mentions: DataFrame) -> DataFrame:
     """A14 — the big grouped feature table feeding the classifier
     (AdvancedInstrumentAnalyser.scala:711-756: groupBy(doc, entity) with
     first/collect_list/max/countDistinct batteries).  Trimmed to the
     numeric features the RF pipeline consumes; collect_lists become
     counts/extremes (the reference's lists were only consumed as such).
     """
-    return mentions.groupBy(doc_col, "instrument_id").agg(
+    return mentions.groupBy("document_version_id", "instrument_id").agg(
         F.count(F.lit(1)).cast("long").alias("mention_count"),
         F.countDistinct("word").alias("distinct_aliases"),
         F.min("pos").alias("first_pos"),
@@ -140,24 +136,15 @@ def lda_topics(
     return model, model.transform(vectorized)
 
 
-def fpgrowth_itemsets(
-    baskets: DataFrame, items_col: str = "items", min_support: float = 0.1
-) -> DataFrame:
+def fpgrowth_itemsets(baskets: DataFrame, min_support: float = 0.1) -> DataFrame:
     """M9 — FPGrowth frequent itemsets (test/keyword/FPGrowthExample port)."""
     from pyspark.ml.fpm import FPGrowth
 
-    fp = FPGrowth(itemsCol=items_col, minSupport=min_support, minConfidence=0.3)
+    fp = FPGrowth(itemsCol="items", minSupport=min_support, minConfidence=0.3)
     return fp.fit(baskets).freqItemsets
 
 
-def pic_clusters(
-    pairs: DataFrame,
-    k: int = 4,
-    max_iter: int = 10,
-    src_col: str = "document_version1_id",
-    dst_col: str = "document_version2_id",
-    weight_col: str = "score",
-) -> DataFrame:
+def pic_clusters(pairs: DataFrame, k: int = 4, max_iter: int = 10) -> DataFrame:
     """M9 — PowerIterationClustering over the candidate similarity graph
     (test/clustering/PICExample.scala:62-83: (dv1, dv2, score) edges →
     cluster assignments).
@@ -173,9 +160,9 @@ def pic_clusters(
     from pyspark.ml.clustering import PowerIterationClustering
 
     edges = pairs.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-        F.col(weight_col).cast("double").alias("weight"),
+        F.col("document_version1_id").cast("long").alias("src"),
+        F.col("document_version2_id").cast("long").alias("dst"),
+        F.col("score").cast("double").alias("weight"),
     )
     pic = PowerIterationClustering(
         k=k, maxIter=max_iter, initMode="random", weightCol="weight"

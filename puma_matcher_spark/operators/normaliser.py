@@ -41,15 +41,11 @@ def normalisation_factor(
     return float(row["p"]) if row and row["p"] is not None else 1.0
 
 
-def normalise_scores(
-    candidates: DataFrame,
-    factor: float,
-    max_score: float = 100.0,
-) -> DataFrame:
-    """score → min(score / factor * 100, max_score)."""
+def normalise_scores(candidates: DataFrame, factor: float) -> DataFrame:
+    """score → min(score / factor * 100, 100)."""
     return candidates.withColumn(
         "score",
         F.least(
-            F.col("score") / F.lit(factor) * F.lit(100.0), F.lit(max_score)
+            F.col("score") / F.lit(factor) * F.lit(100.0), F.lit(100.0)
         ),
     )

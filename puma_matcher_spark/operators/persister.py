@@ -57,12 +57,7 @@ def dedup_candidates(candidates: DataFrame) -> DataFrame:
     )
 
 
-def persist_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
+def persist_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Hive-layout partitioned sink (``partitionBy`` directories, e.g.
     by source or ingest date).  Readers filtering on a partition column
     prune whole directories before any IO — the dominant saver for
@@ -84,18 +79,7 @@ def persist_partitioned(
     the same reason."""
     (
         df.hint("rebalance", *partition_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy(*partition_cols)
         .parquet(path)
     )
-
-
-def persist_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Parquet sink (stands in for the reference's JDBC writes, S5).
-
-    Blue/green publishing (DbManager.swapSchema, reference
-    utils/database/DbManager.scala:636-648) maps to: write to
-    ``{path}.staging`` then atomically rename — callers that need the swap
-    write staging themselves; plain overwrite is fine for fixtures.
-    """
-    df.write.mode(mode).parquet(path)

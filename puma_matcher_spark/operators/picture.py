@@ -12,10 +12,10 @@ Reference:
   — only re-scores pairs that already matched on other types.
 
 Rebuild: Hamming over hex-encoded hashes is a pure column expression —
-``bit_count(xor)`` per 60-bit chunk (codegen, no UDF).  The LSH path uses
-``pyspark.ml.feature.MinHashLSH`` on binarised vectors for parity with the
-reference; the portable SimHash/MinHash operators in llmdata.dedup are the
-oracle-checkable equivalents.
+``bit_count(xor)`` per 60-bit chunk (codegen, no UDF).  The LSH path
+(:func:`minhash_lsh_pairs_portable`) uses the portable MinHash operators
+of llmdata.dedup instead of ml's JVM-seeded ``MinHashLSH``, so the oracle
+reproduces every hash.
 """
 
 from __future__ import annotations
@@ -88,17 +88,15 @@ def minhash_lsh_pairs_portable(
     fingerprints: DataFrame,
     id_col: str = "document_version_id",
     fp_col: str = "fingerprint",
-    num_hashes: int = 8,
-    band_size: int = 2,
     threshold: float = 0.3,
-    n_bits: int = 60,
 ) -> DataFrame:
     """J5/M2 on portable arithmetic (PictureMatcher.scala:54-67 rebuild).
 
-    The set-bit positions of the 64-bit fingerprint form the element set;
-    seed-suffixed md5 minhashes band into LSH buckets — the exact same
-    machinery as llmdata.dedup (minhash_signatures/lsh_band_keys), so a
-    DuckDB oracle reproduces every hash bit-for-bit.  Candidate pairs are
+    The set-bit positions (0..59) of the fingerprint form the element
+    set; 8 seed-suffixed md5 minhashes band, 2 per band, into LSH
+    buckets — the exact same machinery as llmdata.dedup
+    (minhash_signatures/lsh_band_keys), so a DuckDB oracle reproduces
+    every hash bit-for-bit.  Candidate pairs are
     then verified with exact bit-set Jaccard and kept when
     ``jaccard_dist <= threshold`` — the same output contract as
     ``ml.feature.MinHashLSH.approxSimilarityJoin`` but with engine-
@@ -123,14 +121,14 @@ def minhash_lsh_pairs_portable(
         .select(
             "doc_id",
             "_fp",
-            F.explode(F.sequence(F.lit(0), F.lit(n_bits - 1))).alias("bit"),
+            F.explode(F.sequence(F.lit(0), F.lit(59))).alias("bit"),
         )
         .where(F.expr("shiftright(_fp, bit) & 1 = 1"))
         .select("doc_id", F.col("bit").cast("string").alias("shingle"))
     )
-    sigs = dd.minhash_signatures(bits, num_hashes)
+    sigs = dd.minhash_signatures(bits, 8)
     cand = dd.lsh_candidate_pairs(
-        dd.lsh_band_keys(sigs, band_size, num_hashes), max_bucket_size=None
+        dd.lsh_band_keys(sigs, 2, 8), max_bucket_size=None
     )
     sizes = bits.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     s1 = bits.select(F.col("doc_id").alias("doc1_id"), "shingle")
@@ -156,60 +154,4 @@ def minhash_lsh_pairs_portable(
             F.col("doc2_id").alias("document_version2_id"),
             "jaccard_dist",
         )
-    )
-
-
-def minhash_lsh_pairs(
-    hashes: DataFrame,
-    num_hash_tables: int = 3,
-    threshold: float = 0.15,
-    hash_bits: int = 256,
-) -> DataFrame:
-    """J5/M2 — ml.feature.MinHashLSH approximate Jaccard self-join over
-    binarised hash vectors (PictureMatcher.scala:54-67 port).
-
-    Input: (document_version_id, hash) with hex hashes.  Nondeterministic
-    across Spark versions only via LSH seed — pinned.
-    """
-    from pyspark.ml.feature import MinHashLSH
-    from pyspark.ml.functions import array_to_vector
-
-    n_chars = hash_bits // 4
-    # hex → per-bit 0/1 array → sparse-ish dense vector
-    bits = F.flatten(
-        F.transform(
-            F.filter(
-                F.split(F.substring("hash", 1, n_chars), "(?!^)"),
-                lambda c: c != F.lit(""),
-            ),
-            # bit b of hex nibble v = floor(v / 2^b) % 2 (shiftright needs a
-            # literal shift amount, so use arithmetic inside the lambda)
-            lambda c: F.transform(
-                F.sequence(F.lit(3), F.lit(0), F.lit(-1)),
-                lambda b: (
-                    F.floor(F.conv(c, 16, 10).cast("double") / F.pow(F.lit(2.0), b))
-                    % 2
-                ).cast("double"),
-            ),
-        )
-    )
-    feats = hashes.select(
-        "document_version_id", array_to_vector(bits).alias("features")
-    )
-    lsh = MinHashLSH(
-        inputCol="features",
-        outputCol="lsh",
-        numHashTables=num_hash_tables,
-        seed=9876547687 % (1 << 31),
-    )
-    model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(feats, feats, threshold, distCol="jaccard_dist")
-    return (
-        joined.select(
-            F.col("datasetA.document_version_id").alias("document_version1_id"),
-            F.col("datasetB.document_version_id").alias("document_version2_id"),
-            "jaccard_dist",
-        )
-        .where(F.col("document_version1_id") < F.col("document_version2_id"))
-        .distinct()
     )

@@ -76,9 +76,7 @@ def k_anonymity_report(
     )
 
 
-def expectation_report(
-    orders: DataFrame, lineitem: DataFrame, accepted_status: tuple[str, ...] = ("F", "O", "P")
-) -> DataFrame:
+def expectation_report(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Expectations over the orders/lineitem pair:
 
     * ``not_null:o_custkey`` — no null customer keys
@@ -101,7 +99,7 @@ def expectation_report(
         .cast("long")
         .alias("dup_keys"),
         F.sum(
-            F.when(~F.col("o_orderstatus").isin(*accepted_status), 1).otherwise(0)
+            F.when(~F.col("o_orderstatus").isin("F", "O", "P"), 1).otherwise(0)
         )
         .cast("long")
         .alias("bad_status"),

@@ -14,12 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def score_list(
-    candidates: DataFrame,
-    score_types: list[str],
-    training_pairs: DataFrame | None = None,
-) -> DataFrame:
-    """One wide row per pair: score_<type> columns + optional accepted label.
+def score_list(candidates: DataFrame, score_types: list[str]) -> DataFrame:
+    """One wide row per pair: score_<type> columns.
 
     ``max(score)`` per cell (deterministic; the reference relies on one row
     per (pair, type) after the persister, where max == the value).
@@ -33,17 +29,6 @@ def score_list(
     )
     for t in score_types:
         wide = wide.withColumnRenamed(t, f"score_{t}")
-    if training_pairs is not None:
-        labels = training_pairs.select(
-            F.col("proposal_id").alias("document_version1_id"),
-            F.col("publication_id").alias("document_version2_id"),
-            "accepted",
-        )
-        wide = wide.join(
-            F.broadcast(labels),
-            ["document_version1_id", "document_version2_id"],
-            "left",
-        )
     return wide
 
 

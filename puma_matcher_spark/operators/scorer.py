@@ -57,7 +57,6 @@ def score_entity_pairs(
     tf: DataFrame,
     score_type: str,
     type_id: int,
-    score_factor: float = DEFAULT_SCORE_FACTOR,
 ) -> DataFrame:
     """EntitiesScorer A4 roll-up → MATCH_CANDIDATE rows.
 
@@ -89,7 +88,7 @@ def score_entity_pairs(
             F.col("raw_score")
             * (
                 F.lit(1.0)
-                + F.lit(score_factor)
+                + F.lit(DEFAULT_SCORE_FACTOR)
                 * F.col("common")
                 * (0.5 / F.col("n1") + 0.5 / F.col("n2"))
             ),

@@ -35,7 +35,6 @@ DEFAULT_MIN_MATCHED_WORDS = 3
 def sentence_shingles(
     docs: DataFrame,
     n: int = DEFAULT_SENTENCE_LENGTH,
-    text_col: str = "text",
     id_col: str = "document_version_id",
 ) -> DataFrame:
     """Positional n-word shingles from the filtered token stream — fully
@@ -55,7 +54,7 @@ def sentence_shingles(
 
     base = spread_input(docs).select(
         F.col(id_col).alias("document_version_id"),
-        tokenize_string_deletions(F.col(text_col)).alias("_tk"),
+        tokenize_string_deletions(F.col("text")).alias("_tk"),
     )
     cnt = F.size("_tk")
     idx = F.when(cnt >= n, F.sequence(F.lit(1), cnt - n + 1)).otherwise(
@@ -82,7 +81,6 @@ def text_match_pairs(
     docs: DataFrame,
     n: int = DEFAULT_SENTENCE_LENGTH,
     max_occurrence: int = DEFAULT_SENTENCE_MAX_OCC,
-    text_col: str = "text",
     id_col: str = "document_version_id",
 ) -> DataFrame:
     """A6 — pairs sharing word-n-gram sentences.
@@ -93,7 +91,7 @@ def text_match_pairs(
     """
     from pyspark.sql.window import Window
 
-    sh = sentence_shingles(docs, n, text_col, id_col).select(
+    sh = sentence_shingles(docs, n, id_col).select(
         "document_version_id", "sentence"
     ).distinct()
     # occurrence cap via count-over-window on the join key: one shuffle on
@@ -118,17 +116,17 @@ def text_match_pairs(
 
 def text_match_scores(
     docs: DataFrame,
-    n: int = DEFAULT_SENTENCE_LENGTH,
     max_occurrence: int = DEFAULT_SENTENCE_MAX_OCC,
-    text_col: str = "text",
     id_col: str = "document_version_id",
 ) -> DataFrame:
     """TextScorer — score = shared sentences normalised by the smaller
     document's sentence count (scorer/TextScorer.scala:37-46 semantics:
     overlap relative to document size)."""
-    pairs = text_match_pairs(docs, n, max_occurrence, text_col, id_col)
+    pairs = text_match_pairs(
+        docs, DEFAULT_SENTENCE_LENGTH, max_occurrence, id_col
+    )
     counts = (
-        sentence_shingles(docs, n, text_col, id_col)
+        sentence_shingles(docs, DEFAULT_SENTENCE_LENGTH, id_col)
         .select("document_version_id", "sentence")
         .distinct()
         .groupBy("document_version_id")
@@ -165,7 +163,6 @@ def text_match_merged(
     docs: DataFrame,
     n: int = DEFAULT_SENTENCE_LENGTH,
     max_occurrence: int = DEFAULT_SENTENCE_MAX_OCC,
-    text_col: str = "text",
     id_col: str = "document_version_id",
 ) -> DataFrame:
     """A6 run-merge — contiguous matched-passage extraction
@@ -190,7 +187,7 @@ def text_match_merged(
     """
     from pyspark.sql.window import Window
 
-    sh = sentence_shingles(docs, n, text_col, id_col)
+    sh = sentence_shingles(docs, n, id_col)
     first = sh.groupBy("document_version_id", "sentence").agg(
         F.min("position").alias("pos")
     )
@@ -279,20 +276,18 @@ def text_match_merged(
 
 def single_word_scores(
     docs: DataFrame,
-    min_matched_words: int = DEFAULT_MIN_MATCHED_WORDS,
-    max_occurrence: int = DEFAULT_SENTENCE_MAX_OCC,
-    text_col: str = "text",
     id_col: str = "document_version_id",
 ) -> DataFrame:
     """A5 — word-level pair scoring with sqrt idf.
 
-    word score = (tf1 + tf2) * sqrt(N / df); pair score = Σ word scores,
-    keep pairs with ≥ min_matched_words common words
+    word score = (tf1 + tf2) * sqrt(N / df) over words with df ≤
+    ``DEFAULT_SENTENCE_MAX_OCC``; pair score = Σ word scores, keep pairs
+    with ≥ ``DEFAULT_MIN_MATCHED_WORDS`` common words
     (SingleWordMatcher.scala:53-54 + SingleWordScorer.scala:53-57).
     """
     from puma_matcher_spark.functions.text import exploded_tokens
 
-    words = exploded_tokens(docs, text_col, id_col).select(
+    words = exploded_tokens(docs, "text", id_col).select(
         "document_version_id", "word"
     )
     tf = words.groupBy("document_version_id", "word").agg(
@@ -308,7 +303,7 @@ def single_word_scores(
         .agg(F.count(F.lit(1)).cast("double").alias("_n_docs"))
     )
     dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    keep = dfreq.where(F.col("df") <= max_occurrence)
+    keep = dfreq.where(F.col("df") <= DEFAULT_SENTENCE_MAX_OCC)
     idf = keep.withColumn("idf", F.sqrt(n_docs.scalar() / F.col("df")))
     # idf keeps the *rare* words (df ≤ cap) — nearly the whole vocabulary,
     # which grows with the corpus.  No broadcast hint; AQE decides.
@@ -331,7 +326,7 @@ def single_word_scores(
             F.sum((F.col("tf1") + F.col("tf2")) * F.col("idf")).alias("score"),
             F.count(F.lit(1)).cast("long").alias("matched_words"),
         )
-        .where(F.col("matched_words") >= min_matched_words)
+        .where(F.col("matched_words") >= DEFAULT_MIN_MATCHED_WORDS)
     )
 
 
@@ -342,7 +337,6 @@ def rare_words(
     max_df: int = 50,
     min_len: int = 5,
     max_len: int = 90,
-    text_col: str = "text",
     id_col: str = "document_version_id",
 ) -> DataFrame:
     """P12 — informative-word extraction (RareWordAnalyser.scala:44-61):
@@ -352,7 +346,7 @@ def rare_words(
         F.col(id_col).alias("document_version_id"),
         F.explode(
             F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
+                F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
                 lambda x: x != F.lit(""),
             )
         ).alias("word"),
@@ -376,13 +370,7 @@ def rare_words(
     )
 
 
-def cosine_title_matches(
-    docs: DataFrame,
-    min_score: float = 0.2,
-    max_df: int = 2000,
-    text_col: str = "title",
-    id_col: str = "document_version_id",
-) -> DataFrame:
+def cosine_title_matches(docs: DataFrame, min_score: float = 0.2) -> DataFrame:
     """J6 — exact TF-IDF cosine similarity between title vectors.
 
     weight(doc, token) = tf * log10(N / df); cosine via shared-token join:
@@ -392,7 +380,7 @@ def cosine_title_matches(
     """
     from puma_matcher_spark.functions.text import exploded_tokens
 
-    words = exploded_tokens(docs, text_col, id_col).select(
+    words = exploded_tokens(docs, "title", "document_version_id").select(
         "document_version_id", "word"
     )
     tf = words.groupBy("document_version_id", "word").agg(
@@ -414,7 +402,7 @@ def cosine_title_matches(
     from puma_matcher_spark.functions.caching import persist_rotating
 
     w = persist_rotating(
-        tf.join(dfreq.where(F.col("df") <= max_df), "word")
+        tf.join(dfreq.where(F.col("df") <= 2000), "word")
         .withColumn(
             "weight", F.col("tf") * F.log10(n_docs.scalar() / F.col("df"))
         )

@@ -122,7 +122,6 @@ def evaluate_weights(
     contextual: DataFrame,
     grid: DataFrame,
     training_pairs: DataFrame,
-    top_k: tuple[int, ...] = (1, 3, 5),
 ) -> DataFrame:
     """A10/W3 — per-weight-vector rank error against accepted pairs.
 
@@ -142,7 +141,7 @@ def evaluate_weights(
     )
     hits = ranked.join(F.broadcast(labels), ["document_version1_id", "document_version2_id"])
     aggs = [F.sum(F.col("rank") - 1).cast("long").alias("error")]
-    for k in top_k:
+    for k in (1, 3, 5):
         aggs.append(
             F.sum(F.when(F.col("rank") <= k, 1).otherwise(0))
             .cast("long")

@@ -67,8 +67,8 @@ class Pipeline:
         if dupes:  # Pipeline.scala:38-52 uniqueness check
             raise ValueError(f"duplicate stage outputs: {sorted(dupes)}")
         self.results: dict[tuple[str, str], DataFrame] = {}
-        # config threads insert concurrently (the reference guards its
-        # shared frame storage the same way, Pipeline.scala:58,206)
+        # guards the shared frame storage (the reference does the same,
+        # Pipeline.scala:58,206)
         self._results_lock = threading.Lock()
 
     def run_config(self, config: PipelineConfig) -> dict[str, DataFrame]:
@@ -88,8 +88,6 @@ class Pipeline:
                     out, stage.frame_type.schema, f"{self.name}/{stage.name}"
                 )
             frames[stage.output] = out
-            with self._results_lock:
-                self.results[(config.name, stage.output)] = out
         return frames
 
     def run(self, configs: list[PipelineConfig]) -> dict[str, dict[str, DataFrame]]:
@@ -101,7 +99,11 @@ class Pipeline:
         tags (job group, description, scheduler pool), so the caller's
         ``cancelJobGroup`` and job-group status reach every config's jobs.
         Every config gets its own copy: threads sharing one would also
-        share the SQL execution id Spark sets per query."""
+        share the SQL execution id Spark sets per query.
+
+        Results are recorded in the order of ``configs``, not in the order
+        the threads finish, so :meth:`as_data_source` builds the same
+        union every run."""
         if len(configs) > 1:
             spark = SparkSession.active()
             with ThreadPoolExecutor(max_workers=len(configs)) as ex:
@@ -111,8 +113,14 @@ class Pipeline:
                     )
                     for c in configs
                 }
-                return {name: f.result() for name, f in futs.items()}
-        return {c.name: self.run_config(c) for c in configs}
+                outs = {name: f.result() for name, f in futs.items()}
+        else:
+            outs = {c.name: self.run_config(c) for c in configs}
+        with self._results_lock:
+            for name, frames in outs.items():
+                for output, df in frames.items():
+                    self.results[(name, output)] = df
+        return outs
 
     def fork(self, name: str, stages: list[Stage]) -> "Pipeline":
         """New pipeline seeded with a snapshot of this one's accumulated
@@ -127,8 +135,9 @@ class Pipeline:
         return child
 
     def as_data_source(self, output: str) -> DataFrame:
-        """Union one output across all configs — Pipeline.scala:69-94
-        (column-aligned union; we use unionByName, safer than positional)."""
+        """Union one output across all configs, in the order they were
+        passed to :meth:`run` — Pipeline.scala:69-94 (column-aligned
+        union; we use unionByName, safer than positional)."""
         with self._results_lock:
             frames = [df for (cfg, out), df in self.results.items() if out == output]
         if not frames:

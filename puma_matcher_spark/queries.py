@@ -40,6 +40,7 @@ from puma_matcher_spark.operators import matcher as m
 from puma_matcher_spark.operators import scorer as sc
 from puma_matcher_spark.operators import scorelist as sl
 from puma_matcher_spark.operators import stats as st
+from puma_matcher_spark.operators.textmatch import DEFAULT_SENTENCE_LENGTH
 from puma_matcher_spark.operators.weights import GRID_SCHEMA
 from puma_matcher_spark.sources.testdata import Tables, load_tables
 
@@ -956,7 +957,8 @@ _TOKS_SQL = (
 )
 
 
-def _sentence_ctes(src: str, id_col: str, text_col: str, n: int = 4) -> str:
+def _sentence_ctes(src: str, id_col: str, text_col: str) -> str:
+    n = DEFAULT_SENTENCE_LENGTH
     joins = "\n".join(
         f"  JOIN toks t{i} ON t{i}.document_version_id = t0.document_version_id"
         f" AND t{i}.pos = t0.pos + {i}"
@@ -1030,9 +1032,10 @@ def q_text_match_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sentence_pos_ctes(src: str, id_col: str, text_col: str, n: int = 4) -> str:
+def _sentence_pos_ctes(src: str, id_col: str, text_col: str) -> str:
     """Shingles WITH positions (non-distinct) — the run-merge family
     needs first-occurrence positions, unlike ``_sentence_ctes``."""
+    n = DEFAULT_SENTENCE_LENGTH
     joins = "\n".join(
         f"  JOIN toks t{i} ON t{i}.document_version_id = t0.document_version_id"
         f" AND t{i}.pos = t0.pos + {i}"
@@ -2971,7 +2974,7 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_bucket_sql(col: str, dim: int = 64, n_planes: int = 6, seed: int = 42) -> str:
+def _lsh_bucket_sql(col: str, n_planes: int = 6, seed: int = 42) -> str:
     """DuckDB twin of similarity.sign_lsh_keys: the seeded hyperplanes
     are deterministic driver constants, so they fold into the oracle as
     literal arrays (repr round-trips doubles exactly — both engines see
@@ -2979,7 +2982,7 @@ def _lsh_bucket_sql(col: str, dim: int = 64, n_planes: int = 6, seed: int = 42) 
     from puma_matcher_spark.llmdata.similarity import _hyperplanes
 
     terms = []
-    for i, p in enumerate(_hyperplanes(dim, n_planes, seed=seed)):
+    for i, p in enumerate(_hyperplanes(64, n_planes, seed=seed)):
         arr = "[" + ", ".join(repr(float(x)) for x in p) + "]"
         terms.append(
             f"(CASE WHEN list_dot_product({col}, {arr}) > 0"
@@ -3409,8 +3412,7 @@ def q_picture_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit sets on portable md5 arithmetic (PictureMatcher.scala:54-67
     rebuild).  Round 2 used ml.feature.MinHashLSH, whose JVM-seeded hash
     tables forced a rows-only check; the portable minhash makes every
-    hash oracle-reproducible, upgrading this to a hard pass.  The ml
-    variant remains available as operators.picture.minhash_lsh_pairs."""
+    hash oracle-reproducible, upgrading this to a hard pass."""
     from puma_matcher_spark.operators.picture import minhash_lsh_pairs_portable
 
     docs = load_tables(spark, sf_dir).llm_documents()
@@ -5708,7 +5710,7 @@ def q_fs_agreement_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fs_em_oracle(iters: int = 25) -> str:
+def _fs_em_oracle() -> str:
     """Generated DuckDB twin of fs_em_parameters (r10): the EM
     iterations unroll as chained CTEs over the agreement-pattern table
     (≤4 rows for two fields) — the pagerank_sql/label_propagation_sql
@@ -5718,7 +5720,10 @@ def _fs_em_oracle(iters: int = 25) -> str:
     vectorized power); clip bounds are emitted via repr, and the em0
     starting constants via repr + CAST AS DOUBLE (bare literals would
     be DECIMAL, making round 1 decimal-exact where numpy is IEEE — r10
-    ADVICE #5), so both engines run identical double iterates."""
+    ADVICE #5), so both engines run identical double iterates.  The
+    round count is the kernel's ``FS_EM_ITERATIONS``."""
+    from puma_matcher_spark.operators.dedup import FS_EM_ITERATIONS
+
     m_lo, m_hi = repr(1e-6), repr(1.0 - 1e-6)
     p_lo, p_hi = repr(1e-9), repr(1.0 - 1e-9)
     parts = [
@@ -5761,7 +5766,7 @@ def _fs_em_oracle(iters: int = 25) -> str:
     # 10.5 s at 18, minutes at 25) — materializing each round keeps
     # planning linear (25 rounds ≈ 0.1 s).  The Spark twin needs no
     # analog: its EM loop is driver-side numpy.
-    for i in range(1, iters + 1):
+    for i in range(1, FS_EM_ITERATIONS + 1):
         parts.append(
             f"""w{i} AS MATERIALIZED (
   SELECT g_seg, g_bal, n, pm / (pm + pu) AS w FROM (
@@ -5785,10 +5790,10 @@ em{i} AS MATERIALIZED (
         + f"""
 SELECT 'seg' AS field, ROUND(m_seg, 4) AS m, ROUND(u_seg, 4) AS u,
        ROUND(LOG2(m_seg / u_seg), 4) AS w_agree,
-       ROUND(LOG2((1 - m_seg) / (1 - u_seg)), 4) AS w_disagree FROM em{iters}
+       ROUND(LOG2((1 - m_seg) / (1 - u_seg)), 4) AS w_disagree FROM em{FS_EM_ITERATIONS}
 UNION ALL
 SELECT 'bal_bucket', ROUND(m_bal, 4), ROUND(u_bal, 4),
-       ROUND(LOG2(m_bal / u_bal), 4), ROUND(LOG2((1 - m_bal) / (1 - u_bal)), 4) FROM em{iters}"""
+       ROUND(LOG2(m_bal / u_bal), 4), ROUND(LOG2((1 - m_bal) / (1 - u_bal)), 4) FROM em{FS_EM_ITERATIONS}"""
     )
 
 

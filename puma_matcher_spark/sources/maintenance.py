@@ -319,7 +319,12 @@ def _looks_hive_partitioned(fs: HadoopFs, path: str) -> bool:
     return any("=" in e for e in fs.list_subdirs(path))
 
 
-def zvalue(c1, c2, bits: int = 16):
+#: Bits per operand interleaved by :func:`zvalue` and its DuckDB twin
+#: :func:`zvalue_sql`.
+ZVALUE_BITS = 16
+
+
+def zvalue(c1, c2, bits: int = ZVALUE_BITS):
     """Morton (Z-order) interleave of the low ``bits`` bits of two long
     columns — the space-filling-curve key that makes ONE sorted layout
     serve range predicates on EITHER column (or both).
@@ -345,7 +350,7 @@ def zvalue(c1, c2, bits: int = 16):
     return z
 
 
-def zvalue_sql(c1: str, c2: str, bits: int = 16) -> str:
+def zvalue_sql(c1: str, c2: str) -> str:
     """DuckDB twin of :func:`zvalue` — generated bit arithmetic, so the
     oracle computes the identical interleave.  Operands are cast to
     BIGINT first: DuckDB shifts stay in the operand's type, so an
@@ -353,7 +358,7 @@ def zvalue_sql(c1: str, c2: str, bits: int = 16) -> str:
     a = f"CAST({c1} AS BIGINT)"
     b = f"CAST({c2} AS BIGINT)"
     terms = []
-    for i in range(bits):
+    for i in range(ZVALUE_BITS):
         terms.append(f"((({a} >> {i}) & 1) << {2 * i + 1})")
         terms.append(f"((({b} >> {i}) & 1) << {2 * i})")
     return "(" + " | ".join(terms) + ")"

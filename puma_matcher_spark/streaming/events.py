@@ -21,14 +21,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from puma_matcher_spark.functions.rounding import pround
 
+#: Width of the resampling grid (one hour), shared by
+#: :func:`resample_counts` and :func:`forward_fill_values`.
+BUCKET_SECONDS = 3600
+#: Day zero of the trend x-axis, shared by :func:`trend_stats` and
+#: :func:`trend_stats_pandas`.
+TREND_ORIGIN = "2024-01-01"
 
-def read_events_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         # the fixture is a single file; FileStreamSource wants a directory,
         # so stream the dir and glob-filter to the events file
         .option("pathGlobFilter", "events.parquet")
@@ -45,8 +50,8 @@ def read_events_stream(
     return stream
 
 
-def with_watermark(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
-    return events.withWatermark("ts", delay)
+def with_watermark(events: DataFrame) -> DataFrame:
+    return events.withWatermark("ts", "10 minutes")
 
 
 def windowed_counts(events: DataFrame, window_seconds: int = 300) -> DataFrame:
@@ -68,10 +73,10 @@ def windowed_counts(events: DataFrame, window_seconds: int = 300) -> DataFrame:
     )
 
 
-def windowed_counts_eventtime(events: DataFrame, window: str = "5 minutes") -> DataFrame:
+def windowed_counts_eventtime(events: DataFrame) -> DataFrame:
     """Same aggregation with the native ``window()`` column (used on the
     streaming path where watermarks need a real event-time window)."""
-    return events.groupBy(F.window("ts", window), "event_type").agg(
+    return events.groupBy(F.window("ts", "5 minutes"), "event_type").agg(
         F.count(F.lit(1)).alias("event_count"),
         F.sum("value").alias("value_sum"),
     )
@@ -94,11 +99,11 @@ def sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def resample_counts(events: DataFrame, bucket_seconds: int = 3600) -> DataFrame:
+def resample_counts(events: DataFrame) -> DataFrame:
     """Gap-filled (dense) time series: per event_type, event counts for
-    EVERY bucket between the corpus min and max bucket — zeros where no
-    events landed — the resample step downstream trend/anomaly jobs
-    need before differencing.
+    EVERY :data:`BUCKET_SECONDS` bucket between the corpus min and max
+    bucket — zeros where no events landed — the resample step downstream
+    trend/anomaly jobs need before differencing.
 
     Scale shape: the fact aggregation is one hash shuffle; the dense
     grid is (types × buckets), built from a 1-row min/max aggregate
@@ -107,7 +112,7 @@ def resample_counts(events: DataFrame, bucket_seconds: int = 3600) -> DataFrame:
     final left join by AQE.
     """
     bucket = (
-        F.floor(F.unix_timestamp("ts") / bucket_seconds) * bucket_seconds
+        F.floor(F.unix_timestamp("ts") / BUCKET_SECONDS) * BUCKET_SECONDS
     ).cast("long")
     actual = events.groupBy(
         F.col("event_type"), bucket.alias("bucket_epoch")
@@ -129,7 +134,7 @@ def resample_counts(events: DataFrame, bucket_seconds: int = 3600) -> DataFrame:
                 F.sequence(
                     bounds.getField("lo"),
                     bounds.getField("hi"),
-                    F.lit(bucket_seconds),
+                    F.lit(BUCKET_SECONDS),
                 )
             ).alias("bucket_epoch"),
         )
@@ -141,9 +146,7 @@ def resample_counts(events: DataFrame, bucket_seconds: int = 3600) -> DataFrame:
     )
 
 
-def forward_fill_values(
-    events: DataFrame, bucket_seconds: int = 3600
-) -> DataFrame:
+def forward_fill_values(events: DataFrame) -> DataFrame:
     """Last-observation-carried-forward resampling: per event_type, the
     last observed ``value`` in each bucket, carried FORWARD through
     empty buckets (the sensor/metrics companion to
@@ -162,7 +165,7 @@ def forward_fill_values(
     from pyspark.sql.window import Window
 
     bucket = (
-        F.floor(F.unix_timestamp("ts") / bucket_seconds) * bucket_seconds
+        F.floor(F.unix_timestamp("ts") / BUCKET_SECONDS) * BUCKET_SECONDS
     ).cast("long")
     observed = events.groupBy(
         F.col("event_type"), bucket.alias("bucket_epoch")
@@ -183,7 +186,7 @@ def forward_fill_values(
                 F.sequence(
                     bounds.getField("lo"),
                     bounds.getField("hi"),
-                    F.lit(bucket_seconds),
+                    F.lit(BUCKET_SECONDS),
                 )
             ).alias("bucket_epoch"),
         )
@@ -202,15 +205,10 @@ def forward_fill_values(
     )
 
 
-def anomaly_flags(
-    events: DataFrame,
-    bucket_seconds: int = 3600,
-    lookback: int = 24,
-    z_thresh: float = 3.0,
-) -> DataFrame:
+def anomaly_flags(events: DataFrame) -> DataFrame:
     """Trailing z-score anomaly flags over the gap-filled series: each
-    bucket's count against the mean/std of the previous ``lookback``
-    buckets of the same event_type — the standard ops-monitoring
+    bucket's count against the mean/std of the previous 24 buckets of
+    the same event_type, flagged when |z| > 3 — the standard ops-monitoring
     composition of :func:`resample_counts` + a bounded ROWS frame.
 
     The frame is deterministic (bucket_epoch is unique per type and the
@@ -220,11 +218,11 @@ def anomaly_flags(
     """
     from pyspark.sql.window import Window
 
-    dense = resample_counts(events, bucket_seconds)
+    dense = resample_counts(events)
     w = (
         Window.partitionBy("event_type")
         .orderBy("bucket_epoch")
-        .rowsBetween(-lookback, -1)
+        .rowsBetween(-24, -1)
     )
     mean = F.avg("event_count").over(w)
     std = F.stddev_pop("event_count").over(w)
@@ -234,11 +232,11 @@ def anomaly_flags(
         "bucket_epoch",
         "event_count",
         pround(z, 4).alias("zscore"),
-        F.coalesce(F.abs(z) > z_thresh, F.lit(False)).alias("is_anomaly"),
+        F.coalesce(F.abs(z) > 3.0, F.lit(False)).alias("is_anomaly"),
     )
 
 
-def trend_stats(events: DataFrame, origin: str = "2024-01-01") -> DataFrame:
+def trend_stats(events: DataFrame) -> DataFrame:
     """Per-type linear trend of ``value`` over event time via the SQL2016
     linear-regression aggregates (``regr_slope``/``regr_intercept``/``corr``)
     — the drift-detection summary a corpus-ingestion monitor computes per
@@ -247,15 +245,14 @@ def trend_stats(events: DataFrame, origin: str = "2024-01-01") -> DataFrame:
     All four statistics are algebraic aggregates: Spark computes them with
     map-side partials (one shuffle of constant-size state per group), so the
     plan is a single hash aggregate at any scale.  The x-axis is *days since
-    a fixed origin* rather than raw epoch seconds: it keeps x ~O(10²), which
-    makes the covariance arithmetic well-conditioned and the rounded output
+    a fixed origin* (:data:`TREND_ORIGIN`) rather than raw epoch seconds:
+    it keeps x ~O(10²), which makes the covariance arithmetic
+    well-conditioned and the rounded output
     reproducible across engines (raw epochs ~1.7e9 would eat 10 of the 16
     double digits before the variance even starts).
     """
-    day_raw = (
-        (F.unix_timestamp("ts") - F.unix_timestamp(F.lit(origin).cast("timestamp")))
-        / F.lit(86400.0)
-    )
+    origin = F.unix_timestamp(F.lit(TREND_ORIGIN).cast("timestamp"))
+    day_raw = (F.unix_timestamp("ts") - origin) / F.lit(86400.0)
     # explicit co-moment algebra with try_divide instead of
     # regr_slope/corr: under ANSI mode (Spark 4 default) the built-in
     # corr raises DIVIDE_BY_ZERO on a constant group; this form returns
@@ -289,7 +286,7 @@ def trend_stats(events: DataFrame, origin: str = "2024-01-01") -> DataFrame:
     )
 
 
-def trend_stats_pandas(events: DataFrame, origin: str = "2024-01-01") -> DataFrame:
+def trend_stats_pandas(events: DataFrame, origin: str = TREND_ORIGIN) -> DataFrame:
     """``applyInPandas`` twin of :func:`trend_stats`: per-group OLS fit in
     Arrow-batched numpy, one pandas frame per event_type.
 
@@ -373,9 +370,9 @@ def debounce_first_per_burst(
     )
 
 
-def rolling_counts(events: DataFrame, horizon_seconds: int = 3600) -> DataFrame:
+def rolling_counts(events: DataFrame) -> DataFrame:
     """Trailing moving aggregate at every event: count and value sum of
-    the same event_type within the past ``horizon_seconds`` (inclusive),
+    the same event_type within the past hour (inclusive),
     via a RANGE frame over epoch seconds — the event-time frame-spec
     windowing the reference never uses (SURVEY.md §2.5 notes no
     ``rowsBetween``/``rangeBetween`` anywhere; this is the idiomatic
@@ -396,7 +393,7 @@ def rolling_counts(events: DataFrame, horizon_seconds: int = 3600) -> DataFrame:
     w = (
         Window.partitionBy("event_type")
         .orderBy(sec)
-        .rangeBetween(-horizon_seconds, 0)
+        .rangeBetween(-3600, 0)
     )
     return events.select(
         "event_id",
@@ -429,13 +426,14 @@ def stream_dedup(events: DataFrame, key: str = "event_id", delay: str = "10 minu
     return events.withWatermark("ts", delay).dropDuplicatesWithinWatermark([key])
 
 
-def dedup_events_batch(events: DataFrame, key: str = "event_id") -> DataFrame:
-    """Deterministic batch twin of :func:`stream_dedup`: one row per key
-    carrying the first-seen (min-ts) values plus the replay count — the
-    record the streaming state would retain inside the watermark horizon.
+def dedup_events_batch(events: DataFrame) -> DataFrame:
+    """Deterministic batch twin of :func:`stream_dedup`: one row per
+    ``event_id`` carrying the first-seen (min-ts) values plus the replay
+    count — the record the streaming state would retain inside the
+    watermark horizon.
     Batch ``dropDuplicates`` keeps an arbitrary row, so the twin pins
     keep-semantics with min aggregates to stay engine-reproducible."""
-    return events.groupBy(key).agg(
+    return events.groupBy("event_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_seen"),
         F.min("ts").alias("ts"),
         F.min("user_id").cast("long").alias("user_id"),
@@ -473,11 +471,10 @@ def hll_range_estimate(sketches: DataFrame) -> DataFrame:
     )
 
 
-def theta_user_setops(
-    events: DataFrame, type_a: str = "click", type_b: str = "purchase"
-) -> DataFrame:
+def theta_user_setops(events: DataFrame) -> DataFrame:
     """Distinct-user SET ALGEBRA from Theta sketches: |A∖B|, |A∩B| and
-    |A∪B| for two event types, computed by combining two pre-built
+    |A∪B| for A = users who clicked and B = users who purchased,
+    computed by combining two pre-built
     sketches — the question ("how many users clicked but never
     purchased?") that HLL cannot answer (HLL only unions) and that
     exactly requires a full anti-join over raw events.  At 100 TB the
@@ -489,10 +486,10 @@ def theta_user_setops(
     # per-segment sketch build never needs a scan per segment)
     both = events.agg(
         F.theta_sketch_agg(
-            F.when(F.col("event_type") == type_a, F.col("user_id"))
+            F.when(F.col("event_type") == "click", F.col("user_id"))
         ).alias("sa"),
         F.theta_sketch_agg(
-            F.when(F.col("event_type") == type_b, F.col("user_id"))
+            F.when(F.col("event_type") == "purchase", F.col("user_id"))
         ).alias("sb"),
     )
     return both.select(

@@ -264,6 +264,24 @@ def test_pipeline_fork_shares_results(spark):
     assert p2.as_data_source("out").count() == 2
 
 
+def test_as_data_source_unions_in_config_order(spark):
+    """The cross-config union follows the ``configs`` list, not thread
+    completion: the first config's stage finishes last here, and its
+    rows must still come first."""
+    import time
+
+    from puma_matcher_spark.pipeline import Pipeline, PipelineConfig, Stage
+
+    def produce(config, inputs):
+        if config.name == "slow":
+            time.sleep(2.0)
+        return spark.createDataFrame([(config.name,)], ["cfg"])
+
+    p = Pipeline("p", [Stage(name="s", input=[], output="out", fn=produce)])
+    p.run([PipelineConfig(name="slow"), PipelineConfig(name="fast")])
+    assert [r["cfg"] for r in p.as_data_source("out").collect()] == ["slow", "fast"]
+
+
 def test_concurrent_query_invocation_thread_safe(spark, sf_small):
     # the driver may call queries from several threads at once
     from concurrent.futures import ThreadPoolExecutor
