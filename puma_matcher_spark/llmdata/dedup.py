@@ -74,10 +74,7 @@ def _shingle_expr(
     from puma_matcher_spark.operators.skew import spread_input
 
     docs = spread_input(docs)
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), " "), lambda x: x != F.lit("")
-    )
-    base = docs.select("doc_id", toks.alias("_tk"))
+    base = docs.select("doc_id", tokens(F.lower(F.col(text_col))).alias("_tk"))
     cnt = F.size("_tk")
     idx = F.when(cnt >= n, F.sequence(F.lit(1), cnt - n + 1)).otherwise(
         F.array().cast("array<int>")
@@ -177,6 +174,24 @@ def lsh_band_keys(
 DEFAULT_MAX_BUCKET = 2000  # same spirit as the sentence-occurrence cap
 
 
+def _cap_buckets(
+    band_keys: DataFrame, max_bucket_size: int | None
+) -> DataFrame:
+    """Drop the (band, band_key) buckets holding more than
+    ``max_bucket_size`` docs (``None``: keep all) — a count over a window
+    partitioned like the bucket join that follows, so no extra exchange."""
+    from pyspark.sql.window import Window
+
+    if max_bucket_size is None:
+        return band_keys
+    bucket_w = Window.partitionBy("band", "band_key")
+    return (
+        band_keys.withColumn("_n", F.count(F.lit(1)).over(bucket_w))
+        .where(F.col("_n") <= max_bucket_size)
+        .drop("_n")
+    )
+
+
 def lsh_candidate_pairs(
     band_keys: DataFrame,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
@@ -192,15 +207,7 @@ def lsh_candidate_pairs(
     reusing the shuffle partitioning the self-join needs anyway (no
     extra exchange, no broadcast dictionary).
     """
-    from pyspark.sql.window import Window
-
-    if max_bucket_size is not None:
-        bucket_w = Window.partitionBy("band", "band_key")
-        band_keys = (
-            band_keys.withColumn("_n", F.count(F.lit(1)).over(bucket_w))
-            .where(F.col("_n") <= max_bucket_size)
-            .drop("_n")
-        )
+    band_keys = _cap_buckets(band_keys, max_bucket_size)
     # persist the (capped) bucket rows (r11): the self-join's second side
     # used to re-derive the WHOLE upstream chain — the planner broadcasts
     # one side, and a BroadcastExchange can never reuse the other side's
@@ -256,7 +263,7 @@ def minhash_incremental_pairs(
     """
     cb = lsh_band_keys(minhash_signatures(shingles(corpus)))
     return minhash_incremental_pairs_indexed(
-        new_docs, cb, max_bucket_size
+        shingles(new_docs), cb, max_bucket_size
     )
 
 
@@ -287,9 +294,10 @@ class DedupIndex:
 
 def build_dedup_index(docs: DataFrame) -> DedupIndex:
     """One map-side pass family over ``docs`` producing the three
-    :class:`DedupIndex` components with the exact kernels the text path
-    uses (with_fingerprint / minhash_signatures / shingles), so the
-    indexed ingest path is result-identical to the text path."""
+    :class:`DedupIndex` components with the exact kernels the text-input
+    operators use (with_fingerprint / minhash_signatures / shingles), so
+    the indexed operators are result-identical to :func:`incremental_ingest`
+    and :func:`minhash_incremental_pairs`."""
     from puma_matcher_spark.llmdata.textstats import with_fingerprint
 
     sh = shingles(docs)
@@ -303,26 +311,18 @@ def build_dedup_index(docs: DataFrame) -> DedupIndex:
 
 
 def minhash_incremental_pairs_indexed(
-    new_docs: DataFrame,
+    new_shingles: DataFrame,
     corpus_band_keys: DataFrame,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
-    """:func:`minhash_incremental_pairs` with the corpus side already an
-    index (``(doc_id, band, band_key)`` rows, e.g. a
-    :class:`DedupIndex`.band_keys) — the per-batch cost drops to the
-    batch's own map-side fingerprinting plus ONE equi-join against
-    hash-width rows; the corpus text is never touched."""
-    from pyspark.sql.window import Window
-
-    nb = lsh_band_keys(minhash_signatures(shingles(new_docs)))
-    cb = corpus_band_keys
-    if max_bucket_size is not None:
-        bucket_w = Window.partitionBy("band", "band_key")
-        cb = (
-            cb.withColumn("_n", F.count(F.lit(1)).over(bucket_w))
-            .where(F.col("_n") <= max_bucket_size)
-            .drop("_n")
-        )
+    """:func:`minhash_incremental_pairs` with both sides past the text:
+    the batch as its :func:`shingles` (which an exact-Jaccard verify
+    reuses) and the corpus as an index (``(doc_id, band, band_key)``
+    rows, e.g. a :class:`DedupIndex`.band_keys) — the per-batch cost
+    drops to the batch's own map-side minhashing plus ONE equi-join
+    against hash-width rows; the corpus text is never touched."""
+    nb = lsh_band_keys(minhash_signatures(new_shingles))
+    cb = _cap_buckets(corpus_band_keys, max_bucket_size)
     return (
         nb.select("band", "band_key", F.col("doc_id").alias("new_doc_id"))
         .join(
@@ -450,7 +450,6 @@ def ngram_jaccard_pairs(
                 F.col("common") / (F.col("n1") + F.col("n2") - F.col("common")), 4
             ),
         )
-        .where(F.col("jaccard") >= 0.0)
         .select("doc1_id", "doc2_id", "common", "jaccard")
     )
 

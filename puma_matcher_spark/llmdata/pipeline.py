@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from puma_matcher_spark.llmdata import dedup as dd
@@ -37,6 +37,28 @@ class CurationResult:
     stage_ids: dict | None = None
 
 
+def checkpoint_stage(
+    rows: DataFrame, keep: Column, **counts: Column
+) -> tuple[DataFrame, dict[str, int]]:
+    """``(ids, counts)``: the ``doc_id``s of ``rows`` where ``keep``
+    holds, localCheckpoint'ed, and the named ``counts`` aggregates over
+    ``rows``, observed inside that checkpoint job.
+
+    The observation sits at the top of the job: AQE replaces a subtree
+    that turns out empty at run time (a stage whose rows all drop) with
+    an empty relation, and an ``observe`` inside it would vanish with
+    it.  So every count is an aggregate over ``rows`` (``count_if`` of
+    a keep flag, a sum of group sizes), never an ``observe`` below a
+    shuffle of the same job."""
+    observed = rows.observe(
+        "stage_counts", *(c.alias(name) for name, c in counts.items())
+    )
+    kept = observed.where(keep).select("doc_id")
+    ids = kept.localCheckpoint()
+    # the eager checkpoint ran kept's own query execution
+    return ids, observed_metrics(kept)["stage_counts"]
+
+
 def curate_documents(
     docs: DataFrame,
     min_tokens: int = 5,
@@ -52,21 +74,20 @@ def curate_documents(
     otherwise re-derives that stage's whole DAG (measured: the
     llm_curation query 6.5 s → 2.9 s at sf0.1 with the barriers).  The
     checkpointed frames are doc_id-only.  The four audit counts are
-    ``DataFrame.observe`` metrics of the exact-dedup and quality
-    checkpoint jobs, so they cost no Spark job of their own.
+    observed inside the exact-dedup and quality checkpoint jobs
+    (:func:`checkpoint_stage`), so they cost no Spark job of their own,
+    and an empty corpus counts zeros.
     """
-
-    def counted(stage: str, df: DataFrame) -> DataFrame:
-        return df.observe(stage, F.count(F.lit(1)).alias("n"))
-
-    # 1. exact dedup — keep the min doc_id per content fingerprint
-    exact_stage = counted(
-        "after_exact_dedup",
-        dd.exact_duplicates(counted("input", docs)).select(
-            F.col("keep_id").alias("doc_id")
+    # 1. exact dedup — keep the min doc_id per content fingerprint; the
+    #    input is the sum of the fingerprint groups
+    keep_exact, exact_counts = checkpoint_stage(
+        dd.exact_duplicates(docs).select(
+            F.col("keep_id").alias("doc_id"), "doc_count"
         ),
+        F.lit(True),
+        input=F.coalesce(F.sum("doc_count"), F.lit(0)),
+        after_exact_dedup=F.count(F.lit(1)),
     )
-    keep_exact = exact_stage.localCheckpoint()
     docs1 = docs.join(keep_exact, "doc_id", "left_semi")
 
     # 2. near-dup removal — MinHash-LSH candidates verified by exact
@@ -94,23 +115,19 @@ def curate_documents(
 
     # 3. quality filter — token count + lexical diversity; the near-dedup
     #    survivors are counted as they stream into this stage's job
-    stats = ts.with_token_stats(counted("after_near_dedup", docs2))
-    quality_stage = counted(
-        "after_quality",
-        stats.where(
-            (F.col("token_count") >= min_tokens)
-            & (F.col("distinct_ratio") >= 0.05)
-        ).select("doc_id"),
+    good_doc = (F.col("token_count") >= min_tokens) & (
+        F.col("distinct_ratio") >= 0.05
     )
-    good = quality_stage.localCheckpoint()
+    good, quality_counts = checkpoint_stage(
+        ts.with_token_stats(docs2),
+        good_doc,
+        after_near_dedup=F.count(F.lit(1)),
+        after_quality=F.count_if(good_doc),
+    )
     docs3 = docs2.join(good, "doc_id", "left_semi")
-
-    # both checkpoints are eager: their jobs have filled the metrics
-    metrics = {**observed_metrics(exact_stage), **observed_metrics(quality_stage)}
-    stages = ("input", "after_exact_dedup", "after_near_dedup", "after_quality")
     return CurationResult(
         clean=docs3,
-        stage_counts={stage: metrics[stage]["n"] for stage in stages},
+        stage_counts={**exact_counts, **quality_counts},
         stage_ids={"keep_exact": keep_exact, "drops": drops, "good": good},
     )
 

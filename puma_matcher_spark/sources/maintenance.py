@@ -74,6 +74,16 @@ class HadoopFs:
         if not self._fs.delete(jp, True) and self._fs.exists(jp):
             raise OSError(f"filesystem delete failed: {p}")
 
+    def restore_parked(self, p: str) -> bool:
+        """Whether dataset ``p`` exists, after crash recovery: a
+        compaction that died between its two renames left the data
+        parked at ``p + ".compact-old"`` and nothing at ``p`` — move it
+        back first."""
+        old = p + ".compact-old"
+        if not self.isdir(p) and self.isdir(old):
+            self.rename(old, p)
+        return self.isdir(p)
+
     def parquet_stats(self, p: str) -> tuple[int, int]:
         """(n_files, total_bytes) of the parquet files under ``p``."""
         n = size = 0
@@ -146,11 +156,7 @@ def compact_parquet(
     """
     fs = HadoopFs(spark, path)
     old = path + ".compact-old"
-    # crash recovery: a previous run that died between its two renames
-    # left the data under .compact-old and nothing at path
-    if not fs.isdir(path) and fs.isdir(old):
-        fs.rename(old, path)
-    if not fs.isdir(path):
+    if not fs.restore_parked(path):
         # a missing table must FAIL the maintenance job, not log a
         # successful zero-file compaction (typo'd paths stay visible)
         raise FileNotFoundError(f"no dataset directory at {path}")
@@ -222,7 +228,8 @@ def compact_batch_index(
     :func:`compact_parquet` (previous data parked at
     ``path + ".compact-old"`` until the swap completes; a crash between
     the renames is recovered by the next call — or by the reader-side
-    probe in apps.run_streaming_ingest_app).  No-ops when fewer than
+    probe in apps.run_streaming_ingest_app; both go through
+    :meth:`HadoopFs.restore_parked`).  No-ops when fewer than
     two partitions would fold.
 
     Returns {"files_before", "files_after", "dirs_before",
@@ -232,9 +239,7 @@ def compact_batch_index(
 
     fs = HadoopFs(spark, path)
     old = path + ".compact-old"
-    if not fs.isdir(path) and fs.isdir(old):
-        fs.rename(old, path)
-    if not fs.isdir(path):
+    if not fs.restore_parked(path):
         raise FileNotFoundError(f"no dataset directory at {path}")
     bids = sorted(
         int(e.split("=", 1)[1])

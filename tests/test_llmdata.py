@@ -226,6 +226,24 @@ def test_curation_pipeline_end_to_end(spark):
     assert result.stage_counts["after_quality"] == 2
 
 
+def test_curation_of_an_empty_corpus_counts_zeros(spark):
+    """Every stage of an empty corpus is empty at run time; the counts
+    observed at the top of each stage job still come back, as zeros."""
+    from puma_matcher_spark.llmdata.pipeline import curate_documents
+
+    docs = spark.createDataFrame(
+        [], "doc_id LONG, text STRING, lang STRING, source STRING"
+    )
+    result = curate_documents(docs)
+    assert result.stage_counts == {
+        "input": 0,
+        "after_exact_dedup": 0,
+        "after_near_dedup": 0,
+        "after_quality": 0,
+    }
+    assert result.clean.collect() == []
+
+
 @pytest.mark.slow
 def test_curation_scoped_bucket_cache_is_released(spark):
     """r12 (r11 verdict #7): repeated curation runs must not accumulate

@@ -52,7 +52,8 @@ MATCHER_QUERIES = [
     "weight_eval",
 ]
 
-#: the near-dup (SimHash, MinHash-LSH) and lexical-retrieval kernels
+#: the near-dup (SimHash, MinHash-LSH), incremental exact-dedup and
+#: lexical-retrieval kernels
 NEAR_DUP_QUERIES = [
     "simhash",
     "simhash128",
@@ -60,6 +61,7 @@ NEAR_DUP_QUERIES = [
     "hamming_pairs",
     "picture_lsh_pairs",
     "minhash_pairs",
+    "incremental_ingest",
     "incremental_near_dups",
     "doc_keywords",
     "bm25_search",
