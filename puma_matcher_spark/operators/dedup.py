@@ -379,38 +379,26 @@ def _cc_driver(sym: DataFrame, table: pa.Table) -> DataFrame:
 
 
 def _cc_loop(sym: DataFrame, max_iterations: int) -> DataFrame:
-    from puma_matcher_spark.operators.graph import (
-        BROADCAST_NODES_MAX,
-        _CadencedBarrier,
-        loop_shuffle_partitions,
-    )
+    from puma_matcher_spark.operators.graph import BROADCAST_NODES_MAX, _CadencedBarrier
     from puma_matcher_spark.plans.inspect import observed_metrics
 
     # the label init absorbs the first hop (each node starts at the min
     # of itself and its neighbours) and its eager checkpoint job observes
-    # the node and edge counts the broadcast gate and the shuffle sizing
-    # read
+    # the node count the broadcast gate reads
     init = (
         sym.groupBy("src")
-        .agg(
-            F.least(F.col("src"), F.min("dst")).alias("component"),
-            F.count(F.lit(1)).alias("_deg"),
-        )
-        .observe(
-            "cc_init",
-            F.count(F.lit(1)).alias("nodes"),
-            F.sum("_deg").alias("edges"),
-        )
+        .agg(F.least(F.col("src"), F.min("dst")).alias("component"))
+        .observe("cc_init", F.count(F.lit(1)).alias("nodes"))
         .select(F.col("src").alias("id"), "component")
     )
     labels = init.localCheckpoint()
-    n = observed_metrics(init)["cc_init"]
+    n_nodes = observed_metrics(init)["cc_init"]["nodes"]
     # labels is O(nodes) and checkpoint-backed (no stats for plan-time
     # auto-broadcast) — broadcast it explicitly when small so the
     # persisted edge list never re-shuffles per round; web-scale graphs
     # fall back to the co-partitioned shuffle join (same gate as the
     # PageRank / label-propagation loops)
-    bc = F.broadcast if n["nodes"] <= BROADCAST_NODES_MAX else (lambda df: df)
+    bc = F.broadcast if n_nodes <= BROADCAST_NODES_MAX else (lambda df: df)
 
     def n_changed(labels: DataFrame) -> int:
         # the convergence test doubles as the barrier's materializing
@@ -418,13 +406,8 @@ def _cc_loop(sym: DataFrame, max_iterations: int) -> DataFrame:
         return labels.agg(F.count_if("_changed")).first()[0]
 
     changed = 0
-    # size the loop's shuffle partitions from the measured edge count
-    # (r12 — same anti-scaling fix as the pagerank/LPA/k-core loops);
     # every round passes the shared stats-reset barrier, materialized
-    with (
-        loop_shuffle_partitions(sym.sparkSession, n["edges"] or 0),
-        _CadencedBarrier(max_iterations, cadence=1) as barrier,
-    ):
+    with _CadencedBarrier(max_iterations, cadence=1) as barrier:
         for i in range(max_iterations):
             # one plan per round, L' = min(L, hop(L), L∘L): the min over
             # each node's own label, its neighbours' labels and the label

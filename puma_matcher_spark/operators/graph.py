@@ -18,7 +18,8 @@ uniformly through a 1-row scalar aggregate, so total mass stays 1.0 —
 the invariant the ``pagerank_mass`` property query checks.
 
 At scale: ranks/edges keep a stable hash partitioning on the join key
-across iterations (one co-partitioned shuffle each).  Every iterative
+across iterations (one co-partitioned shuffle each), at the session's
+shuffle width (session.py), which AQE coalesces.  Every iterative
 loop — these three and the connected-components loop in
 operators/dedup.py — passes each round through the ONE stats-reset
 barrier, :class:`_CadencedBarrier`, which truncates the lineage, resets
@@ -29,7 +30,6 @@ round frame on every exit path.
 from __future__ import annotations
 
 import time
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,64 +51,6 @@ from puma_matcher_spark.functions.rounding import pround
 #: it the whole edge list is collected and solved on the driver, above
 #: it the distributed loop runs.
 BROADCAST_NODES_MAX = 500_000
-
-#: Loop shuffle-partition sizing (r12, r11 verdict #1).  The driver's
-#: 8-vs-32-core scaling block showed the iterative loops ANTI-scale at
-#: local[32] on sf-sized graphs: pagerank_top ran 40% faster on 8 cores
-#: (ratio 0.60) because every per-round aggregate shuffled a ~1M-row
-#: frame across 32 partitions — pure task-scheduling overhead (guide
-#: §2.1/§2.2: size shuffles to the data).  The loops therefore derive
-#: their shuffle-partition count from the MEASURED edge count instead of
-#: inheriting the session default (a constant tuned for neither shape):
-#:
-#:   partitions = max(bytes/128MB, min(cores, bytes/16MB))
-#:
-#: * bytes = edge rows x ~64 B (two short string ids, serialized);
-#: * the 16 MB local target keeps small graphs parallel across real
-#:   cores without 32-way tiny-task storms (measured sweeps at sf0.1,
-#:   1.17M edges: 4-8 partitions beat both 1 and 32 — OPTIMIZATION_r12.md
-#:   §1; pagerank_top 11.7→6.4 s, LPA 6.0→3.4 s — and the interleaved
-#:   5/6-vs-9 follow-up put ~5 partitions ahead of 9 on BOTH loops, so
-#:   the target sits at 16 MB ≈ 230k edge rows);
-#: * the 128 MB floor takes over at cluster scale so tasks stay in the
-#:   guide's 100 MB-1 GB band no matter the core count.
-#:
-#: Re-measured at sf0.1 on a 4-core host running local[32] (2
-#: interleaved pairs, warm medians, sizing on vs off): pagerank_top
-#: 10.3 vs 16.2 s, purchase_communities 6.6 vs 8.6 s, purchase_kcore
-#: 11.0 vs 13.1 s.  At local[4] the derived count equals the session
-#: default (pagerank_top 9.98 vs 9.94 s over 3 pairs: noise).
-_EDGE_ROW_BYTES = 64
-_LOOP_LOCAL_TARGET = 16 << 20
-_LOOP_SCALE_TARGET = 128 << 20
-
-
-def loop_shuffle_partition_count(spark, n_rows: int) -> int:
-    """Shuffle-partition count for an iterative graph loop over
-    ``n_rows`` edge rows (see the sizing note above)."""
-    est_bytes = max(1, n_rows) * _EDGE_ROW_BYTES
-    cores = spark.sparkContext.defaultParallelism
-    local = min(cores, -(-est_bytes // _LOOP_LOCAL_TARGET))
-    at_scale = -(-est_bytes // _LOOP_SCALE_TARGET)
-    return max(1, local, at_scale)
-
-
-@contextmanager
-def loop_shuffle_partitions(spark, n_rows: int):
-    """Scope ``spark.sql.shuffle.partitions`` to a size derived from the
-    loop's edge count; restores the session value on exit.  Session-wide
-    while held (Spark has no per-plan shuffle-partition knob), which is
-    safe here: the loops are driver-controlled and the engine runs
-    queries sequentially per session."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(loop_shuffle_partition_count(spark, n_rows)),
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _is_persisted(df: DataFrame) -> bool:
@@ -279,23 +221,6 @@ def pagerank(
     caller_persisted = _is_persisted(edges)
     if not caller_persisted:
         edges = edges.persist()
-    # materialize the edge cache and size the loop's shuffle partitions
-    # from the measured edge count (r12 — see loop_shuffle_partitions);
-    # the count is one cheap job over the cache the setup needs anyway
-    n_edges = edges.count()
-    with loop_shuffle_partitions(edges.sparkSession, n_edges):
-        return _pagerank_loop(
-            edges, caller_persisted, damping, n_iter, round_times
-        )
-
-
-def _pagerank_loop(
-    edges: DataFrame,
-    caller_persisted: bool,
-    damping: float,
-    n_iter: int,
-    round_times: list[float] | None,
-) -> DataFrame:
     # ONE setup job answers every structural question the loop needs:
     # src-side ∪ dst-side full-outer merge gives the node frame plus
     # per-node has_out/has_in flags, and a single aggregate over it
@@ -416,29 +341,16 @@ def label_propagation(
     """
     caller_persisted = _is_persisted(edges)
     sym = edges if caller_persisted else edges.persist()
-    # size the loop's shuffle partitions from the measured edge count
-    # (r12 — see loop_shuffle_partitions); the count materializes the
-    # cache the label init scans anyway
-    with loop_shuffle_partitions(sym.sparkSession, sym.count()):
-        return _lpa_loop(sym, caller_persisted, n_iter, round_times)
-
-
-def _lpa_loop(
-    sym: DataFrame,
-    caller_persisted: bool,
-    n_iter: int,
-    round_times: list[float] | None,
-) -> DataFrame:
-    labels = (
-        edge_nodes(sym)
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    # same gate as pagerank: labels is O(nodes), checkpoint-backed
-    bc = F.broadcast if labels.count() <= BROADCAST_NODES_MAX else (lambda df: df)
-    # each round's labels frame feeds exactly one consumer (the
-    # neighbour join), so light rounds compose (see _CadencedBarrier)
     try:
+        labels = (
+            edge_nodes(sym)
+            .withColumn("label", F.col("node"))
+            .localCheckpoint()
+        )
+        # same gate as pagerank: labels is O(nodes), checkpoint-backed
+        bc = F.broadcast if labels.count() <= BROADCAST_NODES_MAX else (lambda df: df)
+        # each round's labels frame feeds exactly one consumer (the
+        # neighbour join), so light rounds compose (see _CadencedBarrier)
         with _CadencedBarrier(
             n_iter, compose=True, round_times=round_times
         ) as barrier:
@@ -513,18 +425,6 @@ def k_core(
         # unpeeled input would come back as "the k-core"
         raise ValueError(f"n_rounds must be >= 1, got {n_rounds}")
     cur = edges.localCheckpoint()
-    # size the peel loop's shuffle partitions from the starting edge
-    # count (r12 — see loop_shuffle_partitions; survivors only shrink)
-    with loop_shuffle_partitions(cur.sparkSession, cur.count()):
-        return _k_core_loop(cur, k, n_rounds, round_times)
-
-
-def _k_core_loop(
-    cur: DataFrame,
-    k: int,
-    n_rounds: int,
-    round_times: list[float] | None,
-) -> DataFrame:
     # keep is O(surviving nodes) ≤ O(nodes); gate once on the starting
     # node count — survivors only shrink round over round
     bc = (

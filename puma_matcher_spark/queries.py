@@ -7574,10 +7574,11 @@ _PYTEST_ONLY: frozenset[str] = frozenset(
 # exported count, so the standing invariant is max row age <= 4 rounds
 # (audit hard-fails beyond that).  Round-12 breakdown: 0 net-new + the
 # full 45-name r8 cohort at its age-4 boundary + 5 changed-plan
-# re-greens: the iterative loops now derive their shuffle-partition
-# count from the edge count (r12 §1), which changes double-summation
-# order in the PageRank power iteration — pagerank_top / pagerank_mass
-# are the only float-accumulating loop outputs (re-green first), then
+# re-greens: the iterative loops then derived their shuffle-partition
+# count from the edge count (r12 §1, since removed), which changed
+# double-summation order in the PageRank power iteration —
+# pagerank_top / pagerank_mass are the only float-accumulating loop
+# outputs (re-green first), then
 # purchase_communities / purchase_kcore / semantic_dedup_blocked for
 # the loop + embedding-kernel plan changes.  The remaining changed-plan
 # CC consumers (near_dup_clusters, cluster_representatives,
@@ -7590,8 +7591,8 @@ _PYTEST_ONLY: frozenset[str] = frozenset(
 # semantic_contamination (embedding-kernel change) is already in the r8
 # cohort below.
 _PRIORITY: list[str] = [
-    # -- 1. changed plans this round (r12): loop shuffle-partition
-    #       sizing (float-sum order moves within the 1e-6 output
+    # -- 1. changed plans in r12: loop shuffle-partition sizing, since
+    #       removed (float-sum order moves within the 1e-6 output
     #       rounding) + the semantic embedding-kernel hoist.
     "pagerank_top",
     "pagerank_mass",

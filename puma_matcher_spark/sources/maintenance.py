@@ -401,9 +401,10 @@ def zorder_by_quantized(
     Quantization is what makes the interleave effective when the two
     domains differ in magnitude: interleaving RAW keys lets the wider
     key's high bits dominate the sort prefix, so file boundaries carry
-    no locality for the narrower key (measured in zorder_stress.py: the
-    narrow key pruned ~1%; quantized, both prune like a linear sort on
-    themselves).
+    no locality for the narrower key (PLANS.md, "Z-order row-group
+    skipping at sf0.1": a 10% range on the narrow key read 98.8% of the
+    rows with raw keys and 32.1% quantized, where the wide key read 19.1%
+    and a linear sort on it 12.5%).
 
     ``strategy="width"`` buckets by (value - min)/(max - min) — right
     for roughly uniform keys, and costs one extra aggregate pass.

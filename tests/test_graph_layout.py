@@ -545,33 +545,3 @@ def test_normalized_barrier_times_windows():
     assert normalized_barrier_times(
         [0, 0, 0, 8.0, 0, 0, 0, 4.0], cadence=4
     ) == [2.0, 1.0]
-
-
-def test_loop_shuffle_partition_count_scales_with_edges(spark):
-    """r12: the iterative loops derive their shuffle-partition count
-    from the measured edge count — small graphs get a few real-core
-    partitions (not a 32-way tiny-task storm), huge graphs get the
-    ~128 MB/partition floor regardless of core count."""
-    from puma_matcher_spark.operators.graph import (
-        _EDGE_ROW_BYTES,
-        _LOOP_SCALE_TARGET,
-        loop_shuffle_partition_count,
-    )
-
-    cores = spark.sparkContext.defaultParallelism
-    assert loop_shuffle_partition_count(spark, 0) == 1
-    assert loop_shuffle_partition_count(spark, 1_000) == 1
-    # sf0.1 purchase graph scale: more than 1, no more than the cores
-    mid = loop_shuffle_partition_count(spark, 1_173_742)
-    assert 1 < mid <= cores
-    # cluster scale: the 128 MB floor dominates the core count
-    huge_rows = 10**12
-    want_floor = -(-huge_rows * _EDGE_ROW_BYTES // _LOOP_SCALE_TARGET)
-    assert loop_shuffle_partition_count(spark, huge_rows) == want_floor
-    assert want_floor > cores
-    # monotone in the row count
-    counts = [
-        loop_shuffle_partition_count(spark, n)
-        for n in (10**3, 10**5, 10**6, 10**8, 10**10)
-    ]
-    assert counts == sorted(counts)

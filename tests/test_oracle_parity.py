@@ -94,6 +94,47 @@ def test_matcher_and_graph_queries_match_oracle(spark, sf_small, monkeypatch):
     assert not failed, "\n".join(failed)
 
 
+#: ceiling on the Spark jobs of a graph-loop query at sf0.001 in the test
+#: session, on its second run (the memoized purchase edge list built).
+#: Measured on 4 cores; with the loops' scoped shuffle width and the edge
+#: counts that sized it they ran 42 / 43 / 22 / 21.
+GRAPH_QUERY_MAX_JOBS = {
+    "pagerank_top": 41,
+    "pagerank_mass": 42,
+    "purchase_communities": 20,
+    "purchase_kcore": 21,
+}
+
+
+@pytest.mark.parametrize("name", GRAPH_LOOP_QUERIES)
+def test_graph_loop_query_job_count(spark, sf_small, name):
+    """A graph-loop query runs at most its pinned number of Spark jobs
+    once its memoized edge list is built: a re-added sizing count or
+    eager probe shows up here."""
+    from puma_matcher_spark.functions import caching
+    from puma_matcher_spark.sources.testdata import reset_table_cache
+
+    def reset():
+        caching.drain()
+        reset_table_cache()
+        spark.catalog.clearCache()
+
+    sc = spark.sparkContext
+    group = f"test-graph-loop-{name}"
+    reset()
+    try:
+        REGISTRY[name].spark_fn(spark, sf_small).collect()
+        sc.setJobGroup(group, name)
+        REGISTRY[name].spark_fn(spark, sf_small).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        reset()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= GRAPH_QUERY_MAX_JOBS[name], (
+        f"{name} ran {n_jobs} Spark jobs, above {GRAPH_QUERY_MAX_JOBS[name]}"
+    )
+
+
 def test_run_all_rejects_names_it_cannot_compare(spark, sf_small):
     """A requested name that has no oracle twin (``weight_refined``) or
     is not registered fails loudly before any query runs, instead of

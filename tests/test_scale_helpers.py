@@ -1,5 +1,5 @@
 import pytest
-"""Plan inspection, skew helpers, publish, formula/instrument analysers."""
+"""Plan inspection, scan spreading, publish, formula/instrument analysers."""
 
 import os
 import tempfile
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from puma_matcher_spark.functions.formula import extract_formulas, is_formula_candidate
 from puma_matcher_spark.operators import instrument as instr
-from puma_matcher_spark.operators import skew
 from puma_matcher_spark.plans import inspect as pi
 from puma_matcher_spark.sources import publish
 
@@ -28,22 +27,6 @@ def test_pricing_summary_pushes_filter_to_scan(spark, sf_small):
     df = REGISTRY["pricing_summary"].spark_fn(spark, sf_small)
     pushed = " ".join(p for p in pi.pushed_filters(df))
     assert "l_shipdate" in pushed
-
-
-def test_salted_join_matches_plain_join(spark):
-    left = spark.createDataFrame(
-        [(1, i) for i in range(100)] + [(2, i) for i in range(5)], ["k", "v"]
-    )
-    right = spark.createDataFrame([(1, "hot"), (2, "cold")], ["k", "name"])
-    plain = left.join(right, "k").groupBy("name").count()
-    salted = skew.salted_join(left, right, "k").groupBy("name").count()
-    assert {tuple(r) for r in plain.collect()} == {tuple(r) for r in salted.collect()}
-
-
-def test_salted_aggregate_matches_plain_sum(spark):
-    df = spark.createDataFrame([(1, float(i)) for i in range(50)], ["k", "v"])
-    got = skew.salted_aggregate(df, "k", "v").first()
-    assert got["sum_v"] == sum(range(50))
 
 
 def test_publish_blue_green_swap(spark):
@@ -119,37 +102,6 @@ def test_duplicated_codes(spark):
     )
     got = [r["alias"] for r in instr.duplicated_codes(aliases).collect()]
     assert got == ["X"]
-
-
-def test_bucketed_write_read_roundtrip(spark):
-    import uuid
-
-    tbl = f"bucketed_test_{uuid.uuid4().hex[:8]}"
-    df = spark.createDataFrame([(i % 10, i) for i in range(100)], ["k", "v"])
-    try:
-        skew.write_bucketed(df, tbl, "k", num_buckets=4)
-        back = skew.read_bucketed(spark, tbl)
-        assert back.count() == 100
-        # joining two bucketed reads on the bucket key must be fully
-        # co-located: with broadcast disabled, the sort-merge join plans
-        # ZERO shuffle exchanges — the whole point of bucketing at 100 TB
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = back.join(
-                skew.read_bucketed(spark, tbl).withColumnRenamed("v", "v2"), "k"
-            )
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "ShuffleExchange" not in plan.replace(
-                "ShuffleExchangeExec", "X"
-            ) and "Exchange hashpartitioning" not in plan, plan
-            assert j.count() == 1000
-        finally:
-            # restore the SESSION's configured value, not Spark's built-in
-            # default — later plan-shape tests share this session
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
 def test_technique_filter_semi_join(spark):
@@ -411,15 +363,3 @@ def test_partitioned_sink_prunes_partitions(spark, tmp_path):
     pf = pi.partition_filters(rd)
     assert pf and any("src1" in line for line in pf), pf
     assert rd.count() == 25
-
-
-def test_key_skew_report_shares(spark):
-    df = spark.createDataFrame(
-        [("hot",)] * 80 + [("warm",)] * 15 + [("cold",)] * 5, ["k"]
-    )
-    rows = skew.key_skew_report(df, "k", top_n=2).collect()
-    assert [(r["skew_rank"], r["key_value"], r["n"]) for r in rows] == [
-        (1, "hot", 80),
-        (2, "warm", 15),
-    ]
-    assert abs(rows[0]["row_share"] - 0.8) < 1e-9
