@@ -68,28 +68,61 @@ BENCH_QUERIES_ROUND6 = [
 ]
 
 
+def _media_payloads(n_per_format: int) -> dict[str, list[bytes]]:
+    """n 128x128 images per codec, encoded by the independent test
+    encoders (imported from ``tests/``)."""
+    import numpy as np
+    from test_jpeg import encode_jpeg, encode_jpeg_progressive
+    from test_multimodal import _bmp_bytes, _gif_bytes, _png_bytes_generic, _ppm_bytes
+    from test_tiff import encode_tiff
+    from test_vp8l import encode_vp8l
+
+    dim = 128
+    rng = np.random.default_rng(0)
+    out = {}
+    pal = rng.integers(0, 256, size=(64, 3), dtype=np.uint8)
+    for _ in range(n_per_format):
+        # smooth-ish content (realistic for photos, kinder to PNG filters)
+        base = rng.integers(0, 64, size=(dim, dim, 3), dtype=np.int16)
+        px = np.clip(
+            np.cumsum(np.cumsum(base - 31, axis=0), axis=1) % 256, 0, 255
+        ).astype(np.uint8)
+        idx = rng.integers(0, 64, size=(dim, dim), dtype=np.uint8)
+        out.setdefault("ppm", []).append(_ppm_bytes(px))
+        out.setdefault("bmp", []).append(_bmp_bytes(px))
+        out.setdefault("png", []).append(_png_bytes_generic(px))
+        out.setdefault("gif", []).append(_gif_bytes(idx, pal))
+        out.setdefault("jpeg", []).append(encode_jpeg(px, quality=85))
+        out.setdefault("jpeg_prog", []).append(encode_jpeg_progressive(px, quality=85))
+        out.setdefault("webp_vp8l", []).append(
+            encode_vp8l(pal[idx], cache_bits=6, backrefs=True)
+        )
+        out.setdefault("tiff_lzw", []).append(encode_tiff(px, compression=5))
+    return out
+
+
 def _time_media(spark, n_per_format: int = 8) -> float | None:
     """One mixed-format frame (8 codecs x n images at 128x128) through the
     REAL distributed decode path (mapInPandas) — min-of-3 like the query
     groups.  Payloads come from the independent test encoders; workload
     generation is outside the timed region.  Returns None (group omitted)
     if the encoders are unavailable, so the bench contract never breaks
-    on a stripped checkout."""
+    on a stripped checkout.  Per-codec decode rates: PLANS.md
+    "Media-plane decode throughput (round 4)"."""
     try:
         here = os.path.dirname(os.path.abspath(__file__))
-        sys.path.insert(0, os.path.join(here, "scripts"))
         sys.path.insert(0, os.path.join(here, "tests"))
-        from media_stress import _payloads
+        payloads = _media_payloads(n_per_format)
 
         from puma_matcher_spark.llmdata.multimodal import (
             extract_media_features_decoded,
         )
     except ImportError:
-        return None  # stripped checkout: encoders/scripts absent
+        return None  # stripped checkout: test encoders absent
 
     media = None
     try:
-        blobs = [b for fmt in _payloads(n_per_format).values() for b in fmt]
+        blobs = [b for fmt in payloads.values() for b in fmt]
         media = spark.createDataFrame(
             [(i, bytearray(b)) for i, b in enumerate(blobs)],
             "media_id LONG, payload BINARY",

@@ -401,8 +401,7 @@ def run_streaming_ingest_app(
     gate) inside ``foreachBatch``.
 
     Accepted documents land in ``out_root/batch_id=<id>`` partitions
-    with overwrite — the idempotent-sink recipe
-    (streaming/events.py:write_stream_idempotent): a replayed batch
+    with overwrite — the idempotent-sink recipe: a replayed batch
     after a crash rewrites its own partition instead of duplicating
     rows.  ``availableNow`` trigger: each call drains everything
     appended since the last committed offset, then stops — the

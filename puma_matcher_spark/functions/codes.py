@@ -1,11 +1,12 @@
-"""Regex code extraction — DOI and proposal-code analysers.
+"""Regex code extraction — the CodeAnalyser rebuild.
 
 Reference: utils/nlp/CodeAnalyser/CodeAnalyserService.java:13-53 applies
 two regexes per document (proposal code ``[1-9]-[0-9]{1,2}-[0-9]{1,4}``
-plus CRG variants; DOI ``10.xxxx/...``), and analyser/DoiAnalyser.scala /
-ProposalCodeAnalyser.scala turn the hits into (document, entity) rows,
-separating *owned* codes from *referenced* codes (right-outer-as-anti
-join, J9 → rebuilt as left_anti).
+plus CRG variants; DOI ``10.xxxx/...``).  The registered query
+``code_extraction`` builds its column with :func:`extract_codes`; the
+reference's owned-vs-referenced split (analyser/DoiAnalyser.scala,
+ProposalCodeAnalyser.scala, J9) has no registered query and is not
+rebuilt.
 
 Spark-first: ``regexp_extract_all`` (Spark 3.1+) keeps extraction inside
 codegen; one projection + explode, no UDF.
@@ -13,7 +14,7 @@ codegen; one projection + explode, no UDF.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 PROPOSAL_CODE_RE = r"\b([1-9]-[0-9]{1,2}-[0-9]{1,4}|CRG-[0-9]{1,4})\b"
@@ -22,73 +23,3 @@ DOI_RE = r"\b(10\.[0-9]{4,9}/[-._;()/:A-Za-z0-9]+)\b"
 
 def extract_codes(text: Column, pattern: str) -> Column:
     return F.regexp_extract_all(text, F.lit(pattern), 1)
-
-
-def extract_proposal_codes(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc, code) rows for every proposal-code mention in the text."""
-    return docs.select(
-        F.col(id_col).alias("document_version_id"),
-        F.explode(
-            F.array_distinct(
-                F.regexp_extract_all(F.col(text_col), F.lit(PROPOSAL_CODE_RE), 1)
-            )
-        ).alias("code"),
-    )
-
-
-def extract_dois(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc, doi) rows for every DOI mention in the text."""
-    return docs.select(
-        F.col(id_col).alias("document_version_id"),
-        F.explode(
-            F.array_distinct(
-                F.regexp_extract_all(F.col(text_col), F.lit(DOI_RE), 1)
-            )
-        ).alias("doi"),
-    )
-
-
-def referenced_minus_owned(
-    referenced: DataFrame, owned: DataFrame, entity_col: str
-) -> DataFrame:
-    """J9 — mentions of codes a document does not own, as a left_anti join
-    (cleaner than the reference's right_outer + isNull at
-    DoiAnalyser.scala:79-82)."""
-    return referenced.join(
-        owned, ["document_version_id", entity_col], "left_anti"
-    )
-
-
-def code_extractor_udtf():
-    """True Python UDTF twin of the code extraction — the reference's
-    CodeAnalyserService is exactly a UDTF shape (one document row in,
-    N (code, type) rows out; the reference fakes it with a
-    tuple-array UDF + explode, DocumentWordSpecAnalyser.scala:89-98).
-
-    API-parity demonstration: the PRODUCTION path stays the codegen'd
-    ``regexp_extract_all`` above (a row-at-a-time Python UDTF is the
-    slow path at 100 TB); use this form when per-row logic genuinely
-    can't be expressed as expressions.  Returns the UDTF (created
-    lazily so importing this module never requires an active session).
-    """
-    import re
-
-    from pyspark.sql.functions import udtf
-
-    prop_re = re.compile(PROPOSAL_CODE_RE)
-    doi_re = re.compile(DOI_RE)
-
-    @udtf(returnType="code: string, code_type: string")
-    class ExtractCodes:
-        def eval(self, doc_id, text: str):
-            seen = set()
-            for m in prop_re.finditer(text or ""):
-                if (m.group(1), "proposal") not in seen:
-                    seen.add((m.group(1), "proposal"))
-                    yield m.group(1), "proposal"
-            for m in doi_re.finditer(text or ""):
-                if (m.group(1), "doi") not in seen:
-                    seen.add((m.group(1), "doi"))
-                    yield m.group(1), "doi"
-
-    return ExtractCodes

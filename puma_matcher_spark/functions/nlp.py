@@ -127,9 +127,6 @@ def make_tag_udf(kernel, backend: str = "perceptron"):
     return _udf
 
 
-#: Arrow-batched POS tagging of token arrays (perceptron backend)
-pos_tags = make_tag_udf(_pos_batch)
-
 #: Arrow-batched NER tagging of token arrays (perceptron backend)
 ner_tags = make_tag_udf(_ner_batch)
 
@@ -293,19 +290,3 @@ def word_features(
             (F.col("pos") + 1).cast("long").alias("word_position"),
         )
     )
-
-
-def filter_by_pos(
-    docs: DataFrame,
-    tokens_col: str = "words",
-    whitelist: tuple[str, ...] = POS_WHITELIST,
-) -> DataFrame:
-    """Keep only whitelist-tagged tokens (zip tokens with tags, filter,
-    project back) — the reference's word-model pruning."""
-    tagged = docs.withColumn("_tags", pos_tags(F.col(tokens_col)))
-    wl = F.array(*[F.lit(t) for t in whitelist])
-    zipped = F.arrays_zip(F.col(tokens_col), F.col("_tags"))
-    kept = F.filter(zipped, lambda x: F.array_contains(wl, x["_tags"]))
-    return tagged.withColumn(
-        "content_words", F.transform(kept, lambda x: x[tokens_col])
-    ).drop("_tags")

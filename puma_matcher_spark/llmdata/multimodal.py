@@ -15,11 +15,10 @@ YCbCr, llmdata/jpeg.py), lossless WebP (VP8L: prefix codes, LZ77,
 color cache, all four transforms, llmdata/vp8l.py), AND baseline TIFF
 (both byte orders, none/LZW/Deflate/PackBits strips, predictor 2,
 llmdata/tiff.py) — every common still-image container now decodes
-stdlib-only, run end-to-end by ``extract_media_features_decoded``.  Audio decodes WAV/RIFF containers
-(PCM 8/16/24/32 + float32) and raw PCM16; video decodes YUV4MPEG2
-(y4m).  Lossy WebP (the VP8 video intra codec) and the exotic JPEG
-profiles (arithmetic, lossless, 12-bit) raise NotImplementedError
-honestly; the synthetic fixture paths keep ``fake_decode_rgb`` because
+stdlib-only, run end-to-end by ``extract_media_features_decoded``.  Audio
+decodes raw PCM16.  Lossy WebP (the VP8 video intra codec) and the
+exotic JPEG profiles (arithmetic, lossless, 12-bit) raise
+NotImplementedError honestly; the synthetic fixture paths keep ``fake_decode_rgb`` because
 their string payloads are not media bytes.
 
 Scale notes: binary payloads ride the shuffle only if you shuffle them —
@@ -42,16 +41,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("mime_type", StringType()),
-        StructField("payload", StringType()),  # binary stand-in on fixtures
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-    ]
 )
 
 FEATURE_SCHEMA = StructType(
@@ -654,87 +643,6 @@ def decode_pcm16(payload: bytes) -> np.ndarray:
     return np.frombuffer(payload[:usable], dtype="<i2")
 
 
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """REAL WAV (RIFF) container decode, pure numpy: PCM 8/16/24/32-bit
-    and IEEE-float32 sample formats, any channel count (downmixed to
-    mono by averaging), returning (int16 mono samples, sample_rate).
-
-    The RIFF layout is chunked — fmt then data, with unknown chunks
-    (LIST, fact, cue …) skipped by their declared size; a truncated or
-    format-free stream raises ValueError like the image decoders.
-    """
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos = 12
-    n = len(payload)
-    fmt = None
-    data = None
-    while pos + 8 <= n:
-        cid = payload[pos : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        body = payload[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-            if fmt is not None:
-                break
-    if fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    audio_format = int.from_bytes(fmt[0:2], "little")
-    channels = int.from_bytes(fmt[2:4], "little")
-    rate = int.from_bytes(fmt[4:8], "little")
-    bits = int.from_bytes(fmt[14:16], "little")
-    if channels < 1:
-        raise ValueError("WAV with zero channels")
-    if audio_format == 0xFFFE and len(fmt) >= 26:
-        # WAVE_FORMAT_EXTENSIBLE: the real format is the first 2 bytes
-        # of the 16-byte SubFormat GUID
-        audio_format = int.from_bytes(fmt[24:26], "little")
-    if audio_format == 3:  # IEEE float
-        if bits != 32:
-            raise NotImplementedError(f"float{bits} WAV not supported")
-        x = np.frombuffer(data[: len(data) // 4 * 4], dtype="<f4").astype(
-            np.float64
-        )
-        samples = np.clip(np.round(x * 32767.0), -32768, 32767)
-    elif audio_format == 1:  # integer PCM
-        if bits == 8:  # unsigned
-            x = np.frombuffer(data, dtype=np.uint8).astype(np.int32)
-            samples = (x - 128) << 8
-        elif bits == 16:
-            samples = np.frombuffer(
-                data[: len(data) // 2 * 2], dtype="<i2"
-            ).astype(np.int32)
-        elif bits == 24:
-            usable = len(data) // 3 * 3
-            b = np.frombuffer(data[:usable], dtype=np.uint8).reshape(-1, 3)
-            x = (
-                b[:, 0].astype(np.int32)
-                | (b[:, 1].astype(np.int32) << 8)
-                | (b[:, 2].astype(np.int32) << 16)
-            )
-            x = np.where(x >= 1 << 23, x - (1 << 24), x)
-            samples = x >> 8  # keep the top 16 bits
-        elif bits == 32:
-            x = np.frombuffer(data[: len(data) // 4 * 4], dtype="<i4")
-            samples = (x >> 16).astype(np.int32)
-        else:
-            raise NotImplementedError(f"{bits}-bit PCM WAV not supported")
-    else:
-        raise NotImplementedError(
-            f"WAV audio format {audio_format} not supported (PCM/float only)"
-        )
-    frames = samples.size // channels
-    mono = (
-        samples[: frames * channels]
-        .reshape(frames, channels)
-        .mean(axis=1)
-    )
-    return np.round(mono).astype(np.int16), rate
-
-
 AUDIO_FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -784,54 +692,6 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(process, AUDIO_FEATURE_SCHEMA)
 
 
-AUDIO_DECODED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("n_samples", LongType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("rms", StringType()),
-        StructField("zcr", StringType()),
-    ]
-)
-
-
-def extract_audio_features_decoded(media: DataFrame) -> DataFrame:
-    """The REAL-container twin of :func:`extract_audio_features` for
-    BINARY payloads: RIFF magic routes through :func:`decode_wav`
-    (channels downmixed, any PCM/float format), anything else is treated
-    as raw little-endian PCM16 at an unknown rate (sample_rate 0).  Same
-    Arrow-batched mapInPandas shape — features shuffle, payloads don't."""
-
-    def one(payload) -> tuple:
-        raw = bytes(payload) if payload is not None else b""
-        if raw[:4] == b"RIFF":
-            samples, rate = decode_wav(raw)
-            # the fmt rate field is 4-byte unsigned — clamp corrupt
-            # values into the int32 output column instead of letting
-            # pandas raise OverflowError inside the task
-            rate = min(rate, 2**31 - 1)
-        else:
-            samples, rate = decode_pcm16(raw), 0
-        return (*_audio_stats(samples), rate)
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_samples": [f[0] for f in feats],
-                    "sample_rate": pd.Series(
-                        [f[3] for f in feats], dtype="int32"
-                    ),
-                    "rms": [f[1] for f in feats],
-                    "zcr": [f[2] for f in feats],
-                }
-            )
-
-    return media.mapInPandas(process, AUDIO_DECODED_SCHEMA)
-
-
 def sample_frame_offsets(n_bytes: int, frame_bytes: int, n_frames: int) -> list[int]:
     """REAL uniform frame-sampling policy: byte offsets of ``n_frames``
     frames spread evenly over the payload (fewer when the payload holds
@@ -842,100 +702,6 @@ def sample_frame_offsets(n_bytes: int, frame_bytes: int, n_frames: int) -> list[
         return []
     k = min(n_frames, total)
     return [(i * total // k) * frame_bytes for i in range(k)]
-
-
-def decode_y4m(
-    payload: bytes,
-    frame_indices: list[int] | None = None,
-    sample_n: int | None = None,
-) -> tuple[list[np.ndarray], int]:
-    """REAL video container decode: YUV4MPEG2 (y4m), the standard
-    uncompressed interchange format (what ffmpeg/x264 pipe to each
-    other).  Returns (RGB frames for ``frame_indices`` — default all —
-    in index order, total_frame_count).  ``sample_n`` instead picks n
-    uniformly-spread frames (``sample_frame_offsets`` policy) after ONE
-    container walk — the feature-extraction hot path.
-
-    Supports C420* / C422 / C444 / Cmono planar layouts; YCbCr→RGB uses
-    limited-range BT.601 (the y4m default).  Only the requested frames
-    are converted — the scan skips the rest by their fixed plane size,
-    so sampling k frames from a long clip is O(frames) header walks but
-    O(k) pixel work.
-    """
-    if not payload.startswith(b"YUV4MPEG2"):
-        raise ValueError("not a y4m payload")
-    nl = payload.find(b"\n")
-    if nl < 0:
-        raise ValueError("truncated y4m header")
-    w = h = None
-    cs = "420"
-    for tok in payload[10:nl].decode("ascii", "replace").split(" "):
-        if tok[:1] == "W":
-            w = int(tok[1:])
-        elif tok[:1] == "H":
-            h = int(tok[1:])
-        elif tok[:1] == "C":
-            cs = tok[1:]
-    if not w or not h:
-        raise ValueError("y4m header missing W/H")
-    if cs.startswith("420"):
-        subx = suby = 2
-    elif cs.startswith("422"):
-        subx, suby = 2, 1
-    elif cs.startswith("444"):
-        subx = suby = 1
-    elif cs == "mono":
-        subx = suby = 0
-    else:
-        raise NotImplementedError(f"y4m colourspace C{cs} not supported")
-    ysize = w * h
-    # odd dimensions: chroma planes are CEIL-sized (each partial sample
-    # block still carries one chroma value), matching ffmpeg's layout
-    cw = 0 if subx == 0 else (w + subx - 1) // subx
-    ch = 0 if subx == 0 else (h + suby - 1) // suby
-    csize = cw * ch
-    frame_size = ysize + 2 * csize
-    # walk FRAME markers (their parameter lists vary per frame)
-    offsets = []
-    pos = nl + 1
-    n = len(payload)
-    while pos < n:
-        if payload[pos : pos + 5] != b"FRAME":
-            raise ValueError("bad y4m FRAME marker")
-        fnl = payload.find(b"\n", pos)
-        if fnl < 0 or fnl + 1 + frame_size > n:
-            raise ValueError("truncated y4m frame")
-        offsets.append(fnl + 1)
-        pos = fnl + 1 + frame_size
-
-    def to_rgb(off: int) -> np.ndarray:
-        y = np.frombuffer(payload, np.uint8, ysize, off).reshape(h, w)
-        yf = (y.astype(np.float64) - 16.0) * (255.0 / 219.0)
-        if subx == 0:
-            g = np.clip(np.round(yf), 0, 255).astype(np.uint8)
-            return np.repeat(g[:, :, None], 3, axis=2)
-        cb = np.frombuffer(payload, np.uint8, csize, off + ysize).reshape(ch, cw)
-        cr = np.frombuffer(
-            payload, np.uint8, csize, off + ysize + csize
-        ).reshape(ch, cw)
-        cb = np.repeat(np.repeat(cb, suby, axis=0), subx, axis=1)[:h, :w]
-        cr = np.repeat(np.repeat(cr, suby, axis=0), subx, axis=1)[:h, :w]
-        cbf = (cb.astype(np.float64) - 128.0) * (255.0 / 224.0)
-        crf = (cr.astype(np.float64) - 128.0) * (255.0 / 224.0)
-        r = yf + 1.402 * crf
-        g = yf - 0.344136 * cbf - 0.714136 * crf
-        b = yf + 1.772 * cbf
-        rgb = np.stack([r, g, b], axis=2)
-        return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-    if sample_n is not None:
-        wanted = sample_frame_offsets(len(offsets), 1, sample_n)
-    elif frame_indices is not None:
-        wanted = sorted(set(frame_indices))
-    else:
-        wanted = range(len(offsets))
-    frames = [to_rgb(offsets[i]) for i in wanted if 0 <= i < len(offsets)]
-    return frames, len(offsets)
 
 
 VIDEO_FEATURE_SCHEMA = StructType(
@@ -977,51 +743,3 @@ def extract_video_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(process, VIDEO_FEATURE_SCHEMA)
-
-
-VIDEO_DECODED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("n_frames_total", IntegerType()),
-        StructField("n_frames_sampled", IntegerType()),
-        StructField("frame_hashes", StringType()),
-    ]
-)
-
-
-def extract_video_features_decoded(
-    media: DataFrame, n_frames: int = 4
-) -> DataFrame:
-    """The REAL-container twin of :func:`extract_video_features` for
-    BINARY y4m payloads: uniformly sample ``n_frames`` frames (the same
-    spread policy as the stub path), decode ONLY those, resize and
-    blockhash each.  Compact hashes shuffle; frame pixels never do."""
-
-    def one(payload) -> tuple:
-        raw = bytes(payload) if payload is not None else b""
-        if not raw.startswith(b"YUV4MPEG2"):
-            return 0, 0, ""
-        frames, total = decode_y4m(raw, sample_n=n_frames)
-        hashes = [
-            blockhash_256(resize_rgb(f, BLOCKHASH_BITS, BLOCKHASH_BITS))
-            for f in frames
-        ]
-        return total, len(hashes), "|".join(hashes)
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_frames_total": pd.Series(
-                        [f[0] for f in feats], dtype="int32"
-                    ),
-                    "n_frames_sampled": pd.Series(
-                        [f[1] for f in feats], dtype="int32"
-                    ),
-                    "frame_hashes": [f[2] for f in feats],
-                }
-            )
-
-    return media.mapInPandas(process, VIDEO_DECODED_SCHEMA)

@@ -34,11 +34,6 @@ def with_split(docs: DataFrame) -> DataFrame:
     )
 
 
-def hash_sample(docs: DataFrame, pct: int, key: str = "doc_id") -> DataFrame:
-    """Keep a deterministic pct% sample (same rows every run/engine)."""
-    return docs.where(hash_bucket(key) < pct)
-
-
 def deterministic_shuffle(docs: DataFrame) -> DataFrame:
     """Global training-order randomization: every row gets a total-order
     ``shuffle_rank`` by md5-hash of its ``doc_id`` — a deterministic permutation

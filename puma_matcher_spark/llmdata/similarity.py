@@ -973,8 +973,9 @@ def semantic_contamination(
     across the two frames (unrelated id spaces that collide would
     under-count).
 
-    Recall, MEASURED (round 9, scripts/semantic_recall_study.py —
-    planted exact/block-paraphrase/scattered-paraphrase/boilerplate
+    Recall, MEASURED (round 9, PLANS.md "Round-9: semantic-contamination
+    recall on planted paraphrase leaks" — planted
+    exact/block-paraphrase/scattered-paraphrase/boilerplate
     leaks vs the unblocked all-pairs truth at thresholds 0.5-0.8, grid
     over min_shared {1,2} x df_cap {64,128}): for every pair whose
     similarity rests on rare-shingle evidence, recall was 1.000 in ALL

@@ -99,8 +99,7 @@ def point_in_time_join(facts: DataFrame, history: DataFrame) -> DataFrame:
     # share lineage (versions built from the same changelog), and
     # ``facts.user_id == history.user_id`` can resolve both sides to the SAME
     # attribute — a trivially-true predicate that silently degrades the
-    # equi-join to a range-only cross join (see the
-    # scd2_apply_increment NOTE for the same hazard in unions)
+    # equi-join to a range-only cross join
     # the validity epochs are renamed too: a fact frame that itself
     # carries valid_from/to_epoch (e.g. the output of a previous
     # point-in-time join being joined to a second dimension) would make
@@ -131,98 +130,6 @@ def point_in_time_join(facts: DataFrame, history: DataFrame) -> DataFrame:
             k += 1
         joined = joined.withColumnRenamed(tmp, name)
     return joined
-
-
-def scd2_apply_increment(
-    history: DataFrame,
-    new_changes: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    seq: str = "event_id",
-    attr: str = "event_type",
-) -> DataFrame:
-    """Incrementally maintain an SCD2 table built by :func:`scd2_history`:
-    fold a new changelog batch (all changes strictly AFTER the history's
-    horizon) into the existing version table without re-reading the old
-    changelog.
-
-    At 100 TB this is the whole point of SCD2 maintenance — the daily
-    batch touches a small key subset, so the update is:
-
-    * untouched keys' rows pass through unread beyond one anti-join;
-    * per touched key, only the OPEN version participates: the batch is
-      run-compacted (lag), a leading run equal to the open version's
-      attribute merges into it, and one lead() over (open ∪ new runs)
-      re-closes validity bounds.
-
-    Output is identical (asserted by test) to rebuilding from the full
-    concatenated changelog.
-    """
-    # NOTE on naming: every frame built here that re-enters a union with
-    # ``history`` uses FRESH internal column names (_k/_attr/_vf/_seq)
-    # until the final projection.  The obvious formulation — reusing the
-    # history column names through the tail-rebuild window and unioning
-    # the branches — silently misresolves: the union branches share the
-    # ``history`` subplan, the rebuilt branch's same-named window outputs
-    # collide with history's original attributes, and rebuilt rows come
-    # back with history's (open) validity columns instead of the
-    # recomputed ones.  Distinct names make every reference unambiguous.
-    affected = new_changes.select(key).distinct()
-    untouched = history.join(affected, key, "left_anti")
-    closed = history.join(affected, key, "left_semi").where(~F.col("is_current"))
-    cur = (
-        history.join(affected, key, "left_semi")
-        .where("is_current")
-        .select(
-            F.col(key).alias("_k"),
-            F.col(attr).alias("_attr"),
-            F.col("valid_from_epoch").alias("_vf"),
-            F.lit(None).cast("timestamp").alias("_ts"),
-            F.lit(-1).cast("long").alias("_seq"),
-        )
-    )
-
-    w = Window.partitionBy(key).orderBy(F.col(ts).asc(), F.col(seq).asc())
-    batch_opens = (
-        new_changes.withColumn("_prev", F.lag(attr).over(w))
-        .where(F.col("_prev").isNull() | (F.col("_prev") != F.col(attr)))
-        .select(
-            F.col(key).alias("_k"),
-            F.col(attr).alias("_attr"),
-            F.unix_timestamp(ts).cast("long").alias("_vf"),
-            F.col(ts).alias("_ts"),
-            F.col(seq).cast("long").alias("_seq"),
-        )
-    )
-    # a leading batch run with the same attribute as the key's open
-    # version is the SAME run continuing across the horizon — drop it
-    wb = Window.partitionBy("_k").orderBy(F.col("_ts").asc(), F.col("_seq").asc())
-    cur_attr = cur.select(F.col("_k"), F.col("_attr").alias("_cur_attr"))
-    fresh_opens = (
-        batch_opens.withColumn("_rn", F.row_number().over(wb))
-        .join(cur_attr, "_k", "left")
-        .where(
-            ~((F.col("_rn") == 1) & (F.col("_cur_attr") == F.col("_attr")))
-            | F.col("_cur_attr").isNull()
-        )
-        .select("_k", "_attr", "_vf", "_ts", "_seq")
-    )
-    # recompute the tail: the open version sorts first (its true ts is
-    # unknown from the history but is strictly BEFORE the horizon, so
-    # before every batch change — nulls_first encodes that); batch runs
-    # then follow in the same (ts, seq) order that detected them
-    tail = cur.unionByName(fresh_opens)
-    w2 = Window.partitionBy("_k").orderBy(
-        F.asc_nulls_first("_ts"), F.col("_seq").asc()
-    )
-    rebuilt = tail.select(
-        F.col("_k").alias(key),
-        F.col("_attr").alias(attr),
-        F.col("_vf").alias("valid_from_epoch"),
-        F.lead("_vf").over(w2).alias("valid_to_epoch"),
-        F.lead("_vf").over(w2).isNull().alias("is_current"),
-    )
-    return untouched.unionByName(closed).unionByName(rebuilt)
 
 
 def snapshot_diff(

@@ -242,32 +242,6 @@ def edit_distance_pairs(
     )
 
 
-def person_pair_predicate(pairs: DataFrame) -> DataFrame:
-    """Heuristic duplicate test on blocked candidate pairs.
-
-    PersonDeduplicationStage.scala:29-111 accepts a pair when, per name
-    field, the values are equal, one is empty, or one is the other's
-    initial.  Expects columns firstname1/firstname2, lastname1/lastname2;
-    all comparisons are pure column expressions.
-    """
-
-    def _compatible(a: str, b: str):
-        ca, cb = F.col(a), F.col(b)
-        empty = (
-            ca.isNull() | cb.isNull() | (F.trim(ca) == "") | (F.trim(cb) == "")
-        )
-        equal = ca == cb
-        initial = (F.length(ca) == 1) & (ca == F.substring(cb, 1, 1)) | (
-            (F.length(cb) == 1) & (cb == F.substring(ca, 1, 1))
-        )
-        return empty | equal | initial
-
-    return pairs.where(
-        _compatible("firstname1", "firstname2")
-        & (F.col("lastname1") == F.col("lastname2"))
-    )
-
-
 def connected_components(
     edges: DataFrame, max_iterations: int = 40
 ) -> DataFrame:

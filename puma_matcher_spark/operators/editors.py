@@ -21,18 +21,3 @@ def hundred_match_editor(candidates: DataFrame, certain_types: list[str]) -> Dat
             F.col("score")
         ),
     )
-
-
-def score_override_editor(
-    candidates: DataFrame, overrides: DataFrame
-) -> DataFrame:
-    """Apply per-pair score overrides from an edits table
-    (pair_id, score_type, new_score); unedited rows pass through."""
-    o = overrides.select(
-        "pair_id", "score_type", F.col("new_score").alias("_new")
-    )
-    return (
-        candidates.join(F.broadcast(o), ["pair_id", "score_type"], "left")
-        .withColumn("score", F.coalesce("_new", "score"))
-        .drop("_new")
-    )

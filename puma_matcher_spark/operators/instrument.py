@@ -1,14 +1,10 @@
 """Instrument mention detection (InstrumentAnalyser rebuild).
 
 Reference: analyser/InstrumentAnalyser.scala:54-71 — finds instrument
-code/alias mentions in document text and collects surrounding context;
-analyser/AdvancedInstrumentAnalyser.scala:404-417 handles codes shared by
-several instruments (duplicated_code); frequency cap at 2% of documents
-(:522-543, config ``puma.analysis.instrument.maxfrequency``).
+code/alias mentions in document text and collects surrounding context.
 
 Rebuild: token match against a broadcast alias dimension (exploded
-aliases), context via operators.context frames, frequency guard as a
-post-aggregation semi-join — the entity-matcher guard pattern again.
+aliases), context via operators.context frames.
 """
 
 from __future__ import annotations
@@ -27,51 +23,6 @@ def instrument_mentions(tokens: DataFrame, aliases: DataFrame) -> DataFrame:
         F.lower(F.col("alias")).alias("word"), "instrument_id"
     )
     return tokens.join(F.broadcast(dim), "word")
-
-
-def instrument_frequency_guard(
-    mentions: DataFrame,
-    total_docs: int,
-    max_frequency: float = 0.02,
-    doc_col: str = "document_version_id",
-) -> DataFrame:
-    """Drop instruments mentioned in more than max_frequency of documents
-    (AdvancedInstrumentAnalyser.scala:522-543)."""
-    freq = mentions.groupBy("instrument_id").agg(
-        F.countDistinct(doc_col).alias("doc_freq")
-    )
-    keep = freq.where(
-        F.col("doc_freq") <= F.lit(int(total_docs * max_frequency))
-    ).select("instrument_id")
-    return mentions.join(F.broadcast(keep), "instrument_id")
-
-
-def technique_filter(
-    candidates: DataFrame,
-    instrument_techniques: DataFrame,
-    doc_techniques: DataFrame,
-) -> DataFrame:
-    """P7 — keep technique candidates backed by an instrument→technique
-    link for the document (filter/InstrumentTechniqueFilter.scala:30-41:
-    semi-join on (technique, document))."""
-    valid = (
-        doc_techniques.join(
-            F.broadcast(instrument_techniques), "instrument_id"
-        ).select("document_version_id", "technique_id")
-    )
-    return candidates.join(
-        valid, ["document_version_id", "technique_id"], "left_semi"
-    )
-
-
-def duplicated_codes(aliases: DataFrame) -> DataFrame:
-    """Codes mapping to more than one instrument — need disambiguation by
-    context (AdvancedInstrumentAnalyser.scala:404-417)."""
-    return (
-        aliases.groupBy("alias")
-        .agg(F.countDistinct("instrument_id").alias("n_instruments"))
-        .where(F.col("n_instruments") > 1)
-    )
 
 
 def document_instruments(mentions: DataFrame) -> DataFrame:

@@ -7,7 +7,7 @@ Reference: analyser/AdvancedInstrumentAnalyser.scala —
 * RandomForestClassifier(150 trees, depth 30, seed 97987676) with
   MulticlassClassificationEvaluator; LogisticRegression / LinearSVC
   alternatives (:225-359); randomSplit 0.7/0.3 (:236)
-* test/clustering extras: KMeans, LDA, FPGrowth (M9)
+* test/clustering extras: FPGrowth, PowerIterationClustering (M9)
 
 Rebuild uses the same pyspark.ml estimators with pinned seeds; outputs are
 asserted on metric thresholds, not exact values (SURVEY.md §7.4:
@@ -101,39 +101,6 @@ def instrument_feature_table(mentions: DataFrame) -> DataFrame:
         F.max("pos").alias("last_pos"),
         (F.max("pos") - F.min("pos")).alias("span"),
     )
-
-
-def kmeans_clusters(df: DataFrame, feature_cols: list[str], k: int = 4) -> DataFrame:
-    """M9 — KMeans over assembled features, seeded."""
-    from pyspark.ml.clustering import KMeans
-
-    data = assemble_features(df, feature_cols)
-    model = KMeans(k=k, seed=RF_SEED, featuresCol="features").fit(data)
-    return model.transform(data).withColumnRenamed("prediction", "cluster")
-
-
-def lda_topics(
-    docs: DataFrame,
-    words_col: str = "words",
-    n_topics: int = 3,
-    vocab_size: int = 1000,
-    max_iter: int = 20,
-):
-    """M9 — LDA topic model over tokenized docs (test/clustering port).
-
-    Returns (model, doc_topics): per-doc topic distribution column
-    ``topicDistribution``; seeded for reproducibility.
-    """
-    from pyspark.ml.clustering import LDA
-    from pyspark.ml.feature import CountVectorizer
-
-    cv = CountVectorizer(
-        inputCol=words_col, outputCol="features", vocabSize=vocab_size
-    ).fit(docs)
-    vectorized = cv.transform(docs)
-    lda = LDA(k=n_topics, maxIter=max_iter, seed=RF_SEED)
-    model = lda.fit(vectorized)
-    return model, model.transform(vectorized)
 
 
 def fpgrowth_itemsets(baskets: DataFrame, min_support: float = 0.1) -> DataFrame:

@@ -98,17 +98,6 @@ def cap_entity_frequency(
     return tf.join(keep, "entity_id", "inner")
 
 
-def excluded_entities(
-    tf: DataFrame, max_occurrence: int = DEFAULT_MAX_OCCURRENCE
-) -> DataFrame:
-    """Side output of over-frequent entities — EntitiesMatcher.scala:58-61."""
-    return (
-        entity_doc_frequency(tf)
-        .filter(F.col("df") > max_occurrence)
-        .select("entity_id", "df")
-    )
-
-
 def entity_pairs(tf: DataFrame) -> DataFrame:
     """Inverted-index self-join pair generation (J1).
 

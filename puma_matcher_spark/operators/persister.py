@@ -75,8 +75,8 @@ def persist_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> 
     sf0.01 curation publish, 20 sources: 20 to 79 part files; 20 with
     the hint), and a local filesystem without native Hadoop forks a
     ``chmod`` per file and directory created.
-    ``sources.maintenance.compact`` clusters by partition columns for
-    the same reason."""
+    ``sources.maintenance.compact_batch_index`` clusters by its
+    partition column for the same reason."""
     (
         df.hint("rebalance", *partition_cols)
         .write.mode("overwrite")

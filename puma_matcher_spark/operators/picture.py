@@ -6,38 +6,20 @@ Reference:
   256-bit blockhash vectors → ``MinHashLSH(numHashTables=3)
   .approxSimilarityJoin(0.15)``, post-filtered ``dv1 < dv2``, size filter
   width/height ≥ 150.
-* ``PictureScorer`` (scorer/PictureScorer.scala:42-91) — Hamming distance
-  over the 256-char hash strings → score.
-* ``Level2PictureMatcher`` (matcher/Level2PictureMatcher.scala:39-56, J13)
-  — only re-scores pairs that already matched on other types.
 
-Rebuild: Hamming over hex-encoded hashes is a pure column expression —
-``bit_count(xor)`` per 60-bit chunk (codegen, no UDF).  The LSH path
+Rebuild: Hamming distance between 64-bit fingerprints is a pure column
+expression, ``bit_count(xor)`` (codegen, no UDF).  The LSH path
 (:func:`minhash_lsh_pairs_portable`) uses the portable MinHash operators
 of llmdata.dedup instead of ml's JVM-seeded ``MinHashLSH``, so the oracle
-reproduces every hash.
+reproduces every hash.  ``PictureScorer`` (scorer/PictureScorer.scala:
+42-91) and ``Level2PictureMatcher`` (J13) have no registered query and
+are not rebuilt.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def hamming_hex(a: Column, b: Column, n_chunks: int = 5, chunk: int = 13) -> Column:
-    """Hamming distance between equal-length hex strings via chunked
-    hex→long conversion + xor + bit_count (Hamming.getDistance rebuild,
-    PictureScorer.scala:75-91 — theirs loops chars; this stays in codegen).
-
-    Chunks of 13 hex chars (52 bits) stay well inside long range.
-    """
-    total = F.lit(0)
-    for i in range(n_chunks):
-        start = i * chunk + 1
-        ca = F.conv(F.substring(a, start, chunk), 16, 10).cast("long")
-        cb = F.conv(F.substring(b, start, chunk), 16, 10).cast("long")
-        total = total + F.bit_count(ca.bitwiseXOR(cb))
-    return total
 
 
 def hamming_long(a: Column, b: Column) -> Column:
@@ -49,38 +31,6 @@ def picture_size_filter(pictures: DataFrame, min_size: int = 150) -> DataFrame:
     """P11 — drop small images (PictureMatcher.scala:46)."""
     return pictures.where(
         (F.col("width") >= min_size) & (F.col("height") >= min_size)
-    )
-
-
-def score_picture_pairs(
-    pairs: DataFrame,
-    hashes: DataFrame,
-    max_distance: int = 30,
-    hash_bits: int = 256,
-) -> DataFrame:
-    """J13 + PictureScorer — attach both sides' hashes to candidate pairs,
-    score by Hamming distance (score = 1 - distance/bits), keep matches
-    under the threshold (config ``puma.matching.picture.maxdistance=30``).
-    """
-    h1 = hashes.select(
-        F.col("document_version_id").alias("document_version1_id"),
-        F.col("hash").alias("_h1"),
-    )
-    h2 = hashes.select(
-        F.col("document_version_id").alias("document_version2_id"),
-        F.col("hash").alias("_h2"),
-    )
-    n_chunks = (hash_bits // 4 + 12) // 13
-    dist = hamming_hex(F.col("_h1"), F.col("_h2"), n_chunks=n_chunks)
-    return (
-        pairs.join(h1, "document_version1_id")
-        .join(h2, "document_version2_id")
-        .withColumn("hamming", dist)
-        .where(F.col("hamming") <= max_distance)
-        .withColumn(
-            "score", F.lit(1.0) - F.col("hamming") / F.lit(float(hash_bits))
-        )
-        .drop("_h1", "_h2")
     )
 
 

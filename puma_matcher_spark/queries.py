@@ -1263,13 +1263,13 @@ def q_code_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     utils/nlp/CodeAnalyser/CodeAnalyserService.java:13-53 — exercised on
     the synthetic vocabulary; DOI/proposal regexes unit-tested in
     tests/test_text.py)."""
+    from puma_matcher_spark.functions.codes import extract_codes
+
     docs = load_tables(spark, sf_dir).llm_documents()
     return docs.select(
         F.col("doc_id").alias("document_version_id"),
         F.explode(
-            F.array_distinct(
-                F.regexp_extract_all(F.col("text"), F.lit(r"\b(s[a-z]{3,})\b"), 1)
-            )
+            F.array_distinct(extract_codes(F.col("text"), r"\b(s[a-z]{3,})\b"))
         ).alias("code"),
     )
 
@@ -1411,9 +1411,8 @@ def q_dedup_components_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 FROM events GROUP BY 1, 2""",
 )
 def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window event aggregation — the batch twin of the
-    Structured Streaming path (streaming/events.py; run_stream_to_memory
-    exercises the real micro-batch engine in tests)."""
+    """Tumbling-window event aggregation (streaming/events.py
+    windowed_counts)."""
     from puma_matcher_spark.streaming.events import windowed_counts
 
     ev = load_tables(spark, sf_dir).events()
@@ -1899,11 +1898,9 @@ FROM c JOIN p ON c.user_id = p.user_id
  AND p.purchase_ts <= c.click_ts + INTERVAL 300 SECONDS""",
 )
 def q_events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.11 — batch twin of the stream-stream interval join
-    (streaming/events.py attribution_join): purchases attributed to the
-    same user's click within a 5-minute horizon.  The streaming
-    execution with dual watermarks is exercised in
-    tests/test_streaming.py."""
+    """§2.11 — the interval join of streaming/events.py
+    attribution_join: purchases attributed to the same user's click
+    within a 5-minute horizon."""
     from puma_matcher_spark.streaming.events import attribution_join
 
     ev = load_tables(spark, sf_dir).events()
@@ -2180,12 +2177,9 @@ SELECT event_id, CAST(COUNT(*) AS BIGINT) AS n_seen, MIN(ts) AS ts,
 FROM doubled GROUP BY 1""",
 )
 def q_events_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.11 — batch twin of the streaming exactly-once dedup path
-    (streaming/events.py stream_dedup): a replayed feed (the events table
-    unioned with itself) collapses to one first-seen row per event_id.
-    The streaming execution of the same semantics is exercised in
-    tests/test_streaming.py; this row gives the dedup plane a hard
-    driver-side signal."""
+    """§2.11 — replay dedup (streaming/events.py dedup_events_batch): a
+    replayed feed (the events table unioned with itself) collapses to
+    one first-seen row per event_id."""
     from puma_matcher_spark.streaming.events import dedup_events_batch
 
     ev = load_tables(spark, sf_dir).events()
@@ -6585,9 +6579,9 @@ FROM lineitem"""
 @register("zorder_values", _zorder_oracle())
 def q_zorder_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (Z-order) interleave key for two-column data-skipping
-    layout (sources/maintenance.py zvalue / zorder_by) — pure bit
-    arithmetic in codegen; sorting by this key keeps parquet min/max
-    envelopes tight on BOTH join keys simultaneously."""
+    layout (sources/maintenance.py zvalue) — pure bit arithmetic in
+    codegen; sorting by this key keeps parquet min/max envelopes tight
+    on BOTH join keys simultaneously."""
     from puma_matcher_spark.sources.maintenance import zvalue
 
     li = load_tables(spark, sf_dir).raw("lineitem")

@@ -4,7 +4,7 @@ Reference: matching/datasource/SchemaStorage.scala:20-205 declares one
 StructType per DataFrameType; matching/pipepline/DataFrameType.scala:24-82
 tags every inter-stage payload with its expected schema.  Here each contract
 is a module-level ``StructType`` plus a ``FrameType`` enum used by
-``validator.is_compliant`` at stage boundaries.
+``validator.assert_compliant`` at stage boundaries.
 """
 
 from __future__ import annotations

@@ -1,15 +1,13 @@
-"""Dataset maintenance: small-file compaction.
+"""Dataset maintenance: per-batch index compaction and Z-order keys.
 
-Streaming sinks, incremental ingests, and per-batch partitions all leak
-small parquet files; at 100 TB the file count (not the byte count)
-becomes the scan-planning and namenode/liststatus bottleneck.  This is
-the compaction job every production table needs on a schedule.
-
-Design: size the output file count from the dataset's actual bytes
-(``target_file_mb``), rewrite with ``coalesce`` (no shuffle — merging
-files needs no repartition unless a layout sort is requested), and
-promote atomically through the blue/green staging swap so readers never
-see a half-compacted table.
+Streaming sinks and incremental ingests leak one partition per
+micro-batch; at 100 TB the file count (not the byte count) becomes the
+scan-planning and namenode/liststatus bottleneck.
+:func:`compact_batch_index` folds a stream's per-batch partitions, sizes
+the output file count from the folded bytes (``target_file_mb``), and
+promotes through a staging swap so readers never see a half-compacted
+table.  :func:`zvalue` and :func:`zvalue_n` build the Morton keys of a
+multi-column data-skipping layout.
 
 All listing/rename/delete goes through the Hadoop FileSystem API, not
 ``os``/``shutil``: the datasets these jobs maintain live wherever the
@@ -24,9 +22,7 @@ there.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 class HadoopFs:
@@ -96,113 +92,6 @@ class HadoopFs:
         return n, size
 
 
-def dataset_file_stats(
-    path: str, spark: SparkSession | None = None
-) -> tuple[int, int]:
-    """(n_files, total_bytes) for the parquet files under ``path``.
-
-    Resolved through the active session's Hadoop filesystem when one
-    exists (so HDFS/S3A datasets report correctly — note a scheme-less
-    path then resolves against ``fs.defaultFS``, not necessarily the
-    local disk); plain ``os.walk`` otherwise.  A missing path reports
-    (0, 0) on BOTH branches — the original ``os.walk`` contract, which
-    Hadoop's ``listFiles`` would otherwise break by raising
-    FileNotFoundException through py4j."""
-    spark = spark or SparkSession.getActiveSession()
-    if spark is not None:
-        fs = HadoopFs(spark, path)
-        if not fs.isdir(path):
-            return 0, 0
-        return fs.parquet_stats(path)
-    n = size = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                n += 1
-                size += os.path.getsize(os.path.join(root, f))
-    return n, size
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-    sort_cols: list[str] | None = None,
-    partition_cols: list[str] | None = None,
-) -> dict:
-    """Rewrite ``path`` (in place, via staging + swap) with files sized
-    toward ``target_file_mb``.
-
-    ``sort_cols`` optionally applies a layout sort within each output
-    file (sortWithinPartitions — improves parquet min/max row-group
-    skipping for range predicates on those columns; costs a local sort,
-    still no shuffle).  ``partition_cols`` MUST be passed for a
-    hive-partitioned dataset (``key=value`` directories) — without it
-    the rewrite would flatten the layout and lose partition pruning, so
-    the function refuses rather than silently degrading.
-
-    The swap is two renames: old out, staging in.  That leaves a
-    sub-millisecond window where ``path`` does not exist (POSIX has no
-    two-directory atomic exchange); readers should retry on
-    path-not-found, and a crash between the renames is recoverable —
-    the previous data stays at ``path + ".compact-old"``, and the next
-    run restores it before doing anything else.
-
-    No-ops (returning the stats unchanged) when the dataset has fewer
-    than two files — nothing to merge, and reading an empty directory
-    would throw.
-
-    Returns {"files_before", "files_after", "bytes"} for audit logs.
-    """
-    fs = HadoopFs(spark, path)
-    old = path + ".compact-old"
-    if not fs.restore_parked(path):
-        # a missing table must FAIL the maintenance job, not log a
-        # successful zero-file compaction (typo'd paths stay visible)
-        raise FileNotFoundError(f"no dataset directory at {path}")
-    n_before, total_bytes = fs.parquet_stats(path)
-    if n_before < 2:
-        return {
-            "files_before": n_before,
-            "files_after": n_before,
-            "bytes": total_bytes,
-        }
-    if partition_cols is None and _looks_hive_partitioned(fs, path):
-        raise ValueError(
-            f"{path} appears hive-partitioned (key=value directories); "
-            "pass partition_cols to preserve the layout"
-        )
-    chunk = target_file_mb * 1024 * 1024
-    target = max(1, (total_bytes + chunk - 1) // chunk)
-    df: DataFrame = spark.read.parquet(path)
-    if partition_cols:
-        # cluster tasks by partition value: a global coalesce would
-        # spread every partition value across all tasks, so each task
-        # writes into every partition directory — up to target ×
-        # n_partitions output files, defeating the compaction
-        out = df.repartition(int(target), *partition_cols)
-    else:
-        out = df.coalesce(int(target))
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    staging = path + ".compact-staging"
-    writer = out.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
-    if fs.isdir(old):
-        fs.rmtree(old)
-    fs.rename(path, old)
-    fs.rename(staging, path)
-    fs.rmtree(old)
-    n_after, _ = fs.parquet_stats(path)
-    return {
-        "files_before": n_before,
-        "files_after": n_after,
-        "bytes": total_bytes,
-    }
-
-
 def compact_batch_index(
     spark: SparkSession,
     path: str,
@@ -224,13 +113,14 @@ def compact_batch_index(
     in-flight batch itself would break that replay exclusion, which is
     why callers pass the CURRENT batch id as ``fold_below``.
 
-    Promotion is the same two-rename staging swap as
-    :func:`compact_parquet` (previous data parked at
-    ``path + ".compact-old"`` until the swap completes; a crash between
-    the renames is recovered by the next call — or by the reader-side
-    probe in apps.run_streaming_ingest_app; both go through
-    :meth:`HadoopFs.restore_parked`).  No-ops when fewer than
-    two partitions would fold.
+    Promotion is a two-rename staging swap: old out, staging in.  That
+    leaves a sub-millisecond window where ``path`` does not exist (POSIX
+    has no two-directory atomic exchange).  The previous data is parked
+    at ``path + ".compact-old"`` until the swap completes; a crash
+    between the renames is recovered by the next call — or by the
+    reader-side probe in apps.run_streaming_ingest_app; both go through
+    :meth:`HadoopFs.restore_parked`.  No-ops when fewer than two
+    partitions would fold.
 
     Returns {"files_before", "files_after", "dirs_before",
     "dirs_after", "bytes"} for audit logs.
@@ -313,33 +203,22 @@ def compact_batch_index(
     }
 
 
-def _looks_hive_partitioned(fs: HadoopFs, path: str) -> bool:
-    """True when the dataset's first level contains key=value dirs.
-
-    Deliberately NO exception swallowing: the caller probed ``path``'s
-    existence just before, so any error here is a real filesystem fault
-    — and treating it as "not partitioned" would skip the layout guard
-    and flatten a hive-partitioned dataset with a plain coalesce,
-    permanently destroying partition pruning (r10 review finding)."""
-    return any("=" in e for e in fs.list_subdirs(path))
-
-
 #: Bits per operand interleaved by :func:`zvalue` and its DuckDB twin
 #: :func:`zvalue_sql`.
 ZVALUE_BITS = 16
 
 
-def zvalue(c1, c2, bits: int = ZVALUE_BITS):
-    """Morton (Z-order) interleave of the low ``bits`` bits of two long
-    columns — the space-filling-curve key that makes ONE sorted layout
-    serve range predicates on EITHER column (or both).
+def zvalue(c1, c2):
+    """Morton (Z-order) interleave of the low :data:`ZVALUE_BITS` bits of
+    two long columns — the space-filling-curve key that makes ONE sorted
+    layout serve range predicates on EITHER column (or both).
 
     Sorting a table by ``zvalue(a, b)`` clusters rows so that parquet
     row-group min/max statistics stay tight on a AND b simultaneously;
     a plain sort by (a, b) only skips well on a.  Pure bit arithmetic
     (shiftright/and/shiftleft/or), entirely inside codegen — no UDF.
 
-    Inputs must already be non-negative and < 2^bits; production callers
+    Inputs must already be non-negative and < 2^ZVALUE_BITS; callers
     first quantize real keys into that range (e.g. NTILE/percent_rank
     bucketing), which also equalizes the two axes' resolutions.
     """
@@ -348,7 +227,7 @@ def zvalue(c1, c2, bits: int = ZVALUE_BITS):
     a = (F.col(c1) if isinstance(c1, str) else c1).cast("long")
     b = (F.col(c2) if isinstance(c2, str) else c2).cast("long")
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(ZVALUE_BITS):
         z = z.bitwiseOR(
             F.shiftleft(F.shiftright(a, i).bitwiseAND(1), 2 * i + 1)
         ).bitwiseOR(F.shiftleft(F.shiftright(b, i).bitwiseAND(1), 2 * i))
@@ -367,110 +246,6 @@ def zvalue_sql(c1: str, c2: str) -> str:
         terms.append(f"((({a} >> {i}) & 1) << {2 * i + 1})")
         terms.append(f"((({b} >> {i}) & 1) << {2 * i})")
     return "(" + " | ".join(terms) + ")"
-
-
-def zorder_by(df: DataFrame, c1: str, c2: str, bits: int = 16, n_ranges: int | None = None) -> DataFrame:
-    """Lay out ``df`` in Z-order on (c1, c2): range-partition on the
-    Morton key, sort within partitions.  Writing the result gives every
-    output file a tight min/max envelope on BOTH columns.  One shuffle
-    (the range exchange); the sort is local.
-    """
-    z = zvalue(c1, c2, bits).alias("_z")
-    n = n_ranges or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return (
-        df.withColumn("_z", z)
-        .repartitionByRange(n, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-
-
-def zorder_by_quantized(
-    df: DataFrame,
-    c1: str,
-    c2: str,
-    bits: int = 10,
-    n_ranges: int | None = None,
-    strategy: str = "width",
-) -> DataFrame:
-    """:func:`zorder_by` with both axes first quantized to ``2^bits``
-    buckets (scalar subqueries — no driver collect).
-
-    Quantization is what makes the interleave effective when the two
-    domains differ in magnitude: interleaving RAW keys lets the wider
-    key's high bits dominate the sort prefix, so file boundaries carry
-    no locality for the narrower key (PLANS.md, "Z-order row-group
-    skipping at sf0.1": a 10% range on the narrow key read 98.8% of the
-    rows with raw keys and 32.1% quantized, where the wide key read 19.1%
-    and a linear sort on it 12.5%).
-
-    ``strategy="width"`` buckets by (value - min)/(max - min) — right
-    for roughly uniform keys, and costs one extra aggregate pass.
-    ``strategy="frequency"`` buckets by approximate quantile boundaries
-    (percentile_approx array folded in as a scalar subquery, bucket =
-    count of boundaries at or below the value via a higher-order
-    filter): equal-POPULATION buckets, so a heavily skewed key still
-    spreads across the curve instead of collapsing into one cell.  The
-    scalable alternative to percent_rank/ntile, which would funnel the
-    table through a single window sort.
-    """
-    from pyspark.sql import functions as F
-
-    n_buckets = 1 << bits
-    if strategy == "width":
-        # ONE aggregate pass supplies all four bounds (a struct scalar
-        # subquery); four independent .agg().scalar() calls would each
-        # scan the input
-        bounds = df.agg(
-            F.struct(
-                F.min(c1).cast("double").alias("lo1"),
-                F.max(c1).cast("double").alias("hi1"),
-                F.min(c2).cast("double").alias("lo2"),
-                F.max(c2).cast("double").alias("hi2"),
-            ).alias("b")
-        ).scalar()
-
-        def q(col: str, which: str):
-            lo = bounds.getField(f"lo{which}")
-            hi = bounds.getField(f"hi{which}")
-            frac = (F.col(col).cast("double") - lo) / (hi - lo + 1e-300)
-            return F.least(
-                F.lit(n_buckets - 1), F.floor(frac * n_buckets).cast("long")
-            )
-
-    elif strategy == "frequency":
-        pcts = [i / n_buckets for i in range(1, n_buckets)]
-        cuts = df.agg(
-            F.struct(
-                F.percentile_approx(F.col(c1).cast("double"), pcts).alias("b1"),
-                F.percentile_approx(F.col(c2).cast("double"), pcts).alias("b2"),
-            ).alias("b")
-        ).scalar()
-
-        def q(col: str, which: str):
-            # the scalar subquery must be attached as a plain column
-            # BEFORE the higher-order filter references it (subqueries
-            # are not allowed inside lambda bodies); _mk below stages it
-            v = F.col(col).cast("double")
-            return F.size(
-                F.filter(F.col(f"_cuts{which}"), lambda b: b <= v)
-            ).cast("long")
-
-    else:
-        raise ValueError(f"unknown quantization strategy: {strategy!r}")
-
-    if strategy == "frequency":
-        df = df.withColumn("_cuts1", cuts.getField("b1")).withColumn(
-            "_cuts2", cuts.getField("b2")
-        )
-    out = df.withColumn("_q1", q(c1, "1")).withColumn("_q2", q(c2, "2"))
-    if strategy == "frequency":
-        out = out.drop("_cuts1", "_cuts2")
-    return zorder_by(out, "_q1", "_q2", bits=bits, n_ranges=n_ranges).drop(
-        "_q1", "_q2"
-    )
 
 
 def zvalue_n(cols, bits: int = 10):

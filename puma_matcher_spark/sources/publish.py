@@ -15,8 +15,8 @@ half-written dataset.
 All probes/renames go through the Hadoop FileSystem API (the shared
 ``HadoopFs`` wrapper) so the swap works wherever the session's writer put the
 staging data — ``os.rename`` on an ``hdfs://`` path raises and, inside a
-streaming ``foreachBatch`` (cdc_sink), would kill the stream at the
-first publish (the r9 ADVICE #1 failure class, fixed repo-wide in r10).
+streaming ``foreachBatch``, would kill the stream at the first publish
+(the r9 ADVICE #1 failure class, fixed repo-wide in r10).
 """
 
 from __future__ import annotations

@@ -1,57 +1,26 @@
-"""Structured Streaming plane over the ``events`` table.
+"""Event-time operators over the ``events`` table.
 
-The reference is batch-only (SURVEY.md §2.11); streaming is the additive
-capability for the 100 TB pipeline: the same transforms run in batch
-(DataFrame in) and streaming (``readStream`` in) because they are pure —
-the canonical Spark pattern of sharing logic across both.
+The reference is batch-only (SURVEY.md §2.11); the events plane is
+additive.  Every operator here is a pure ``DataFrame -> DataFrame``
+transform built from column expressions, windows and aggregates, so the
+same code would run on a ``readStream`` input (with a watermark attached
+first); the registered ``events_*`` queries run them in batch.
 
-* ``windowed_counts`` — tumbling event-time window aggregation, the
-  batch/stream-shared kernel.  In streaming mode attach
-  ``with_watermark`` first; state is then bounded by
-  (watermark horizon / slide) buckets per key.
+* ``windowed_counts`` — tumbling event-time window aggregation.
 * ``sessionize`` — gap-based session windows via ``session_window``.
-* ``read_events_stream`` — file-source stream over the parquet dir
-  (``maxFilesPerTrigger`` throttles micro-batches); at production scale
-  the source becomes Kafka with identical downstream code.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from puma_matcher_spark.functions.rounding import pround
 
 #: Width of the resampling grid (one hour), shared by
 #: :func:`resample_counts` and :func:`forward_fill_values`.
 BUCKET_SECONDS = 3600
-#: Day zero of the trend x-axis, shared by :func:`trend_stats` and
-#: :func:`trend_stats_pandas`.
+#: Day zero of the trend x-axis of :func:`trend_stats`.
 TREND_ORIGIN = "2024-01-01"
-
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        # the fixture is a single file; FileStreamSource wants a directory,
-        # so stream the dir and glob-filter to the events file
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":  # nanosAsLong source
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # withWatermark requires TIMESTAMP (with zone); parquet fixtures written
-    # with isolated local sessions read back as TIMESTAMP_NTZ, which the
-    # streaming event-time machinery rejects — normalise here, before any
-    # watermark is attached.
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
-
-
-def with_watermark(events: DataFrame) -> DataFrame:
-    return events.withWatermark("ts", "10 minutes")
 
 
 def windowed_counts(events: DataFrame, window_seconds: int = 300) -> DataFrame:
@@ -70,15 +39,6 @@ def windowed_counts(events: DataFrame, window_seconds: int = 300) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("event_count"),
         pround(F.sum("value"), 4).alias("value_sum"),
         F.countDistinct("user_id").cast("long").alias("unique_users"),
-    )
-
-
-def windowed_counts_eventtime(events: DataFrame) -> DataFrame:
-    """Same aggregation with the native ``window()`` column (used on the
-    streaming path where watermarks need a real event-time window)."""
-    return events.groupBy(F.window("ts", "5 minutes"), "event_type").agg(
-        F.count(F.lit(1)).alias("event_count"),
-        F.sum("value").alias("value_sum"),
     )
 
 
@@ -286,67 +246,6 @@ def trend_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def trend_stats_pandas(events: DataFrame, origin: str = TREND_ORIGIN) -> DataFrame:
-    """``applyInPandas`` twin of :func:`trend_stats`: per-group OLS fit in
-    Arrow-batched numpy, one pandas frame per event_type.
-
-    The Catalyst version is the production path (algebraic aggregate, no
-    Python in the loop); this twin exists to (a) exercise the grouped
-    Pandas-UDF machinery against a hard parity gate (the unit test asserts
-    EXACT equality of the rounded outputs) and (b) template the pattern
-    for per-group fits Spark has no aggregate for (robust regression,
-    ARIMA, changepoints).  Shuffle shape is identical: one hash exchange
-    on the grouping key; the difference is Arrow transfer + per-group
-    materialization, which caps group size at executor memory — fine for
-    per-type/per-source groups, wrong for unbounded ones.
-    """
-    import numpy as np
-    import pandas as pd
-
-    origin_s = pd.Timestamp(origin).value // 1_000_000_000
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        # floor-seconds matches unix_timestamp's truncation in the
-        # Catalyst twin; the pround formula matches functions.rounding
-        sec = pdf["ts"].astype("int64") // 1_000_000_000
-        x = (sec - origin_s) / 86400.0
-        y = pdf["value"].to_numpy()
-        n = len(pdf)
-        xm, ym = x.mean(), y.mean()
-        dx, dy = x - xm, y - ym
-        sxx = float((dx * dx).sum())
-        sxy = float((dx * dy).sum())
-        syy = float((dy * dy).sum())
-        # degenerate groups mirror the Catalyst aggregates: regr_slope /
-        # regr_intercept are NULL when x has no variance, corr is NULL
-        # when either side is constant
-        slope = sxy / sxx if sxx > 0 else None
-        intercept = ym - slope * xm if slope is not None else None
-        corr = sxy / np.sqrt(sxx * syy) if sxx > 0 and syy > 0 else None
-        r4 = (
-            lambda v: None if v is None else np.floor(v * 1e4 + 0.5) / 1e4
-        )  # noqa: E731
-        return pd.DataFrame(
-            {
-                "event_type": [pdf["event_type"].iloc[0]],
-                "n_events": [n],
-                "value_slope_per_day": [r4(slope)],
-                "value_intercept": [r4(intercept)],
-                "value_time_corr": [r4(corr)],
-            }
-        )
-
-    schema = (
-        "event_type string, n_events long, value_slope_per_day double, "
-        "value_intercept double, value_time_corr double"
-    )
-    return (
-        events.select("event_type", "ts", "value")
-        .groupBy("event_type")
-        .applyInPandas(fit, schema=schema)
-    )
-
-
 def debounce_first_per_burst(
     events: DataFrame, gap_seconds: int = 1800
 ) -> DataFrame:
@@ -403,34 +302,10 @@ def rolling_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def enrich_with_dim(events: DataFrame, dim: DataFrame) -> DataFrame:
-    """Stream-static join: each micro-batch joins against the (static,
-    broadcastable) dimension — the canonical enrichment pattern; the dim
-    is re-resolved per batch so slowly-changing dims pick up updates on
-    re-read sources."""
-    return events.join(F.broadcast(dim), "event_type", "left")
-
-
-def stream_dedup(events: DataFrame, key: str = "event_id", delay: str = "10 minutes") -> DataFrame:
-    """Streaming exactly-once ingestion: drop duplicate records by key
-    within the watermark horizon (batch twin is ``dropDuplicates``
-    directly).
-
-    Uses ``dropDuplicatesWithinWatermark`` (Spark 3.5+), not plain
-    ``dropDuplicates``: with a key that does NOT include the event-time
-    column, plain dropDuplicates never evicts its state (the watermark
-    only bounds state when the time column is part of the key), so a
-    continuous 100 TB ingest would grow state without limit.  The
-    WithinWatermark variant expires each key after the watermark delay —
-    bounded state, which is the entire point of watermarked dedup."""
-    return events.withWatermark("ts", delay).dropDuplicatesWithinWatermark([key])
-
-
 def dedup_events_batch(events: DataFrame) -> DataFrame:
-    """Deterministic batch twin of :func:`stream_dedup`: one row per
-    ``event_id`` carrying the first-seen (min-ts) values plus the replay
-    count — the record the streaming state would retain inside the
-    watermark horizon.
+    """Replay dedup: one row per ``event_id`` carrying the first-seen
+    (min-ts) values plus the replay count — the record a watermarked
+    streaming dedup would retain inside its horizon.
     Batch ``dropDuplicates`` keeps an arbitrary row, so the twin pins
     keep-semantics with min aggregates to stay engine-reproducible."""
     return events.groupBy("event_id").agg(
@@ -576,53 +451,4 @@ def attribution_models(
         first.getField("click_id").alias("first_click_id"),
         last.getField("click_id").alias("last_click_id"),
         F.count(F.lit(1)).cast("long").alias("n_touches"),
-    )
-
-
-def write_stream_idempotent(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    query_name: str = "idempotent_sink",
-):
-    """Exactly-once file sink via ``foreachBatch``: every micro-batch
-    lands in its own ``batch_id=<id>`` partition directory with
-    ``overwrite`` mode, so a batch replayed after a failure overwrites
-    *its own* output instead of appending duplicates — the standard
-    idempotent-sink recipe when the target store isn't transactional.
-    Combined with the checkpoint (which makes batch ids stable across
-    restarts), downstream readers of ``path`` see each input record
-    exactly once.
-
-    At production scale the same shape targets an object store; the
-    per-batch directory also gives free incremental-load bookkeeping
-    (consumers track the max batch_id they've ingested).
-    """
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
-
-    return (
-        df.writeStream.foreachBatch(_write_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def run_stream_to_memory(
-    spark: SparkSession, sf_dir: str, table_name: str = "windowed_events"
-):
-    """availableNow streaming run into an in-memory sink — exercises the
-    real streaming engine (micro-batch planner, state store) on the
-    fixture data; returns the query handle."""
-    events = with_watermark(read_events_stream(spark, sf_dir))
-    agg = windowed_counts_eventtime(events)
-    return (
-        agg.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )

@@ -19,11 +19,6 @@ def has_column(df: DataFrame, name: str, dtype) -> bool:
     return False
 
 
-def is_compliant(df: DataFrame, expected: StructType) -> bool:
-    """DataFrameValidator.isCompliantToSchema (reference :41-55)."""
-    return all(has_column(df, f.name, f.dataType) for f in expected.fields)
-
-
 def assert_compliant(df: DataFrame, expected: StructType, ctx: str = "") -> DataFrame:
     missing = [
         f"{f.name}:{f.dataType.simpleString()}"

@@ -261,21 +261,6 @@ def test_dedup_lookup_includes_singletons(spark):
     assert got == {1: 1, 2: 1, 3: 3, 9: 9}
 
 
-def test_person_pair_predicate_initials(spark):
-    pairs = spark.createDataFrame(
-        [
-            (1, 2, "jean", "j", "muller", "muller"),      # initial match
-            (3, 4, "anna", "anna", "smith", "smith"),     # exact
-            (5, 6, "bob", "rob", "jones", "jones"),       # incompatible first
-            (7, 8, "", "carl", "young", "young"),         # empty side
-            (9, 10, "dora", "dora", "lee", "kim"),        # lastname differs
-        ],
-        ["id1", "id2", "firstname1", "firstname2", "lastname1", "lastname2"],
-    )
-    got = {(r["id1"], r["id2"]) for r in dd.person_pair_predicate(pairs).collect()}
-    assert got == {(1, 2), (3, 4), (7, 8)}
-
-
 def test_enumerate_triangles_canonical(spark):
     from puma_matcher_spark.operators.dedup import enumerate_triangles
 
@@ -527,4 +512,3 @@ def test_blocked_pairs_guard_ignores_null_keys(spark):
     # ceiling; the real join volume is C(4,2)+C(3,2)+C(3,2) = 12
     got = dd.blocked_pairs(persons, max_pairs=100)
     assert got.count() == 12
-

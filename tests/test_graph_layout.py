@@ -1,4 +1,4 @@
-"""Unit tests for the graph (PageRank), Z-order layout, weighted-sampling,
+"""Unit tests for the graph (PageRank), Z-order key, weighted-sampling,
 edit-distance, and trend operators added in round 3."""
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from puma_matcher_spark.operators.graph import (
     pagerank,
     pagerank_mass_check,
 )
-from puma_matcher_spark.sources.maintenance import zorder_by, zvalue
+from puma_matcher_spark.sources.maintenance import zvalue
 from puma_matcher_spark.streaming.events import trend_stats
 
 
@@ -77,27 +77,6 @@ def test_zvalue_interleaves_bits(spark):
         assert r["z"] == py_z(r["a"], r["b"]), (r["a"], r["b"])
 
 
-def test_zorder_by_sorts_and_preserves_rows(spark):
-    rows = [(i, (i * 37) % 101, (i * 91) % 103) for i in range(1000)]
-    df = spark.createDataFrame(rows, "id long, a long, b long")
-    out = zorder_by(df, "a", "b", n_ranges=4)
-    assert out.count() == 1000
-    assert sorted(r["id"] for r in out.collect()) == list(range(1000))
-    # within every partition the Morton key must be non-decreasing, and
-    # ranges must not overlap across partition ids (range partitioning)
-    check = out.withColumn("z", zvalue("a", "b")).withColumn(
-        "pid", F.spark_partition_id()
-    )
-    per = (
-        check.groupBy("pid")
-        .agg(F.min("z").alias("lo"), F.max("z").alias("hi"))
-        .orderBy("pid")
-        .collect()
-    )
-    for prev, cur in zip(per, per[1:]):
-        assert prev["hi"] <= cur["lo"]
-
-
 def test_weighted_sample_is_deterministic_and_weight_biased(spark, sf_small):
     docs = spark.read.parquet(f"{sf_small}/documents.parquet")
     s1 = {r["doc_id"] for r in weighted_sample_topk(docs, "n_chars", k=40).collect()}
@@ -149,21 +128,9 @@ def test_trend_stats_recovers_planted_slope(spark):
     assert r["value_time_corr"] == 1.0
 
 
-def test_trend_pandas_twin_matches_catalyst(spark, sf_small):
-    from puma_matcher_spark.streaming.events import trend_stats_pandas
-    from puma_matcher_spark.sources.testdata import load_tables
-
-    events = load_tables(spark, sf_small).events()
-    cat = {tuple(r) for r in trend_stats(events).collect()}
-    pd_ = {tuple(r) for r in trend_stats_pandas(events).collect()}
-    assert cat == pd_
-
-
-def test_trend_pandas_twin_degenerate_groups(spark):
-    from puma_matcher_spark.streaming.events import trend_stats_pandas
-
+def test_trend_stats_degenerate_groups_are_null(spark):
     # one single-event group (no x variance) and one constant-value
-    # group — slope/corr must be NULL in both engines, not a crash
+    # group — slope/corr must be NULL, not a crash
     rows = [
         ("solo", "2024-01-05 10:00:00", 3.0),
         ("flat", "2024-01-01 00:00:00", 7.0),
@@ -173,29 +140,9 @@ def test_trend_pandas_twin_degenerate_groups(spark):
     df = spark.createDataFrame(
         rows, "event_type string, ts string, value double"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    cat = {tuple(r) for r in trend_stats(df).collect()}
-    pd_ = {tuple(r) for r in trend_stats_pandas(df).collect()}
-    assert cat == pd_
-    by_type = {r["event_type"]: r for r in trend_stats_pandas(df).collect()}
+    by_type = {r["event_type"]: r for r in trend_stats(df).collect()}
     assert by_type["solo"]["value_slope_per_day"] is None
     assert by_type["flat"]["value_time_corr"] is None
-
-
-def test_zorder_frequency_strategy_spreads_skewed_keys(spark):
-    from puma_matcher_spark.sources.maintenance import zorder_by_quantized
-
-    # column `a` is 99% a single hot value — equal-width quantization
-    # collapses the hot mass into one cell; equal-frequency must still
-    # produce a layout whose rows are preserved and partitions ordered
-    rows = [(i, 7 if i % 100 else i, i % 1000) for i in range(5000)]
-    df = spark.createDataFrame(rows, "id long, a long, b long")
-    out = zorder_by_quantized(df, "a", "b", bits=4, n_ranges=4, strategy="frequency")
-    assert out.count() == 5000
-    assert sorted(r["id"] for r in out.select("id").collect()) == list(range(5000))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        zorder_by_quantized(df, "a", "b", strategy="bogus")
 
 
 def test_hll_sketch_union_is_bucket_invariant(spark, sf_small):

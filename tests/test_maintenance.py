@@ -4,63 +4,6 @@ from __future__ import annotations
 
 import pytest
 
-from puma_matcher_spark.sources.maintenance import (
-    compact_parquet,
-    dataset_file_stats,
-)
-
-
-def test_compaction_reduces_files_and_preserves_rows(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    df = spark.range(0, 10_000).withColumnRenamed("id", "k")
-    df.repartition(64).write.parquet(path)  # simulate small-file leak
-    n_before, _ = dataset_file_stats(path)
-    assert n_before >= 32
-
-    before = [r["k"] for r in spark.read.parquet(path).collect()]
-    stats = compact_parquet(spark, path, target_file_mb=128)
-    assert stats["files_after"] < stats["files_before"]
-    assert stats["files_after"] <= 4
-
-    after_df = spark.read.parquet(path)
-    after = [r["k"] for r in after_df.collect()]
-    assert sorted(after) == sorted(before)
-
-
-def test_compaction_layout_sort(spark, tmp_path):
-    path = str(tmp_path / "tbl2")
-    spark.range(0, 1000).selectExpr("id AS k", "id % 7 AS v").repartition(
-        16
-    ).write.parquet(path)
-    compact_parquet(spark, path, target_file_mb=128, sort_cols=["k"])
-    # data intact and globally re-readable
-    assert spark.read.parquet(path).count() == 1000
-
-
-def test_compaction_noop_on_single_file_and_refuses_partitioned(spark, tmp_path):
-    from puma_matcher_spark.sources.maintenance import compact_parquet
-    import pytest
-
-    # single file → no-op, no crash
-    one = str(tmp_path / "one")
-    spark.range(10).coalesce(1).write.parquet(one)
-    stats = compact_parquet(spark, one)
-    assert stats["files_before"] == stats["files_after"] == 1
-
-    # hive-partitioned layout without partition_cols → explicit refusal
-    part = str(tmp_path / "part")
-    spark.range(100).selectExpr("id", "id % 3 AS k").write.partitionBy(
-        "k"
-    ).parquet(part)
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        compact_parquet(spark, part)
-    # with partition_cols the layout survives
-    compact_parquet(spark, part, partition_cols=["k"])
-    assert spark.read.parquet(part).count() == 100
-    import os
-
-    assert any("k=" in e for e in os.listdir(part))
-
 
 def test_compact_batch_index_folds_committed_partitions(spark, tmp_path):
     """Round 9: per-batch index partitions below fold_below merge into a
@@ -123,7 +66,7 @@ def test_compact_and_publish_work_with_scheme_qualified_uris(spark, tmp_path):
     URI (file:/... here — the local stand-in for hdfs:// or s3a://,
     which os.rename / os.path.isdir cannot touch) must work end to end:
     staging write, blue/green swap, read-through, and compaction."""
-    from puma_matcher_spark.sources.maintenance import compact_parquet
+    from puma_matcher_spark.sources.maintenance import compact_batch_index
     from puma_matcher_spark.sources.publish import publish, read_live
 
     root = "file:" + str(tmp_path / "pub")
@@ -133,11 +76,12 @@ def test_compact_and_publish_work_with_scheme_qualified_uris(spark, tmp_path):
     publish(df.where("id < 50"), root)  # second swap exercises live->old
     assert read_live(spark, root).count() == 50
 
-    data = "file:" + str(tmp_path / "data")
-    spark.range(500).selectExpr("id", "id % 3 AS k").repartition(8).write.parquet(data)
-    stats = compact_parquet(spark, data, target_file_mb=128)
-    assert stats["files_before"] >= 8 and stats["files_after"] == 1
-    assert spark.read.parquet(data).count() == 500
+    data = "file:" + str(tmp_path / "idx")
+    for b in range(3):
+        spark.range(100).repartition(4).write.parquet(f"{data}/batch_id={b}")
+    stats = compact_batch_index(spark, data, fold_below=2)
+    assert (stats["dirs_before"], stats["dirs_after"]) == (3, 2)
+    assert spark.read.parquet(data).count() == 300
 
 
 @pytest.mark.slow

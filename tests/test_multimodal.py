@@ -604,135 +604,6 @@ def test_decode_png_unsupported_profiles_stay_honest():
         decode_image(bytes(blob))
 
 
-# ---- WAV (RIFF container) decode -------------------------------------------
-
-
-def _wav_bytes(
-    samples: np.ndarray,
-    rate: int = 16000,
-    bits: int = 16,
-    fmt: int = 1,
-    extensible: bool = False,
-    extra_chunk: bool = True,
-) -> bytes:
-    """Minimal RIFF/WAVE writer (test-only).  ``samples`` is (frames,
-    channels) int16-range; serialized per ``bits``/``fmt``."""
-    import struct
-
-    frames, channels = samples.shape
-    if fmt == 3:  # float32 in [-1, 1]
-        data = (samples.astype(np.float64) / 32767.0).astype("<f4").tobytes()
-        bits = 32
-    elif bits == 8:
-        data = ((samples.astype(np.int32) >> 8) + 128).astype(np.uint8).tobytes()
-    elif bits == 16:
-        data = samples.astype("<i2").tobytes()
-    elif bits == 24:
-        x = (samples.astype(np.int32) << 8).astype("<i4")
-        data = x.astype("<i4").tobytes()
-        # keep the low 3 of each 4 bytes (little-endian 24-bit)
-        b = np.frombuffer(data, dtype=np.uint8).reshape(-1, 4)
-        data = b[:, :3].tobytes()
-    elif bits == 32:
-        data = (samples.astype(np.int32) << 16).astype("<i4").tobytes()
-    else:
-        raise ValueError(bits)
-    block = channels * bits // 8
-    if extensible:
-        sub = struct.pack("<H", fmt) + b"\x00\x00" + b"\x00" * 12
-        fmt_body = struct.pack(
-            "<HHIIHHHHH", 0xFFFE, channels, rate, rate * block, block, bits,
-            22, bits, 0
-        )[:-2] + b"\x00\x00\x00\x00" + sub
-        # simpler: rebuild explicitly
-        fmt_body = (
-            struct.pack("<HHIIHH", 0xFFFE, channels, rate, rate * block,
-                        block, bits)
-            + struct.pack("<HHI", 22, bits, 0)
-            + sub[:16]
-        )
-    else:
-        fmt_body = struct.pack(
-            "<HHIIHH", fmt, channels, rate, rate * block, block, bits
-        )
-    chunks = b"fmt " + len(fmt_body).to_bytes(4, "little") + fmt_body
-    if extra_chunk:  # unknown chunk that must be skipped (odd size → pad)
-        junk = b"\x01\x02\x03"
-        chunks += b"LIST" + len(junk).to_bytes(4, "little") + junk + b"\x00"
-    chunks += b"data" + len(data).to_bytes(4, "little") + data
-    return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
-
-
-def _sine_i16(n=480, channels=1, amp=12000):
-    t = np.arange(n, dtype=np.float64)
-    base = np.round(amp * np.sin(2 * np.pi * t / 48.0))
-    return np.stack([base] * channels, axis=1).astype(np.int16)
-
-
-def test_decode_wav_formats_roundtrip():
-    from puma_matcher_spark.llmdata.multimodal import decode_wav
-
-    mono = _sine_i16()
-    for kw in [
-        {"bits": 16},
-        {"bits": 8},
-        {"bits": 24},
-        {"bits": 32},
-        {"fmt": 3},
-        {"bits": 16, "extensible": True},
-    ]:
-        out, rate = decode_wav(_wav_bytes(mono, **kw))
-        assert rate == 16000, kw
-        assert out.size == mono.shape[0], kw
-        tol = {8: 256, 16: 0, 24: 0, 32: 0}.get(kw.get("bits", 16), 1)
-        if kw.get("fmt") == 3:
-            tol = 1  # float round-trip
-        assert np.max(np.abs(out.astype(np.int32) - mono[:, 0].astype(np.int32))) <= tol, kw
-
-
-def test_decode_wav_stereo_downmix_and_errors():
-    import pytest as _pytest
-
-    from puma_matcher_spark.llmdata.multimodal import decode_wav
-
-    st = _sine_i16(channels=2)
-    st[:, 1] = -st[:, 1]  # opposite-phase channels cancel to ~0
-    out, _ = decode_wav(_wav_bytes(st))
-    assert np.max(np.abs(out)) <= 1
-    with _pytest.raises(ValueError):
-        decode_wav(b"RIFFxxxxWAVE")  # no fmt/data
-    with _pytest.raises(ValueError):
-        decode_wav(b"not audio at all")
-    # ADPCM (format 2) is honestly unsupported
-    blob = bytearray(_wav_bytes(_sine_i16()))
-    i = blob.index(b"fmt ") + 8
-    blob[i] = 2
-    with _pytest.raises(NotImplementedError):
-        decode_wav(bytes(blob))
-
-
-def test_extract_audio_features_decoded_end_to_end(spark):
-    from puma_matcher_spark.llmdata.multimodal import (
-        _audio_stats,
-        decode_pcm16,
-        extract_audio_features_decoded,
-    )
-
-    mono = _sine_i16()
-    wav = _wav_bytes(mono)
-    raw = mono[:, 0].astype("<i2").tobytes()
-    rows = [(1, bytearray(wav)), (2, bytearray(raw)), (3, bytearray(b""))]
-    media = spark.createDataFrame(rows, "media_id LONG, payload BINARY")
-    got = {r["media_id"]: r for r in extract_audio_features_decoded(media).collect()}
-    n, rms, zcr = _audio_stats(mono[:, 0])
-    assert (got[1]["n_samples"], got[1]["rms"], got[1]["zcr"]) == (n, rms, zcr)
-    assert got[1]["sample_rate"] == 16000
-    # raw PCM path: same samples, unknown rate
-    assert (got[2]["n_samples"], got[2]["rms"]) == (n, rms)
-    assert got[2]["sample_rate"] == 0
-    assert got[3]["n_samples"] == 0
-
-
 # ---- GIF (LZW) decode ------------------------------------------------------
 
 
@@ -877,137 +748,6 @@ def test_decode_gif_errors():
     blob = bytearray(_gif_bytes(idx, palette))
     with _pytest.raises(ValueError):
         decode_image(bytes(blob[: len(blob) - 12]))  # cut mid-LZW
-
-
-# ---- Y4M (YUV4MPEG2) video decode ------------------------------------------
-
-
-def _y4m_bytes(frames_yuv, w, h, cs="420") -> bytes:
-    """Test y4m writer: frames_yuv is a list of (y, cb, cr) planes
-    (cb/cr None for mono); per-frame parameter strings vary to exercise
-    the FRAME-line parser."""
-    out = bytearray(f"YUV4MPEG2 W{w} H{h} F25:1 Ip A1:1 C{cs}\n".encode())
-    for i, (y, cb, cr) in enumerate(frames_yuv):
-        out += (b"FRAME\n" if i % 2 == 0 else b"FRAME Xtest\n")
-        out += y.astype(np.uint8).tobytes()
-        if cb is not None:
-            out += cb.astype(np.uint8).tobytes()
-            out += cr.astype(np.uint8).tobytes()
-    return bytes(out)
-
-
-def _bt601_rgb(yv, cbv, crv):
-    yf = (yv - 16.0) * 255.0 / 219.0
-    cbf = (cbv - 128.0) * 255.0 / 224.0
-    crf = (crv - 128.0) * 255.0 / 224.0
-    r = yf + 1.402 * crf
-    g = yf - 0.344136 * cbf - 0.714136 * crf
-    b = yf + 1.772 * cbf
-    return [int(np.clip(round(v), 0, 255)) for v in (r, g, b)]
-
-
-def test_decode_y4m_colourspaces_and_sampling():
-    from puma_matcher_spark.llmdata.multimodal import decode_y4m
-
-    w, h = 8, 6
-    # three uniform frames with distinct YCbCr values
-    trip = [(60, 100, 180), (120, 128, 128), (200, 90, 60)]
-
-    def uniform(cs):
-        fr = []
-        for yv, cbv, crv in trip:
-            y = np.full((h, w), yv, dtype=np.uint8)
-            if cs == "mono":
-                fr.append((y, None, None))
-            else:
-                sx = 2 if cs in ("420", "422") else 1
-                sy = 2 if cs == "420" else 1
-                cb = np.full((h // sy, w // sx), cbv, dtype=np.uint8)
-                cr = np.full((h // sy, w // sx), crv, dtype=np.uint8)
-                fr.append((y, cb, cr))
-        return _y4m_bytes(fr, w, h, cs)
-
-    for cs in ("420", "422", "444"):
-        frames, total = decode_y4m(uniform(cs))
-        assert total == 3 and len(frames) == 3, cs
-        for f, (yv, cbv, crv) in zip(frames, trip):
-            assert f.shape == (h, w, 3), cs
-            assert f[0, 0].tolist() == _bt601_rgb(yv, cbv, crv), (cs, yv)
-            assert (f == f[0, 0]).all(), cs
-    # mono replicates luma
-    frames, total = decode_y4m(uniform("mono"))
-    assert frames[0][0, 0, 0] == frames[0][0, 0, 2]
-    # frame_indices decodes only the selected frames, order preserved
-    sel, total = decode_y4m(uniform("420"), frame_indices=[2, 0])
-    assert total == 3 and len(sel) == 2
-    assert sel[0][0, 0].tolist() == _bt601_rgb(*trip[0])
-    assert sel[1][0, 0].tolist() == _bt601_rgb(*trip[2])
-
-
-def test_decode_y4m_errors():
-    import pytest as _pytest
-
-    from puma_matcher_spark.llmdata.multimodal import decode_y4m
-
-    with _pytest.raises(ValueError):
-        decode_y4m(b"not video")
-    with _pytest.raises(ValueError):
-        decode_y4m(b"YUV4MPEG2 W4 H4 C420\nFRAME\n\x00\x00")  # truncated
-    with _pytest.raises(NotImplementedError):
-        decode_y4m(b"YUV4MPEG2 W4 H4 C411\nFRAME\n" + b"\x00" * 24)
-
-
-def test_decode_y4m_odd_dimensions():
-    from puma_matcher_spark.llmdata.multimodal import decode_y4m
-
-    # 5x3 4:2:0 → ceil chroma planes (3x2); decode must not crash and
-    # must produce full-size RGB
-    w, h = 5, 3
-    y = np.full((h, w), 120, dtype=np.uint8)
-    cb = np.full((2, 3), 100, dtype=np.uint8)
-    cr = np.full((2, 3), 160, dtype=np.uint8)
-    frames, total = decode_y4m(_y4m_bytes([(y, cb, cr)], w, h, "420"))
-    assert total == 1 and frames[0].shape == (h, w, 3)
-    assert (frames[0] == frames[0][0, 0]).all()
-    # sample_n single-walk mode matches frame_indices selection
-    clip = _y4m_bytes([(y, cb, cr)] * 6, w, h, "420")
-    a, t1 = decode_y4m(clip, sample_n=3)
-    assert t1 == 6 and len(a) == 3
-
-
-def test_extract_video_features_decoded_end_to_end(spark):
-    from puma_matcher_spark.llmdata.multimodal import (
-        extract_video_features_decoded,
-    )
-
-    w, h = 16, 16
-    rng = np.random.default_rng(21)
-    frames = []
-    for _ in range(10):
-        y = rng.integers(16, 236, size=(h, w), dtype=np.uint8)
-        cb = rng.integers(16, 240, size=(h // 2, w // 2), dtype=np.uint8)
-        cr = rng.integers(16, 240, size=(h // 2, w // 2), dtype=np.uint8)
-        frames.append((y, cb, cr))
-    clip = _y4m_bytes(frames, w, h)
-    rows = [(1, bytearray(clip)), (2, bytearray(b"not a video"))]
-    media = spark.createDataFrame(rows, "media_id LONG, payload BINARY")
-    got = {
-        r["media_id"]: r
-        for r in extract_video_features_decoded(media, n_frames=4).collect()
-    }
-    assert got[1]["n_frames_total"] == 10
-    assert got[1]["n_frames_sampled"] == 4
-    hashes = got[1]["frame_hashes"].split("|")
-    assert len(hashes) == 4 and all(len(x) == 64 for x in hashes)
-    assert got[2]["n_frames_total"] == 0 and got[2]["frame_hashes"] == ""
-    # deterministic across partitionings (the driver gate relies on this)
-    again = {
-        r["media_id"]: r["frame_hashes"]
-        for r in extract_video_features_decoded(
-            media.repartition(3), n_frames=4
-        ).collect()
-    }
-    assert again[1] == got[1]["frame_hashes"]
 
 
 def test_quarantine_mode_survives_adversarial_payloads(spark):

@@ -40,7 +40,9 @@ GRAPH_LOOP_QUERIES = [
 
 
 #: the matcher → scorer chain (operators.scorer.scored_entity_candidates)
-#: and the registry queries downstream of it
+#: and the registry queries downstream of it; the last three are the
+#: property twins of normalised_scores_approx, pic_clusters and
+#: weight_refined, which have no row-level oracle
 MATCHER_QUERIES = [
     "entity_pairs",
     "entity_scores",
@@ -50,6 +52,9 @@ MATCHER_QUERIES = [
     "total_score",
     "normalised_scores",
     "weight_eval",
+    "normalised_approx_bounds",
+    "pic_cluster_quality",
+    "weight_refined_convergence",
 ]
 
 #: the near-dup (SimHash, MinHash-LSH), incremental exact-dedup and

@@ -9,16 +9,8 @@ from pyspark.sql import functions as F
 
 from puma_matcher_spark.operators import context as cx
 from puma_matcher_spark.operators import picture as pic
-from puma_matcher_spark.operators.editors import hundred_match_editor, score_override_editor
+from puma_matcher_spark.operators.editors import hundred_match_editor
 from puma_matcher_spark.sources.files import clean_full_text, read_text_files
-
-
-def test_hamming_hex_known_distance(spark):
-    df = spark.createDataFrame([("f0", "0f"), ("ff", "ff")], ["a", "b"])
-    got = df.select(
-        pic.hamming_hex(F.col("a"), F.col("b"), n_chunks=1, chunk=2).alias("d")
-    ).collect()
-    assert [r["d"] for r in got] == [8, 0]
 
 
 def test_hamming_long(spark):
@@ -26,22 +18,6 @@ def test_hamming_long(spark):
     assert df.select(
         pic.hamming_long(F.col("a"), F.col("b")).alias("d")
     ).first()["d"] == 2
-
-
-def test_picture_pair_scoring_threshold(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3)], ["document_version1_id", "document_version2_id"]
-    )
-    hashes = spark.createDataFrame(
-        [(1, "ff" * 32), (2, "ff" * 32), (3, "00" * 32)],
-        ["document_version_id", "hash"],
-    )
-    out = pic.score_picture_pairs(pairs, hashes, max_distance=30)
-    rows = {
-        (r["document_version1_id"], r["document_version2_id"]): r["hamming"]
-        for r in out.collect()
-    }
-    assert rows == {(1, 2): 0}  # (1,3) distance 256 > 30 dropped
 
 
 def test_size_filter(spark):
@@ -68,11 +44,6 @@ def test_editors(spark):
     )
     out = {r["pair_id"]: r["score"] for r in hundred_match_editor(cand, ["doi"]).collect()}
     assert out == {10: 100.0, 11: 5.0}
-    overrides = spark.createDataFrame(
-        [(11, "person", 42.0)], ["pair_id", "score_type", "new_score"]
-    )
-    out2 = {r["pair_id"]: r["score"] for r in score_override_editor(cand, overrides).collect()}
-    assert out2 == {10: 5.0, 11: 42.0}
 
 
 def test_read_text_files_and_clean(spark):
@@ -151,10 +122,7 @@ def test_rf_classifier_learns_separable_data(spark):
 
 
 def test_word2vec_and_kmeans_run(spark):
-    from puma_matcher_spark.operators.instrument_ml import (
-        kmeans_clusters,
-        word2vec_embeddings,
-    )
+    from puma_matcher_spark.operators.instrument_ml import word2vec_embeddings
 
     sents = spark.createDataFrame(
         [(1, ["neutron", "beam"]), (2, ["neutron", "source"]), (3, ["crystal", "growth"])],
@@ -162,17 +130,6 @@ def test_word2vec_and_kmeans_run(spark):
     )
     emb = word2vec_embeddings(sents, size=4)
     assert "w2v" in emb.columns and emb.count() == 3
-    pts = spark.createDataFrame(
-        [(1, 0.0, 0.0), (2, 0.1, 0.1), (3, 9.0, 9.0), (4, 9.1, 9.1)],
-        ["id", "x", "y"],
-    )
-    clustered = kmeans_clusters(pts, ["x", "y"], k=2)
-    by_cluster = {
-        r["id"]: r["cluster"] for r in clustered.collect()
-    }
-    assert by_cluster[1] == by_cluster[2]
-    assert by_cluster[3] == by_cluster[4]
-    assert by_cluster[1] != by_cluster[3]
 
 
 def test_fpgrowth_finds_frequent_pair(spark):
@@ -228,23 +185,6 @@ def test_instrument_feature_table(spark):
     assert r["mention_count"] == 3
     assert r["distinct_aliases"] == 2
     assert (r["first_pos"], r["last_pos"], r["span"]) == (2, 9, 7)
-
-
-def test_lda_topics_runs_seeded(spark):
-    from puma_matcher_spark.operators.instrument_ml import lda_topics
-
-    docs = spark.createDataFrame(
-        [
-            (1, ["neutron", "beam", "scattering", "neutron"]),
-            (2, ["crystal", "growth", "sample", "crystal"]),
-            (3, ["neutron", "scattering", "beam"]),
-        ],
-        ["id", "words"],
-    )
-    model, out = lda_topics(docs, n_topics=2, max_iter=10)
-    assert out.count() == 3
-    dist = out.select("topicDistribution").first()[0]
-    assert abs(sum(dist) - 1.0) < 1e-6
 
 
 @pytest.mark.slow

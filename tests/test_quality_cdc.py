@@ -143,27 +143,6 @@ def test_point_in_time_join_matches_exactly_one_version(spark, sf_small):
     assert joined.select("event_id").distinct().count() == facts.count()
 
 
-def test_scd2_increment_equals_full_rebuild(spark, sf_small):
-    """Folding the post-cutoff changelog into the pre-cutoff history must
-    reproduce the full rebuild exactly — including runs that continue
-    across the cutoff."""
-    from puma_matcher_spark.operators.cdc import scd2_apply_increment
-    from puma_matcher_spark.sources.testdata import load_tables
-
-    ev = load_tables(spark, sf_small).events()
-    cutoff = ev.agg(
-        F.expr("percentile(unix_timestamp(ts), 0.6)").alias("c")
-    ).first()["c"]
-    old = ev.where(F.unix_timestamp("ts") < cutoff)
-    new = ev.where(F.unix_timestamp("ts") >= cutoff)
-    assert old.count() > 0 and new.count() > 0
-
-    full = scd2_history(ev)
-    inc = scd2_apply_increment(scd2_history(old), new)
-    sym_diff = full.exceptAll(inc).count() + inc.exceptAll(full).count()
-    assert sym_diff == 0, f"incremental SCD2 diverges on {sym_diff} rows"
-
-
 def test_incremental_near_dups_match_full_scan(spark, sf_small):
     """Batch×corpus LSH candidates (uncapped) must equal the full-corpus
     candidate set restricted to cross pairs."""

@@ -1,12 +1,12 @@
+"""Plan inspection, scan spreading, publish, instrument analysers."""
+
 import pytest
-"""Plan inspection, scan spreading, publish, formula/instrument analysers."""
 
 import os
 import tempfile
 
 from pyspark.sql import functions as F
 
-from puma_matcher_spark.functions.formula import extract_formulas, is_formula_candidate
 from puma_matcher_spark.operators import instrument as instr
 from puma_matcher_spark.plans import inspect as pi
 from puma_matcher_spark.sources import publish
@@ -41,35 +41,6 @@ def test_publish_blue_green_swap(spark):
         assert os.path.isdir(os.path.join(root, "old"))
 
 
-def test_formula_detection(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "samples of La2CuO4 and Fe3O4 were grown"),
-            (2, "the Final CoIn result was ordinary"),
-        ],
-        ["document_version_id", "text"],
-    )
-    got = {
-        (r["document_version_id"], r["formula"])
-        for r in extract_formulas(docs, dictionary=("coin", "final")).collect()
-    }
-    assert (1, "La2CuO4") in got
-    assert (1, "Fe3O4") in got
-    assert all(f not in {"CoIn", "Final"} for _, f in got)
-
-
-def test_is_formula_rejects_plain_words(spark):
-    df = spark.createDataFrame(
-        [("the",), ("was",), ("H2O",), ("NaCl",)], ["t"]
-    )
-    got = {
-        r["t"]: r["f"]
-        for r in df.select("t", is_formula_candidate(F.col("t")).alias("f")).collect()
-    }
-    assert got["H2O"] and got["NaCl"]
-    assert not got["the"] and not got["was"]
-
-
 def test_instrument_mentions_and_guard(spark):
     tokens = spark.createDataFrame(
         [(d, p, w) for d, p, w in [
@@ -85,54 +56,11 @@ def test_instrument_mentions_and_guard(spark):
     )
     mentions = instr.instrument_mentions(tokens, aliases)
     assert mentions.count() == 7
-    # 'common' appears in 4/7 docs > 30% → guarded out
-    guarded = instr.instrument_frequency_guard(mentions, total_docs=7, max_frequency=0.3)
-    kept = {r["instrument_id"] for r in guarded.select("instrument_id").distinct().collect()}
-    assert kept == {100, 200}
     rollup = {
         (r["document_version_id"], r["instrument_id"]): r["mention_count"]
         for r in instr.document_instruments(mentions).collect()
     }
     assert rollup[(1, 100)] == 1
-
-
-def test_duplicated_codes(spark):
-    aliases = spark.createDataFrame(
-        [(1, "X"), (2, "X"), (3, "Y")], ["instrument_id", "alias"]
-    )
-    got = [r["alias"] for r in instr.duplicated_codes(aliases).collect()]
-    assert got == ["X"]
-
-
-def test_technique_filter_semi_join(spark):
-    cand = spark.createDataFrame(
-        [(1, 10), (1, 20), (2, 10)], ["document_version_id", "technique_id"]
-    )
-    instrument_techniques = spark.createDataFrame(
-        [(100, 10)], ["instrument_id", "technique_id"]
-    )
-    doc_techniques = spark.createDataFrame(
-        [(1, 100)], ["document_version_id", "instrument_id"]
-    )
-    got = {
-        (r["document_version_id"], r["technique_id"])
-        for r in instr.technique_filter(cand, instrument_techniques, doc_techniques).collect()
-    }
-    assert got == {(1, 10)}
-
-
-def test_pos_filter_keeps_content_words(spark):
-    from puma_matcher_spark.functions.nlp import filter_by_pos
-
-    docs = spark.createDataFrame(
-        [(1, ["the", "neutron", "beam", "was", "scattering", "slowly"])],
-        ["doc_id", "words"],
-    )
-    r = filter_by_pos(docs).first()
-    assert "neutron" in r["content_words"]
-    assert "scattering" in r["content_words"]
-    assert "the" not in r["content_words"]
-    assert "slowly" not in r["content_words"]
 
 
 def test_person_technique_probability_hand_computed(spark):

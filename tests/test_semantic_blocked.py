@@ -327,13 +327,14 @@ def test_semantic_decontaminate_drops_exactly_the_flagged_ids(spark):
 
 @pytest.mark.slow
 def test_planted_leak_recall_at_operating_point(spark):
-    """Round-9 recall gate (scripts/semantic_recall_study.py): at the
-    default operating point (min_shared=2, df_cap=64) the blocked scan
-    catches EVERY planted rare-content leak the unblocked truth flags —
-    exact copies, a 90% block paraphrase and a 90% scattered paraphrase
-    — while the boilerplate-carried pair (every shared shingle over the
-    df cap) is the designed blindspot: flagged by the unblocked truth,
-    intentionally not by the scan."""
+    """Round-9 recall gate (PLANS.md "Round-9: semantic-contamination
+    recall on planted paraphrase leaks"): at the default operating point
+    (min_shared=2, df_cap=64) the blocked scan catches EVERY planted
+    rare-content leak the unblocked truth flags — exact copies, a 90%
+    block paraphrase and a 90% scattered paraphrase — while the
+    boilerplate-carried pair (every shared shingle over the df cap) is
+    the designed blindspot: flagged by the unblocked truth, intentionally
+    not by the scan."""
     L, POOL = 40, 12
 
     def toks(p, i):

@@ -1,29 +1,11 @@
-"""Streaming plane: the real Structured Streaming engine must produce the
-same windowed aggregates as the batch twin."""
+"""Events plane: the event-time operators of streaming/events.py and
+operators/events_analytics.py on hand-built event frames."""
 
 from pyspark.sql import functions as F
 
 import pytest
 
-from puma_matcher_spark.sources.testdata import load_tables
 from puma_matcher_spark.streaming import events as se
-
-
-def test_stream_matches_batch_windowed_counts(spark, sf_small):
-    q = se.run_stream_to_memory(spark, sf_small, table_name="t_windowed")
-    q.awaitTermination(120)
-    streamed = spark.sql(
-        "select window.start as ws, event_type, event_count from t_windowed"
-    )
-    batch = se.windowed_counts_eventtime(
-        load_tables(spark, sf_small).events()
-    ).select(
-        F.col("window.start").alias("ws"), "event_type", "event_count"
-    )
-    s = {(r["ws"], r["event_type"]): r["event_count"] for r in streamed.collect()}
-    b = {(r["ws"], r["event_type"]): r["event_count"] for r in batch.collect()}
-    assert s == b
-    assert len(b) > 100
 
 
 def test_sessionize_gap_semantics(spark):
@@ -45,186 +27,6 @@ def test_sessionize_gap_semantics(spark):
     first = sorted(by_user[1], key=lambda r: r["session_start"])[0]
     assert first["n_events"] == 2
     assert first["session_value"] == 3.0
-
-
-def test_stateful_running_stats_matches_batch(spark, sf_small):
-    from puma_matcher_spark.streaming.stateful import run_stateful_stream_to_memory
-
-    q = run_stateful_stream_to_memory(spark, sf_small, table_name="t_stateful")
-    q.awaitTermination(120)
-    # last update per user == the batch aggregate over the whole fixture
-    streamed = {
-        r["user_id"]: (r["n_events"], round(r["value_sum"], 6))
-        for r in spark.sql("select * from t_stateful").collect()
-    }
-    batch = {
-        r["user_id"]: (r["n"], round(r["s"], 6))
-        for r in load_tables(spark, sf_small)
-        .events()
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert streamed == batch
-    assert len(batch) > 10
-
-
-@pytest.mark.slow
-def test_stream_sessionize_matches_batch(spark, sf_small):
-    """session_window on the real streaming engine (stateful session
-    merging in the state store) must agree with the batch twin once the
-    availableNow run drains."""
-    events = se.with_watermark(se.read_events_stream(spark, sf_small))
-    q = (
-        se.sessionize(events, gap="30 minutes")
-        .writeStream.format("memory")
-        .queryName("t_sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    import datetime
-
-    streamed = {
-        (r["user_id"], r["session_start"], r["n_events"])
-        for r in spark.sql(
-            "select user_id, session_start, n_events from t_sessions"
-        ).collect()
-    }
-    ev = load_tables(spark, sf_small).events()
-    batch_rows = se.sessionize(ev, gap="30 minutes").collect()
-    batch = {(r["user_id"], r["session_start"], r["n_events"]) for r in batch_rows}
-    # append mode emits a session only once the watermark passes its end;
-    # after the drain the watermark sits at max(ts) - delay, so sessions
-    # ending inside that final horizon legitimately stay in state
-    max_ts = ev.agg(F.max("ts")).first()[0]
-    horizon = max_ts - datetime.timedelta(minutes=10)
-    finalized = {
-        (r["user_id"], r["session_start"], r["n_events"])
-        for r in batch_rows
-        if r["session_end"] <= horizon
-    }
-    assert streamed <= batch  # nothing invented by the streaming path
-    assert finalized <= streamed  # everything finalizable was emitted
-    assert len(finalized) > 100
-
-
-@pytest.mark.slow
-def test_stream_dedup_drops_replayed_records(spark, sf_small):
-    from puma_matcher_spark.streaming.events import read_events_stream, stream_dedup
-
-    # replay the same file twice through the stream → dedup must collapse it
-    s1 = read_events_stream(spark, sf_small)
-    s2 = read_events_stream(spark, sf_small)
-    doubled = s1.union(s2)
-    q = (
-        stream_dedup(doubled)
-        .writeStream.format("memory")
-        .queryName("t_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    n_stream = spark.sql("select count(distinct event_id) c, count(*) n from t_dedup").first()
-    n_batch = load_tables(spark, sf_small).events().count()
-    assert n_stream["n"] == n_batch
-    assert n_stream["c"] == n_batch
-    # kept rows must be the batch twin's first-seen records (replays are
-    # identical records, so the survivor is fully determined)
-    from puma_matcher_spark.streaming.events import dedup_events_batch
-
-    ev = load_tables(spark, sf_small).events()
-    twin = {
-        (r["event_id"], r["user_id"], r["event_type"])
-        for r in dedup_events_batch(ev.unionByName(ev)).collect()
-    }
-    kept = {
-        (r["event_id"], r["user_id"], r["event_type"])
-        for r in spark.sql("select event_id, user_id, event_type from t_dedup").collect()
-    }
-    assert kept == twin
-
-
-@pytest.mark.slow
-def test_stream_stream_attribution_join_matches_batch(spark, sf_small):
-    """The dual-watermark stream-stream interval join must produce the
-    same attributed (click, purchase) pairs as the batch twin."""
-    from puma_matcher_spark.streaming.events import attribution_join, read_events_stream
-
-    clicks = read_events_stream(spark, sf_small).where(F.col("event_type") == "click")
-    purchases = read_events_stream(spark, sf_small).where(
-        F.col("event_type") == "purchase"
-    )
-    joined = attribution_join(
-        clicks.withWatermark("ts", "10 minutes"),
-        purchases.withWatermark("ts", "10 minutes"),
-        horizon_seconds=300,
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("t_attrib")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = {
-        (r["click_id"], r["purchase_id"])
-        for r in spark.sql("select click_id, purchase_id from t_attrib").collect()
-    }
-    ev = load_tables(spark, sf_small).events()
-    batch = {
-        (r["click_id"], r["purchase_id"])
-        for r in attribution_join(
-            ev.where(F.col("event_type") == "click"),
-            ev.where(F.col("event_type") == "purchase"),
-            horizon_seconds=300,
-        ).collect()
-    }
-    assert streamed == batch
-    assert batch  # fixture must actually produce attributed pairs
-
-
-def test_stream_static_join_enrichment(spark, sf_small):
-    from puma_matcher_spark.streaming.events import enrich_with_dim, read_events_stream
-
-    dim = spark.createDataFrame(
-        [("click", 1.0), ("purchase", 10.0)], ["event_type", "weight"]
-    )
-    enriched = enrich_with_dim(read_events_stream(spark, sf_small), dim)
-    q = (
-        enriched.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.max("weight").alias("w"))
-        .writeStream.format("memory")
-        .queryName("t_enrich")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r["event_type"]: (r["n"], r["w"]) for r in spark.sql("select * from t_enrich").collect()}
-    assert rows["click"][1] == 1.0
-    assert rows["purchase"][1] == 10.0
-    assert rows["view"][1] is None  # left join keeps unmatched types
-
-
-def test_idempotent_sink_exactly_once(spark, sf_small, tmp_path):
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    ev = se.read_events_stream(spark, sf_small)
-    q = se.write_stream_idempotent(ev, out, ckpt, query_name="t_sink")
-    q.awaitTermination(120)
-    written = spark.read.parquet(out)
-    batch = load_tables(spark, sf_small).events()
-    assert written.count() == batch.count()
-    # replaying a batch overwrites its own directory — no duplication
-    some_batch = written.select("batch_id").distinct().limit(1).collect()[0][0]
-    replay = spark.read.parquet(f"{out}/batch_id={some_batch}")
-    materialised = spark.createDataFrame(replay.collect(), replay.schema)
-    materialised.write.mode("overwrite").parquet(f"{out}/batch_id={some_batch}")
-    assert spark.read.parquet(out).count() == batch.count()
 
 
 def test_resample_fills_gaps_with_zeros(spark):
@@ -318,44 +120,6 @@ def test_debounce_keeps_burst_anchors(spark):
     )
     kept = {r["event_id"] for r in se.debounce_first_per_burst(ev).collect()}
     assert kept == {1, 4, 5}
-
-
-def test_transform_with_state_matches_batch(spark, sf_small):
-    """The Spark-4 transformWithStateInPandas path (RocksDB state store)
-    must converge to the same per-user aggregates as the batch twin.
-    The TWS python worker serialises state over protobuf, which this
-    container lacks — skip (not fail) where the dependency is absent."""
-    import pytest
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithStateInPandas needs protobuf (not in env)")
-    from puma_matcher_spark.streaming.stateful import run_tws_stream_to_memory
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
-        q = run_tws_stream_to_memory(spark, sf_small, table_name="t_tws")
-        q.awaitTermination(120)
-        streamed = {
-            r["user_id"]: (r["n_events"], round(r["value_sum"], 6))
-            for r in spark.sql("select * from t_tws").collect()
-        }
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    batch = {
-        r["user_id"]: (r["n"], round(r["s"], 6))
-        for r in load_tables(spark, sf_small)
-        .events()
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert streamed == batch
-    assert len(batch) > 10
 
 
 def test_forward_fill_carries_last_observation(spark):

@@ -131,28 +131,18 @@ def test_proposal_code_and_doi_extraction(spark):
         ],
         ["document_version_id", "text"],
     )
-    pcs = {
-        (r["document_version_id"], r["code"])
-        for r in codes.extract_proposal_codes(df, "text", "document_version_id").collect()
-    }
-    assert pcs == {(1, "7-02-1234"), (1, "CRG-881"), (1, "4-01-1")}
-    dois = {
-        (r["document_version_id"], r["doi"])
-        for r in codes.extract_dois(df, "text", "document_version_id").collect()
-    }
-    assert dois == {(1, "10.5291/ILL-DATA.4-01-1")}
-
-
-def test_referenced_minus_owned(spark):
-    ref = spark.createDataFrame(
-        [(1, "A"), (1, "B"), (2, "A")], ["document_version_id", "code"]
-    )
-    owned = spark.createDataFrame([(1, "A")], ["document_version_id", "code"])
     got = {
-        (r["document_version_id"], r["code"])
-        for r in codes.referenced_minus_owned(ref, owned, "code").collect()
+        r["document_version_id"]: (r["pcs"], r["dois"])
+        for r in df.select(
+            "document_version_id",
+            codes.extract_codes(F.col("text"), codes.PROPOSAL_CODE_RE).alias("pcs"),
+            codes.extract_codes(F.col("text"), codes.DOI_RE).alias("dois"),
+        ).collect()
     }
-    assert got == {(1, "B"), (2, "A")}
+    assert got == {
+        1: (["7-02-1234", "CRG-881", "4-01-1"], ["10.5291/ILL-DATA.4-01-1"]),
+        2: ([], []),
+    }
 
 
 def test_sentence_shingles_and_cap(spark):
@@ -231,34 +221,3 @@ def test_cosine_identical_titles_score_one(spark):
     }
     assert abs(out[(1, 2)] - 1.0) < 1e-9
     assert (1, 3) not in out
-
-
-def test_code_extractor_udtf_matches_expression_path(spark):
-    """The Python UDTF twin must emit exactly the rows the codegen
-    regexp_extract_all path produces."""
-    from puma_matcher_spark.functions import codes as C
-
-    docs = spark.createDataFrame(
-        [
-            (1, "see proposal 4-01-123 and doi 10.1234/abc.5 here"),
-            (2, "no codes at all"),
-        ],
-        ["document_version_id", "text"],
-    )
-    ExtractCodes = C.code_extractor_udtf()
-    docs.createOrReplaceTempView("udtf_docs")
-    spark.udtf.register("extract_codes", ExtractCodes)
-    got = {
-        (r["code"], r["code_type"])
-        for r in spark.sql(
-            "SELECT t.code, t.code_type FROM udtf_docs, "
-            "LATERAL extract_codes(document_version_id, text) t"
-        ).collect()
-    }
-    assert got == {("4-01-123", "proposal"), ("10.1234/abc.5", "doi")}
-    # expression-path equivalence on the proposal side
-    expr_side = {
-        r["code"]
-        for r in C.extract_proposal_codes(docs, "text", "document_version_id").collect()
-    }
-    assert expr_side == {c for c, t in got if t == "proposal"}

@@ -1,4 +1,3 @@
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType
 
 from puma_matcher_spark import schemas, validator
@@ -9,17 +8,6 @@ def test_has_column_checks_name_and_type(spark):
     assert validator.has_column(df, "document_version_id", LongType())
     assert not validator.has_column(df, "document_version_id", StringType())
     assert not validator.has_column(df, "missing", LongType())
-
-
-def test_is_compliant_allows_extra_columns(spark):
-    df = spark.createDataFrame(
-        [(1, 2, "extra")], ["document_version_id", "entity_id", "junk"]
-    ).select(
-        F.col("document_version_id").cast("long"),
-        F.col("entity_id").cast("long"),
-        "junk",
-    )
-    assert validator.is_compliant(df, schemas.ENTITIES_ID)
 
 
 def test_assert_compliant_raises_with_context(spark):
